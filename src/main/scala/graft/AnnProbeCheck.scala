@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,7 +30,7 @@ object AnnProbeCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = SessionTuning.envCpus(16)
     val qids: Seq[Long] =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(7L, 59L, 101L, 167L)
@@ -51,13 +50,7 @@ object AnnProbeCheck {
     val (dim, m0, pqK) = if (clusteredMode) (16, 4, 32) else (64, 16, 32)
     val m = sys.env.getOrElse("SPARK_GRAFT_ANN_M", m0.toString).toInt
     val iters = 2
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val (emb, nCells) =

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Per-round benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
@@ -79,36 +79,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SessionTuning.envCpus()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       .max(1)
-    // round-19 advice: hoist the env lookup out of the timed loop
-    val cgdbg = sys.env.contains("SPARK_GRAFT_BENCH_CODEGEN_DEBUG")
-    var builder = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-    // env-gated event logging for tools/profile_evlog.py (diagnosis
-    // only; off in driver runs — the forked JVM's javaOptions are
-    // fixed in build.sbt, so the knob has to live here)
-    sys.env.get("SPARK_GRAFT_BENCH_EVLOG").foreach { d =>
-      new java.io.File(d).mkdirs()
-      builder = builder.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", d)
-    }
-    val spark = builder.getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("SPARK_GRAFT_BENCH_CODEGEN_DEBUG")) {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.expressions.codegen",
-        org.apache.logging.log4j.Level.DEBUG)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.WholeStageCodegenExec",
-        org.apache.logging.log4j.Level.DEBUG)
-    }
     // Dev-loop filter: comma-separated query names; unset = all.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -121,26 +96,9 @@ object Bench {
           val l0 = loadavg1(); val (b0, t0j) = cpuJiffies()
           val io0 = ioSectors()
           val ts = (1 to reps).map { _ =>
-            // codegen-compile counter per rep (debug-only print): a
-            // nonzero steady-state count means some plan's generated
-            // source (or its classloader cache key) varies per rep —
-            // the round-19 diagnosis hook for the artifact-isolation
-            // finding, kept for future regressions of the same class.
-            val c0 =
-              if (cgdbg)
-                org.apache.spark.metrics.source.CodegenMetrics
-                  .METRIC_COMPILATION_TIME.getCount
-              else 0L
             val t0 = System.nanoTime()
             execute(d.fn(spark, sfDir)) // timed steady-state run
-            val dt = (System.nanoTime() - t0) / 1e9
-            if (cgdbg) {
-              val c1 = org.apache.spark.metrics.source.CodegenMetrics
-                .METRIC_COMPILATION_TIME.getCount
-              System.err.println(f"[bench-cgdbg] ${d.name} rep=$dt%.2fs " +
-                f"compiles=${c1 - c0}")
-            }
-            dt
+            (System.nanoTime() - t0) / 1e9
           }
           val l1 = loadavg1(); val (b1, t1j) = cpuJiffies()
           val io1 = ioSectors()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -27,17 +26,11 @@ object LedgerWaveBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = SessionTuning.envCpus(16)
     val nWaves = sys.env.getOrElse("SPARK_GRAFT_WAVES", "10").toInt
     val compactEvery =
       sys.env.getOrElse("SPARK_GRAFT_COMPACT_EVERY", "0").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

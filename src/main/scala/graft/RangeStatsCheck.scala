@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement main for the EXACT cosine range ops (q253/q254/q255):
@@ -24,17 +23,11 @@ object RangeStatsCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = SessionTuning.envCpus(16)
     val tau = sys.env.getOrElse("SPARK_GRAFT_RANGE_TAU", "0.95").toDouble
     val trainIters =
       sys.env.getOrElse("SPARK_GRAFT_RANGE_TRAIN", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources.{Fixtures, Manifest, VectorIndex}
 

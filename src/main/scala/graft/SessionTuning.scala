@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level performance settings shared by the [[Bench]] and
-  * [[Verify]] mains (round-19 optimization pass; measured evidence in
-  * OPTIMIZATION_r19.md).
+/** The one place a graft `SparkSession` is configured: [[local]] is
+  * the builder every main ([[Bench]], [[Verify]], the measurement
+  * mains) and the test suite start from, and [[tuned]] holds the
+  * session-level performance settings it applies.
   *
-  * All three knobs are HOST knobs, not plan knobs: they change where
-  * scratch bytes land and how much generated code the JVM may cache /
-  * share, never what any query computes — and each is overridable so a
-  * different deployment sizes them to its own hardware and tenancy.
+  * The tuned settings are HOST knobs, not plan knobs: they change
+  * where scratch bytes land, how local files are written and how much
+  * generated code the JVM may cache / share, never what any query
+  * computes — and each is overridable so a different deployment sizes
+  * them to its own hardware and tenancy.
   *
   *  - `spark.sql.codegen.cache.maxEntries` (default 100): a session
   *    that executes hundreds of distinct physical plans — this bench's
@@ -37,6 +39,31 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
 
+  /** `SPARK_GRAFT_CPUS` as a positive integer, `default` when unset.
+    * Anything else fails loudly: the value sizes the local master and
+    * the shuffle partitions and is echoed into the bench JSON, where a
+    * non-number would silently corrupt the artifact. */
+  def envCpus(default: Int = 4): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default) { s =>
+      s.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+    }
+
+  /** The shared local session builder: `local[cpus]` with as many
+    * shuffle partitions, the graft SQL extensions, UTC session time,
+    * nanosecond parquet timestamps read as longs, no UI, and the
+    * [[tuned]] host settings. Callers add their own extras (app name,
+    * catalogs) and call `getOrCreate()`. */
+  def local(cpus: Int): SparkSession.Builder =
+    tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false"))
+
   /** Apply the tuned defaults to `b`, skipping any key the caller
     * already pinned via system property (spark-submit --conf / -D). */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
@@ -59,8 +86,10 @@ object SessionTuning {
       out = out.config("spark.sql.artifact.isolation.enabled", "false")
     // Local `file://` IO without per-file chmod forks or `.crc` shadow
     // files (see NoForkLocalFileSystem's scaladoc for the measured
-    // fork counts). Scheme-scoped: only local-FS fixtures/scratch are
-    // affected; HDFS/S3 deployments never resolve these classes.
+    // fork counts). Session-wide: EVERY `file://` path this session
+    // touches — scratch, fixtures, and manifest tables' data and
+    // commit files alike — is written without checksums. HDFS/S3
+    // deployments never resolve these classes.
     if (!sys.props.contains("spark.hadoop.fs.file.impl"))
       out = out.config("spark.hadoop.fs.file.impl",
         "graft.hadoop.NoForkLocalFileSystem")
@@ -68,12 +97,12 @@ object SessionTuning {
       out = out.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         "graft.hadoop.NoForkLocalFs")
     if (!sys.props.contains("spark.local.dir")) {
-      // Size-guarded (round-19 advice): tmpfs scratch is only selected
-      // when /dev/shm has comfortable headroom for a LOCAL bench's
-      // bounded shuffle/spill footprint (default 8 GiB, env-tunable).
-      // A host whose tmpfs is small — or a real workload whose spill
-      // exceeds RAM — falls back to Spark's default /tmp placement
-      // instead of filling RAM-backed storage until ENOSPC/OOM.
+      // Size-guarded: tmpfs scratch is only selected when /dev/shm has
+      // comfortable headroom for a LOCAL bench's bounded shuffle/spill
+      // footprint (default 8 GiB, env-tunable). A host whose tmpfs is
+      // small — or a real workload whose spill exceeds RAM — falls
+      // back to Spark's default /tmp placement instead of filling
+      // RAM-backed storage until ENOSPC/OOM.
       val minBytes = sys.env.get("SPARK_GRAFT_SHM_MIN_GB")
         .flatMap(g => scala.util.Try(g.toDouble).toOption)
         .getOrElse(8.0) * (1L << 30)
@@ -85,32 +114,44 @@ object SessionTuning {
         else None
       }
       dir.foreach { d =>
-        val f = new java.io.File(d)
-        // sweep stale scratch from crash-killed runs: those spark-*/
-        // blockmgr-* trees hold RAM on tmpfs until removed (only our
-        // own scratch root is touched, and only when no other live
-        // Spark process could own it — best effort, ignore races)
-        if (f.isDirectory && d.endsWith("graft-spark-scratch"))
-          sweepStale(f)
-        f.mkdirs()
-        out = out.config("spark.local.dir", d)
+        // one `pid-<pid>` subdir per JVM: concurrent sessions (the
+        // bench beside a test run) never share a scratch tree, and a
+        // crash-killed run's tree is recognizable as dead by its pid
+        val root = new java.io.File(d)
+        if (root.isDirectory) sweepStale(root)
+        val mine = new java.io.File(root,
+          s"pid-${ProcessHandle.current().pid()}")
+        mine.mkdirs()
+        // Spark removes its own subdirs on a clean stop; the JVM's
+        // delete-on-exit hook runs after that and drops the empty dir
+        mine.deleteOnExit()
+        out = out.config("spark.local.dir", mine.getPath)
       }
     }
     out
   }
 
-  /** Remove scratch subtrees older than one hour (modification time of
-    * the top-level entry) — a live run touches its dirs constantly,
-    * while a crash-killed run's tree goes stale immediately. */
-  private def sweepStale(root: java.io.File): Unit = try {
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
+  private val PidDir = """pid-(\d+)""".r
+
+  /** Remove the `pid-N` scratch trees of processes that are no longer
+    * alive — a crash-killed run's shuffle and block-manager trees hold
+    * RAM on tmpfs until removed. Liveness is the process table, never file
+    * age: a live run's tree survives however long it sits idle, and a
+    * dead run's goes at the next session start. Anything not named
+    * `pid-N` is left alone. Best effort: a race with another sweeper
+    * only loses a delete. */
+  private[graft] def sweepStale(root: java.io.File): Unit =
     Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.lastModified() < cutoff) deleteRec(f)
+      f.getName match {
+        case PidDir(pid) if pid.toLongOption.exists(p =>
+            !ProcessHandle.of(p).filter(_.isAlive).isPresent) =>
+          deleteRec(f)
+        case _ => ()
+      }
     }
-  } catch { case _: Throwable => () }
 
   private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory)
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
     f.delete()
     ()

@@ -3,7 +3,7 @@ package graft.hadoop
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** `file://` filesystem for LOCAL scratch that never forks a child
@@ -30,11 +30,26 @@ import org.apache.hadoop.fs.permission.FsPermission
   * deployments (HDFS/S3, which never hit this class — the scheme is
   * `file` only) provide at the storage layer.
   *
+  * It IS a `LocalFileSystem` (checksums neither written nor verified)
+  * rather than a bare raw filesystem, because Hadoop's
+  * `FileSystem.getLocal` casts the `file://` instance to
+  * `LocalFileSystem` — Spark's RocksDB state store uploads its
+  * checkpoint files through that call.
+  *
   * Wired by [[graft.SessionTuning]] behind sys-prop escape hatches;
   * a deployment that needs checksummed or permissioned local files
   * sets `-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem`.
   */
-class NoForkLocalFileSystem extends RawLocalFileSystem {
+class NoForkLocalFileSystem extends LocalFileSystem(new NoForkRawLocalFileSystem) {
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    super.initialize(name, conf)
+    setWriteChecksum(false)
+    setVerifyChecksum(false)
+  }
+}
+
+/** The raw `file://` filesystem minus the per-file chmod fork. */
+class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = ()
 }
 
@@ -47,4 +62,4 @@ class NoForkLocalFileSystem extends RawLocalFileSystem {
   * contract of `AbstractFileSystem.createFileSystem`. */
 class NoForkLocalFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(
-    uri, new NoForkLocalFileSystem, conf, "file", false)
+    uri, new NoForkRawLocalFileSystem, conf, "file", false)

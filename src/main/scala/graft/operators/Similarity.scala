@@ -109,8 +109,8 @@ object Similarity {
   /** THE IVF pivot-selection rule — the first `nCentroids` corpus
     * vectors in deterministic `pmod(xxhash64(id), 1e9+7)` order (ties
     * by ascending id), as `(pid, pv)`. ONE definition shared by
-    * [[ivfIndex]] (assignment), [[ivfTopK]]/[[ivfPqTopK]]/
-    * [[ivfPqTopKRefined]] (probe selection) and the persisted serving
+    * [[ivfIndex]] (assignment), [[ivfTopK]]/[[ivfPqTopK]] (probe
+    * selection) and the persisted serving
     * artifact ([[graft.sources.IvfPqIndex]]): probe-cell selection and
     * stored cell assignment MUST derive pivots identically, or recall
     * silently degrades with no error — centralizing the rule makes
@@ -591,95 +591,6 @@ object Similarity {
       .select(col("id").as(idCol), col("approx_dist"))
   }
 
-  /** CELL-PRUNED SERVED REFINE — the plan a 100 TB ANN deployment
-    * actually runs, composing the three proven pieces end to end:
-    * IVF probe ([[ivfTopK]] q63) → ADC over the PROBED CELLS' codes
-    * only ([[pqTopK]] q113) → exact re-rank of the shortlist
-    * ([[pqTopKRefined]] q229). q229 proved the refine ANSWER but
-    * served it from a full-corpus ADC scan (every code row aggregated
-    * per query — linear per query, the scale-killer class); here the
-    * ADC stage touches only `nProbe / nCentroids` of the corpus, the
-    * re-rank only `refineFactor · topK` vectors, and codebook TRAINING
-    * is bounded by `maxTrain` (hash-ordered sample — FAISS's own
-    * discipline: train on a fenced sample, encode the corpus once,
-    * amortize across queries).
-    *
-    * Correctness contract (q244's oracle): at VALIDATED settings —
-    * nProbe sized so the probed cells provably contain the true top-k
-    * and refineFactor so the ADC shortlist retains them, checked on
-    * every tested corpus before registration — the output hash-equals
-    * EXACT L2 top-k, because the re-rank scores true vectors with the
-    * same 6-dp-rounded keys as the ground truth. The corpus here is
-    * unit-normalized, so the cosine cell assignment is exactly
-    * L2-consistent (l2² = 2 − 2·cos): probing by cosine never
-    * disagrees with the L2 truth about which cells are near.
-    *
-    * Scale shape: pivots, probes, LUT are broadcasts; the assignment
-    * is one map-only argmax pass; candidate encode + ADC are
-    * probed-cells-sized; at 100 TB the assignment is persisted
-    * bucketed by `centroid_id` so the probe is a pruned file read,
-    * and nCentroids grows with the corpus (cells stay constant-sized)
-    * making the per-query serving cost track cell size, not corpus
-    * size. Returns (idCol, l2_dist) ascending, query row excluded —
-    * q229's exact output shape, so its oracle transfers as-is. */
-  def ivfPqTopKRefined(emb: DataFrame, idCol: String, vecCol: String,
-                       queryId: Long, topK: Int, dim: Int,
-                       nCentroids: Int = 16, nProbe: Int = 12,
-                       m: Int = 4, k: Int = 16, iters: Int = 1,
-                       refineFactor: Int = 10,
-                       maxTrain: Int = 0): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"nProbe in [1, $nCentroids], got $nProbe")
-    val subDim = dim / m
-    val index = ivfIndex(emb, idCol, vecCol, nCentroids)
-    val qrow = emb.filter(col(idCol) === queryId)
-      .select(Vectors.toDouble(col(vecCol)).as("qvec"))
-    val pivots = broadcast(ivfPivots(emb, idCol, vecCol, nCentroids))
-    val probes = broadcast(
-      qrow.crossJoin(pivots)
-        .select(col("pid"),
-          coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-            .as("pc"))
-        .orderBy(col("pc").desc, col("pid").asc)
-        .limit(nProbe)
-        .select(col("pid").as("centroid_id")))
-    val candIds = index.join(probes, Seq("centroid_id"))
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol))
-    val cand = emb.join(candIds, Seq(idCol), "left_semi")
-    val trainSet =
-      if (maxTrain > 0)
-        emb.orderBy(Sampling.portableHash(col(idCol), "pqtrain").asc,
-          col(idCol).asc).limit(maxTrain)
-      else emb
-    val books = pqCodebooks(trainSet, idCol, vecCol, dim, m, k, iters)
-    val codes = pqEncode(cand, idCol, vecCol, books, dim, m)
-    val qsub = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qv"))
-        .select(posexplode(subspaces(col("qv"), m, subDim)))
-        .toDF("m", "qsv"))
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    val shortlist = codes.join(lut, Seq("m", "code"))
-      .groupBy("id").agg(sum("pd").as("ad"))
-      .orderBy(col("ad").asc, col("id").asc)
-      .limit(refineFactor * topK)
-    val qvec = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qvec")))
-    shortlist.select("id")
-      .join(emb.select(col(idCol).as("id"),
-        Vectors.toDouble(col(vecCol)).as("v")), Seq("id"))
-      .crossJoin(qvec)
-      .select(col("id"), round(l2sq(col("v"), col("qvec")), 6).as("l2_dist"))
-      .orderBy(col("l2_dist").asc, col("id").asc)
-      .limit(topK)
-      .select(col("id").as(idCol), col("l2_dist"))
-  }
-
   /** BATCHED served refine — production ANN serves query SETS, not
     * single ids: the PQ codebooks and corpus codes are built ONCE and
     * shared across the whole batch, the |Q|·m·k ADC lookup table rides
@@ -726,29 +637,6 @@ object Similarity {
         graft.plans.TopK.asc("id")), topK)
       .select(col("qid").as("query_id"), col("id").as(idCol),
         col("l2_dist"))
-  }
-
-  /** All-pairs top-k neighbors per vector (small-side utility; the
-    * per-row window keeps only k). At scale use the LSH bucket join —
-    * this exact variant is O(n²) by definition, so it is FENCED: it
-    * refuses inputs larger than `maxRows` (one cheap limited count, no
-    * full scan) instead of silently planning a 10¹⁰-pair cross join.
-    * Raise the fence consciously if you really mean it. */
-  def allPairsTopK(emb: DataFrame, idCol: String, vecCol: String,
-                   k: Int, maxRows: Int = 100000): DataFrame = {
-    graft.fenceQuadratic(emb.select(idCol), maxRows, "allPairsTopK",
-      "use lshTopK/nearDupPairsEmbedding")
-    val v = emb.select(col(idCol).as("id_a"),
-      Vectors.toDouble(col(vecCol)).as("v_a"))
-    val w = emb.select(col(idCol).as("id_b"),
-      Vectors.toDouble(col(vecCol)).as("v_b"))
-    val win = Window.partitionBy(col("id_a"))
-      .orderBy(col("cosine").desc, col("id_b").asc)
-    v.join(w, col("id_a") =!= col("id_b"))
-      .withColumn("cosine", Vectors.cosine(col("v_a"), col("v_b")))
-      .withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= k)
-      .select("id_a", "id_b", "cosine", "rank")
   }
 
   /** ANN recall harness: measured recall@k of the pruned paths (IVF,

@@ -223,7 +223,7 @@ object PipelineQueries {
     // NOTE: clusterPairs runs bounded driver-side iterations (actions)
     // during query construction. The registry's full set of action-in-
     // construction sites: this loop, q71's sketch head(), and the
-    // fenceQuadratic limited-count probes (q44/q64/q90/allPairsTopK).
+    // fenceQuadratic limited-count probes (q44/q64/q90).
     // All three kinds are inherent and bounded: label propagation is a
     // fixpoint loop over label tables (never the corpus), the sketch
     // head reads one ~60 KB row, and each fence reads at most

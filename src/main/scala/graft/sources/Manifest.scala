@@ -63,9 +63,8 @@ object Manifest {
     * calls (no listing, no getFileStatus); `stats` is the file's
     * column zone map ([[ManifestStats]] JSON: rows, per-column
     * min/max/null-count) consulted for file-level skipping at
-    * planning. Both absent only in pre-format manifests, which fall
-    * back to listing / no skipping. */
-  final case class FileEntry(path: String, size: Option[Long],
+    * planning (absent = no skipping for that file). */
+  final case class FileEntry(path: String, size: Long,
                              stats: Option[String] = None,
                              seq: Option[Long] = None) {
     lazy val fileStats: Option[ManifestStats.FileStats] =
@@ -85,7 +84,7 @@ object Manifest {
     * null-safe anti-join; [[rewriteDeletes]]/[[compact]] materialize
     * it away. O(deleted keys) to delete from a 100 TB table — no data
     * rewrite on the DELETE path at all. */
-  final case class DeleteEntry(path: String, size: Option[Long],
+  final case class DeleteEntry(path: String, size: Long,
                                seq: Long, keyCols: Seq[String])
 
   private[graft] def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -185,7 +184,7 @@ object Manifest {
       if (f.getName.endsWith(".parquet"))
         out += FileEntry(
           f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"),
-          Some(st.getLen))
+          st.getLen)
     }
     out.toSeq.sortBy(_.path)
   }
@@ -316,7 +315,7 @@ object Manifest {
     val fresh = writeCommit(spark, root, cur + 1, df, partitionCols)
     writeStage(spark, root, stageId, prev.entries ++ fresh,
       prev.meta ++
-        schemaHeaders(appendSchema(spark, root, prev, df.schema),
+        schemaHeaders(mergeSchemas(prev.schema, df.schema),
           partitionCols) + ("base" -> cur.toString),
       prev.deletes)
   }
@@ -566,7 +565,7 @@ object Manifest {
       writeBranchManifest(spark, root, name, head + 1,
         prev.entries ++ fresh.map(_.copy(seq = Some(head + 1))),
         prev.meta ++ schemaHeaders(
-          appendSchema(spark, root, prev, df.schema), partitionCols),
+          mergeSchemas(prev.schema, df.schema), partitionCols),
         prev.deletes)
     }
   }
@@ -727,22 +726,13 @@ object Manifest {
     require(latestVersion(spark, dstRoot).isEmpty,
       s"clone target $dstRoot already has commits")
     val m = readManifest(spark, srcRoot, v)
-    require(m.schema.isDefined,
-      s"cannot clone $srcRoot v$v: legacy manifest without a schema " +
-        "header — rewrite (commitReplace) first")
-    // fill sizes now so the clone never has to stat foreign files
-    val sized = m.entries.map { e =>
-      if (e.size.isDefined) e
-      else e.copy(size = Some(sfs.getFileStatus(
-        new Path(absEntryPath(qualifiedSrc, e.path))).getLen))
-    }
     val keepMeta = m.meta -- Seq("count", "dcount", "ts", "base",
       "dropped", "rollback-of", ManifestBlooms.MetaKey,
       ManifestBlooms.MetaVersionKey, "cloned-from", "clone-mode",
       "clone-pin") filterNot { case (k, _) => k.startsWith("batch.") }
     val (entries, deletes, cloneMeta) =
       if (deep) {
-        val rels = (sized.map(_.path) ++ m.deletes.map(_.path)).distinct
+        val rels = (m.files ++ m.deletes.map(_.path)).distinct
         val confArr = spark.sparkContext.hadoopConfiguration
           .iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
         val srcQ = qualifiedSrc
@@ -759,7 +749,7 @@ object Manifest {
             org.apache.hadoop.fs.FileUtil.copy(
               ffs, from, tfs, to, false, true, c)
           }
-        (sized.map(e => e.copy(path = relTailOf(e.path))),
+        (m.entries.map(e => e.copy(path = relTailOf(e.path))),
           m.deletes.map(d => d.copy(path = relTailOf(d.path))),
           Map("cloned-from" -> s"$qualifiedSrc@v$v",
             "clone-mode" -> "deep"))
@@ -768,7 +758,7 @@ object Manifest {
           .getInstance("MD5").digest(dstRoot.getBytes("UTF-8"))
           .take(6).map("%02x".format(_)).mkString
         tag(spark, srcRoot, pin, v)
-        (sized.map(e =>
+        (m.entries.map(e =>
             e.copy(path = absEntryPath(qualifiedSrc, e.path))),
           m.deletes.map(d =>
             d.copy(path = absEntryPath(qualifiedSrc, d.path))),
@@ -893,18 +883,18 @@ object Manifest {
 
   /** `#key=value` header lines carry commit metadata: the snapshot's
     * `schema` (Spark JSON) and `partcols`, streaming batch high-water
-    * marks, and the torn-read `count` fence. Every other line is one
-    * data file: `path<TAB>size` (size optional in older manifests). */
+    * marks, and the torn-read `count`/`dcount` fences — those four are
+    * on every manifest ([[RequiredHeaders]]). Every other line is one
+    * data file: `path<TAB>size[<TAB>stats[<TAB>seq]]`. */
   final case class SnapshotMeta(version: Long, entries: Seq[FileEntry],
                                 meta: Map[String, String],
                                 deletes: Seq[DeleteEntry] = Nil) {
     def files: Seq[String] = entries.map(_.path)
-    def schema: Option[org.apache.spark.sql.types.StructType] =
-      meta.get("schema").map(js =>
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    def partCols: Option[Seq[String]] =
-      meta.get("partcols").map(_.split(",").toSeq.filter(_.nonEmpty))
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(meta("schema"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    def partCols: Seq[String] =
+      meta("partcols").split(",").toSeq.filter(_.nonEmpty)
     /** Commit wall-clock (epoch millis); None for pre-`ts` manifests. */
     def ts: Option[Long] = meta.get("ts").flatMap(_.toLongOption)
   }
@@ -918,8 +908,13 @@ object Manifest {
     readManifestAt(spark, root,
       new Path(manifestDir(root), vName(version)), version)
 
+  /** The headers every manifest this format writes carries. */
+  private[graft] val RequiredHeaders = Seq("schema", "partcols", "count", "dcount")
+
   /** Parse one manifest file (chain version or staged commit — same
-    * format; `version` only labels the result). */
+    * format; `version` only labels the result). A manifest missing a
+    * [[RequiredHeaders]] entry, or a file line without a size, was not
+    * written by this table format and is refused. */
   private def readManifestAt(spark: SparkSession, root: String,
                              p: Path, version: Long): SnapshotMeta = {
     val (fs, _) = fsOf(spark, root)
@@ -932,44 +927,50 @@ object Manifest {
     val (hdr, bodyLines) = lines.partition(_.startsWith("#"))
     // `~`-prefixed lines are merge-on-read delete files; the rest data
     val (delLines, fileLines) = bodyLines.partition(_.startsWith("~"))
+    val meta = hdr.map(_.stripPrefix("#").split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap
+    // torn-read fence, checked before any line is parsed (a torn read's
+    // last line may itself be cut): the manifest is created-if-absent
+    // and then written; a reader that opens it mid-write sees fewer
+    // lines than the #count/#dcount headers promise and must fail
+    // loudly (transient — retrying re-reads the completed file), never
+    // scan a partial snapshot.
+    meta.get("count").foreach { c =>
+      require(c.toLong == fileLines.size,
+        s"torn manifest read: version $version of $root promises $c " +
+          s"files, read ${fileLines.size} — concurrent commit in flight, retry")
+    }
+    meta.get("dcount").foreach { c =>
+      require(c.toLong == delLines.size,
+        s"torn manifest read: version $version of $root promises $c " +
+          s"delete files, read ${delLines.size} — retry")
+    }
+    // every writer emits all four headers, so a missing one is either
+    // a read that raced the write past the header block (transient,
+    // like the fence above) or a manifest from outside this format
+    val missing = RequiredHeaders.filterNot(meta.contains)
+    require(missing.isEmpty,
+      s"torn manifest read or foreign manifest: $p of $root lacks the " +
+        s"${missing.mkString(", ")} header(s) — retry if a commit is in " +
+        "flight; otherwise it is not a manifest this table format writes")
+    def sizeOf(sz: Option[String], l: String): Long =
+      sz.flatMap(_.toLongOption).getOrElse(throw new IllegalArgumentException(
+        s"manifest $p of $root: file line without a size: $l"))
     val files = fileLines.map { l =>
       // fields: path, size, stats (zone-map JSON; "" = absent), seq.
       // JSON escapes control chars, so a literal tab never splits stats.
-      l.split('\t') match {
-        case Array(p0, sz, st, sq) =>
-          FileEntry(p0, sz.toLongOption,
-            Some(st).filter(_.nonEmpty), sq.toLongOption)
-        case Array(p0, sz, st) => FileEntry(p0, sz.toLongOption, Some(st))
-        case Array(p0, sz)     => FileEntry(p0, sz.toLongOption)
-        case _                 => FileEntry(l, None)
-      }
+      val f = l.split('\t')
+      FileEntry(f(0), sizeOf(f.lift(1), l), f.lift(2).filter(_.nonEmpty),
+        f.lift(3).flatMap(_.toLongOption))
     }
     val deletes = delLines.map { l =>
       l.stripPrefix("~").split('\t') match {
         case Array(p0, sz, sq, kc) =>
-          DeleteEntry(p0, sz.toLongOption, sq.toLong,
+          DeleteEntry(p0, sizeOf(Some(sz), l), sq.toLong,
             kc.split(',').toSeq.filter(_.nonEmpty))
         case _ => throw new IllegalStateException(
           s"malformed delete line in v$version of $root: $l")
       }
-    }
-    val meta = hdr.map(_.stripPrefix("#").split("=", 2))
-      .collect { case Array(k, v) => k -> v }.toMap
-    // torn-read fence: the manifest is created-if-absent and then
-    // written; a reader that opens it mid-write sees fewer file lines
-    // than the #count header promises and must fail loudly (transient —
-    // retrying re-reads the completed file), never scan a partial
-    // snapshot. Manifests without the header (older format) skip the
-    // check. `dcount` fences the delete lines the same way.
-    meta.get("count").foreach { c =>
-      require(c.toLong == files.size,
-        s"torn manifest read: version $version of $root promises $c " +
-          s"files, read ${files.size} — concurrent commit in flight, retry")
-    }
-    meta.get("dcount").foreach { c =>
-      require(c.toLong == deletes.size,
-        s"torn manifest read: version $version of $root promises $c " +
-          s"delete files, read ${deletes.size} — retry")
     }
     SnapshotMeta(version, files, meta, deletes)
   }
@@ -980,32 +981,6 @@ object Manifest {
     Snapshot(m.version, m.files)
   }
 
-  /** Fill sizes for entries the manifest does not carry them for
-    * (pre-size manifests only): one recursive listing per commit dir —
-    * the cost the size column exists to eliminate. */
-  private def fillSizes(spark: SparkSession, root: String,
-                        entries: Seq[FileEntry]): Seq[FileEntry] =
-    if (entries.forall(_.size.isDefined)) entries
-    else {
-      val (fs, _) = fsOf(spark, root)
-      val wanted = entries.map(_.path).toSet
-      val rootUri = fs.makeQualified(new Path(root)).toUri.getPath
-      val listed = entries.map(_.path.split("/")(1)).distinct.flatMap {
-        cdir =>
-          val out = ArrayBuffer.empty[(String, Long)]
-          val it = fs.listFiles(new Path(s"$root/data/$cdir"), true)
-          while (it.hasNext) {
-            val st = it.next()
-            val rel = st.getPath.toUri.getPath
-              .stripPrefix(rootUri).stripPrefix("/")
-            if (wanted.contains(rel)) out += rel -> st.getLen
-          }
-          out
-      }.toMap
-      entries.map(e =>
-        e.copy(size = e.size.orElse(Some(listed(e.path)))))
-    }
-
   /** ONE vectorized parquet relation over `entries`, planned entirely
     * from manifest metadata (schema + partcols headers, file sizes,
     * partition tuples parsed from paths) via [[ManifestFileIndex]] —
@@ -1015,14 +990,13 @@ object Manifest {
   private def relationOver(spark: SparkSession, root: String,
                            m: SnapshotMeta,
                            entries: Seq[FileEntry]): DataFrame = {
-    val full = m.schema.get
-    val partCols = m.partCols.getOrElse(Nil)
+    val full = m.schema
+    val partCols = m.partCols
     val partSchema = org.apache.spark.sql.types.StructType(
       partCols.map(c => full(c)))
     val dataSchema = org.apache.spark.sql.types.StructType(
       full.filterNot(f => partCols.contains(f.name)))
-    val index = new ManifestFileIndex(root,
-      fillSizes(spark, root, entries), partSchema)
+    val index = new ManifestFileIndex(root, entries, partSchema)
     val relation = org.apache.spark.sql.execution.datasources
       .HadoopFsRelation(index, partSchema, dataSchema, None,
         new org.apache.spark.sql.execution.datasources.parquet
@@ -1032,20 +1006,6 @@ object Manifest {
     spark.baseRelationToDataFrame(relation)
       .select(full.fieldNames.map(col): _*)
   }
-
-  /** Pre-schema-header manifests: one parquet relation PER COMMIT DIR,
-    * unioned (each commit dir is an internally-consistent hive layout;
-    * a single basePath over data/ would trip
-    * CONFLICTING_DIRECTORY_STRUCTURES on the cN segment). Kept only
-    * for manifests written before the schema header existed. */
-  private def legacyUnionRead(spark: SparkSession, root: String,
-                              files: Seq[String]): DataFrame =
-    files.groupBy(_.split("/")(1)).toSeq.sortBy(_._1)
-      .map { case (cdir, fs) =>
-        spark.read.option("basePath", s"$root/data/$cdir")
-          .parquet(fs.map(f => s"$root/$f"): _*)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Read the table at `version` (default: latest). The scan is over
     * exactly the snapshot's files — concurrent commits are invisible.
@@ -1058,11 +1018,7 @@ object Manifest {
       .getOrElse(throw new IllegalStateException(
         s"$root has no committed version"))
     val m = readManifest(spark, root, v)
-    if (m.schema.isDefined) readEntries(spark, root, m, m.entries)
-    else {
-      require(m.files.nonEmpty, s"version $v of $root lists no files")
-      legacyUnionRead(spark, root, m.files)
-    }
+    readEntries(spark, root, m, m.entries)
   }
 
   /** Rows of a SUBSET of a snapshot's files (by table-relative path) —
@@ -1079,8 +1035,7 @@ object Manifest {
     require(sel.size == paths.size,
       s"readSubset: ${paths.size - sel.size} path(s) are not files of " +
         s"$root v$version")
-    if (m.schema.isDefined) readEntries(spark, root, m, sel)
-    else legacyUnionRead(spark, root, sel.map(_.path))
+    readEntries(spark, root, m, sel)
   }
 
   /** Scan `entries` with the snapshot's pending merge-on-read deletes
@@ -1189,16 +1144,14 @@ object Manifest {
       ("ts" -> System.currentTimeMillis().toString)).toSeq.sorted
       .map { case (k, v) => s"#$k=$v" }
     val fileLines = entries.map { e =>
-      (e.size, e.stats, e.seq) match {
-        case (Some(sz), st, Some(sq)) => s"${e.path}\t$sz\t${st.getOrElse("")}\t$sq"
-        case (Some(sz), Some(st), None) => s"${e.path}\t$sz\t$st"
-        case (Some(sz), None, None)     => s"${e.path}\t$sz"
-        case _                          => e.path
+      (e.stats, e.seq) match {
+        case (st, Some(sq))   => s"${e.path}\t${e.size}\t${st.getOrElse("")}\t$sq"
+        case (Some(st), None) => s"${e.path}\t${e.size}\t$st"
+        case (None, None)     => s"${e.path}\t${e.size}"
       }
     }
     val delLines = deletes.map(d =>
-      s"~${d.path}\t${d.size.map(_.toString).getOrElse("")}\t${d.seq}\t" +
-        d.keyCols.mkString(","))
+      s"~${d.path}\t${d.size}\t${d.seq}\t" + d.keyCols.mkString(","))
     (hdr ++ delLines ++ fileLines).mkString("\n") + "\n"
   }
 
@@ -1323,16 +1276,13 @@ object Manifest {
 
   /** Appends must keep the table's partition layout — a commit with a
     * different layout would make the snapshot unplannable (and
-    * silently unprunable). Legacy tables without the header skip the
-    * check. */
+    * silently unprunable). */
   private def checkPartCols(prev: SnapshotMeta,
                             partitionCols: Seq[String]): Unit =
-    prev.partCols.foreach { pc =>
-      require(pc == partitionCols,
-        s"partition layout mismatch: table is partitioned by " +
-          s"${pc.mkString("[", ",", "]")}, commit by " +
-          s"${partitionCols.mkString("[", ",", "]")}")
-    }
+    require(prev.partCols == partitionCols,
+      s"partition layout mismatch: table is partitioned by " +
+        s"${prev.partCols.mkString("[", ",", "]")}, commit by " +
+        s"${partitionCols.mkString("[", ",", "]")}")
 
   /** Custom commit metadata (`extraMeta`) rides the manifest header
     * like any other `#k=v` line and carries forward commit-to-commit —
@@ -1540,7 +1490,7 @@ object Manifest {
       publish(spark, root, head,
         prev.entries ++ fresh.map(_.copy(seq = Some(head + 1))),
         prev.meta ++ schemaHeaders(
-          appendSchema(spark, root, prev, df.schema), partitionCols)
+          mergeSchemas(prev.schema, df.schema), partitionCols)
           ++ extraMeta ++ lm,
         prev.deletes) // pending MoR deletes still apply to older files
     }
@@ -1593,7 +1543,7 @@ object Manifest {
     try publish(spark, root, cur,
       prev.entries ++ fresh.map(_.copy(seq = Some(cur + 1))),
       prev.meta ++ schemaHeaders(
-        appendSchema(spark, root, prev, df.schema), partitionCols)
+        mergeSchemas(prev.schema, df.schema), partitionCols)
         ++ extraMeta,
       prev.deletes)
     catch {
@@ -1653,25 +1603,6 @@ object Manifest {
     throw last
   }
 
-  /** The schema header an append-shaped commit publishes: the previous
-    * header widened with the new commit's fields. A LEGACY table (no
-    * header yet) must not publish the new schema alone — columns that
-    * live only in older commits' files would silently vanish from
-    * every subsequent read (relationOver selects only the header's
-    * fields) — so the first header a legacy table ever gets is the
-    * union of its ACTUAL on-disk schema (one union-read resolution, no
-    * data IO) and the new commit's. */
-  private def appendSchema(spark: SparkSession, root: String,
-                           prev: SnapshotMeta,
-                           add: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    prev.schema match {
-      case Some(s) => mergeSchemas(s, add)
-      case None if prev.files.nonEmpty =>
-        mergeSchemas(legacyUnionRead(spark, root, prev.files).schema, add)
-      case None => add
-    }
-
   /** EXACTLY-ONCE streaming sink commit: an append-commit that records
     * `(queryId, batchId)` in the manifest header and becomes a NO-OP
     * when that batch is already the last one committed for the query —
@@ -1711,7 +1642,7 @@ object Manifest {
           val fresh = writeCommit(spark, root, cur + 1, df, partitionCols)
           // carry other queries' high-water marks forward
           publish(spark, root, cur, prev.entries ++ fresh,
-            prev.meta ++ schemaHeaders(appendSchema(spark, root, prev, df.schema),
+            prev.meta ++ schemaHeaders(mergeSchemas(prev.schema, df.schema),
               partitionCols) ++ extraMeta + (metaKey -> batchId.toString),
             prev.deletes)
         }
@@ -1747,13 +1678,13 @@ object Manifest {
         else {
           checkPartCols(prev, partitionCols)
           enforceConstraintsOnEntries(spark, root, prev.meta,
-            appendSchema(spark, root, prev, schema), partitionCols,
+            mergeSchemas(prev.schema, schema), partitionCols,
             entries)
           val stated = withStats(spark, root, entries.sortBy(_.path))
             .map(_.copy(seq = Some(cur + 1)))
           Some(publish(spark, root, cur, prev.entries ++ stated,
             prev.meta ++ schemaHeaders(
-              appendSchema(spark, root, prev, schema), partitionCols) +
+              mergeSchemas(prev.schema, schema), partitionCols) +
               (metaKey -> batchId.toString),
             prev.deletes))
         }
@@ -1775,7 +1706,7 @@ object Manifest {
       throw new IllegalStateException(s"$root not initialized"))
     val prev = readManifest(spark, root, cur)
     enforceConstraintsOnEntries(spark, root, prev.meta,
-      if (replace) schema else appendSchema(spark, root, prev, schema),
+      if (replace) schema else mergeSchemas(prev.schema, schema),
       partitionCols, entries)
     val stated = withStats(spark, root, entries.sortBy(_.path))
       .map(_.copy(seq = Some(cur + 1)))
@@ -1786,7 +1717,7 @@ object Manifest {
       checkPartCols(prev, partitionCols)
       publish(spark, root, cur, prev.entries ++ stated,
         prev.meta ++ schemaHeaders(
-          appendSchema(spark, root, prev, schema), partitionCols),
+          mergeSchemas(prev.schema, schema), partitionCols),
         prev.deletes)
     }
   }
@@ -1809,8 +1740,8 @@ object Manifest {
         "during the row-level rewrite — retry the operation")
     val prev = readManifest(spark, root, cur)
     checkPartCols(prev, partitionCols)
-    prev.schema.foreach(sch => enforceConstraintsOnEntries(spark, root,
-      prev.meta, sch, partitionCols, added))
+    enforceConstraintsOnEntries(spark, root, prev.meta, prev.schema,
+      partitionCols, added)
     val stated = withStats(spark, root, added.sortBy(_.path))
       .map(_.copy(seq = Some(cur + 1)))
     publish(spark, root, cur,
@@ -1832,7 +1763,7 @@ object Manifest {
     val prev = readManifest(spark, root, cur)
     val nullable = org.apache.spark.sql.types.StructType(
       add.fields.map(_.copy(nullable = true)))
-    val existing = prev.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
+    val existing = prev.schema.fieldNames.toSet
     val dup = nullable.fieldNames.filter(existing)
     require(dup.isEmpty,
       s"column(s) ${dup.mkString(", ")} already exist in $root")
@@ -1847,9 +1778,8 @@ object Manifest {
         "old files still carry their stale values — rewrite the table " +
         "first (commitReplace / zorder clears the tombstones)")
     publish(spark, root, cur, prev.entries,
-      prev.meta ++ schemaHeaders(
-        appendSchema(spark, root, prev, nullable),
-        prev.partCols.getOrElse(Nil)),
+      prev.meta ++ schemaHeaders(mergeSchemas(prev.schema, nullable),
+        prev.partCols),
       prev.deletes)
   }
 
@@ -1873,10 +1803,8 @@ object Manifest {
     val cur = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val prev = readManifest(spark, root, cur)
-    val schema = prev.schema.getOrElse(throw new IllegalStateException(
-      s"cannot drop columns on $root: legacy manifest has no schema " +
-        "header — converge with commitReplace first"))
-    val partCols = prev.partCols.getOrElse(Nil)
+    val schema = prev.schema
+    val partCols = prev.partCols
     require(names.nonEmpty && names.distinct.size == names.size,
       "drop list must be non-empty and duplicate-free")
     names.foreach { n =>
@@ -1921,7 +1849,7 @@ object Manifest {
     val lm = lateMeta(); checkExtraMeta(lm) // post-write meta (see init)
     // a replace swaps the ENTIRE file set, so the schema and layout
     // headers reset to the new frame's (this is also the sanctioned
-    // way to converge a mixed-layout or legacy table); with no old
+    // way to converge a mixed-layout table); with no old
     // files left, dropped-column tombstones are released too
     publish(spark, root, cur, fresh,
       prev.meta - "dropped" ++ schemaHeaders(df.schema, partitionCols)
@@ -1979,8 +1907,7 @@ object Manifest {
     val touchedVals = stringTuples(touchedRows, partitionCols)
     val keep = prev.entries.filterNot(e =>
       inTouchedPartition(e.path, partitionCols, touchedVals))
-    val schema = prev.schema.map(mergeSchemas(_, updates.schema))
-      .getOrElse(table.schema)
+    val schema = mergeSchemas(prev.schema, updates.schema)
     // `table` is deletes-applied, so the rewritten partitions
     // materialize any pending MoR deletes; carried files still need them
     publish(spark, root, cur, keep ++ fresh,
@@ -2099,9 +2026,7 @@ object Manifest {
     val cur = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val prev = readManifest(spark, root, cur)
-    val schema = prev.schema.getOrElse(throw new IllegalStateException(
-      s"$root has no schema header; merge-on-read needs one " +
-        "(converge legacy tables with commitReplace first)"))
+    val schema = prev.schema
     val kc = keys.columns.toSeq
     require(kc.nonEmpty, "delete keys need at least one column")
     kc.foreach { c =>
@@ -2229,7 +2154,7 @@ object Manifest {
     val (hit, spared) = pruneDeleteHits(spark, root, m, seqHit)
     if (hit.isEmpty) // no file can hold a deleted key: metadata-only drop
       return publish(spark, root, cur, m.entries, m.meta)
-    val partCols = m.partCols.getOrElse(Nil)
+    val partCols = m.partCols
     val rows = readEntries(spark, root, m, hit)
     val fresh = writeCommit(spark, root, cur + 1, rows, partCols)
     publish(spark, root, cur, clean ++ spared ++ fresh, m.meta)
@@ -2271,15 +2196,14 @@ object Manifest {
       val colVals: Seq[(String, Array[Any])] = kc.zipWithIndex.map {
         case (c, i) => c -> rows.map(_.get(i)).distinct.toArray
       }
-      val pruner = m.schema.flatMap { sch =>
-        val ins = colVals.collect {
-          case (c, vs) if vs.nonEmpty && !vs.contains(null) =>
-            org.apache.spark.sql.sources.In(c, vs)
-              : org.apache.spark.sql.sources.Filter
-        }
-        if (ins.isEmpty) None
-        else ManifestBlooms.prunerFor(root, sch, m.meta, ins.toArray)
+      val ins = colVals.collect {
+        case (c, vs) if vs.nonEmpty && !vs.contains(null) =>
+          org.apache.spark.sql.sources.In(c, vs)
+            : org.apache.spark.sql.sources.Filter
       }
+      val pruner =
+        if (ins.isEmpty) None
+        else ManifestBlooms.prunerFor(root, m.schema, m.meta, ins.toArray)
       (colVals, pruner, ds.map(_.seq))
     }
     cand.partition { e =>
@@ -2322,30 +2246,16 @@ object Manifest {
     val cur = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val m = readManifest(spark, root, cur)
-    val sized = fillSizes(spark, root, m.entries)
-    val (small, keep) = sized.partition(_.size.exists(_ < smallBytes))
+    val (small, keep) = m.entries.partition(_.size < smallBytes)
     if (small.size < 2) return cur
-    // Legacy manifests carry no partcols header; derive the layout from
-    // the files' own paths — rewriting a partitioned table's small files
-    // UNPARTITIONED would produce a mixed-layout snapshot the connector
-    // then refuses. A legacy table whose files already disagree on
-    // layout can only be converged by commitReplace.
-    val partCols = m.partCols.getOrElse {
-      val layouts = m.files.map(f => partValuesOf(f).map(_._1)).distinct
-      require(layouts.size <= 1,
-        s"cannot compact $root v$cur: files carry mixed partition " +
-          s"layouts ${layouts.map(_.mkString("[", ",", "]")).mkString(" vs ")}" +
-          " — converge with commitReplace first")
-      layouts.headOption.getOrElse(Nil)
-    }
-    val smallRows = // deletes-applied: compaction must not resurrect rows
-      if (m.schema.isDefined) readEntries(spark, root, m, small)
-      else legacyUnionRead(spark, root, small.map(_.path))
+    val partCols = m.partCols
+    // deletes-applied: compaction must not resurrect rows
+    val smallRows = readEntries(spark, root, m, small)
     // size the rewrite from manifest metadata: ceil(bytes / target)
     // output files, range-clustered on the partition columns so each
     // lands in one hive dir
     val nOut = math.max(1,
-      math.ceil(small.flatMap(_.size).sum.toDouble / targetBytes).toInt)
+      math.ceil(small.map(_.size).sum.toDouble / targetBytes).toInt)
     // a recorded z-order (the zorder.cols header the layout rewrite
     // stamps) is PRESERVED: merged small files — typically the
     // unclustered append tail — re-sort by the same morton key
@@ -2355,8 +2265,8 @@ object Manifest {
     // header (dropped/retyped column) falls back to plain packing.
     val zSorted: Option[DataFrame] = m.meta.get("zorder.cols")
       .map(_.split(',').toSeq)
-      .filter(cs => cs.size >= 2 && m.schema.exists(sch =>
-        cs.forall(sch.fieldNames.contains)))
+      .filter(cs => cs.size >= 2 &&
+        cs.forall(m.schema.fieldNames.contains))
       .flatMap { cs =>
         val bits = m.meta.get("zorder.bits").map(_.toInt)
           .getOrElse(math.min(Layout.DefaultBits, 62 / cs.size))
@@ -2437,10 +2347,8 @@ object Manifest {
     val cur = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val m = readManifest(spark, root, cur)
-    val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"cannot zorder $root: legacy manifest has no schema header — " +
-        "converge with commitReplace first"))
-    val partCols = m.partCols.getOrElse(Nil)
+    val schema = m.schema
+    val partCols = m.partCols
     partitionSpec.keys.foreach(c => require(partCols.contains(c),
       s"partition spec names '$c', not a partition column of $root " +
         s"(${partCols.mkString(", ")})"))
@@ -2472,7 +2380,7 @@ object Manifest {
       s"no files of $root match partition spec $partitionSpec")
     val rows = readEntries(spark, root, m, scoped) // deletes applied
     def scaled(c: String): Column = zScaledCol(rows, scoped, c, bits)
-    val totalBytes = fillSizes(spark, root, scoped).flatMap(_.size).sum
+    val totalBytes = scoped.map(_.size).sum
     val nOut = math.max(1,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val zv = "__graft_zval"
@@ -2706,10 +2614,8 @@ object Manifest {
         s"commit(s) at seq ${crossing.map(_.seq).distinct.sorted.mkString(",")} — " +
         "file-level changes cannot express row retractions; run " +
         "rewriteDeletes and consume the rewrite, or read full snapshots")
-    if (m.schema.isDefined)
-      // same single-relation plan as read(), over just the added files
-      relationOver(spark, root, m, m.entries.filter(e => added(e.path)))
-    else legacyUnionRead(spark, root, added.toSeq.sorted)
+    // same single-relation plan as read(), over just the added files
+    relationOver(spark, root, m, m.entries.filter(e => added(e.path)))
   }
 
   /** ROW-LEVEL change feed (CDC): the changes between `from`
@@ -2738,9 +2644,7 @@ object Manifest {
       throw new IllegalStateException(s"$root has no committed version"))
     require(from <= hi, s"from=$from must be <= to=$hi")
     val m = readManifest(spark, root, hi)
-    val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"CDC read of $root needs a schema header — converge legacy " +
-        "tables with commitReplace first"))
+    val schema = m.schema
     val added = changedFiles(spark, root, from, hi).added.toSet
     def stamp(df: DataFrame, kind: String, v: Long): DataFrame =
       df.withColumn("_change_type", flit(kind))

@@ -101,9 +101,8 @@ object ManifestBlooms {
     val cur = Manifest.latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val snap = Manifest.snapshotMeta(spark, root, cur)
-    val full = snap.schema.getOrElse(throw new IllegalStateException(
-      s"$root carries no schema header — rewrite (commitReplace) first"))
-    val partCols = snap.partCols.getOrElse(Nil).toSet
+    val full = snap.schema
+    val partCols = snap.partCols.toSet
     val dataSchema = StructType(
       full.fields.filterNot(f => partCols.contains(f.name)))
     cols.foreach { c =>

@@ -74,7 +74,7 @@ final class ManifestFileIndex(
           // FileStatus synthesized from manifest metadata: files are
           // immutable once committed, so the recorded length is exact
           // and mtime is irrelevant to the scan
-          new FileStatus(e.size.getOrElse(0L), false, 1,
+          new FileStatus(e.size, false, 1,
             128L * 1024 * 1024, 0L,
             new Path(Manifest.absEntryPath(root, e.path)))
         }.toArray
@@ -153,5 +153,5 @@ final class ManifestFileIndex(
 
   override def refresh(): Unit = () // snapshot-frozen: nothing to refresh
 
-  override def sizeInBytes: Long = files.flatMap(_.size).sum
+  override def sizeInBytes: Long = files.map(_.size).sum
 }

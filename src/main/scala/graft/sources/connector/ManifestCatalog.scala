@@ -608,7 +608,7 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
       val partCols = Manifest
         .snapshotMeta(spark, root,
           Manifest.latestVersion(spark, root).get)
-        .partCols.getOrElse(Nil)
+        .partCols
       val stage = input.getUTF8String(3).toString match {
         case "append"  => Manifest.stageAppend _
         case "replace" => Manifest.stageReplace _
@@ -756,7 +756,7 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
         new GenericInternalRow(Array[Any](v,
           m.ts.map(ms => ms * 1000L).orNull, // micros; legacy = NULL
           m.entries.size.toLong,
-          m.entries.flatMap(_.size).sum)): InternalRow
+          m.entries.map(_.size).sum)): InternalRow
       }.toArray
       java.util.Collections.singletonList[Scan](new LocalScan {
         override def rows(): Array[InternalRow] = snapRows
@@ -886,7 +886,7 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
       val root = tableRoot(input.getUTF8String(0).toString)
       val name = input.getUTF8String(1).toString
       val partCols = Manifest
-        .branchMeta(spark, root, name).partCols.getOrElse(Nil)
+        .branchMeta(spark, root, name).partCols
       val v = Manifest.commitAppendBranch(spark, root, name,
         spark.table(input.getUTF8String(2).toString), partCols)
       oneRowScan(

@@ -13,7 +13,7 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 import org.apache.spark.sql.SparkSession
@@ -111,7 +111,7 @@ class ManifestDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = optMap(options)
-    val base = resolved(opts).fullSchema
+    val base = resolved(opts).declared
     if (opts.get("cdc").contains("true"))
       ManifestConnector.cdcSchema(base)
     else base
@@ -164,15 +164,12 @@ object ManifestConnector {
                               .FileStats] = None,
                             seq: Long = 0L)
 
-  /** `declared` = the manifest's schema header (present for every
-    * table the current writer produced): column order and partition
-    * column TYPES come from it. Legacy manifests without the header
-    * fall back to footer-derived data schema + string partition
-    * columns appended last. */
+  /** `declared` = the manifest's schema header: column order and
+    * partition column TYPES come from it. */
   final case class Resolved(root: String, version: Long,
                             files: Seq[FileInfo], partCols: Seq[String],
                             dataSchema: StructType,
-                            declared: Option[StructType] = None,
+                            declared: StructType,
                             deletes: Seq[Manifest.DeleteEntry] = Nil,
                             branch: Option[String] = None,
                             tableMeta: Map[String, String] = Map.empty) {
@@ -182,9 +179,6 @@ object ManifestConnector {
       deletes.filter(_.seq > f.seq).map(d =>
         DeleteFileSpec(graft.sources.Manifest.absEntryPath(root, d.path),
           d.keyCols.toArray)).toArray
-    val fullSchema: StructType = declared.getOrElse(
-      StructType(dataSchema.fields ++
-        partCols.map(c => StructField(c, StringType, nullable = true))))
   }
 
   /** Partition path string → typed value for the declared partition
@@ -214,39 +208,6 @@ object ManifestConnector {
   def partValuesOf(relPath: String): Seq[(String, String)] =
     Manifest.partValuesOf(relPath)
 
-  /** Parquet primitive → Spark type; throws on anything the connector
-    * does not cover (declared scope, not silent misreads). */
-  def sparkTypeOf(t: PType): DataType = {
-    require(t.isPrimitive && !t.isRepetition(PType.Repetition.REPEATED),
-      s"graft-manifest supports flat primitive columns only, got $t")
-    val p = t.asPrimitiveType()
-    p.getPrimitiveTypeName match {
-      case BOOLEAN => BooleanType
-      case INT32
-        if p.getLogicalTypeAnnotation ==
-          LogicalTypeAnnotation.dateType() => DateType
-      case INT32   => IntegerType
-      case INT64
-        if p.getLogicalTypeAnnotation ==
-          LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS) => TimestampType
-      case INT64   => LongType
-      case INT96   => TimestampType // Spark's default timestamp encoding
-      case FLOAT   => FloatType
-      case DOUBLE  => DoubleType
-      case BINARY
-        if p.getLogicalTypeAnnotation ==
-          LogicalTypeAnnotation.stringType() => StringType
-      case BINARY  => BinaryType
-      case other => throw new IllegalArgumentException(
-        s"graft-manifest does not support parquet type $other " +
-          s"(column ${t.getName})")
-    }
-  }
-
-  /** Resolve root+version → frozen file list, partition layout and the
-    * newest commit's data schema. Metadata-only: one manifest read, one
-    * recursive listing per live commit dir, one parquet footer. */
   private def supportedDataType(dt: DataType): Boolean = dt match {
     case BooleanType | IntegerType | LongType | FloatType |
          DoubleType | StringType | BinaryType | TimestampType |
@@ -254,6 +215,9 @@ object ManifestConnector {
     case _ => false
   }
 
+  /** Resolve root+version → frozen file list, partition layout and
+    * schema, from the manifest alone: one manifest read, zero
+    * filesystem listings or footer reads. */
   def resolve(spark: SparkSession, opts: Map[String, String]): Resolved = {
     val root = opts.getOrElse("path", throw new IllegalArgumentException(
       "graft-manifest needs a load(path) pointing at a manifest table root"))
@@ -289,98 +253,44 @@ object ManifestConnector {
     }
     val version = snap.version
 
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val rootUri = fs.makeQualified(rootPath).toUri.getPath
-
     // sizes come straight from the manifest (files are immutable, so
-    // the commit-time length is exact) — zero filesystem calls. Only
-    // pre-size-format manifests fall back to one recursive listing per
-    // commit dir.
-    val sizes: Map[String, Long] =
-      if (snap.entries.forall(_.size.isDefined))
-        snap.entries.map(e => e.path -> e.size.get).toMap
-      else snap.files.map(_.split("/")(1)).distinct.flatMap { cdir =>
-        val wanted = snap.files.toSet
-        val it = fs.listFiles(new Path(s"$root/data/$cdir"), true)
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          val rel = st.getPath.toUri.getPath
-            .stripPrefix(rootUri).stripPrefix("/")
-          if (wanted.contains(rel)) buf += rel -> st.getLen
-        }
-        buf
-      }.toMap
-
+    // the commit-time length is exact) — zero filesystem calls
     val files = snap.entries.map { e =>
-      FileInfo(graft.sources.Manifest.absEntryPath(root, e.path),
-        sizes.getOrElse(e.path, 0L),
+      FileInfo(graft.sources.Manifest.absEntryPath(root, e.path), e.size,
         partValuesOf(e.path), e.fileStats, e.dataSeq)
     }
-    // partition layout must be UNIFORM across the snapshot's files: a
-    // single odd file would otherwise silently miss every partition
-    // filter (dropped rows, no error). Heterogeneous layouts fail
-    // loudly at resolve time; rewrite (commitReplace) to converge.
-    val layouts = files.map(_.partValues.map(_._1)).distinct
-    require(layouts.size <= 1,
-      s"graft-manifest: mixed partition layouts across commits of " +
-        s"$root v$version: " +
-        layouts.map(_.mkString("[", ",", "]")).mkString(" vs ") +
-        " — rewrite older commits (commitReplace) before reading " +
-        "through the connector")
-
-    snap.schema match {
-      case Some(full) =>
-        // schema header = zero parquet footer reads at planning time;
-        // validate the connector's declared scope (flat primitives)
-        full.fields.foreach { f =>
-          require(supportedDataType(f.dataType),
-            s"graft-manifest supports flat primitive columns only; " +
-              s"column ${f.name} is ${f.dataType.catalogString}")
-        }
-        val partCols = snap.partCols.getOrElse(Nil)
-        partCols.foreach { c =>
-          val dt = full(c).dataType
-          require(dt match {
-            case StringType | IntegerType | LongType | DoubleType |
-                 FloatType | BooleanType => true
-            case _ => false
-          }, s"graft-manifest does not support partition column type " +
-            s"${dt.catalogString} (column $c)")
-        }
-        require(layouts.isEmpty || layouts == Seq(partCols),
-          s"graft-manifest: mixed partition layouts — files of $root " +
-            s"v$version are laid out as " +
-            layouts.map(_.mkString("[", ",", "]")).mkString(" vs ") +
-            s" but the manifest declares ${partCols.mkString("[", ",", "]")}")
-        val dataSchema = StructType(
-          full.filterNot(f => partCols.contains(f.name)))
-        Resolved(root, version, files, partCols, dataSchema, Some(full),
-          snap.deletes, branchOpt, snap.meta)
-
-      case None =>
-        // legacy manifest: derive the layout from paths and the data
-        // schema from the newest commit's first footer
-        require(snap.files.nonEmpty,
-          s"version $version of $root lists no files")
-        val partCols = layouts.headOption.getOrElse(Nil)
-        val newestCommit = snap.files.map(_.split("/")(1)).max
-        val schemaFile = snap.files.filter(_.split("/")(1) == newestCommit)
-          .min
-        val in = HadoopInputFile.fromPath(
-          new Path(s"$root/$schemaFile"), conf)
-        val reader = ParquetFileReader.open(in)
-        val msg = try reader.getFileMetaData.getSchema finally reader.close()
-        val dataSchema = StructType(msg.getFields.asScala.toSeq.map { f =>
-          StructField(f.getName, sparkTypeOf(f),
-            nullable = !f.isRepetition(PType.Repetition.REQUIRED))
-        })
-        Resolved(root, version, files, partCols, dataSchema,
-          branch = branchOpt, tableMeta = snap.meta)
+    // schema header = zero parquet footer reads at planning time;
+    // validate the connector's declared scope (flat primitives)
+    val full = snap.schema
+    full.fields.foreach { f =>
+      require(supportedDataType(f.dataType),
+        s"graft-manifest supports flat primitive columns only; " +
+          s"column ${f.name} is ${f.dataType.catalogString}")
     }
+    val partCols = snap.partCols
+    partCols.foreach { c =>
+      val dt = full(c).dataType
+      require(dt match {
+        case StringType | IntegerType | LongType | DoubleType |
+             FloatType | BooleanType => true
+        case _ => false
+      }, s"graft-manifest does not support partition column type " +
+        s"${dt.catalogString} (column $c)")
+    }
+    // partition layout must match the declared one on EVERY file: a
+    // single odd file would otherwise silently miss every partition
+    // filter (dropped rows, no error). Fails loudly at resolve time;
+    // rewrite (commitReplace) to converge.
+    val layouts = files.map(_.partValues.map(_._1)).distinct
+    require(layouts.isEmpty || layouts == Seq(partCols),
+      s"graft-manifest: mixed partition layouts — files of $root " +
+        s"v$version are laid out as " +
+        layouts.map(_.mkString("[", ",", "]")).mkString(" vs ") +
+        s" but the manifest declares ${partCols.mkString("[", ",", "]")}")
+    val dataSchema = StructType(
+      full.filterNot(f => partCols.contains(f.name)))
+    Resolved(root, version, files, partCols, dataSchema, full,
+      snap.deletes, branchOpt, snap.meta)
   }
 
   /** Can this filter be decided from partition values alone (and is it
@@ -828,8 +738,8 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
     }
   override def name(): String = s"graft-manifest ${res.root} v${res.version}"
   override def schema(): StructType =
-    if (cdc) ManifestConnector.cdcSchema(res.fullSchema)
-    else res.fullSchema
+    if (cdc) ManifestConnector.cdcSchema(res.declared)
+    else res.declared
 
   /** Surface snapshot facts to DESCRIBE EXTENDED / SHOW TBLPROPERTIES:
     * pinned version, layout, and the planned file/byte footprint. */
@@ -868,12 +778,12 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
       .getOption("spark.graft.manifest.delete.mode")
       .contains("merge-on-read")
     val keyed = if (mor)
-      ManifestConnector.predicatesToKeys(predicates, res.fullSchema)
+      ManifestConnector.predicatesToKeys(predicates, res.declared)
     else None
     keyed match {
       case Some((cols, tuples)) =>
         val schema = StructType(
-          cols.map(c => res.fullSchema(c).copy(nullable = false)))
+          cols.map(c => res.declared(c).copy(nullable = false)))
         val rows: java.util.List[org.apache.spark.sql.Row] =
           java.util.Arrays.asList(tuples.map(t =>
             org.apache.spark.sql.Row.fromSeq(t)): _*)
@@ -994,7 +904,7 @@ final class ManifestBatchWrite(res: ManifestConnector.Resolved,
 
   private def entriesOf(messages: Array[WriterCommitMessage]) =
     messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-      .flatten.map { case (p, sz) => Manifest.FileEntry(p, Some(sz)) }
+      .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val entries = entriesOf(messages)
@@ -1041,8 +951,8 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
   private var required: StructType =
-    if (cdc) ManifestConnector.cdcSchema(res.fullSchema)
-    else res.fullSchema
+    if (cdc) ManifestConnector.cdcSchema(res.declared)
+    else res.declared
   private var partitionFilters: Array[SFilter] = Array.empty
   private var dataFilters: Array[SFilter] = Array.empty
   private var limit: Int = -1
@@ -1194,7 +1104,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
     val groupCols = agg.groupByExpressions.toSeq.map(e =>
       colName(e).filter(partSet).getOrElse(return None))
     val groupFields = groupCols.map(c =>
-      res.fullSchema.find(_.name == c).getOrElse(return None))
+      res.declared.find(_.name == c).getOrElse(return None))
 
     // the output field list (validated against schema/part layout) is
     // group-independent; per-group VALUES are computed below
@@ -1210,20 +1120,20 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
         case c: Count if !c.isDistinct =>
           val name = colName(c.column).getOrElse(return None)
           if (partSet(name)) return None // part cols carry no stats
-          if (!res.fullSchema.fieldNames.contains(name)) return None
+          if (!res.declared.fieldNames.contains(name)) return None
           StructField(s"count_$name", LongType, false) ->
             CountColSpec(name)
         case m: Min =>
           val name = colName(m.column).getOrElse(return None)
           if (partSet(name)) return None
-          val f = res.fullSchema.find(_.name == name).getOrElse(
+          val f = res.declared.find(_.name == name).getOrElse(
             return None)
           StructField(s"min_$name", f.dataType, nullable = true) ->
             MinMaxSpec(f, isMin = true)
         case m: Max =>
           val name = colName(m.column).getOrElse(return None)
           if (partSet(name)) return None
-          val f = res.fullSchema.find(_.name == name).getOrElse(
+          val f = res.declared.find(_.name == name).getOrElse(
             return None)
           StructField(s"max_$name", f.dataType, nullable = true) ->
             MinMaxSpec(f, isMin = false)
@@ -1318,7 +1228,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
       case _ => return false
     }
     if (res.partCols.contains(name)) return false
-    val dt = res.fullSchema.find(_.name == name)
+    val dt = res.declared.find(_.name == name)
       .map(_.dataType).getOrElse(return false)
     def parse(s: String): Option[Long] = dt match {
       case IntegerType => s.toIntOption.map(_.toLong)
@@ -1424,7 +1334,7 @@ final class ManifestScan(res: ManifestConnector.Resolved,
     if (aggPlan.isDefined || cdc) Array.empty
     // only columns in the scan OUTPUT: Spark resolves these against
     // the (column-pruned) relation and throws on anything absent
-    else required.fieldNames.filter(res.fullSchema.fieldNames.contains)
+    else required.fieldNames.filter(res.declared.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(filters: Array[SFilter]): Unit = {
@@ -1514,7 +1424,7 @@ final class ManifestScan(res: ManifestConnector.Resolved,
       else res.partCols ++ ManifestConnector.metadataColumnFields
         .map(_.name).filter(required.fieldNames.contains)).toArray
     ManifestReaderFactory(entries, required, constCols,
-      dataFilters, limit, res.fullSchema,
+      dataFilters, limit, res.declared,
       plannedFiles.exists(f => res.deleteSpecsFor(f).nonEmpty) || cdc)
   }
 
@@ -1562,7 +1472,7 @@ final class ManifestScan(res: ManifestConnector.Resolved,
         // runtimeFiles ⊆ plannedFiles: re-planned after a runtime
         // filter narrowed the set (Spark re-invokes this post-filter)
         val keyTypes = res.partCols.map(c =>
-          res.fullSchema.find(_.name == c)
+          res.declared.find(_.name == c)
             .map(_.dataType).getOrElse(StringType))
         runtimeFiles.map { f =>
           val pv = f.partValues.toMap
@@ -1862,7 +1772,7 @@ final class ManifestPartitionReader(part: ManifestInputPartition,
   private val partValues: Map[String, String] = part.partValues.toMap
 
   private sealed trait ColPlan
-  // value pre-cast to the declared partition type (string for legacy)
+  // value pre-cast to the declared partition type
   private case class PartCol(value: Any) extends ColPlan
   private case class DataCol(projIdx: Int, dt: DataType) extends ColPlan
   private case object MissingCol extends ColPlan

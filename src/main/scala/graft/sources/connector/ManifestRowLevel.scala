@@ -80,7 +80,7 @@ final class ManifestCowScanBuilder(op: ManifestRowLevelOperation,
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  private var required: StructType = res.fullSchema
+  private var required: StructType = res.declared
   private var groupFilters: Array[SFilter] = Array.empty
 
   /** The command condition, used ONLY to prune groups — every filter
@@ -207,7 +207,7 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
       .map(e => (e.getKey, e.getValue)).toArray
     // NO data filters, NO limit: the rewrite read is full-fidelity
     ManifestReaderFactory(entries, required, res.partCols.toArray,
-      Array.empty, -1, res.fullSchema,
+      Array.empty, -1, res.declared,
       files.exists(f => res.deleteSpecsFor(f).nonEmpty))
   }
 
@@ -237,7 +237,7 @@ final class ManifestReplaceDataWrite(op: ManifestRowLevelOperation,
 
     private def entriesOf(messages: Array[WriterCommitMessage]) =
       messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-        .flatten.map { case (p, sz) => Manifest.FileEntry(p, Some(sz)) }
+        .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val scan = op.builtScan

@@ -149,7 +149,7 @@ final class ManifestMicroBatchStream(
               dataFilters.forall(ManifestConnector.mayMatch(_, st)))
         }
         .map(e => ManifestInputPartition(s"${res.root}/${e.path}",
-          e.size.getOrElse(0L),
+          e.size,
           Manifest.partValuesOf(e.path).toArray): InputPartition)
         .toArray
     }
@@ -182,12 +182,12 @@ private[connector] object ManifestStreamHelpers {
       "_change_type" -> kind, "_commit_version" -> v.toString)
     val inserts = cur.entries.filterNot(e => prevFiles.contains(e.path))
       .map(e => ManifestInputPartition(s"${res.root}/${e.path}",
-        e.size.getOrElse(0L),
+        e.size,
         Manifest.partValuesOf(e.path).toArray ++
           meta("insert", e.dataSeq)): InputPartition)
     val deletes = crossing
       .map(d => ManifestInputPartition(s"${res.root}/${d.path}",
-        d.size.getOrElse(0L),
+        d.size,
         meta("delete", d.seq)): InputPartition)
     (inserts ++ deletes).toArray
   }
@@ -242,7 +242,7 @@ final class ManifestStreamingWrite(res: ManifestConnector.Resolved,
 
   private def entriesOf(messages: Array[WriterCommitMessage]) =
     messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-      .flatten.map { case (p, sz) => Manifest.FileEntry(p, Some(sz)) }
+      .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
 
   private def deleteStaged(entries: Seq[Manifest.FileEntry]): Unit = {
     val root = new org.apache.hadoop.fs.Path(res.root)

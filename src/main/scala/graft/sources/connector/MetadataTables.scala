@@ -75,32 +75,27 @@ private[connector] object MetadataTables {
           StructField("version", LongType, nullable = false),
           StructField("committed_at", TimestampType, nullable = true),
           StructField("files", LongType, nullable = false),
-          // nullable: same NULL-rollup-over-undercount policy as the
-          // partitions table — a snapshot holding any file without a
-          // recorded size reports NULL, not a silently smaller sum
-          StructField("bytes", LongType, nullable = true)))
+          StructField("bytes", LongType, nullable = false)))
         relation(spark, s"$root#history", schema,
           Manifest.versions(spark, root).map { ver =>
             val m = Manifest.snapshotMeta(spark, root, ver)
-            val sizes = m.entries.map(_.size)
             new GenericInternalRow(Array[Any](ver,
               m.ts.map(ms => ms * 1000L).orNull,
-              m.entries.size.toLong,
-              if (sizes.exists(_.isEmpty)) null
-              else Long.box(sizes.flatten.sum))): InternalRow
+              m.entries.size.toLong, m.entries.map(_.size).sum))
+              : InternalRow
           }.toArray)
       case "files" =>
         val schema = StructType(Seq(
           StructField("path", StringType, nullable = false),
           StructField("partition", StringType, nullable = false),
-          StructField("size_bytes", LongType, nullable = true),
+          StructField("size_bytes", LongType, nullable = false),
           StructField("row_count", LongType, nullable = true),
           StructField("seq", LongType, nullable = true)))
         relation(spark, s"$root#files@$v", schema,
           Manifest.snapshotMeta(spark, root, v).entries.map { e =>
             new GenericInternalRow(Array[Any](u(e.path),
               u(partString(e.path)),
-              e.size.map(Long.box).orNull,
+              e.size,
               e.fileStats.map(s => Long.box(s.rows)).orNull,
               e.seq.map(Long.box).orNull)): InternalRow
           }.toArray)
@@ -109,32 +104,30 @@ private[connector] object MetadataTables {
           StructField("partition", StringType, nullable = false),
           StructField("files", LongType, nullable = false),
           StructField("row_count", LongType, nullable = true),
-          StructField("bytes", LongType, nullable = true)))
+          StructField("bytes", LongType, nullable = false)))
         val groups = Manifest.snapshotMeta(spark, root, v).entries
           .groupBy(e => partString(e.path)).toSeq.sortBy(_._1)
         relation(spark, s"$root#partitions@$v", schema,
           groups.map { case (p, es) =>
-            // NULL rollup when ANY member lacks the fact — an
+            // NULL row_count rollup when ANY member lacks stats — an
             // undercount would read as truth
-            def sumOpt(xs: Seq[Option[Long]]): Any =
-              if (xs.exists(_.isEmpty)) null
-              else Long.box(xs.flatten.sum)
+            val rows = es.map(_.fileStats.map(_.rows))
             new GenericInternalRow(Array[Any](u(p), es.size.toLong,
-              sumOpt(es.map(_.fileStats.map(_.rows))),
-              sumOpt(es.map(_.size)))): InternalRow
+              if (rows.exists(_.isEmpty)) null else Long.box(rows.flatten.sum),
+              es.map(_.size).sum)): InternalRow
           }.toArray)
       case "delete_files" =>
         // pending merge-on-read delete files of the snapshot: the keys
         // they erase apply to data files with STRICTLY smaller seq
         val schema = StructType(Seq(
           StructField("path", StringType, nullable = false),
-          StructField("size_bytes", LongType, nullable = true),
+          StructField("size_bytes", LongType, nullable = false),
           StructField("seq", LongType, nullable = false),
           StructField("key_columns", StringType, nullable = false)))
         relation(spark, s"$root#delete_files@$v", schema,
           Manifest.snapshotMeta(spark, root, v).deletes.map { d =>
             new GenericInternalRow(Array[Any](u(d.path),
-              d.size.map(Long.box).orNull, d.seq,
+              d.size, d.seq,
               u(d.keyCols.mkString(",")))): InternalRow
           }.toArray)
       case "tags" =>

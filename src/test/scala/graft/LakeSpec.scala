@@ -137,15 +137,6 @@ class LakeSpec extends SparkSpec {
     assert(dropped == Seq("2024-01-01"))
     assert(Lake.read(spark,
       Lake.zonePath(root, Lake.Raw, "docs"), "json").count() == 1)
-    // compaction over the same URI root
-    val croot = "file://" +
-      Files.createTempDirectory("graft_uri_c").toString + "/t"
-    Seq.tabulate(20)(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(10).write.parquet(croot)
-    val (before, after) =
-      graft.sources.Compact.compactPath(spark, croot)
-    assert(before >= 10 && after < before)
-    assert(spark.read.parquet(croot).count() == 20)
   }
 
   test("nanToNull nulls every NaN float/double and is idempotent") {

@@ -260,10 +260,10 @@ class ManifestConnectorSpec extends SparkSpec {
     }
     assert(commitErr.getMessage.contains("partition layout mismatch"),
       commitErr.getMessage)
-    // forge the mixed state a legacy/foreign writer could produce:
-    // unpartitioned files published alongside the partitioned commit —
-    // older files' partValues would silently miss every `part` filter
-    // if this resolved
+    // forge the mixed state a foreign writer could produce: unpartitioned
+    // files published alongside the partitioned commit, under the
+    // snapshot's own headers — older files' partValues would silently
+    // miss every `part` filter if this resolved
     Seq((2L, "b", 20L)).toDF("id", "part", "v")
       .write.parquet(s"$root/data/c00000002-forged")
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -279,11 +279,11 @@ class ManifestConnectorSpec extends SparkSpec {
       if (st.getPath.getName.endsWith(".parquet"))
         forged += graft.sources.Manifest.FileEntry(
           st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"),
-          Some(st.getLen))
+          st.getLen)
     }
-    val prev = Manifest.snapshot(spark, root, 1L).files
-      .map(graft.sources.Manifest.FileEntry(_, None))
-    Manifest.publish(spark, root, 1L, prev ++ forged.toSeq)
+    val prev = Manifest.snapshotMeta(spark, root, 1L)
+    Manifest.publish(spark, root, 1L, prev.entries ++ forged.toSeq,
+      prev.meta)
     val e = intercept[Exception](connRead(root).schema)
     assert(e.getMessage.contains("mixed partition layouts"), e.getMessage)
   }

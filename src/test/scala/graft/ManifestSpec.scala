@@ -86,7 +86,7 @@ class ManifestSpec extends SparkSpec {
     val before = Manifest.read(spark, root, None)
       .select("id", "part", "v").as[(Long, String, Int)].collect().toSet
     val v4 = Manifest.snapshotMeta(spark, root, 4L)
-    val healthy = v4.entries.filter(_.size.exists(_ >= 2500L)).map(_.path)
+    val healthy = v4.entries.filter(_.size >= 2500L).map(_.path)
     assert(healthy.nonEmpty, "fixture needs one healthy-size file: " +
       v4.entries.map(e => e.path -> e.size))
     // compact everything under 2500 bytes (the three tiny commits)
@@ -437,11 +437,10 @@ class ManifestSpec extends SparkSpec {
     // the winner's v2 manifest file directly.
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val winner = Manifest.snapshot(spark, root, 1L)
+    val v1 = new org.apache.hadoop.fs.Path(root + "/_manifests/v00000001.txt")
     val v2 = new org.apache.hadoop.fs.Path(root + "/_manifests/v00000002.txt")
-    val out = fs.create(v2, false)
-    out.write((winner.files.mkString("\n") + "\n").getBytes("UTF-8"))
-    out.close()
+    org.apache.hadoop.fs.FileUtil.copy(fs, v1, fs, v2, false,
+      spark.sparkContext.hadoopConfiguration)
     // The loser computed next=2 from a stale latestVersion... but any
     // commit it now attempts sees latest=2 and targets v3 — so force
     // the true race by deleting v2 AFTER the loser reads latest? The
@@ -464,19 +463,18 @@ class ManifestSpec extends SparkSpec {
     "— exactly one winner, loser throws, winner's manifest intact") {
     val root = newRoot()
     Manifest.init(spark, root, Seq((1L, "x")).toDF("id", "s"))
-    val files = Manifest.snapshot(spark, root, 1L).files
-      .map(Manifest.FileEntry(_, None))
+    val m = Manifest.snapshotMeta(spark, root, 1L)
     // both racers read latestVersion = 1 before either published
-    val won = Manifest.publish(spark, root, 1L, files)
+    val won = Manifest.publish(spark, root, 1L, m.entries, m.meta)
     assert(won == 2L)
     val e = intercept[IllegalStateException] {
       // the loser's list differs — if create-if-absent were not atomic
       // (the old exists+rename on local FS silently overwrites) this
       // would replace the winner's manifest instead of throwing
-      Manifest.publish(spark, root, 1L, files ++ files)
+      Manifest.publish(spark, root, 1L, m.entries ++ m.entries, m.meta)
     }
     assert(e.getMessage.contains("commit conflict"), e.getMessage)
-    assert(Manifest.snapshot(spark, root, 2L).files == files.map(_.path),
+    assert(Manifest.snapshot(spark, root, 2L).files == m.files,
       "winner's manifest was clobbered by the losing committer")
     assert(Manifest.latestVersion(spark, root).contains(2L))
   }
@@ -646,47 +644,163 @@ class ManifestSpec extends SparkSpec {
       == cur, "unmatched DELETE must not commit a new version")
   }
 
-  test("append onto a legacy (pre-header) manifest keeps columns that " +
-    "only older commits carry") {
-    val root = newRoot()
-    Manifest.init(spark, root, Seq((1L, "x", 5)).toDF("id", "s", "extra"))
-    // strip the schema header: simulate a manifest written before the
-    // header format existed
-    val m = Manifest.snapshotMeta(spark, root, 1L)
-    Manifest.publish(spark, root, 1L, m.entries)
-    // the appended frame LACKS 'extra' — the republished header must be
-    // the union of the on-disk schema and the new frame's, not the new
-    // frame's alone
-    Manifest.commitAppend(spark, root, Seq((2L, "y")).toDF("id", "s"))
-    val df = Manifest.read(spark, root, None)
-    assert(df.columns.toSet == Set("id", "s", "extra"),
-      s"legacy column lost: ${df.columns.mkString(",")}")
-    assert(df.select("id", "s", "extra")
-      .as[(Long, String, Option[Int])].collect().toSet ==
-      Set((1L, "x", Some(5)), (2L, "y", None)))
+  /** Raw lines of one manifest file under `root/_manifests`. */
+  private def manifestLines(root: String, file: String): List[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/_manifests/$file")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList
+    finally in.close()
   }
 
-  test("compact on a legacy partitioned manifest derives the layout " +
-    "from file paths instead of rewriting unpartitioned") {
+  test("every public write path commits the schema, partcols, count " +
+    "and dcount headers and a size on every file line") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.sources.{SearchIndex, VectorIndex}
     val root = newRoot()
-    Manifest.init(spark, root,
-      Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "part", "v"),
-      Seq("part"))
-    Manifest.commitAppend(spark, root,
-      Seq((3L, "a", 30)).toDF("id", "part", "v"), Seq("part"))
-    // strip headers: a legacy manifest whose files ARE hive-partitioned
-    val m = Manifest.snapshotMeta(spark, root, 2L)
-    Manifest.publish(spark, root, 2L, m.entries)
-    val v = Manifest.compact(spark, root,
-      smallBytes = 1L << 30, targetBytes = 1L << 30)
-    assert(v == 4L)
-    val files = Manifest.snapshot(spark, root, v).files
-    assert(files.forall(_.contains("part=")),
-      s"compacted files lost the hive layout: $files")
-    assert(Manifest.read(spark, root, None)
-      .select("id", "part", "v").as[(Long, String, Int)]
-      .collect().toSet ==
-      Set((1L, "a", 10), (2L, "b", 20), (3L, "a", 30)))
+    val part = Seq("part")
+    def rows(xs: (Long, String, Int)*) = xs.toDF("id", "part", "v")
+    def vName(v: Long) = f"v$v%08d.txt"
+    def head(r: String) = vName(Manifest.latestVersion(spark, r).get)
+    def headV = Manifest.latestVersion(spark, root).get
+    val clone = newRoot()
+    val docs = newRoot(); val sidx = newRoot()
+    val vecs = newRoot(); val vidx = newRoot()
+    def vecRows(ids: Long*) = ids.map(i =>
+      (i, Array(math.cos(i.toDouble).toFloat,
+        math.sin(i.toDouble).toFloat)))
+      .toDF("vec_id", "embedding")
+    // (write path, the manifest it committed: (table root, file name))
+    val paths: Seq[(String, () => (String, String))] = Seq(
+      "init" -> { () =>
+        Manifest.init(spark, root, rows((1L, "a", 10), (2L, "b", 20)), part)
+        (root, head(root)) },
+      "append" -> { () =>
+        Manifest.commitAppend(spark, root, rows((3L, "a", 30)), part)
+        (root, head(root)) },
+      "appendIf" -> { () =>
+        Manifest.commitAppendIf(spark, root, headV, rows((4L, "c", 40)),
+          part)
+        (root, head(root)) },
+      "stream batch" -> { () =>
+        Manifest.commitStreamBatch(spark, root, rows((5L, "c", 50)), "q",
+          0L, part)
+        (root, head(root)) },
+      "merge" -> { () =>
+        Manifest.mergeInto(spark, root, rows((2L, "b", 99)), "id", part)
+        (root, head(root)) },
+      "deleteWhere" -> { () =>
+        Manifest.deleteWhere(spark, root, col("id") === 1L, part)
+        (root, head(root)) },
+      "deleteByKeys" -> { () =>
+        Manifest.deleteByKeys(spark, root, Seq(3L).toDF("id"))
+        (root, head(root)) },
+      "rewriteDeletes" -> { () =>
+        Manifest.rewriteDeletes(spark, root)
+        (root, head(root)) },
+      "compact" -> { () =>
+        Manifest.compact(spark, root, smallBytes = 1L << 30,
+          targetBytes = 1L << 30)
+        (root, head(root)) },
+      "zorder" -> { () =>
+        Manifest.zorder(spark, root, "id", "v")
+        (root, head(root)) },
+      "add columns" -> { () =>
+        Manifest.commitAddColumns(spark, root,
+          StructType(Seq(StructField("w", StringType))))
+        (root, head(root)) },
+      "drop columns" -> { () =>
+        Manifest.commitDropColumns(spark, root, Seq("w"))
+        (root, head(root)) },
+      "replace" -> { () =>
+        Manifest.commitReplace(spark, root,
+          rows((6L, "a", 60), (7L, "d", 70)), part)
+        (root, head(root)) },
+      "rollback" -> { () =>
+        Manifest.rollback(spark, root, headV - 1)
+        (root, head(root)) },
+      "clone" -> { () =>
+        Manifest.cloneTable(spark, root, clone)
+        (clone, head(clone)) },
+      "stage" -> { () =>
+        Manifest.stageAppend(spark, root, rows((8L, "a", 80)), "s1", part)
+        (root, "stage-s1.txt") },
+      "publish stage" -> { () =>
+        Manifest.publishStage(spark, root, "s1")
+        (root, head(root)) },
+      "branch append" -> { () =>
+        Manifest.createBranch(spark, root, "b1")
+        val bv = Manifest.commitAppendBranch(spark, root, "b1",
+          rows((9L, "b", 90)), part)
+        (root, s"branch-b1-${vName(bv)}") },
+      "fast-forward" -> { () =>
+        Manifest.fastForward(spark, root, "b1")
+        (root, head(root)) },
+      "search index create" -> { () =>
+        Manifest.init(spark, docs, Seq((1L, "en", "merge window scan"))
+          .toDF("id", "lang", "text"), Seq("lang"))
+        SearchIndex.create(spark, docs, sidx, "id", "text", buckets = 2)
+        (sidx, head(sidx)) },
+      "search index refresh" -> { () =>
+        Manifest.commitAppend(spark, docs, Seq((2L, "de", "window table"))
+          .toDF("id", "lang", "text"), Seq("lang"))
+        SearchIndex.refresh(spark, docs, sidx)
+        (sidx, head(sidx)) },
+      "vector index create" -> { () =>
+        Manifest.init(spark, vecs, vecRows(1L, 2L, 3L, 4L))
+        VectorIndex.createFromManifest(spark, vecs, vidx, "vec_id",
+          "embedding", nCells = 2)
+        (vidx, head(vidx)) },
+      "vector index refresh" -> { () =>
+        Manifest.commitAppend(spark, vecs, vecRows(5L, 6L))
+        VectorIndex.refresh(spark, vecs, vidx)
+        (vidx, head(vidx)) })
+    paths.foreach { case (name, write) =>
+      val (r, file) = write()
+      val lines = manifestLines(r, file)
+      val headers = lines.filter(_.startsWith("#"))
+        .map(_.stripPrefix("#").takeWhile(_ != '=')).toSet
+      val missing = Manifest.RequiredHeaders.filterNot(headers)
+      assert(missing.isEmpty,
+        s"$name: $file lacks the ${missing.mkString(", ")} header(s)")
+      // data lines `path<TAB>size...`, delete lines `~path<TAB>size...`
+      val body = lines.filterNot(_.startsWith("#"))
+      assert(body.nonEmpty, s"$name: $file lists no files")
+      val unsized = body.filterNot(
+        _.split('\t').lift(1).exists(_.toLongOption.isDefined))
+      assert(unsized.isEmpty, s"$name: $file has size-less lines $unsized")
+    }
+  }
+
+  test("a manifest without the format's headers or file sizes is " +
+    "refused at read") {
+    val root = newRoot()
+    Manifest.init(spark, root, Seq((1L, "x")).toDF("id", "s"))
+    val f1 = Manifest.snapshotMeta(spark, root, 1L).entries.head
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def plant(v: Long, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        f"$root/_manifests/v$v%08d.txt"), false)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    // fenced and sized, but no schema or partcols header
+    plant(2L, s"#count=1\n#dcount=0\n${f1.path}\t${f1.size}\n")
+    val e = intercept[IllegalArgumentException](
+      Manifest.read(spark, root, Some(2L)))
+    assert(e.getMessage.contains("lacks the schema, partcols header(s)"),
+      e.getMessage)
+    val ce = intercept[Exception](spark.read.format("graft-manifest")
+      .option("version", "2").load(root).schema)
+    assert(ce.getMessage.contains("lacks the schema, partcols header(s)"),
+      ce.getMessage)
+    // every header, but a file line without its size
+    val hdr = manifestLines(root, "v00000001.txt").filter(_.startsWith("#"))
+    plant(3L, (hdr :+ f1.path).mkString("\n") + "\n")
+    val se = intercept[IllegalArgumentException](
+      Manifest.read(spark, root, Some(3L)))
+    assert(se.getMessage.contains("file line without a size"),
+      se.getMessage)
   }
 
   private def rowsOf(root: String, v: Option[Long] = None) =

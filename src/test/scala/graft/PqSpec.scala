@@ -116,32 +116,6 @@ class PqSpec extends SparkSpec {
     assert(near.subsetOf(Set(11L, 12L, 13L)), s"got $near")
   }
 
-  test("ivfPqTopKRefined: with every cell probed and full-corpus " +
-    "training it equals pqTopKRefined row-for-row; cell-pruned on " +
-    "separated clusters it still returns the exact L2 top-k") {
-    val emb = clustered()
-    val full = Similarity.pqTopKRefined(emb, "vec_id", "embedding",
-        queryId = 10L, topK = 3, dim = 4, m = 2, k = 4, iters = 1,
-        refineFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val composed = Similarity.ivfPqTopKRefined(emb, "vec_id",
-        "embedding", queryId = 10L, topK = 3, dim = 4,
-        nCentroids = 3, nProbe = 3, m = 2, k = 4, iters = 1,
-        refineFactor = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(composed == full, s"composed $composed != full $full")
-    // genuinely pruned (1 of 3 cells) on tight clusters: the probed
-    // cell holds the cluster mates, and the exact re-rank pins the
-    // true L2 top-3 (11, 12 at 0.01, 13 at 0.02)
-    val pruned = Similarity.ivfPqTopKRefined(emb, "vec_id",
-        "embedding", queryId = 10L, topK = 3, dim = 4,
-        nCentroids = 3, nProbe = 1, m = 2, k = 4, iters = 1,
-        refineFactor = 2, maxTrain = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(pruned.map(_._1).toSet == Set(11L, 12L, 13L), s"got $pruned")
-    assert(pruned.map(_._2) == pruned.map(_._2).sorted)
-  }
-
   test("pqTopKRefinedBatch equals pqTopKRefined per query at the same " +
     "settings — the batch is amortization, never an approximation " +
     "change") {
