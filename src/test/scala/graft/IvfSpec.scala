@@ -130,6 +130,29 @@ class IvfSpec extends SparkSpec {
     assert(got.forall(_.getAs[Double]("sim") > 0.95))
   }
 
+  test("kmeansAssign drops a cluster that empties: duplicate init " +
+    "vectors leave the higher cid memberless, and it never returns") {
+    // portable-hash order (salt "kmeans") of ids 1-12 starts 6, 8, 11:
+    // cids 0 and 1 seed on the SAME vector, so every tie goes to cid 0
+    // and cid 1 empties in the first pass. Carried forward, it would sit
+    // exactly on ids 6 and 8 (cosine 1.0) and win them back at the
+    // final assignment; dropped, it is gone.
+    val x = Array(1f, 0f, 0f)
+    val dup = Seq(6L -> x, 8L -> x, 1L -> Array(1f, 0.2f, 0f),
+      2L -> Array(1f, 0f, 0.2f), 3L -> Array(1f, 0.1f, 0.1f),
+      9L -> Array(1f, -0.1f, 0.1f), 11L -> Array(0f, 1f, 0f),
+      4L -> Array(0.1f, 1f, 0f), 5L -> Array(0f, 1f, 0.1f),
+      7L -> Array(0.05f, 1f, 0.05f), 10L -> Array(-0.1f, 1f, 0.1f),
+      12L -> Array(0f, 1f, -0.1f)).toDF("vec_id", "embedding")
+    val got = Similarity.kmeansAssign(dup, "vec_id", "embedding",
+        k = 3, iters = 1)
+      .select("vec_id", "cid").as[(Long, Long)].collect().toMap
+    assert(got.values.toSet == Set(0L, 2L), s"got $got")
+    assert(got(6L) == 0L && got(8L) == 0L, s"got $got")
+    assert(Seq(11L, 4L, 5L, 7L, 10L, 12L).forall(got(_) == 2L),
+      s"got $got")
+  }
+
   test("kmeansAssign is deterministic across runs (portable-hash init)") {
     def run() = Similarity.kmeansAssign(emb, "vec_id", "embedding",
         k = 3, iters = 1)
