@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vectors
-import graft.operators.{Sampling, Similarity}
+import graft.operators.Similarity
 
 /** VALIDATE-THEN-PIN measurement main for the served ANN settings
   * (q229/q244/q245/q250): before registering or re-tuning nProbe /
@@ -52,6 +51,7 @@ object AnnProbeCheck {
     val iters = 2
     val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
 
     val (emb, nCells) =
       if (clusteredMode) {
@@ -59,65 +59,42 @@ object AnnProbeCheck {
         (graft.sources.Fixtures.clusteredEmbeddings(spark, n),
           graft.sources.Fixtures.scaledClusters(n)) // cells ≡ clusters
       } else (Tables.load(spark, sfDir, "embeddings"), 16)
-    val assign = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells)
-      .select(col("vec_id").as("id"), col("centroid_id")).persist()
-    val pivots = Similarity.ivfPivots(emb, "vec_id", "embedding", nCells)
-    val trainSet = emb.orderBy(
-      Sampling.portableHash(col("vec_id"), "pqtrain").asc,
-      col("vec_id").asc).limit(2048)
-    val books = Similarity.pqCodebooks(trainSet, "vec_id", "embedding",
-      dim, m, pqK, iters)
-    val codes = Similarity.pqEncode(emb, "vec_id", "embedding", books,
-      dim, m).persist()
-
-    val qset = broadcast(emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"),
-        Vectors.toDouble(col("embedding")).as("qvec")))
+    val pivots = Similarity.pivotRows(
+      Similarity.ivfPivots(emb, "vec_id", "embedding", nCells))
+    val assign = Similarity.ivfAssign(
+        Similarity.vecRows(emb, "vec_id", "embedding"), pivots)
+      .persist()
+    val books = Similarity.trainBooks(
+      Similarity.trainSample(emb, "vec_id", "pqtrain", 2048),
+      "vec_id", "embedding", dim, m, pqK, iters)
+    val codes = Similarity.encode(assign, books, m, dim / m).persist()
+    val qs = Similarity.queryRows(emb.filter(col("vec_id").isin(qids: _*)),
+      "vec_id", "embedding")
+    val qset = Similarity.qsetOf(spark, qs)
 
     // probe rank of every cell per query (1-based, cosine desc / pid asc)
-    val probeRank = pivots.crossJoin(qset)
-      .select(col("qid"), col("pid"),
-        coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-          .as("pc"))
-      .withColumn("probe_rank", row_number().over(
-        Window.partitionBy("qid")
-          .orderBy(col("pc").desc, col("pid").asc)))
-      .select("qid", "pid", "probe_rank")
+    val ranks = Similarity.probe(qs, pivots, nCells).groupBy(_._1).values
+      .flatMap(_.zipWithIndex.map { case ((q, pid), i) => (q, pid, i + 1) })
+      .toSeq
+    val probeRank = ranks.toDF("qid", "centroid_id", "probe_rank")
 
     // exact L2 top-k per query
-    val exact = graft.plans.TopK.perGroup(
-      emb.select(col("vec_id").as("id"),
-          Vectors.toDouble(col("embedding")).as("v"))
-        .crossJoin(qset)
-        .filter(col("id") =!= col("qid"))
-        .select(col("qid"), col("id"),
-          round(Similarity.l2sq(col("v"), col("qvec")), 6).as("d")),
-      Seq("qid"), Seq(graft.plans.TopK.asc("d"),
-        graft.plans.TopK.asc("id")), topK)
+    val exact = Similarity.exactTopK(assign.crossJoin(qset), topK,
+      cosine = false, Some(6))
 
     // ADC rank among the REGISTERED nProbe cells' candidates
-    val probed = probeRank.filter(col("probe_rank") <= nProbe)
-      .select(col("qid"), col("pid").as("centroid_id"))
-    val subDim = dim / m
-    val qsub = qset.select(col("qid"),
-        posexplode(Similarity.subspaces(col("qvec"), m, subDim)))
-      .toDF("qid", "m", "qsv")
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("qid"), col("m"), col("cid").as("code"),
-        Similarity.l2sq(col("cv"), col("qsv")).as("pd")))
-    val adcRank = codes.join(assign, Seq("id"))
-      .join(broadcast(probed), Seq("centroid_id"))
-      .filter(col("id") =!= col("qid"))
-      .join(lut, Seq("qid", "m", "code"))
-      .groupBy("qid", "id").agg(sum("pd").as("ad"))
+    val adcRank = Similarity.adc(
+        Similarity.inProbed(codes,
+          ranks.collect { case (q, pid, r) if r <= nProbe => (q, pid) }),
+        Similarity.lut(Similarity.booksFrame(spark, books), qset, m,
+          dim / m))
       .withColumn("adc_rank", row_number().over(
         Window.partitionBy("qid").orderBy(col("ad").asc, col("id").asc)))
       .select("qid", "id", "adc_rank")
 
     val report = exact
-      .join(assign, Seq("id"))
-      .join(probeRank.withColumnRenamed("pid", "centroid_id"),
-        Seq("qid", "centroid_id"))
+      .join(assign.select("id", "centroid_id"), Seq("id"))
+      .join(probeRank, Seq("qid", "centroid_id"))
       .join(adcRank, Seq("qid", "id"), "left")
       .groupBy("qid")
       .agg(countDistinct("centroid_id").as("cells"),

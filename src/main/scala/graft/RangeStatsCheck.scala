@@ -81,18 +81,11 @@ object RangeStatsCheck {
         .map(_.toDouble))
       val th = st("vidx.cellcos").split(",").map(c =>
         math.acos(math.max(-1.0, math.min(1.0, c.toDouble))))
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) {
-          d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-        }
-        val dn = math.sqrt(na) * math.sqrt(nb)
-        if (dn == 0.0) -2.0 else d / dn
-      }
       val ta = math.acos(math.max(-1.0, math.min(1.0, tau)))
       (for {
         c1 <- pv.indices; c2 <- pv.indices
-        if math.acos(math.max(-1.0, math.min(1.0, cos(pv(c1), pv(c2))))) <=
+        if math.acos(math.max(-1.0, math.min(1.0,
+          graft.operators.Similarity.driverCos(pv(c1), pv(c2))))) <=
           th(c1) + th(c2) + ta + 1e-9
       } yield 1).size
     }

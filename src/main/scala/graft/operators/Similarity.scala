@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.plans.TopK
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2.11 X3).
@@ -96,25 +96,150 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF (inverted-file) coarse quantizer: `nCentroids` pivot vectors
-    * chosen as a DETERMINISTIC hash-ordered sample of the corpus (no
-    * RNG — reproducible across runs/retries); every vector is assigned
-    * to its nearest pivot by cosine.
-    *
-    * Scale shape: the pivot set is collapsed into ONE broadcast row
-    * (array of structs), so assignment is a map-only argmax over
-    * nCentroids cosines per vector — no shuffle, no collect(). At
-    * 100 TB the output would be written bucketed by `centroid_id`, so a
-    * probe reads only its cells' files. */
+
+  // ---- THE IVF/PQ KERNEL ---------------------------------------------
+  // Every ANN path — the in-query operators below, the persisted
+  // VectorIndex and IvfPqIndex, AnnProbeCheck — is built from these
+  // pieces: one nearest-centroid fold, one Lloyd loop, one training-
+  // sample rule, one probe selection, one ADC lookup table + shortlist,
+  // one exact rank. Centroids, pivots and query vectors are bounded
+  // (k·dim, m·pqK·subDim, nCells·dim, |Q|·dim values) and live on the
+  // driver between passes; only corpus-sized work runs in Spark.
+  // Everything is deterministic: portable-hash seeds, fixed iteration
+  // counts, first-in-order tie-breaks — the same-seed replay property
+  // the DuckDB oracles check.
+
+  /** A driver-side centroid: (group, cid, vector). The group is the PQ
+    * subspace; k-means centroids and IVF pivots are all group 0. */
+  private[graft] type Cent = (Int, Long, Array[Double])
+
+  /** Squared L2 over two equal-length double arrays (HOF on
+    * materialized columns — stays out of the shuffle). */
+  private[graft] def l2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0.0), _ + _)
+
+  private[graft] def subspaces(v: Column, m: Int, subDim: Int): Column =
+    array((0 until m).map(i => slice(v, i * subDim + 1, subDim)): _*)
+
+  /** Cosine on the driver, with a zero norm scoring -2.0: the same
+    * left-to-right fold as `Vectors.cosine`, so it is bit-identical to
+    * `coalesce(Vectors.cosine(a, b), -2.0)` on equal-length vectors. */
+  private[graft] def driverCos(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length && i < b.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    val d = math.sqrt(na) * math.sqrt(nb)
+    if (d == 0.0) -2.0 else dot / d
+  }
+
+  /** THE nearest-centroid fold: a map-only `aggregate` over `cents`, an
+    * array of (cid, cv) structs, yielding struct(d, cid) — the argmin
+    * distance from `v`. Strict `<` keeps the FIRST element on ties
+    * (ascending cid for trained centroids, pivot-rule order for IVF
+    * pivots); cid is -1 when nothing beats the start value. Cosine
+    * enters negated, a NULL cosine (zero norm) as 2.0 — the cosine
+    * start value, so it never wins; otherwise the distance is squared
+    * L2. */
+  private[graft] def nearest(cents: Column, v: Column,
+                             cosine: Boolean): Column = {
+    def dist(cv: Column) =
+      if (cosine) -coalesce(Vectors.cosine(v, cv), lit(-2.0))
+      else l2sq(v, cv)
+    aggregate(cents,
+      struct(lit(if (cosine) 2.0 else Double.MaxValue).as("d"),
+        lit(-1L).as("cid")),
+      (acc, c) => {
+        val d = dist(c.getField("cv"))
+        when(d < acc.getField("d"),
+          struct(d.as("d"), c.getField("cid").as("cid")))
+          .otherwise(acc)
+      })
+  }
+
+  private[graft] final case class CentLit(cid: Long, cv: Array[Double])
+
+  /** The [[nearest]] operand for a row of group `g`: `cents` as ONE
+    * literal (an array per group, input order kept within a group) and
+    * the row's group picked by index — no broadcast, no per-row
+    * filter. */
+  private[graft] def centsOf(cents: Seq[Cent], g: Column): Column = {
+    val byGroup = cents.groupBy(_._1)
+    val groups = (0 to (if (cents.isEmpty) 0 else byGroup.keys.max))
+      .map(i => byGroup.getOrElse(i, Nil).map(c => CentLit(c._2, c._3)))
+    element_at(typedLit(groups), g + 1)
+  }
+
+  /** THE Lloyd loop over `(g, v)` rows: each iteration is one
+    * assignment pass through [[nearest]] against the driver-side
+    * centroids and one posexplode → avg → collect means step (a bounded
+    * groups·k·dim-row aggregate). A centroid that lost every member is
+    * DROPPED when `keepEmpty` is false — kmeansAssign's trajectory,
+    * which the q96/q121/q232 oracles replay — or keeps its previous
+    * vector — codebooks and index pivots, whose count is a contract.
+    * Returns the centroids in (g, cid) order. */
+  private[graft] def lloyd(pts: DataFrame, init: Seq[Cent],
+                           cosine: Boolean, iters: Int,
+                           keepEmpty: Boolean): Seq[Cent] =
+    (1 to iters).foldLeft(init) { (cents, _) =>
+      val means = pts
+        .select(col("g"), nearest(centsOf(cents, col("g")), col("v"),
+          cosine).getField("cid").as("cid"), col("v"))
+        .select(col("g"), col("cid"), posexplode(col("v")))
+        .toDF("g", "cid", "pos", "x")
+        .groupBy("g", "cid", "pos").agg(avg("x").as("x"))
+        .groupBy("g", "cid")
+        .agg(transform(sort_array(collect_list(struct(col("pos"),
+          col("x")))), s => s.getField("x")).as("cv"))
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray)
+        .toMap
+      if (keepEmpty)
+        cents.map { case (g, cid, cv) =>
+          (g, cid, means.getOrElse((g, cid), cv)) }
+      else means.toSeq.map { case ((g, cid), cv) => (g, cid, cv) }
+        .sortBy(c => (c._1, c._2))
+    }
+
+  /** THE training-sample rule: the first `n` rows in portable-hash
+    * order (`Sampling.portableHash`, salted per caller), ties by
+    * ascending id — one bounded TakeOrdered pass, engine-replayable. */
+  private[graft] def hashPrefix(df: DataFrame, idCol: String, salt: String,
+                                n: Int): DataFrame =
+    df.orderBy(Sampling.portableHash(col(idCol), salt).asc, col(idCol).asc)
+      .limit(n)
+
+  /** [[hashPrefix]] re-spread over the session's shuffle width: `limit`
+    * leaves ONE partition, so every Lloyd pass over an unspread sample
+    * runs on one core (a fixed count, so adaptive execution cannot
+    * coalesce it back). */
+  private[graft] def trainSample(df: DataFrame, idCol: String, salt: String,
+                                 n: Int): DataFrame =
+    hashPrefix(df, idCol, salt, n).repartition(
+      df.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
+
+  /** The first `n` vectors (column `v`) in [[hashPrefix]] order, on the
+    * driver — the Lloyd seeds. */
+  private[graft] def seeds(withV: DataFrame, idCol: String, salt: String,
+                           n: Int): Seq[Array[Double]] =
+    hashPrefix(withV, idCol, salt, n).select("v").collect()
+      .map(_.getSeq[Double](0).toArray).toSeq
+
+  /** `(id, v)` rows of an embedding frame, vectors cast to double. */
+  private[graft] def vecRows(emb: DataFrame, idCol: String,
+                             vecCol: String): DataFrame =
+    emb.select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("v"))
+
   /** THE IVF pivot-selection rule — the first `nCentroids` corpus
     * vectors in deterministic `pmod(xxhash64(id), 1e9+7)` order (ties
     * by ascending id), as `(pid, pv)`. ONE definition shared by
-    * [[ivfIndex]] (assignment), [[ivfTopK]]/[[ivfPqTopK]] (probe
-    * selection) and the persisted serving
-    * artifact ([[graft.sources.IvfPqIndex]]): probe-cell selection and
-    * stored cell assignment MUST derive pivots identically, or recall
-    * silently degrades with no error — centralizing the rule makes
-    * that desynchronization unrepresentable. */
+    * [[ivfIndex]] (assignment), every probe selection and the persisted
+    * serving artifact ([[graft.sources.IvfPqIndex]]): probe-cell
+    * selection and stored cell assignment MUST derive pivots
+    * identically, or recall silently degrades with no error —
+    * centralizing the rule makes that desynchronization
+    * unrepresentable. */
   def ivfPivots(emb: DataFrame, idCol: String, vecCol: String,
                 nCentroids: Int): DataFrame =
     emb.orderBy(pmod(xxhash64(col(idCol)), lit(1000000007L)).asc,
@@ -123,54 +248,172 @@ object Similarity {
       .select(col(idCol).as("pid"),
         Vectors.toDouble(col(vecCol)).as("pv"))
 
-  def ivfIndex(emb: DataFrame, idCol: String, vecCol: String,
-               nCentroids: Int): DataFrame = {
-    val pivots = broadcast(
-      ivfPivots(emb, idCol, vecCol, nCentroids)
-        .agg(collect_list(struct(col("pid"), col("pv"))).as("pivots")))
-    graft.scaleOut(emb)
-      .select(col(idCol), Vectors.toDouble(col(vecCol)).as("v"))
-      .crossJoin(pivots)
-      .withColumn("centroid_id",
-        aggregate(col("pivots"),
-          struct(lit(-2.0).as("best"), lit(-1L).as("pid")),
-          (acc, p) => {
-            val c = coalesce(Vectors.cosine(col("v"), p.getField("pv")),
-              lit(-2.0))
-            when(c > acc.getField("best"),
-              struct(c.as("best"), p.getField("pid").as("pid")))
-              .otherwise(acc)
-          }).getField("pid"))
-      .drop("pivots")
+  /** [[ivfPivots]] on the driver, in rule order — nCentroids rows. */
+  private[graft] def pivotRows(pivots: DataFrame): Seq[(Long, Array[Double])] =
+    pivots.select(col("pid").cast("long"), col("pv")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** IVF cell assignment of rows carrying `v`: `centroid_id` = the id of
+    * the nearest pivot by cosine (first in rule order on ties, -1 for a
+    * zero-norm row) — one map-only pass, pivots as a literal. */
+  private[graft] def ivfAssign(rows: DataFrame,
+                               pivots: Seq[(Long, Array[Double])]): DataFrame =
+    rows.withColumn("centroid_id", nearest(
+      centsOf(pivots.map { case (pid, pv) => (0, pid, pv) }, lit(0)),
+      col("v"), cosine = true).getField("cid"))
+
+  /** THE probe selection: for each query, the `nProbe` pivots of highest
+    * cosine, ties by ascending pid — |Q|·nCells driver arithmetic.
+    * Returns (qid, pid) pairs, each query's in probe order. */
+  private[graft] def probe(qs: Seq[(Long, Array[Double])],
+                           pivots: Seq[(Long, Array[Double])],
+                           nProbe: Int): Seq[(Long, Long)] =
+    qs.flatMap { case (qid, q) =>
+      pivots.map { case (pid, pv) => (pid, driverCos(q, pv)) }
+        .sortBy { case (pid, c) => (-c, pid) }
+        .take(nProbe).map { case (pid, _) => (qid, pid) }
+    }
+
+  /** Rows of the probed cells (`rows` carries `centroid_id`), each
+    * paired with every query that probed its cell via a broadcast
+    * (qid, centroid_id) join. The `isin` over the union of probed cells
+    * is a partition filter on a cell-partitioned table: unprobed cells'
+    * files never enter the plan. */
+  private[graft] def inProbed(rows: DataFrame,
+                              pairs: Seq[(Long, Long)]): DataFrame =
+    rows.filter(col("centroid_id").isin(pairs.map(_._2).distinct: _*))
+      .join(broadcast(rows.sparkSession.createDataFrame(pairs)
+        .toDF("qid", "centroid_id")), Seq("centroid_id"))
+
+  /** Query vectors on the driver as (qid, vector) — query sets are
+    * broadcast-sized by contract. */
+  private[graft] def queryRows(queries: DataFrame, qidCol: String,
+                               vecCol: String): Seq[(Long, Array[Double])] =
+    queries.select(col(qidCol).cast("long"), Vectors.toDouble(col(vecCol)))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** The query set as a broadcast (qid, qvec) frame. */
+  private[graft] def qsetOf(spark: SparkSession,
+                            qs: Seq[(Long, Array[Double])]): DataFrame =
+    broadcast(spark.createDataFrame(qs).toDF("qid", "qvec"))
+
+  /** Train PQ codebooks: per subspace, Euclidean [[lloyd]] seeded with
+    * the subvectors of the `k` lowest-portable-hash vectors; empty
+    * clusters keep their previous centroid so the codebook stays
+    * exactly m·k centroids, in (m, cid) order. */
+  private[graft] def trainBooks(emb: DataFrame, idCol: String,
+                                vecCol: String, dim: Int, m: Int, k: Int,
+                                iters: Int): Seq[Cent] = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
+    val subDim = dim / m
+    val withV = graft.scaleOut(vecRows(emb, idCol, vecCol))
+    val init = seeds(withV, "id", "pq", k).zipWithIndex
+    lloyd(withV.select(posexplode(subspaces(col("v"), m, subDim)))
+        .toDF("g", "v"),
+      for (g <- 0 until m; (v, cid) <- init)
+        yield (g, cid.toLong, v.slice(g * subDim, (g + 1) * subDim)),
+      cosine = false, iters, keepEmpty = true)
   }
 
+  private[graft] def booksFrame(spark: SparkSession,
+                                books: Seq[Cent]): DataFrame =
+    spark.createDataFrame(books).toDF("m", "cid", "cv")
+
+  /** PQ-encode rows carrying `v`: one (m, code) row per subspace, the
+    * code its nearest codeword by squared L2 (the [[nearest]] fold
+    * against that subspace's codebook). Every other column rides
+    * along. */
+  private[graft] def encode(rows: DataFrame, books: Seq[Cent], m: Int,
+                            subDim: Int): DataFrame = {
+    val keep = rows.columns.toSeq.filter(_ != "v").map(col)
+    rows.select(keep :+ posexplode(subspaces(col("v"), m, subDim))
+        .as(Seq("m", "sv")): _*)
+      .select(keep :+ col("m") :+ nearest(centsOf(books, col("m")),
+        col("sv"), cosine = false).getField("cid").as("code"): _*)
+  }
+
+  /** THE ADC lookup table: per (query, subspace, codeword) the squared
+    * L2 between the query's subvector and the codeword — |Q|·m·pqK
+    * rows, one broadcast. `books` is (m, cid, cv). */
+  private[graft] def lut(books: DataFrame, qset: DataFrame, m: Int,
+                         subDim: Int): DataFrame =
+    broadcast(books
+      .join(qset.select(col("qid"), posexplode(subspaces(col("qvec"), m,
+        subDim)).as(Seq("m", "qsv"))), Seq("m"))
+      .select(col("qid"), col("m"), col("cid").as("code"),
+        l2sq(col("cv"), col("qsv")).as("pd")))
+
+  /** ADC scoring: per (query, candidate) the summed lookup distances of
+    * the candidate's codes — scoring never touches a float vector. The
+    * query row itself is excluded. `codes` is (id, m, code) scored for
+    * every query, or carries `qid` when each query scores only its own
+    * candidates. Returns (qid, id, ad). */
+  private[graft] def adc(codes: DataFrame, lut: DataFrame): DataFrame =
+    codes.join(lut, Seq("qid", "m", "code").filter(codes.columns.contains))
+      .filter(col("id") =!= col("qid"))
+      .groupBy("qid", "id").agg(sum("pd").as("ad"))
+
+  /** The `n` best ADC candidates per query, (ad, id) ascending — the
+    * bounded-heap [[TopK.perGroup]] plan, no corpus sort. */
+  private[graft] def shortlist(scored: DataFrame, n: Int): DataFrame =
+    TopK.perGroup(scored, Seq("qid"), Seq(TopK.asc("ad"), TopK.asc("id")), n)
+
+  /** THE exact rank: per query the `k` best candidates by exact
+    * distance to the query vector — cosine descending or squared L2
+    * ascending, ties by ascending id, the query row itself excluded.
+    * `dp` rounds the rank key before ranking (the registry's
+    * round-before-rank discipline, for results a SQL oracle replays).
+    * `pairs` carries (qid, id, v, qvec); returns (qid, id, d). */
+  private[graft] def exactTopK(pairs: DataFrame, k: Int, cosine: Boolean,
+                               dp: Option[Int]): DataFrame = {
+    val raw =
+      if (cosine) Vectors.cosine(col("v"), col("qvec"))
+      else l2sq(col("v"), col("qvec"))
+    TopK.perGroup(
+      pairs.filter(col("id") =!= col("qid"))
+        .select(col("qid"), col("id"), dp.fold(raw)(round(raw, _)).as("d")),
+      Seq("qid"), Seq(if (cosine) TopK.desc("d") else TopK.asc("d"),
+        TopK.asc("id")), k)
+  }
+
+  /** The exact re-rank (the FAISS `refine` step): each shortlisted
+    * (qid, id) joins back to its full vector in `vmap` (id, v) —
+    * shortlist-sized, never a corpus pass — and ranks by 6-dp squared
+    * L2, so a shortlist that contains the true top-k re-ranks to
+    * EXACTLY it. */
+  private[graft] def rerank(short: DataFrame, vmap: DataFrame,
+                            qset: DataFrame, k: Int): DataFrame =
+    exactTopK(short.select("qid", "id").join(vmap, Seq("id"))
+      .join(qset, Seq("qid")), k, cosine = false, Some(6))
+
+  /** IVF (inverted-file) coarse quantizer: `nCentroids` pivot vectors
+    * chosen by [[ivfPivots]] (no RNG — reproducible across
+    * runs/retries); every vector is assigned to its nearest pivot by
+    * cosine — a map-only argmax against one literal pivot array, no
+    * shuffle. At 100 TB the output would be written bucketed by
+    * `centroid_id`, so a probe reads only its cells' files. */
+  def ivfIndex(emb: DataFrame, idCol: String, vecCol: String,
+               nCentroids: Int): DataFrame =
+    ivfAssign(graft.scaleOut(emb)
+        .select(col(idCol), Vectors.toDouble(col(vecCol)).as("v")),
+      pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids)))
+
   /** IVF ANN top-k: assign the corpus to cells once, then score only
-    * the `nProbe` cells whose pivots are nearest the query vector. */
+    * the `nProbe` cells whose pivots are nearest the query vector —
+    * the batched path with a one-row query set. Returns
+    * (idCol, cosine) descending, query row excluded. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryId: Long, k: Int, nCentroids: Int = 16,
               nProbe: Int = 4): DataFrame = {
-    val index = ivfIndex(emb, idCol, vecCol, nCentroids)
-    // the query VECTOR comes straight from the corpus (a pruned
-    // single-row scan) — routing it through `index` would rebuild the
-    // pivot broadcast and argmax plan just to throw them away
-    val qrow = emb.filter(col(idCol) === queryId)
-      .select(Vectors.toDouble(col(vecCol)).as("qvec"))
-    // nProbe nearest pivots to the query, from the same broadcast row
-    val pivots = broadcast(ivfPivots(emb, idCol, vecCol, nCentroids))
-    val probes = broadcast(
-      qrow.crossJoin(pivots)
-        .select(col("qvec"), col("pid"),
-          coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-            .as("pc"))
-        .orderBy(col("pc").desc, col("pid").asc)
-        .limit(nProbe)
-        .select(col("pid").as("centroid_id"), col("qvec")))
-    index.filter(col(idCol) =!= queryId)
-      .join(probes, Seq("centroid_id"))
-      .select(col(idCol),
-        Vectors.cosine(col("v"), col("qvec")).as("cosine"))
+    val pivots = pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids))
+    val qs = queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol)
+    val cells = ivfAssign(graft.scaleOut(vecRows(emb, idCol, vecCol)),
+      pivots)
+    exactTopK(inProbed(cells, probe(qs, pivots, nProbe))
+        .join(qsetOf(emb.sparkSession, qs), Seq("qid")),
+        k, cosine = true, None)
+      .select(col("id").as(idCol), col("d").as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
   }
 
   /** Spherical k-means (Lloyd) assignment over the embedding column —
@@ -181,14 +424,11 @@ object Similarity {
     * Init: the first k vectors in PORTABLE hash order
     * (Sampling.portableHash — md5, identical in every engine), so the
     * whole trajectory is deterministic AND DuckDB-mirrorable, unlike a
-    * rand()/xxhash64 seed. Each iteration is (a) a map-only
-    * argmax-cosine assignment against ONE broadcast centroid row —
-    * same shape as ivfIndex, no shuffle of the corpus — and (b) ONE
-    * bounded (k × dim)-row aggregate recomputing the means via
-    * posexplode. The centroid frame never exceeds k × dim values
-    * regardless of corpus size, and `iters` is a small constant, so the
-    * total cost is iters+1 passes. The centroid list is sort_array'd so
-    * argmax tie-breaking is by ascending cid in every engine.
+    * rand()/xxhash64 seed. Each iteration is one [[lloyd]] step: a
+    * map-only argmax-cosine assignment, then a bounded (k × dim)-row
+    * means aggregate collected to the driver; `iters` is a small
+    * constant, so the total cost is iters+1 passes. Ties go to the
+    * lowest cid; a cluster that empties is dropped.
     *
     * Returns the corpus with `cid` (0..k-1 in init-hash order) and
     * `sim` (cosine to the winning centroid). */
@@ -197,44 +437,14 @@ object Similarity {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got $k, $iters")
     val withV = graft.scaleOut(emb)
       .select(col(idCol), Vectors.toDouble(col(vecCol)).as("v"))
-    val hashOrd = Sampling.portableHash(col(idCol), "kmeans")
-    val wInit = Window.orderBy(hashOrd.asc, col(idCol).asc)
-    val init = withV
-      .orderBy(hashOrd.asc, col(idCol).asc).limit(k)
-      // k rows total — the single-partition window is bounded by k
-      .select((row_number().over(wInit) - 1).cast("long").as("cid"),
-        col("v").as("cv"))
-
-    def assign(cents: DataFrame): DataFrame = {
-      val crow = broadcast(cents.agg(
-        sort_array(collect_list(struct(col("cid"), col("cv"))))
-          .as("cents")))
-      withV.crossJoin(crow)
-        .withColumn("best",
-          aggregate(col("cents"),
-            struct(lit(-2.0).as("sim"), lit(-1L).as("cid")),
-            (acc, c) => {
-              val s = coalesce(Vectors.cosine(col("v"), c.getField("cv")),
-                lit(-2.0))
-              when(s > acc.getField("sim"),
-                struct(s.as("sim"), c.getField("cid").as("cid")))
-                .otherwise(acc)
-            }))
-        .select(col(idCol), col("v"),
-          col("best.cid").as("cid"), col("best.sim").as("sim"))
-    }
-
-    def update(assigned: DataFrame): DataFrame =
-      assigned.select(col("cid"), posexplode(col("v")))
-        .toDF("cid", "pos", "x")
-        .groupBy("cid", "pos").agg(avg("x").as("m"))
-        .groupBy("cid")
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cv"))
-
-    var cents = init
-    for (_ <- 1 to iters) cents = update(assign(cents))
-    assign(cents)
+    val init = seeds(withV, idCol, "kmeans", k).zipWithIndex
+      .map { case (v, cid) => (0, cid.toLong, v) }
+    val cents = lloyd(withV.select(lit(0).as("g"), col("v")), init,
+      cosine = true, iters, keepEmpty = false)
+    withV.withColumn("best", nearest(centsOf(cents, lit(0)), col("v"),
+        cosine = true))
+      .select(col(idCol), col("v"), col("best.cid").as("cid"),
+        (-col("best.d")).as("sim"))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — "Semantic
@@ -334,122 +544,28 @@ object Similarity {
   // per subspace), so a 100 TB float corpus becomes ~m bytes/vector of
   // residency, and query scoring is ADC — a per-(subspace, centroid)
   // lookup table of m·k partial distances built ONCE per query, then a
-  // codes⋈lut join + per-id sum. Everything is deterministic:
-  // portable-hash init, fixed iteration count, ascending-cid
-  // tie-breaks — the same-seed replay property every other seeded
-  // operator here has.
-
-  /** Squared L2 over two equal-length double arrays (HOF on
-    * materialized columns — stays out of the shuffle). */
-  private[graft] def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), _ + _)
-
-  private[graft] def subspaces(v: Column, m: Int, subDim: Int): Column =
-    array((0 until m).map(i => slice(v, i * subDim + 1, subDim)): _*)
+  // codes⋈lut join + per-id sum. The single-query operators below are
+  // the batched kernel path with a one-row query set.
 
   /** Train per-subspace codebooks with Lloyd iterations (Euclidean,
     * k-means per subspace). Init = the k lowest-portable-hash docs'
     * subvectors (one TakeOrdered pass, scale-safe); empty clusters keep
     * their previous centroid so the codebook stays exactly m·k rows.
-    * Returns (m, cid, cv). */
+    * Returns (m, cid, cv) as m·k local rows. */
   def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
-                  dim: Int, m: Int, k: Int, iters: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val subDim = dim / m
-    val withV = graft.scaleOut(emb)
-      .select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("v"))
-    val hashOrd = Sampling.portableHash(col("id"), "pq")
-    val wInit = Window.orderBy(hashOrd.asc, col("id").asc)
-    val init = withV.orderBy(hashOrd.asc, col("id").asc).limit(k)
-      // k rows total — the single-partition window is bounded by k
-      .select((row_number().over(wInit) - 1).cast("long").as("cid"),
-        col("v"))
-      .select(col("cid"), posexplode(subspaces(col("v"), m, subDim)))
-      .toDF("cid", "m", "cv")
-    val subs = withV
-      .select(col("id"), posexplode(subspaces(col("v"), m, subDim)))
-      .toDF("id", "m", "sv")
-
-    def assign(cents: DataFrame): DataFrame = {
-      val crow = broadcast(cents.agg(
-        sort_array(collect_list(struct(col("m"), col("cid"), col("cv"))))
-          .as("cents")))
-      subs.crossJoin(crow)
-        .withColumn("best",
-          aggregate(
-            filter(col("cents"), c => c.getField("m") === col("m")),
-            struct(lit(Double.MaxValue).as("d"), lit(-1L).as("cid")),
-            (acc, c) => {
-              val d = l2sq(col("sv"), c.getField("cv"))
-              // strict < keeps the FIRST (lowest cid) on ties — the
-              // centroid list is sort_array'd by (m, cid)
-              when(d < acc.getField("d"),
-                struct(d.as("d"), c.getField("cid").as("cid")))
-                .otherwise(acc)
-            }))
-        .select(col("id"), col("m"), col("sv"),
-          col("best.cid").as("cid"))
-    }
-
-    def update(cents: DataFrame, assigned: DataFrame): DataFrame = {
-      val means = assigned.select(col("m"), col("cid"),
-          posexplode(col("sv"))).toDF("m", "cid", "pos", "x")
-        .groupBy("m", "cid", "pos").agg(avg("x").as("x"))
-        .groupBy("m", "cid")
-        .agg(transform(
-          sort_array(collect_list(struct(col("pos"), col("x")))),
-          s => s.getField("x")).as("ncv"))
-      cents.join(means, Seq("m", "cid"), "left_outer")
-        .select(col("m"), col("cid"),
-          coalesce(col("ncv"), col("cv")).as("cv"))
-    }
-
-    // persist() every generation: each loop step references the
-    // previous centroids TWICE (the carry-forward join and the assign
-    // broadcast) and the RETURNED codebook is consumed twice by every
-    // caller (encode pass + query LUT) — uncached, the whole training
-    // chain (corpus TakeOrdered init + per-iteration argmax scans)
-    // re-ran once per consumer. The frames are m·k rows, bounded at
-    // any corpus size. Each generation materializes EAGERLY (count()
-    // on m·k rows is free) so its predecessor can unpersist
-    // in-function; only the returned codebook outlives the loop, and
-    // it registers with [[graft.CacheScope]] for release at the
-    // caller's operation boundary.
-    var cents = init.persist()
-    for (_ <- 1 to iters) {
-      val next = update(cents, assign(cents)).persist()
-      next.count()
-      cents.unpersist(false)
-      cents = next
-    }
-    graft.CacheScope.track(cents)
-  }
+                  dim: Int, m: Int, k: Int, iters: Int): DataFrame =
+    booksFrame(emb.sparkSession,
+      trainBooks(emb, idCol, vecCol, dim, m, k, iters))
 
   /** Encode every vector as m (subspace → centroid id) codes. */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
-               codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
-    val subDim = dim / m
-    val subs = graft.scaleOut(emb)
-      .select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("v"))
-      .select(col("id"), posexplode(subspaces(col("v"), m, subDim)))
-      .toDF("id", "m", "sv")
-    val crow = broadcast(codebooks.agg(
-      sort_array(collect_list(struct(col("m"), col("cid"), col("cv"))))
-        .as("cents")))
-    subs.crossJoin(crow)
-      .withColumn("best",
-        aggregate(
-          filter(col("cents"), c => c.getField("m") === col("m")),
-          struct(lit(Double.MaxValue).as("d"), lit(-1L).as("cid")),
-          (acc, c) => {
-            val d = l2sq(col("sv"), c.getField("cv"))
-            when(d < acc.getField("d"),
-              struct(d.as("d"), c.getField("cid").as("cid")))
-              .otherwise(acc)
-          }))
-      .select(col("id"), col("m"), col("best.cid").as("code"))
-  }
+               codebooks: DataFrame, dim: Int, m: Int): DataFrame =
+    encode(graft.scaleOut(vecRows(emb, idCol, vecCol)),
+      codebooks.select(col("m"), col("cid").cast("long"), col("cv"))
+        .collect().toSeq
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+        .sortBy(c => (c._1, c._2)),
+      m, dim / m)
 
   /** ADC top-k: approximate nearest neighbors of `queryId`'s vector by
     * summed per-subspace lookup distances. The lut is m·k rows
@@ -459,23 +575,16 @@ object Similarity {
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryId: Long, topK: Int, dim: Int,
              m: Int = 4, k: Int = 16, iters: Int = 1): DataFrame = {
-    val subDim = dim / m
-    val books = pqCodebooks(emb, idCol, vecCol, dim, m, k, iters)
-    val codes = pqEncode(emb, idCol, vecCol, books, dim, m)
-    val qsub = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qv"))
-        .select(posexplode(subspaces(col("qv"), m, subDim)))
-        .toDF("m", "qsv"))
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    codes.filter(col("id") =!= queryId)
-      .join(lut, Seq("m", "code"))
-      .groupBy("id").agg(sum("pd").as("approx_dist"))
-      .orderBy(col("approx_dist").asc, col("id").asc)
-      .limit(topK)
-      .select(col("id").as(idCol), col("approx_dist"))
+    val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
+    val spark = emb.sparkSession
+    val qset = qsetOf(spark,
+      queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol))
+    shortlist(adc(
+        encode(graft.scaleOut(vecRows(emb, idCol, vecCol)), books, m,
+          dim / m),
+        lut(booksFrame(spark, books), qset, m, dim / m)), topK)
+      .select(col("id").as(idCol), col("ad").as("approx_dist"))
+      .orderBy(col("approx_dist").asc, col(idCol).asc)
   }
 
   /** SERVED PQ + EXACT RE-RANK — the FAISS `refine` step promoted to a
@@ -484,51 +593,23 @@ object Similarity {
     * and an exact re-rank of a refineFactor·topK ADC shortlist lifts
     * every measured corpus to 0.90-1.00 at SHORTLIST-sized cost.
     *
-    * Two stages: (1) ADC over the PQ codes — the lut is m·k broadcast
-    * rows, scoring never touches a float vector — keeps the
-    * `refineFactor * topK` best candidates (bounded TakeOrdered, no
-    * corpus sort); (2) the shortlist's ids join BACK to the corpus for
-    * full vectors (at 100 TB: a semi-join into the id-keyed vector
-    * store — refineFactor·topK rows, never a corpus pass) and exact
-    * squared-L2 re-ranks them. Final rank keys round to 6 dp (the
-    * registry's round-before-argmax discipline), so whenever the
-    * shortlist contains the true top-k the output IS the exact top-k —
-    * which q229's oracle pins end-to-end at the registered settings.
+    * [[pqTopKRefinedBatch]] with a one-row query set: ADC over the PQ
+    * codes keeps the `refineFactor * topK` best candidates, then their
+    * full vectors re-rank by exact squared L2. Final rank keys round to
+    * 6 dp (the registry's round-before-argmax discipline), so whenever
+    * the shortlist contains the true top-k the output IS the exact
+    * top-k — which q229's oracle pins end-to-end at the registered
+    * settings.
     *
     * Returns (idCol, l2_dist) ascending, query row excluded. */
   def pqTopKRefined(emb: DataFrame, idCol: String, vecCol: String,
                     queryId: Long, topK: Int, dim: Int,
                     m: Int = 4, k: Int = 16, iters: Int = 1,
-                    refineFactor: Int = 10): DataFrame = {
-    require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    val subDim = dim / m
-    val books = pqCodebooks(emb, idCol, vecCol, dim, m, k, iters)
-    val codes = pqEncode(emb, idCol, vecCol, books, dim, m)
-    val qsub = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qv"))
-        .select(posexplode(subspaces(col("qv"), m, subDim)))
-        .toDF("m", "qsv"))
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    val shortlist = codes.filter(col("id") =!= queryId)
-      .join(lut, Seq("m", "code"))
-      .groupBy("id").agg(sum("pd").as("ad"))
-      .orderBy(col("ad").asc, col("id").asc)
-      .limit(refineFactor * topK)
-    val qvec = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qvec")))
-    shortlist.select("id")
-      .join(emb.select(col(idCol).as("id"),
-        Vectors.toDouble(col(vecCol)).as("v")), Seq("id"))
-      .crossJoin(qvec)
-      .select(col("id"), round(l2sq(col("v"), col("qvec")), 6).as("l2_dist"))
-      .orderBy(col("l2_dist").asc, col("id").asc)
-      .limit(topK)
-      .select(col("id").as(idCol), col("l2_dist"))
-  }
+                    refineFactor: Int = 10): DataFrame =
+    pqTopKRefinedBatch(emb, emb.filter(col(idCol) === queryId), idCol,
+        vecCol, idCol, topK, dim, m, k, iters, refineFactor)
+      .select(col(idCol), col("l2_dist"))
+      .orderBy(col("l2_dist").asc, col(idCol).asc)
 
   /** IVF-PQ composition — the production ANN shape at 100 TB: the IVF
     * coarse quantizer picks `nProbe` candidate cells (so only those
@@ -536,13 +617,7 @@ object Similarity {
     * codes replaces float-vector math (so scoring touches ~m bytes per
     * candidate, not the raw embedding). Both halves are the existing
     * oracle-anchored operators ([[ivfTopK]] q63, [[pqTopK]] q113);
-    * this wires probe → encode → lookup end-to-end.
-    *
-    * Scale shape: pivots and the m·k lookup table ride broadcasts; the
-    * only corpus-wide passes are the cell assignment (map-only argmax)
-    * and codebook training (the existing Lloyd operator — at 100 TB
-    * train on a fenced sample and reuse the codebook across queries);
-    * candidate scoring shuffles probed-cell rows only. Cells are
+    * this wires probe → encode → lookup end-to-end. Cells are
     * cosine-assigned, ADC is squared-L2 — the FAISS-style hybrid.
     *
     * With `nProbe >= nCentroids`, `m = 1`, `k >= |corpus|`, `iters = 0`
@@ -555,40 +630,16 @@ object Similarity {
                 queryId: Long, topK: Int, dim: Int,
                 nCentroids: Int = 16, nProbe: Int = 4,
                 m: Int = 4, k: Int = 16, iters: Int = 1): DataFrame = {
-    val subDim = dim / m
-    val index = ivfIndex(emb, idCol, vecCol, nCentroids)
-    // query vector from the corpus directly (pruned single-row scan),
-    // not through the assignment plan — the ivfTopK move
-    val qrow = emb.filter(col(idCol) === queryId)
-      .select(Vectors.toDouble(col(vecCol)).as("qvec"))
-    val pivots = broadcast(ivfPivots(emb, idCol, vecCol, nCentroids))
-    val probes = broadcast(
-      qrow.crossJoin(pivots)
-        .select(col("pid"),
-          coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-            .as("pc"))
-        .orderBy(col("pc").desc, col("pid").asc)
-        .limit(nProbe)
-        .select(col("pid").as("centroid_id")))
-    val candIds = index.join(probes, Seq("centroid_id"))
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol))
-    val cand = emb.join(candIds, Seq(idCol), "left_semi")
-    val books = pqCodebooks(emb, idCol, vecCol, dim, m, k, iters)
-    val codes = pqEncode(cand, idCol, vecCol, books, dim, m)
-    val qsub = broadcast(
-      emb.filter(col(idCol) === queryId)
-        .select(Vectors.toDouble(col(vecCol)).as("qv"))
-        .select(posexplode(subspaces(col("qv"), m, subDim)))
-        .toDF("m", "qsv"))
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    codes.join(lut, Seq("m", "code"))
-      .groupBy("id").agg(sum("pd").as("approx_dist"))
-      .orderBy(col("approx_dist").asc, col("id").asc)
-      .limit(topK)
-      .select(col("id").as(idCol), col("approx_dist"))
+    val spark = emb.sparkSession
+    val pivots = pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids))
+    val qs = queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol)
+    val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
+    val cand = inProbed(ivfAssign(graft.scaleOut(vecRows(emb, idCol,
+      vecCol)), pivots), probe(qs, pivots, nProbe))
+    shortlist(adc(encode(cand, books, m, dim / m),
+        lut(booksFrame(spark, books), qsetOf(spark, qs), m, dim / m)), topK)
+      .select(col("id").as(idCol), col("ad").as("approx_dist"))
+      .orderBy(col("approx_dist").asc, col(idCol).asc)
   }
 
   /** BATCHED served refine — production ANN serves query SETS, not
@@ -597,46 +648,28 @@ object Similarity {
     * one broadcast, per-query shortlists run through the bounded-heap
     * [[graft.plans.TopK.perGroup]] plan (no corpus sort, no window
     * spill), and the exact re-rank joins only shortlist rows back to
-    * the vector store. Per query, the output is IDENTICAL to
-    * [[pqTopKRefined]] at the same settings (PqSpec pins the
-    * equivalence; q245's oracle pins the exact L2 top-k per query) —
-    * the batch is an amortization, never an approximation change.
-    * Returns (query_id, idCol, l2_dist), each query's rows the exact
-    * L2 top-k when the shortlist contains it. */
+    * the vector store. [[pqTopKRefined]] is this with one query, so
+    * per query the output is identical (PqSpec pins the equivalence;
+    * q245's oracle pins the exact L2 top-k per query). Returns
+    * (query_id, idCol, l2_dist), each query's rows the exact L2 top-k
+    * when the shortlist contains it. */
   def pqTopKRefinedBatch(emb: DataFrame, queries: DataFrame,
                          idCol: String, vecCol: String,
                          queryIdCol: String, topK: Int, dim: Int,
                          m: Int = 4, k: Int = 16, iters: Int = 1,
                          refineFactor: Int = 10): DataFrame = {
     require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    val subDim = dim / m
-    val books = pqCodebooks(emb, idCol, vecCol, dim, m, k, iters)
-    val codes = pqEncode(emb, idCol, vecCol, books, dim, m)
-    val qset = broadcast(queries.select(col(queryIdCol).as("qid"),
-      Vectors.toDouble(col(vecCol)).as("qvec")))
-    val qsub = qset.select(col("qid"),
-      posexplode(subspaces(col("qvec"), m, subDim))).toDF("qid", "m", "qsv")
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("qid"), col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    val scored = codes.join(lut, Seq("m", "code"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy("qid", "id").agg(sum("pd").as("ad"))
-    val short = graft.plans.TopK.perGroup(scored, Seq("qid"),
-      Seq(graft.plans.TopK.asc("ad"), graft.plans.TopK.asc("id")),
+    val spark = emb.sparkSession
+    val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
+    val qset = qsetOf(spark, queryRows(queries, queryIdCol, vecCol))
+    val short = shortlist(adc(
+        encode(graft.scaleOut(vecRows(emb, idCol, vecCol)), books, m,
+          dim / m),
+        lut(booksFrame(spark, books), qset, m, dim / m)),
       refineFactor * topK)
-    val vmap = emb.select(col(idCol).as("id"),
-      Vectors.toDouble(col(vecCol)).as("v"))
-    graft.plans.TopK.perGroup(
-      short.select("qid", "id")
-        .join(vmap, Seq("id"))
-        .join(qset, Seq("qid"))
-        .select(col("qid"), col("id"),
-          round(l2sq(col("v"), col("qvec")), 6).as("l2_dist")),
-      Seq("qid"), Seq(graft.plans.TopK.asc("l2_dist"),
-        graft.plans.TopK.asc("id")), topK)
+    rerank(short, vecRows(emb, idCol, vecCol), qset, topK)
       .select(col("qid").as("query_id"), col("id").as(idCol),
-        col("l2_dist"))
+        col("d").as("l2_dist"))
   }
 
   /** ANN recall harness: measured recall@k of the pruned paths (IVF,
@@ -652,13 +685,15 @@ object Similarity {
     * [[graft.plans.TopK.perGroup]] bounded-heap pass over ALL queries
     * at once, and recalls are computed with (qid, id) semi-joins — the
     * X12 bulk-inference shape, |Q|-bounded broadcasts, nothing
-    * corpus-sized on the driver. Serving state (IVF assignment,
-    * codebooks, corpus codes) persists ONCE via CacheScope and every
-    * path re-probes it — how a deployed index amortizes at 100 TB.
+    * corpus-sized on the driver. Serving state (IVF assignment, corpus
+    * codes) persists ONCE via CacheScope and every path re-probes it —
+    * how a deployed index amortizes at 100 TB.
     *
-    * Exact rank keys are rounded to 6 dp BEFORE ranking (ties then
-    * break by id) so the exact top-k replays across engines — the
-    * registry's round-before-argmax discipline.
+    * Every rank key — exact, cell probe, re-rank — is rounded to 6 dp
+    * BEFORE ranking (ties then break by id): the exact top-k replays
+    * across engines, and at a rounding tie at rank k the approximate
+    * and exact orderings cannot legitimately disagree, so a path that
+    * found the true top-k scores recall 1.
     *
     * Returns one row per query id: (query_id, exact_cos_md5,
     * exact_l2_md5, ivf_recall, pq_recall, ivfpq_recall,
@@ -678,105 +713,34 @@ object Similarity {
                 refineFactor: Int = 10): DataFrame = {
     require(queryIds.nonEmpty, "queryIds must be non-empty")
     require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    // shared serving state: assignment, codebooks, corpus codes
-    val index = graft.CacheScope.persist(
-      ivfIndex(emb, idCol, vecCol, nCentroids))
-    val books = graft.CacheScope.persist(
-      pqCodebooks(emb, idCol, vecCol, dim, m, pqK, iters))
-    val codes = graft.CacheScope.persist(
-      pqEncode(emb, idCol, vecCol, books, dim, m))
-    val subDim = dim / m
-    val qset = broadcast(emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("qid"),
-        Vectors.toDouble(col(vecCol)).as("qvec")))
+    val spark = emb.sparkSession
+    val pivots = pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids))
+    val rows = graft.scaleOut(vecRows(emb, idCol, vecCol))
+    // shared serving state: cell assignment and corpus codes
+    val index = graft.CacheScope.persist(ivfAssign(rows, pivots))
+    val books = trainBooks(emb, idCol, vecCol, dim, m, pqK, iters)
+    val codes = graft.CacheScope.persist(encode(index, books, m, dim / m))
+    val qs = queryRows(emb.filter(col(idCol).isin(queryIds: _*)), idCol,
+      vecCol)
+    val qset = qsetOf(spark, qs)
+    val probes = probe(qs, pivots, nProbe)
 
-    // exact ground truths: one corpus × |Q| map pass per metric, one
-    // bounded-heap top-k per query
-    val rest = graft.scaleOut(emb)
-      .select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("v"))
-      .crossJoin(qset).filter(col("id") =!= col("qid"))
-    val exactCos = graft.plans.TopK.perGroup(
-      rest.select(col("qid"), col("id"),
-        round(Vectors.cosine(col("v"), col("qvec")), 6).as("c")),
-      Seq("qid"), Seq(graft.plans.TopK.desc("c"),
-        graft.plans.TopK.asc("id")), k)
-    val exactL2 = graft.plans.TopK.perGroup(
-      rest.select(col("qid"), col("id"),
-        round(l2sq(col("v"), col("qvec")), 6).as("d")),
-      Seq("qid"), Seq(graft.plans.TopK.asc("d"),
-        graft.plans.TopK.asc("id")), k)
-
-    // IVF: nProbe nearest cells per query, score only those cells
-    val pivots = emb
-      .orderBy(pmod(xxhash64(col(idCol)), lit(1000000007L)).asc,
-        col(idCol).asc)
-      .limit(nCentroids)
-      .select(col(idCol).as("pid"),
-        Vectors.toDouble(col(vecCol)).as("pv"))
-    val probes = broadcast(graft.plans.TopK.perGroup(
-      qset.crossJoin(broadcast(pivots))
-        .select(col("qid"), col("qvec"), col("pid"),
-          coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-            .as("pc")),
-      Seq("qid"), Seq(graft.plans.TopK.desc("pc"),
-        graft.plans.TopK.asc("pid")), nProbe)
-      .select(col("qid"), col("qvec"), col("pid").as("centroid_id")))
-    // rank key rounded to the SAME 6 dp as the exact ground truth: at
-    // a rounding tie at rank k the two orderings would otherwise
-    // legitimately disagree (approx path found the true top-k but the
-    // unrounded order drops a tied id), deflating measured recall
-    val ivf = graft.plans.TopK.perGroup(
-      index.join(probes, Seq("centroid_id"))
-        .filter(col(idCol) =!= col("qid"))
-        .select(col("qid"), col(idCol).as("id"),
-          round(Vectors.cosine(col("v"), col("qvec")), 6).as("c")),
-      Seq("qid"), Seq(graft.plans.TopK.desc("c"),
-        graft.plans.TopK.asc("id")), k)
-
-    // ADC lookup tables for ALL queries at once (|Q|·m·pqK rows)
-    val qsub = qset.select(col("qid"),
-      posexplode(subspaces(col("qvec"), m, subDim))).toDF("qid", "m", "qsv")
-    val lut = broadcast(books.join(qsub, Seq("m"))
-      .select(col("qid"), col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-    val pqScored = codes.join(lut, Seq("m", "code"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id")).agg(sum(col("pd")).as("ad"))
-    val pq = graft.plans.TopK.perGroup(pqScored,
-      Seq("qid"), Seq(graft.plans.TopK.asc("ad"),
-        graft.plans.TopK.asc("id")), k)
-    // PQ + RE-RANK (the FAISS refine step): ADC keeps a shortlist of
-    // refineFactor·k candidates, EXACT L2 re-ranks only those — the
-    // standard recall rescue whose cost is shortlist-sized (one
-    // vector join per candidate), not corpus-sized
-    val pqShort = graft.plans.TopK.perGroup(pqScored,
-      Seq("qid"), Seq(graft.plans.TopK.asc("ad"),
-        graft.plans.TopK.asc("id")), refineFactor * k)
-    val vmap = emb.select(col(idCol).as("id"),
-      Vectors.toDouble(col(vecCol)).as("v"))
-    // exact re-rank keys rounded like the ground truth's (same boundary
-    // -tie reasoning as the ivf leg): with the rounding aligned, a
-    // shortlist that contains the true top-k re-ranks to EXACTLY the
-    // ground-truth set — the AnnRecallSpec refined-recall invariant
-    val pqr = graft.plans.TopK.perGroup(
-      pqShort.select("qid", "id")
-        .join(vmap, Seq("id"))
-        .join(qset, Seq("qid"))
-        .select(col("qid"), col("id"),
-          round(l2sq(col("v"), col("qvec")), 6).as("d")),
-      Seq("qid"), Seq(graft.plans.TopK.asc("d"),
-        graft.plans.TopK.asc("id")), k)
-    // IVF-PQ: ADC restricted to the probed cells' candidates
-    val cand = index.join(probes.select("qid", "centroid_id"),
-        Seq("centroid_id"))
-      .filter(col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol).as("id"))
-    val ivfpq = graft.plans.TopK.perGroup(
-      codes.join(cand, Seq("id"))
-        .join(lut, Seq("qid", "m", "code"))
-        .groupBy(col("qid"), col("id")).agg(sum(col("pd")).as("ad")),
-      Seq("qid"), Seq(graft.plans.TopK.asc("ad"),
-        graft.plans.TopK.asc("id")), k)
+    // exact ground truths: one corpus × |Q| map pass per metric
+    val all = rows.crossJoin(qset)
+    val exactCos = exactTopK(all, k, cosine = true, Some(6))
+    val exactL2 = exactTopK(all, k, cosine = false, Some(6))
+    // IVF: score only each query's probed cells
+    val ivf = exactTopK(inProbed(index, probes).join(qset, Seq("qid")),
+      k, cosine = true, Some(6))
+    // ADC for ALL queries at once; the refine step re-ranks a
+    // refineFactor·k shortlist exactly; IVF-PQ restricts ADC to the
+    // probed cells' candidates
+    val lt = lut(booksFrame(spark, books), qset, m, dim / m)
+    val pqScored = adc(codes.drop("centroid_id"), lt)
+    val pq = shortlist(pqScored, k)
+    val pqr = rerank(shortlist(pqScored, refineFactor * k),
+      index.select("id", "v"), qset, k)
+    val ivfpq = shortlist(adc(inProbed(codes, probes), lt), k)
 
     // digests of the exact top-k in rank order; recalls via semi-joins
     def digest(exact: DataFrame, rankKey: Column, as: String) =
@@ -789,7 +753,7 @@ object Similarity {
         .join(exact.select("qid", "id"), Seq("qid", "id"), "left_semi")
         .groupBy("qid").agg(count(lit(1)).as(as))
     val kd = lit(k.toDouble)
-    digest(exactCos, (-col("c")).as("rk"), "exact_cos_md5")
+    digest(exactCos, (-col("d")).as("rk"), "exact_cos_md5")
       .join(digest(exactL2, col("d").as("rk"), "exact_l2_md5"),
         Seq("qid"))
       .join(recallOf(ivf, exactCos, "_ivf"), Seq("qid"), "left")

@@ -1,11 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vectors
-import graft.operators.{Sampling, Similarity}
-import graft.plans.TopK
+import graft.operators.Similarity
 
 /** PERSISTED IVF-PQ SERVING ARTIFACT — the production ANN index shape
   * at 100 TB, promoted from q244's inline build to a first-class
@@ -47,8 +45,8 @@ import graft.plans.TopK
 object IvfPqIndex {
 
   /** Build the artifact under `root` (a URI, e.g. "file:///tmp/x").
-    * One bounded codebook train, one corpus encode, one map-only cell
-    * assignment, three commits.
+    * One bounded codebook train, one nCells-row pivot collect, one
+    * map-only cell assignment, one corpus encode, three commits.
     *
     * `storeVectors` additionally commits the FULL vectors cell-
     * partitioned (`root/vecs`) — the FAISS inverted-list-with-raw-
@@ -62,32 +60,36 @@ object IvfPqIndex {
              m: Int, pqK: Int, iters: Int, trainSample: Int,
              storeVectors: Boolean = false): Unit = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val trainSet =
+    val books = Similarity.trainBooks(
       if (trainSample > 0)
-        emb.orderBy(Sampling.portableHash(col(idCol), "pqtrain").asc,
-          col(idCol).asc).limit(trainSample)
-      else emb
-    val books = Similarity.pqCodebooks(trainSet, idCol, vecCol,
-      dim, m, pqK, iters)
-    val codes = Similarity.pqEncode(emb, idCol, vecCol, books, dim, m)
-    val assign = Similarity.ivfIndex(emb, idCol, vecCol, nCells)
-      .select(col(idCol).as("id"), col("centroid_id"))
+        Similarity.trainSample(emb, idCol, "pqtrain", trainSample)
+      else emb,
+      idCol, vecCol, dim, m, pqK, iters)
+    val pivots = Similarity.pivotRows(
+      Similarity.ivfPivots(emb, idCol, vecCol, nCells))
+    val assigned = Similarity.ivfAssign(
+      graft.scaleOut(Similarity.vecRows(emb, idCol, vecCol)), pivots)
     // commit ORDER is the crash-safety contract: books/pivots/vecs
     // land first, the codes header — the discovery flag meta() keys
     // on — LAST. A crash mid-create then leaves a root meta()
     // REFUSES (no pq.dim header yet) instead of a half-artifact
     // whose serve would fail late or, worse, partially answer.
     // meta() additionally re-verifies the component tables resolve.
-    Manifest.init(spark, s"$root/books", books)
+    Manifest.init(spark, s"$root/books", Similarity.booksFrame(spark, books))
     Manifest.init(spark, s"$root/pivots",
-      Similarity.ivfPivots(emb, idCol, vecCol, nCells))
-    if (storeVectors)
-      Manifest.init(spark, s"$root/vecs",
-        emb.select(col(idCol).as("id"),
-            Vectors.toDouble(col(vecCol)).as("v"))
-          .join(assign, Seq("id")),
-        partitionCols = Seq("centroid_id"))
-    Manifest.init(spark, s"$root/codes", codes.join(assign, Seq("id")),
+      spark.createDataFrame(pivots).toDF("pid", "pv"))
+    // with stored vectors the codes encode from the committed cell
+    // rows, so the assignment runs exactly once either way
+    val cells =
+      if (!storeVectors) assigned
+      else {
+        val v = Manifest.init(spark, s"$root/vecs", assigned,
+          partitionCols = Seq("centroid_id"))
+        Manifest.read(spark, s"$root/vecs", Some(v))
+      }
+    Manifest.init(spark, s"$root/codes",
+      Similarity.encode(cells, books, m, dim / m)
+        .select("id", "m", "code", "centroid_id"),
       partitionCols = Seq("centroid_id"),
       extraMeta = Map("pq.dim" -> dim.toString, "pq.m" -> m.toString,
         "pq.k" -> pqK.toString, "pq.cells" -> nCells.toString) ++
@@ -141,66 +143,31 @@ object IvfPqIndex {
         "pass the vector store for the exact re-rank")
     val dim = mt("pq.dim").toInt
     val m = mt("pq.m").toInt
-    val subDim = dim / m
-    val qset = broadcast(queries.select(
-      col(queryIdCol).as("qid"),
-      Vectors.toDouble(col(vecCol)).as("qvec")))
-    // probe selection: |Q|·nCells pivot cosines, nProbe cells per
-    // query via the bounded-heap plan; the collect is ≤ |Q|·nProbe
-    // rows by construction — the train-loop argmax class
-    val scoredPivots = Manifest.read(spark, s"$root/pivots")
-      .crossJoin(qset)
-      .select(col("qid"), col("pid"),
-        coalesce(Vectors.cosine(col("qvec"), col("pv")), lit(-2.0))
-          .as("pc"))
-    val probePairs = TopK.perGroup(scoredPivots, Seq("qid"),
-        Seq(TopK.desc("pc"), TopK.asc("pid")), nProbe)
-      .select(col("qid"), col("pid").as("centroid_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val unionCells = probePairs.map(_._2).distinct
-    import spark.implicits._
-    val probeDf = broadcast(
-      probePairs.toDF("qid", "centroid_id"))
-    // per-query ADC lookup table: |Q|·m·pqK rows, one broadcast
-    val qsub = qset.select(col("qid"),
-        posexplode(Similarity.subspaces(col("qvec"), m, subDim)))
-      .toDF("qid", "m", "qsv")
-    val lut = broadcast(Manifest.read(spark, s"$root/books")
-      .join(qsub, Seq("m"))
-      .select(col("qid"), col("m"), col("cid").as("code"),
-        Similarity.l2sq(col("cv"), col("qsv")).as("pd")))
-    // THE PRUNED READ — once for the whole batch: the isin over the
-    // UNION of probed cells is a partition filter (unprobed cells'
-    // files never enter the plan); the broadcast pair join then
-    // restricts each query's ADC to ITS OWN probed cells
-    val scored = Manifest.read(spark, s"$root/codes")
-      .filter(col("centroid_id").isin(unionCells: _*))
-      .join(probeDf, Seq("centroid_id"))
-      .filter(col("id") =!= col("qid"))
-      .join(lut, Seq("qid", "m", "code"))
-      .groupBy("qid", "id").agg(sum("pd").as("ad"))
-    val short = TopK.perGroup(scored, Seq("qid"),
-      Seq(TopK.asc("ad"), TopK.asc("id")), refineFactor * topK)
+    val qs = Similarity.queryRows(queries, queryIdCol, vecCol)
+    val qset = Similarity.qsetOf(spark, qs)
+    // probe selection: |Q|·nCells pivot cosines on the driver
+    val probes = Similarity.probe(qs,
+      Similarity.pivotRows(Manifest.read(spark, s"$root/pivots")), nProbe)
+    // THE PRUNED READ — once for the whole batch: the codes read
+    // partition-prunes to the UNION of probed cells, and each query's
+    // ADC covers only ITS OWN probed cells
+    val short = Similarity.shortlist(Similarity.adc(
+        Similarity.inProbed(Manifest.read(spark, s"$root/codes"), probes),
+        Similarity.lut(Manifest.read(spark, s"$root/books"), qset, m,
+          dim / m)),
+      refineFactor * topK)
     // exact re-rank: shortlist-sized join into the vector store — the
     // external id-keyed table, or (index-resident) the probed cells'
-    // own vector files, pruned by the same union filter
+    // own vector files, pruned to the same cells
     val vmap = vectorStore match {
-      case Some(vs) => vs.select(col(idCol).as("id"),
-        Vectors.toDouble(col(vecCol)).as("v"))
+      case Some(vs) => Similarity.vecRows(vs, idCol, vecCol)
       case None => Manifest.read(spark, s"$root/vecs")
-        .filter(col("centroid_id").isin(unionCells: _*))
+        .filter(col("centroid_id").isin(probes.map(_._2).distinct: _*))
         .select(col("id"), col("v"))
     }
-    TopK.perGroup(
-      short.select("qid", "id")
-        .join(vmap, Seq("id"))
-        .join(qset, Seq("qid"))
-        .select(col("qid"), col("id"),
-          round(Similarity.l2sq(col("v"), col("qvec")), 6)
-            .as("l2_dist")),
-      Seq("qid"), Seq(TopK.asc("l2_dist"), TopK.asc("id")), topK)
+    Similarity.rerank(short, vmap, qset, topK)
       .select(col("qid").as("query_id"), col("id").as(idCol),
-        col("l2_dist"))
+        col("d").as("l2_dist"))
   }
 
   /** Single-query serve — [[searchBatch]] with a one-row query set

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
-import graft.operators.Sampling
+import graft.operators.Similarity
+import graft.operators.Similarity.driverCos
 
 /** MATERIALIZED IVF VECTOR INDEX — the dense twin of [[SearchIndex]]:
   * the embedding corpus is assigned ONCE to inverted-file cells and
@@ -114,28 +115,19 @@ object VectorIndex {
       case None => Map.empty
     }
 
+  /** The header pivots as kernel centroids: cell c is cid c. */
+  private def cents(pivots: Seq[Array[Double]]): Seq[Similarity.Cent] =
+    pivots.zipWithIndex.map { case (p, c) => (0, c.toLong, p) }
+
   /** Map-only cell assignment of `(id, v, payload...)` rows against
-    * literal pivots: argmax cosine, ascending cell on ties, cell -1
-    * never survives (pivots are non-empty). */
+    * literal pivots: the kernel's nearest-centroid fold by cosine,
+    * ascending cell on ties, cell -1 never survives (pivots are
+    * non-empty). */
   private def assign(withV: DataFrame, pivots: Seq[Array[Double]],
-                     payload: Seq[String]): DataFrame = {
-    val cents = array(pivots.zipWithIndex.map { case (p, cid) =>
-      struct(lit(cid).cast("int").as("cid"),
-        array(p.map(lit(_)): _*).as("cv"))
-    }: _*)
-    withV.withColumn("best",
-        aggregate(cents,
-          struct(lit(-2.0).as("sim"), lit(-1).as("cid")),
-          (acc, c) => {
-            val s = coalesce(Vectors.cosine(col("v"), c.getField("cv")),
-              lit(-2.0))
-            when(s > acc.getField("sim"),
-              struct(s.as("sim"), c.getField("cid").as("cid")))
-              .otherwise(acc)
-          }))
-      .select(col("best.cid").as(CellCol) +: col("id") +: col("v") +:
-        payload.map(col): _*)
-  }
+                     payload: Seq[String]): DataFrame =
+    withV.select(Similarity.nearest(Similarity.centsOf(cents(pivots),
+        lit(0)), col("v"), cosine = true).getField("cid").cast("int")
+        .as(CellCol) +: col("id") +: col("v") +: payload.map(col): _*)
 
   private def withV(emb: DataFrame, idCol: String, vecCol: String,
                     payload: Seq[String]): DataFrame =
@@ -216,37 +208,6 @@ object VectorIndex {
     * per-dimension min/max training pass (exact — comparisons only)
     * sizes the SQ8 ranges, codes replace the vectors in the stored
     * rows, and the ranges ride the header next to the pivots. */
-  /** Spherical-Lloyd refinement of the hash-seeded pivots — IVF
-    * TRAINING (what FAISS's `train()` does): each iteration is one
-    * map-only assignment pass + one bounded nCells×dim mean
-    * aggregate, the q96 `kmeansAssign` trajectory applied to the
-    * index's own pivot rule. Deterministic (portable-hash init,
-    * argmax-cosine with ascending-cell ties, exact avg), so replay
-    * holds. A cell that empties keeps its previous pivot (the pivot
-    * COUNT is the header contract). Why it matters: hash init leaves
-    * ~1/e of natural clusters pivotless, whose members then stretch
-    * foreign cells' angular bounds — training collapses pivots onto
-    * the real centers, which is what tightens θmax and turns the
-    * range ops' provable pruning from ~2× into ~cells×. */
-  private def kmeansRefine(v: DataFrame, init: Seq[Array[Double]],
-                           iters: Int): Seq[Array[Double]] = {
-    var cents = init
-    for (_ <- 1 to iters) {
-      val got = assign(v.select(col("id"), col("v")), cents, Nil)
-        .select(col(CellCol), posexplode(col("v")))
-        .toDF(CellCol, "pos", "x")
-        .groupBy(CellCol, "pos").agg(avg("x").as("m"))
-        .groupBy(CellCol)
-        .agg(transform(
-          sort_array(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cv"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      cents = cents.zipWithIndex.map { case (p, c) => got.getOrElse(c, p) }
-    }
-    cents
-  }
-
   private def build(spark: SparkSession, indexRoot: String,
                     emb: DataFrame, idCol: String, vecCol: String,
                     nCells: Int, payloadCols: Seq[String],
@@ -260,31 +221,26 @@ object VectorIndex {
     require(payloadCols.forall(c => !reserved(c)),
       s"payload columns collide with the index's own: $reserved")
     val v = withV(emb, idCol, vecCol, payloadCols)
-    val seed = v
-      .orderBy(Sampling.portableHash(col("id"), "vidx").asc,
-        col("id").asc)
-      .limit(nCells)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray).toSeq
+    val seed = Similarity.seeds(v, "id", "vidx", nCells)
     require(seed.nonEmpty, "empty embedding frame")
+    // IVF TRAINING (what FAISS's `train()` does): spherical Lloyd from
+    // the hash seeds, on a BOUNDED hash-ordered sample (~32 points per
+    // cell — a prefix of the same order the seeds come from), so train
+    // cost stops growing with the corpus; the one corpus-sized pass is
+    // the final assignment, which IS the index build. A cell that
+    // empties keeps its previous pivot (the pivot COUNT is the header
+    // contract). Why it matters: hash init leaves ~1/e of natural
+    // clusters pivotless, whose members then stretch foreign cells'
+    // angular bounds — training collapses pivots onto the real centers,
+    // which is what tightens θmax and turns the range ops' provable
+    // pruning from ~2× into ~cells×.
     val pivots =
       if (trainIters == 0) seed
-      else {
-        // train on a BOUNDED hash-ordered sample (the FAISS
-        // train-on-a-sample discipline, same rule as IvfPqIndex's
-        // codebooks): ~32 points per cell caps each Lloyd pass at
-        // sample·nCells·dim instead of corpus·nCells·dim, so train
-        // cost stops growing with the corpus — the one unavoidable
-        // corpus-sized pass is the final assignment, which IS the
-        // index build. Deterministic: the sample is a prefix of the
-        // same portable-hash order the seeds come from.
-        val trainN = math.max(4096, 32 * nCells)
-        kmeansRefine(
-          // limit() leaves ONE partition — re-spread the sample or
-          // every Lloyd pass runs on a single core
-          v.orderBy(Sampling.portableHash(col("id"), "vidx").asc,
-            col("id").asc).limit(trainN).repartition(col("id")),
-          seed, trainIters)
-      }
+      else Similarity.lloyd(
+        Similarity.trainSample(v, "id", "vidx",
+            math.max(4096, 32 * nCells)).select(lit(0).as("g"), col("v")),
+        cents(seed), cosine = true, trainIters, keepEmpty = true)
+        .map(_._3)
     val assigned = assign(v, pivots, payloadCols)
     val (rows, sqMeta) =
       if (!quantize) (assigned, Map.empty[String, String])
@@ -602,19 +558,10 @@ object VectorIndex {
       : DataFrame = {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be >= 1")
     val (meta, head) = stateAt(spark, indexRoot)
-    val pivots = parse(meta("vidx.pivots"))
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length && i < b.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) -2.0 else dot / d
-    }
-    val probed = pivots.zipWithIndex
-      .map { case (p, cid) => (cos(queryVec, p), cid) }
-      .sortBy { case (s, cid) => (-s, cid) }
-      .take(nProbe).map(_._2)
+    val probed = Similarity.probe(Seq(0L -> queryVec),
+        parse(meta("vidx.pivots")).zipWithIndex
+          .map { case (p, c) => (c.toLong, p) }, nProbe)
+      .map(_._2.toInt)
     val qv = array(queryVec.map(lit(_)): _*)
     // an SQ8 index decodes level midpoints from its byte codes; the
     // probed-cell scan reads the code column (~1/8 the bytes), never a
@@ -630,15 +577,6 @@ object VectorIndex {
       .select(col("id"), Vectors.cosine(vExpr, qv).as("cosine"))
       .orderBy(col("cosine").desc, col("id").asc)
       .limit(k)
-  }
-
-  private def driverCos(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length && i < b.length) {
-      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0.0) -2.0 else dot / d
   }
 
   /** Per-cell widest member angle θmax — π (cover everything) when the

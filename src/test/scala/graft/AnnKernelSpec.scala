@@ -120,6 +120,20 @@ class AnnKernelSpec extends SparkSpec {
       0.39845245704901494, -0.678771007236686), "pivot")
   }
 
+  test("the training sample of a parquet-backed source reaches more " +
+    "than one partition and keeps the hash-prefix rows") {
+    val path = newRoot("sample") + "/emb"
+    fix.write.parquet(path)
+    val src = spark.read.parquet(path)
+    val sample = Similarity.trainSample(src, "vec_id", "pqtrain", 32)
+    assert(sample.rdd.getNumPartitions > 1)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(ids(sample) ==
+      ids(Similarity.hashPrefix(src, "vec_id", "pqtrain", 32)))
+    assert(ids(sample).size == 32)
+  }
+
   test("IvfPqIndex cell assignment and partial-probe searchBatch rows") {
     val root = newRoot("pq") + "/pq"
     IvfPqIndex.create(spark, root, fix, "vec_id", "embedding", dim = 8,

@@ -88,9 +88,10 @@ class AnnRecallSpec extends SparkSpec {
     Similarity.annRecall(emb, "vec_id", "embedding", Seq(1L),
       k = 3, dim = 8, nCentroids = 4, nProbe = 2, m = 2, pqK = 4,
       iters = 1).collect()
-    // at least index + codebooks + codes (inner operators may
-    // register more of their own stage frames)
-    assert(CacheScope.pending >= 3)
+    // at least index + codes (the codebooks are m·pqK local rows,
+    // nothing to cache; inner operators may register more of their
+    // own stage frames)
+    assert(CacheScope.pending >= 2)
     CacheScope.releaseAll()
     assert(CacheScope.pending == 0)
   }
