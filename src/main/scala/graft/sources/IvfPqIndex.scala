@@ -67,8 +67,11 @@ object IvfPqIndex {
       idCol, vecCol, dim, m, pqK, iters)
     val pivots = Similarity.pivotRows(
       Similarity.ivfPivots(emb, idCol, vecCol, nCells))
+    // clustered by cell: ≈ one file per cell in `vecs` and `codes`, so
+    // a probe reads only its cells' few files
     val assigned = Similarity.ivfAssign(
-      graft.scaleOut(Similarity.vecRows(emb, idCol, vecCol)), pivots)
+        graft.scaleOut(Similarity.vecRows(emb, idCol, vecCol)), pivots)
+      .repartition(col("centroid_id"))
     // commit ORDER is the crash-safety contract: books/pivots/vecs
     // land first, the codes header — the discovery flag meta() keys
     // on — LAST. A crash mid-create then leaves a root meta()
