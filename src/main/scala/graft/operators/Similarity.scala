@@ -248,7 +248,8 @@ object Similarity {
       .select(col(idCol).as("pid"),
         Vectors.toDouble(col(vecCol)).as("pv"))
 
-  /** [[ivfPivots]] on the driver, in rule order — nCentroids rows. */
+  /** A `(pid, pv)` pivot frame on the driver, in the frame's order
+    * (rule order for [[ivfPivots]] itself) — nCentroids rows. */
   private[graft] def pivotRows(pivots: DataFrame): Seq[(Long, Array[Double])] =
     pivots.select(col("pid").cast("long"), col("pv")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq

@@ -78,9 +78,11 @@ object IvfPqIndex {
     // REFUSES (no pq.dim header yet) instead of a half-artifact
     // whose serve would fail late or, worse, partially answer.
     // meta() additionally re-verifies the component tables resolve.
-    Manifest.init(spark, s"$root/books", Similarity.booksFrame(spark, books))
+    // m·pqK and nCells driver rows: one file each, one task per serve
+    Manifest.init(spark, s"$root/books",
+      Similarity.booksFrame(spark, books).coalesce(1))
     Manifest.init(spark, s"$root/pivots",
-      spark.createDataFrame(pivots).toDF("pid", "pv"))
+      spark.createDataFrame(pivots).toDF("pid", "pv").coalesce(1))
     // with stored vectors the codes encode from the committed cell
     // rows, so the assignment runs exactly once either way
     val cells =
