@@ -151,6 +151,22 @@ object Manifest {
         }
     }
 
+  /** A partition path value ([[partValuesOf]]: hive-unescaped, null
+    * for `__HIVE_DEFAULT_PARTITION__`) as the catalyst value of the
+    * column's declared type — the one decoder behind V1 reads
+    * ([[ManifestFileIndex]]) and the connector. UTC pins date/timestamp
+    * casts. */
+  def partValue(v: String, dt: org.apache.spark.sql.types.DataType): Any =
+    if (v == null) null
+    else dt match {
+      case org.apache.spark.sql.types.StringType =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(v)
+      case _ =>
+        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+        Cast(Literal(v), dt, Some("UTC")).eval(
+          org.apache.spark.sql.catalyst.InternalRow.empty)
+    }
+
   /** Does `relPath` belong to one of the `touched` partitions? Matches
     * on PARSED partition value TUPLES (hive-unescaped, null-aware, one
     * slot per partition column in layout order), never on raw path
@@ -1157,8 +1173,9 @@ object Manifest {
 
   /** Reference-counted session pin of
     * `spark.sql.parquet.outputTimestampType` = TIMESTAMP_MICROS around
-    * every data write (Spark's INT96 default is unreadable by the
-    * connector's row path). A plain save/set/restore races concurrent
+    * every data write: INT96 (Spark's default) records no usable
+    * min/max, so its columns would carry no zone maps
+    * ([[ManifestStats]]). A plain save/set/restore races concurrent
     * committers on the same session — one thread's `finally` would
     * restore INT96 while another's write job is still running, and its
     * files would land INT96. Instead the FIRST writer in saves and
@@ -1223,9 +1240,8 @@ object Manifest {
       .getOrElse(Nil).filter(df.columns.contains)
     val w = bloomCols.foldLeft(shaped.write.mode("overwrite"))((w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    // INT64-micros timestamps: Spark's default INT96 encoding is
-    // unreadable by the connector's row-path reader (pushed LIMIT,
-    // CDC feeds decode TimestampType as INT64)
+    // INT64-micros timestamps: INT96 records no usable min/max, so
+    // its columns would carry no zone maps
     withMicrosTimestamps(spark) {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
        else w).parquet(dir)
@@ -2054,8 +2070,7 @@ object Manifest {
         math.max(1, math.min(200, (cnt / 4000000L).toInt + 1)))
       val salt = java.util.UUID.randomUUID().toString.take(8)
       val dir = f"$root/data/d$next%08d-$salt"
-      // INT64-micros timestamps: the connector's executor-side key
-      // decode (and its own data-file encoding) is INT64, not INT96
+      // INT64-micros timestamps, as on every data write
       withMicrosTimestamps(spark) {
         packed.write.mode("overwrite").parquet(dir)
       }

@@ -3,10 +3,9 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, AttributeReference, BoundReference, Cast, EqualNullSafe => CatalystEqNullSafe, EqualTo => CatalystEq, Expression, GenericInternalRow, GreaterThan => CatalystGt, GreaterThanOrEqual => CatalystGe, In => CatalystIn, IsNotNull => CatalystIsNotNull, IsNull => CatalystIsNull, LessThan => CatalystLt, LessThanOrEqual => CatalystLe, Literal, Or => CatalystOr, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, AttributeReference, BoundReference, EqualNullSafe => CatalystEqNullSafe, EqualTo => CatalystEq, Expression, GenericInternalRow, GreaterThan => CatalystGt, GreaterThanOrEqual => CatalystGe, In => CatalystIn, IsNotNull => CatalystIsNotNull, IsNull => CatalystIsNull, LessThan => CatalystLt, LessThanOrEqual => CatalystLe, Literal, Or => CatalystOr, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** A [[FileIndex]] over one manifest snapshot: the file list, sizes,
   * partition tuples and column zone maps all come from MANIFEST
@@ -41,17 +40,6 @@ final class ManifestFileIndex(
 
   override val rootPaths: Seq[Path] = Seq(new Path(root))
 
-  private def castPartValue(v: String, dt: DataType): Any =
-    if (v == null) null
-    else dt match {
-      case StringType => UTF8String.fromString(v)
-      // partition values travel as path strings; cast back to the
-      // column type the table's schema header declares (UTC pins
-      // date/timestamp casts)
-      case _ => Cast(Literal(UTF8String.fromString(v), StringType), dt,
-        Some("UTC")).eval(InternalRow.empty)
-    }
-
   /** One PartitionDirectory per distinct partition tuple, built once,
     * each file paired with its decoded zone map. Sorted for
     * deterministic plans. */
@@ -68,7 +56,7 @@ final class ManifestFileIndex(
             "layouts across commits; rewrite (commitReplace) to converge")
         val row = new GenericInternalRow(
           pvs.zipWithIndex.map { case ((_, v), i) =>
-            castPartValue(v, partitionSchema(i).dataType)
+            Manifest.partValue(v, partitionSchema(i).dataType)
           }.toArray[Any])
         val statuses = fs.map { e =>
           // FileStatus synthesized from manifest metadata: files are

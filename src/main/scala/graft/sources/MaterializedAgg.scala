@@ -293,11 +293,8 @@ object MaterializedAgg {
                   // applied by the read); the connector path
                   // runtime-prunes the scan to the keys' home files
                   // via zone maps / bloom sidecars
-                  val visible =
-                    try spark.read.format("graft-manifest")
-                      .option("version", vPre.toString).load(srcRoot)
-                    catch { case scala.util.control.NonFatal(_) =>
-                      Manifest.read(spark, srcRoot, Some(vPre)) }
+                  val visible = spark.read.format("graft-manifest")
+                    .option("version", vPre.toString).load(srcRoot)
                   // project AFTER the semi-join: the delete keys are
                   // raw source columns the predicate may filter away
                   val minus = project(

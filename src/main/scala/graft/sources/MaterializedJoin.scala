@@ -44,16 +44,13 @@ object MaterializedJoin {
     df.withColumn(BucketCol,
       pmod(xxhash64(keys.map(col): _*), lit(buckets)).cast("int"))
 
-  /** Version-pinned read of a source, preferring the V2 connector
-    * (runtime file pruning on the join key — a selective delta prunes
-    * the big side's files via zone maps and bloom sidecars); falls
-    * back to the Scala reader for schemas outside the connector's
-    * flat-primitive scope. */
+  /** Version-pinned read of a source through the V2 connector: runtime
+    * file pruning on the join key lets a selective delta prune the big
+    * side's files via zone maps and bloom sidecars. */
   private def readPinned(spark: SparkSession, root: String,
                          v: Long): DataFrame =
-    try spark.read.format("graft-manifest")
-      .option("version", v.toString).load(root)
-    catch { case NonFatal(_) => Manifest.read(spark, root, Some(v)) }
+    spark.read.format("graft-manifest").option("version", v.toString)
+      .load(root)
 
   private def joined(spark: SparkSession, left: DataFrame,
                      right: DataFrame, keys: Seq[String],

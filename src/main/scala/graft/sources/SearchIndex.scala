@@ -365,11 +365,8 @@ object SearchIndex {
           val keys = spark.read.parquet(paths.map(p =>
               Manifest.absEntryPath(srcRoot, p)): _*)
             .select(col(kc.head)).distinct()
-          val visible =
-            try spark.read.format("graft-manifest")
-              .option("version", vPre.toString).load(srcRoot)
-            catch { case scala.util.control.NonFatal(_) =>
-              Manifest.read(spark, srcRoot, Some(vPre)) }
+          val visible = spark.read.format("graft-manifest")
+            .option("version", vPre.toString).load(srcRoot)
           val erased = visible.join(broadcast(keys),
             visible(idCol) <=> keys(kc.head), "left_semi")
           val obsR = Observation()

@@ -1176,10 +1176,8 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces
     override def name(): String = "create_vector_index"
     override def description(): String =
       "build a persisted IVF vector index over a manifest table " +
-        "(VectorIndex.createFromManifest). The source table carries an " +
-        "array column, which the connector's SQL DDL does not cover " +
-        "(flat primitives only) — create it with the Scala Manifest " +
-        "API at its warehouse path; this procedure resolves the root " +
+        "(VectorIndex.createFromManifest) whose vector column is an " +
+        "array<double>; this procedure resolves the table's root " +
         "directly"
     override def bind(inputType: StructType): BoundProcedure = this
     override def isDeterministic: Boolean = false

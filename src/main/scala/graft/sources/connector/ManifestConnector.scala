@@ -4,17 +4,7 @@ import java.util.OptionalLong
 
 import scala.collection.JavaConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -27,7 +17,6 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Manifest
 
@@ -56,11 +45,11 @@ import graft.sources.Manifest
   *    per-file parquet projection contains exactly the requested
   *    columns — unread columns cost zero IO (columnar format).
   *  - '''Filter pushdown''' (`SupportsPushDownFilters`): data-column
-  *    predicates translate to parquet `FilterPredicate`s evaluated by
-  *    the parquet library against row-group statistics (skips whole
-  *    row groups) and at record level. They are ALSO returned as
-  *    residuals so Spark re-evaluates them — the pushdown is a pure
-  *    IO-skip optimization and can never change results.
+  *    predicates translate through Spark's own `ParquetFilters`
+  *    against each file's schema and skip whole row groups by their
+  *    statistics. They are ALSO returned as residuals so Spark
+  *    re-evaluates them — the pushdown is a pure IO-skip optimization
+  *    and can never change results.
   *  - '''Limit pushdown''' (`SupportsPushDownLimit`): per-reader row
   *    cap; Spark still applies the global limit.
   *  - '''Statistics''' (`SupportsReportStatistics`): `sizeInBytes` is
@@ -71,21 +60,20 @@ import graft.sources.Manifest
   *    frozen from one manifest version at `inferSchema` time;
   *    concurrent commits are invisible to a running query.
   *
-  * Scope (declared, not silently wrong): data columns are limited to
-  * parquet primitives (boolean/int32/int64/float/double/UTF8
-  * string/binary) — nested and repeated groups throw at schema
-  * inference. Partition columns surface as strings, exactly as they
-  * appear in the path (hive-unescaped); cast in the query when a
-  * numeric partition key is wanted. Schema = the NEWEST commit's file
-  * schema (the manifest layer's evolution contract, q112): columns
-  * absent from older commits' files read back as NULL.
+  * Scope: data columns are whatever Spark's parquet reader and writer
+  * carry, nested arrays and maps included. Partition columns are
+  * string/int/long/double/float/boolean, typed from the path values by
+  * [[Manifest.partValue]] (the V1 reader's decoder); other partition
+  * types are refused at resolve time. Schema = the manifest's schema
+  * header (the layer's evolution contract, q112): columns absent from
+  * older commits' files read back as NULL.
   *
   * 100 TB posture: planning reads one manifest (O(files) driver text,
   * schema from its header); each task reads exactly one data file. No
-  * shuffle, no driver data IO. Scans with data columns decode through
-  * Spark's own vectorized parquet reader as `ColumnarBatch`es
-  * ([[ManifestColumnarReader]]); the row-oriented `Group` path remains
-  * only for the footer-count fast path and pushed limits.
+  * shuffle, no driver data IO. Every file decodes through Spark's own
+  * vectorized parquet reader ([[ManifestColumnarReader]]) as
+  * `ColumnarBatch`es; scans with pending merge-on-read deletes consume
+  * the same batches through a row view ([[ManifestRowView]]).
   */
 class ManifestDataSource extends TableProvider with DataSourceRegister {
 
@@ -125,8 +113,8 @@ class ManifestDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Driver-side resolution + shared helpers (path parsing, parquet⇄Spark
-  * schema bridging, filter translation). */
+/** Driver-side resolution + shared helpers (partition and zone-map
+  * filter evaluation, DML predicate translation). */
 object ManifestConnector {
 
   /** Columns a CDC stream appends to the table schema: what happened
@@ -181,40 +169,6 @@ object ManifestConnector {
           d.keyCols.toArray)).toArray
   }
 
-  /** Partition path string → typed value for the declared partition
-    * column type (executor-side; the connector's partition-type
-    * scope). */
-  def castPartitionValue(v: String, dt: DataType): Any =
-    if (v == null) null
-    else dt match {
-      case StringType  => UTF8String.fromString(v)
-      case IntegerType => v.toInt
-      case LongType    => v.toLong
-      case DoubleType  => v.toDouble
-      case FloatType   => v.toFloat
-      case BooleanType => v.toBoolean
-      case other => throw new IllegalArgumentException(
-        s"graft-manifest does not support partition column type " +
-          s"${other.catalogString}")
-    }
-
-  /** Hive path-escaping inverse — shared with the manifest DML layer
-    * ([[graft.sources.Manifest.unescapePathName]]). */
-  def unescapePathName(s: String): String = Manifest.unescapePathName(s)
-
-  /** `data/c00000001-ab12/lang=de/part-0.parquet` → Seq(lang -> de).
-    * Null partitions (`__HIVE_DEFAULT_PARTITION__`) map to null.
-    * Shared with the manifest DML layer. */
-  def partValuesOf(relPath: String): Seq[(String, String)] =
-    Manifest.partValuesOf(relPath)
-
-  private def supportedDataType(dt: DataType): Boolean = dt match {
-    case BooleanType | IntegerType | LongType | FloatType |
-         DoubleType | StringType | BinaryType | TimestampType |
-         DateType => true
-    case _ => false
-  }
-
   /** Resolve root+version → frozen file list, partition layout and
     * schema, from the manifest alone: one manifest read, zero
     * filesystem listings or footer reads. */
@@ -257,16 +211,10 @@ object ManifestConnector {
     // the commit-time length is exact) — zero filesystem calls
     val files = snap.entries.map { e =>
       FileInfo(graft.sources.Manifest.absEntryPath(root, e.path), e.size,
-        partValuesOf(e.path), e.fileStats, e.dataSeq)
+        Manifest.partValuesOf(e.path), e.fileStats, e.dataSeq)
     }
-    // schema header = zero parquet footer reads at planning time;
-    // validate the connector's declared scope (flat primitives)
+    // schema header = zero parquet footer reads at planning time
     val full = snap.schema
-    full.fields.foreach { f =>
-      require(supportedDataType(f.dataType),
-        s"graft-manifest supports flat primitive columns only; " +
-          s"column ${f.name} is ${f.dataType.catalogString}")
-    }
     val partCols = snap.partCols
     partCols.foreach { c =>
       val dt = full(c).dataType
@@ -405,7 +353,7 @@ object ManifestConnector {
 
     e match {
       case f: NamedReference =>
-        // top-level columns only (the connector's flat-primitive scope)
+        // top-level columns only
         if (f.fieldNames.length == 1) Some(col(f.fieldNames.head)) else None
       case l: V2Literal[_] => literalColumn(l)
       case c: V2Cast =>
@@ -576,125 +524,6 @@ object ManifestConnector {
     case _: Boolean | _: Int | _: Long | _: Short | _: Byte |
          _: Float | _: Double | _: String => true
     case _ => false
-  }
-
-  /** Translate one Spark filter into a parquet predicate against THIS
-    * file's schema. Strict: None when any referenced column is missing
-    * from the file or a value/type combination is unsupported — the
-    * caller drops the conjunct (safe: pushed filters are re-evaluated
-    * by Spark as residuals). */
-  def toParquetPredicate(f: SFilter, mt: MessageType)
-      : Option[FilterPredicate] = {
-    def prim(c: String): Option[PrimitiveType] =
-      if (!mt.containsField(c)) None
-      else mt.getType(mt.getFieldIndex(c)) match {
-        case p: PrimitiveType => Some(p)
-        case _ => None
-      }
-
-    def cmp(c: String, v: Any, op: String): Option[FilterPredicate] =
-      prim(c).flatMap { p =>
-        (p.getPrimitiveTypeName, v) match {
-          case (INT64, _: Int | _: Long | _: Short | _: Byte) =>
-            val col = FilterApi.longColumn(c)
-            val x = java.lang.Long.valueOf(v.toString.toLong)
-            Some(op match {
-              case "eq" => FilterApi.eq(col, x)
-              case "gt" => FilterApi.gt(col, x)
-              case "ge" => FilterApi.gtEq(col, x)
-              case "lt" => FilterApi.lt(col, x)
-              case "le" => FilterApi.ltEq(col, x)
-            })
-          case (INT32, _: Int | _: Short | _: Byte) =>
-            val col = FilterApi.intColumn(c)
-            val x = java.lang.Integer.valueOf(v.toString.toInt)
-            Some(op match {
-              case "eq" => FilterApi.eq(col, x)
-              case "gt" => FilterApi.gt(col, x)
-              case "ge" => FilterApi.gtEq(col, x)
-              case "lt" => FilterApi.lt(col, x)
-              case "le" => FilterApi.ltEq(col, x)
-            })
-          case (DOUBLE, _: Double) =>
-            val col = FilterApi.doubleColumn(c)
-            val x = java.lang.Double.valueOf(v.asInstanceOf[Double])
-            Some(op match {
-              case "eq" => FilterApi.eq(col, x)
-              case "gt" => FilterApi.gt(col, x)
-              case "ge" => FilterApi.gtEq(col, x)
-              case "lt" => FilterApi.lt(col, x)
-              case "le" => FilterApi.ltEq(col, x)
-            })
-          case (FLOAT, _: Float) =>
-            val col = FilterApi.floatColumn(c)
-            val x = java.lang.Float.valueOf(v.asInstanceOf[Float])
-            Some(op match {
-              case "eq" => FilterApi.eq(col, x)
-              case "gt" => FilterApi.gt(col, x)
-              case "ge" => FilterApi.gtEq(col, x)
-              case "lt" => FilterApi.lt(col, x)
-              case "le" => FilterApi.ltEq(col, x)
-            })
-          case (BINARY, s: String)
-            if p.getLogicalTypeAnnotation ==
-              LogicalTypeAnnotation.stringType() =>
-            val col = FilterApi.binaryColumn(c)
-            val x = Binary.fromString(s)
-            Some(op match {
-              case "eq" => FilterApi.eq(col, x)
-              case "gt" => FilterApi.gt(col, x)
-              case "ge" => FilterApi.gtEq(col, x)
-              case "lt" => FilterApi.lt(col, x)
-              case "le" => FilterApi.ltEq(col, x)
-            })
-          case (BOOLEAN, b: Boolean) if op == "eq" =>
-            Some(FilterApi.eq(FilterApi.booleanColumn(c),
-              java.lang.Boolean.valueOf(b)))
-          case _ => None
-        }
-      }
-
-    def nullCheck(c: String, isNull: Boolean): Option[FilterPredicate] =
-      prim(c).flatMap { p =>
-        val pred: Option[FilterPredicate] = p.getPrimitiveTypeName match {
-          case INT64 => Some(FilterApi.eq(FilterApi.longColumn(c),
-            null.asInstanceOf[java.lang.Long]))
-          case INT32 => Some(FilterApi.eq(FilterApi.intColumn(c),
-            null.asInstanceOf[java.lang.Integer]))
-          case DOUBLE => Some(FilterApi.eq(FilterApi.doubleColumn(c),
-            null.asInstanceOf[java.lang.Double]))
-          case FLOAT => Some(FilterApi.eq(FilterApi.floatColumn(c),
-            null.asInstanceOf[java.lang.Float]))
-          case BOOLEAN => Some(FilterApi.eq(FilterApi.booleanColumn(c),
-            null.asInstanceOf[java.lang.Boolean]))
-          case BINARY => Some(FilterApi.eq(FilterApi.binaryColumn(c),
-            null.asInstanceOf[Binary]))
-          case _ => None
-        }
-        pred.map(x => if (isNull) x else FilterApi.not(x))
-      }
-
-    f match {
-      case EqualTo(c, v)            => cmp(c, v, "eq")
-      case GreaterThan(c, v)        => cmp(c, v, "gt")
-      case GreaterThanOrEqual(c, v) => cmp(c, v, "ge")
-      case LessThan(c, v)           => cmp(c, v, "lt")
-      case LessThanOrEqual(c, v)    => cmp(c, v, "le")
-      case In(c, vs) =>
-        val parts = vs.toSeq.filter(_ != null).map(v => cmp(c, v, "eq"))
-        if (parts.isEmpty || parts.exists(_.isEmpty)) None
-        else Some(parts.flatten.reduce(FilterApi.or))
-      case IsNull(c)    => nullCheck(c, isNull = true)
-      case IsNotNull(c) => nullCheck(c, isNull = false)
-      case And(l, r) => for {
-        a <- toParquetPredicate(l, mt); b <- toParquetPredicate(r, mt)
-      } yield FilterApi.and(a, b)
-      case Or(l, r) => for {
-        a <- toParquetPredicate(l, mt); b <- toParquetPredicate(r, mt)
-      } yield FilterApi.or(a, b)
-      case Not(c) => toParquetPredicate(c, mt).map(FilterApi.not)
-      case _ => None
-    }
   }
 }
 
@@ -896,10 +725,7 @@ final class ManifestBatchWrite(res: ManifestConnector.Resolved,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
-    val confEntries = spark.sparkContext.hadoopConfiguration
-      .iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    ManifestWriterFactory(confEntries, res.root, s"b$salt", schema,
-      res.partCols)
+    ManifestWriterFactory(spark, res.root, s"b$salt", schema, res.partCols)
   }
 
   private def entriesOf(messages: Array[WriterCommitMessage]) =
@@ -1183,7 +1009,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
       else files.groupBy(f => groupCols.map(f.partValues.toMap.apply))
         .toSeq.map { case (tuple, group) =>
           val keyVals = tuple.zip(groupFields).map { case (v, f) =>
-            ManifestConnector.castPartitionValue(v, f.dataType)
+            Manifest.partValue(v, f.dataType)
           }
           (keyVals ++ valuesOf(group).getOrElse(return None)).toArray
         }.toArray
@@ -1415,17 +1241,10 @@ final class ManifestScan(res: ManifestConnector.Resolved,
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val entries = conf.iterator().asScala
       .map(e => (e.getKey, e.getValue)).toArray
-    // CDC meta and selected metadata columns ride the constant-column
-    // (partition value) machinery — each input partition carries
-    // their values, typed from the required schema
-    val constCols =
-      (if (cdc) res.partCols ++
-        ManifestConnector.cdcMetaFields.map(_.name)
-      else res.partCols ++ ManifestConnector.metadataColumnFields
-        .map(_.name).filter(required.fieldNames.contains)).toArray
-    ManifestReaderFactory(entries, required, constCols,
-      dataFilters, limit, res.declared,
-      plannedFiles.exists(f => res.deleteSpecsFor(f).nonEmpty) || cdc)
+    // partition values, CDC meta and metadata columns ride the input
+    // partitions as constants (see ManifestColumnarReader)
+    ManifestReaderFactory(entries, required, dataFilters, limit,
+      res.declared, plannedFiles.exists(f => res.deleteSpecsFor(f).nonEmpty))
   }
 
   override def description(): String =
@@ -1477,7 +1296,7 @@ final class ManifestScan(res: ManifestConnector.Resolved,
         runtimeFiles.map { f =>
           val pv = f.partValues.toMap
           val keys = res.partCols.zip(keyTypes).map { case (c, dt) =>
-            ManifestConnector.castPartitionValue(pv(c), dt)
+            Manifest.partValue(pv(c), dt)
           }.toArray
           ManifestInputPartition(
             f.absPath, f.size, f.partValues.toArray ++
@@ -1553,8 +1372,7 @@ final class ManifestScan(res: ManifestConnector.Resolved,
             val typed = f.dataType match {
               case IntegerType | LongType | DoubleType | FloatType =>
                 scala.util.Try(nonNull
-                  .map(v => ManifestConnector
-                    .castPartitionValue(v, f.dataType))).toOption
+                  .map(v => Manifest.partValue(v, f.dataType))).toOption
               case _ => None
             }
             val bounds = typed.filter(_.nonEmpty).map { tv =>
@@ -1664,32 +1482,8 @@ object ManifestScan {
 
 /** One merge-on-read delete file applying to a task's data file: the
   * task loads its DISTINCT key tuples into a hash set once and drops
-  * matching rows as it reads — the executor half of [[graft.sources
-  * .Manifest.deleteByKeys]]. */
+  * matching rows as it reads ([[ManifestRowView]]). */
 final case class DeleteFileSpec(absPath: String, keyCols: Array[String])
-
-/** JVM-wide (per-executor) cache of loaded delete-key sets. A scan
-  * over N data files would otherwise read every applicable delete
-  * file N times — once per task. Delete files are IMMUTABLE (new
-  * commits write new paths), so a path is a complete cache key.
-  * Crudely bounded: maintenance cycles (rewriteDeletes → vacuum)
-  * retire paths, so on overflow the cache just resets. */
-private[connector] object DeleteSetCache {
-  private val MaxEntries = 64
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.HashSet[List[Any]]]()
-  def getOrLoad(path: String,
-                load: () => java.util.HashSet[List[Any]])
-      : java.util.HashSet[List[Any]] = {
-    val hit = cache.get(path)
-    if (hit != null) return hit
-    val v = load()
-    if (cache.size >= MaxEntries) cache.clear()
-    cache.putIfAbsent(path, v)
-    v
-  }
-}
 
 final case class ManifestInputPartition(path: String, size: Long,
     partValues: Array[(String, String)],
@@ -1710,26 +1504,18 @@ final case class ManifestInputPartition(path: String, size: Long,
 final case class AggRowInputPartition(rows: Array[Array[Any]])
     extends InputPartition
 
+/** Columnar reads ([[ManifestColumnarReader]]) for every scan but
+  * those with pending merge-on-read deletes, which read the same
+  * batches through the [[ManifestRowView]] — Spark requires one mode
+  * for the WHOLE scan, so `morDeletes` flags any file carrying deletes
+  * (`rewriteDeletes` restores columnar reads). */
 final case class ManifestReaderFactory(confEntries: Array[(String, String)],
-    required: StructType, partCols: Array[String],
-    dataFilters: Array[SFilter], limit: Int,
-    tableSchema: StructType = new StructType(),
-    forceRowPath: Boolean = false)
+    required: StructType, dataFilters: Array[SFilter], limit: Int,
+    tableSchema: StructType, morDeletes: Boolean)
     extends PartitionReaderFactory {
 
-  // Columnar (vectorized) reading whenever data columns are requested
-  // and no limit is pushed: Spark's own vectorized parquet decoder +
-  // a ColumnarToRow boundary beats row-by-row Group assembly by the
-  // same margin it does in the native file source. The row path stays
-  // for the footer-count fast path (no data columns), pushed limits,
-  // and scans with applicable merge-on-read deletes (row-level
-  // filtering needs row emission, and Spark requires one mode for the
-  // WHOLE scan — rewriteDeletes restores vectorized reads).
-  private val dataFieldCount =
-    required.fields.count(f => !partCols.contains(f.name))
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    !partition.isInstanceOf[AggRowInputPartition] &&
-      dataFieldCount > 0 && limit < 0 && !forceRowPath
+    !partition.isInstanceOf[AggRowInputPartition] && !morDeletes
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = partition match {
@@ -1741,8 +1527,7 @@ final case class ManifestReaderFactory(confEntries: Array[(String, String)],
         override def close(): Unit = ()
       }
     case p: ManifestInputPartition =>
-      new ManifestPartitionReader(p,
-        confEntries, required, partCols.toSet, dataFilters, limit,
+      new ManifestRowView(p, confEntries, required, dataFilters, limit,
         tableSchema)
   }
 
@@ -1750,268 +1535,5 @@ final case class ManifestReaderFactory(confEntries: Array[(String, String)],
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ManifestColumnarReader(
       partition.asInstanceOf[ManifestInputPartition],
-      confEntries, required, partCols.toSet, dataFilters)
-}
-
-/** One task = one data file. Opens the footer once (schema + row
-  * count), then either streams projected/filtered records through the
-  * parquet example reader, or — when the query needs no data columns
-  * (count(*), partition-only projections) — emits footer-counted rows
-  * without touching a data page. */
-final class ManifestPartitionReader(part: ManifestInputPartition,
-    confEntries: Array[(String, String)], required: StructType,
-    partCols: Set[String], dataFilters: Array[SFilter], limit: Int,
-    tableSchema: StructType = new StructType())
-    extends PartitionReader[InternalRow] {
-
-  private val conf = {
-    val c = new Configuration(false)
-    confEntries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  private val partValues: Map[String, String] = part.partValues.toMap
-
-  private sealed trait ColPlan
-  // value pre-cast to the declared partition type
-  private case class PartCol(value: Any) extends ColPlan
-  private case class DataCol(projIdx: Int, dt: DataType) extends ColPlan
-  private case object MissingCol extends ColPlan
-
-  private val path = new Path(part.path)
-  private val (fileSchema: MessageType, fileRows: Long) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try (r.getFileMetaData.getSchema, r.getRecordCount)
-    finally r.close()
-  }
-
-  // a const-designated column (partition / CDC meta) falls back to
-  // being READ FROM THE FILE when this partition carries no value for
-  // it but the file does — the CDC delete-key case: a delete file
-  // keyed on a PARTITION column stores the key values as an ordinary
-  // data column, and emitting the constant NULL instead would hand the
-  // consumer an unreplayable retraction. Hive scans are unaffected
-  // (their partitions always carry every partition value).
-  private def constFallsToFile(name: String): Boolean =
-    partCols.contains(name) && !partValues.contains(name) &&
-      fileSchema.containsField(name)
-
-  private val dataFields = required.fields.filterNot(f =>
-    partCols.contains(f.name))
-  // merge-on-read delete keys must be read even when pruned from the
-  // projection — extraction needs them, emission does not
-  private val delKeyCols: Array[String] =
-    part.deletes.flatMap(_.keyCols).distinct
-  // projection keeps file order for stable Group field indexes
-  private val presentNames =
-    (dataFields.map(_.name) ++
-      required.fields.map(_.name).filter(constFallsToFile) ++
-      delKeyCols.filterNot(partCols.contains))
-      .filter(fileSchema.containsField).toSet
-  private val projection: Option[MessageType] =
-    if (presentNames.isEmpty) None
-    else Some(new MessageType(fileSchema.getName,
-      fileSchema.getFields.asScala.filter(f =>
-        presentNames.contains(f.getName)).asJava))
-
-  // the row path decodes TimestampType as INT64 micros only — an INT96
-  // file would misdecode silently, so EVERY row-path projection (MoR
-  // deletes, pushed LIMIT, CDC feeds) refuses it loudly. Files written
-  // by this library are pinned to TIMESTAMP_MICROS; INT96 can only
-  // arrive via externally-written parquet adopted into a commit.
-  projection.foreach(_.getFields.asScala.foreach { f =>
-    require(!(f.isPrimitive && f.asPrimitiveType().getPrimitiveTypeName
-        == org.apache.parquet.schema.PrimitiveType
-          .PrimitiveTypeName.INT96),
-      s"row-path read over INT96-timestamp files is unsupported " +
-        s"(${part.path}); rewrite the table (Manifest.compact / " +
-        s"rewriteDeletes) to INT64-micros files")
-  })
-
-  private val plans: Array[ColPlan] = required.fields.map { f =>
-    if (partCols.contains(f.name) && !constFallsToFile(f.name)) {
-      val v = partValues.getOrElse(f.name, null)
-      PartCol(ManifestConnector.castPartitionValue(v, f.dataType))
-    } else projection match {
-      case Some(p) if p.containsField(f.name) =>
-        DataCol(p.getFieldIndex(f.name), f.dataType)
-      case _ => MissingCol
-    }
-  }
-
-  private def typeOf(c: String): DataType =
-    if (tableSchema.fieldNames.contains(c)) tableSchema(c).dataType
-    else required(c).dataType
-
-  private def keyPlan(c: String): ColPlan =
-    if (partCols.contains(c))
-      PartCol(ManifestConnector.castPartitionValue(
-        partValues.getOrElse(c, null), typeOf(c)))
-    else projection match {
-      case Some(p) if p.containsField(c) =>
-        DataCol(p.getFieldIndex(c), typeOf(c))
-      case _ => MissingCol // schema evolution: rows read NULL here
-    }
-
-  // byte arrays compare by identity; key tuples normalize them
-  private def normKey(v: Any): Any = v match {
-    case b: Array[Byte] => b.toSeq
-    case x              => x
-  }
-
-  /** One entry per distinct key-column tuple among the applicable
-    * delete files: the extraction plan for this data file's rows plus
-    * the loaded key set (all delete files of that tuple, unioned). A
-    * row is deleted when ANY set contains its tuple — null-safe (a
-    * NULL key value matches NULL), matching the read path's `<=>`
-    * anti-join. Loading happens once per task, before the data reader
-    * touches the shared Configuration. */
-  private val deleteSets
-      : Array[(Array[ColPlan], Array[java.util.HashSet[List[Any]]])] =
-    part.deletes.groupBy(_.keyCols.toSeq).map { case (kc, specs) =>
-      val types = kc.map(typeOf)
-      val sets = specs.map(_.absPath).distinct.map { dp =>
-        DeleteSetCache.getOrLoad(dp, () => {
-          val set = new java.util.HashSet[List[Any]]()
-          val dPath = new Path(dp)
-          val dSchema = {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(dPath, conf))
-            try r.getFileMetaData.getSchema finally r.close()
-          }
-          val idx = kc.map(dSchema.getFieldIndex).toArray
-          // fresh conf: must not inherit the data file's read projection
-          val dConf = new Configuration(conf)
-          val dr = ParquetReader.builder(new GroupReadSupport(), dPath)
-            .withConf(dConf).build()
-          try {
-            var g = dr.read()
-            while (g != null) {
-              set.add(kc.indices.map(i =>
-                if (g.getFieldRepetitionCount(idx(i)) == 0) null
-                else normKey(decodeGroupValue(g, idx(i), types(i)))).toList)
-              g = dr.read()
-            }
-          } finally dr.close()
-          set
-        })
-      }
-      (kc.map(keyPlan).toArray, sets.toArray)
-    }.toArray
-
-  private var emitted = 0L
-  private def capped(n: Long): Long = if (limit >= 0) n min limit else n
-
-  // fast path: no data columns requested → no data filters exist either
-  // (Spark keeps residual-filter columns in the required schema), so the
-  // footer row count is exact. With applicable deletes the key columns
-  // are in the projection unless they are ALL partition/missing — then
-  // the whole file shares one constant key tuple and is either fully
-  // deleted or untouched.
-  private val rowsOnly = projection.isEmpty
-  private val constDeleted = rowsOnly && deleteSets.exists {
-    case (kps, sets) =>
-      val key = kps.map {
-        case PartCol(v) => normKey(v)
-        case _          => null
-      }.toList
-      sets.exists(_.contains(key))
-  }
-  private val rowsOnlyTotal =
-    if (!rowsOnly || constDeleted) 0L else capped(fileRows)
-
-  private val reader: ParquetReader[Group] = if (rowsOnly) null else {
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.get.toString)
-    val predicate = dataFilters.toSeq
-      .flatMap(ManifestConnector.toParquetPredicate(_, projection.get))
-      .reduceOption(FilterApi.and)
-    val b = ParquetReader.builder(new GroupReadSupport(), path)
-      .withConf(conf)
-    predicate.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
-  }
-
-  /** Is this row erased by a pending merge-on-read delete? */
-  private def deleted(g: Group): Boolean = {
-    var i = 0
-    while (i < deleteSets.length) {
-      val (kps, sets) = deleteSets(i)
-      val key = kps.map {
-        case PartCol(v) => normKey(v)
-        case MissingCol => null
-        case DataCol(idx, dt) =>
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else normKey(decodeGroupValue(g, idx, dt))
-      }.toList
-      var j = 0
-      while (j < sets.length) {
-        if (sets(j).contains(key)) return true
-        j += 1
-      }
-      i += 1
-    }
-    false
-  }
-
-  private def decodeGroupValue(g: Group, idx: Int, dt: DataType): Any =
-    dt match {
-      case LongType    => g.getLong(idx, 0)
-      case IntegerType => g.getInteger(idx, 0)
-      case DoubleType  => g.getDouble(idx, 0)
-      case FloatType   => g.getFloat(idx, 0)
-      case BooleanType => g.getBoolean(idx, 0)
-      case TimestampType => g.getLong(idx, 0)
-      case DateType      => g.getInteger(idx, 0)
-      case StringType  =>
-        UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-      case BinaryType  => g.getBinary(idx, 0).getBytes
-      case other => throw new IllegalStateException(
-        s"unreachable: unsupported type $other")
-    }
-
-  private var current: InternalRow = _
-
-  // row path decodes INT64-micros timestamps only (the connector's
-  // own write encoding); INT96 files take the vectorized path, which
-  // Spark decodes natively
-  private def rowOf(g: Group): InternalRow = {
-    val vals = new Array[Any](plans.length)
-    var i = 0
-    while (i < plans.length) {
-      vals(i) = plans(i) match {
-        case PartCol(v) => v
-        case MissingCol => null
-        case DataCol(idx, dt) =>
-          if (g.getFieldRepetitionCount(idx) == 0) null
-          else decodeGroupValue(g, idx, dt)
-      }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  private val partOnlyRow: InternalRow = {
-    val vals: Array[Any] = plans.map {
-      case PartCol(v) => v: Any
-      case _          => null: Any
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def next(): Boolean = {
-    if (rowsOnly) {
-      if (emitted >= rowsOnlyTotal) false
-      else { current = partOnlyRow; emitted += 1; true }
-    } else if (limit >= 0 && emitted >= limit) false
-    else {
-      var g = reader.read()
-      // skip rows erased by pending merge-on-read deletes
-      while (g != null && deleteSets.nonEmpty && deleted(g))
-        g = reader.read()
-      if (g == null) false
-      else { current = rowOf(g); emitted += 1; true }
-    }
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
+      confEntries, required, dataFilters, limit)
 }

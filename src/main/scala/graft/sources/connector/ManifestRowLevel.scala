@@ -206,9 +206,8 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
     val entries = conf.iterator().asScala
       .map(e => (e.getKey, e.getValue)).toArray
     // NO data filters, NO limit: the rewrite read is full-fidelity
-    ManifestReaderFactory(entries, required, res.partCols.toArray,
-      Array.empty, -1, res.declared,
-      files.exists(f => res.deleteSpecsFor(f).nonEmpty))
+    ManifestReaderFactory(entries, required, Array.empty, -1,
+      res.declared, files.exists(f => res.deleteSpecsFor(f).nonEmpty))
   }
 
   override def description(): String =
@@ -228,11 +227,8 @@ final class ManifestReplaceDataWrite(op: ManifestRowLevelOperation,
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo)
         : DataWriterFactory = {
-      val conf = SparkSession.active.sparkContext.hadoopConfiguration
-      val entries = conf.iterator().asScala
-        .map(e => (e.getKey, e.getValue)).toArray
-      ManifestWriterFactory(entries, res.root, s"rw-$salt", writeSchema,
-        res.partCols)
+      ManifestWriterFactory(SparkSession.active, res.root, s"rw-$salt",
+        writeSchema, res.partCols)
     }
 
     private def entriesOf(messages: Array[WriterCommitMessage]) =

@@ -170,10 +170,11 @@ final class ManifestMicroBatchStream(
   * rows as 'insert' stamped with the commit that added them; in-range
   * MoR delete commits emit their KEY files as 'delete' rows (key
   * columns read from the file, every other column NULL — partition
-  * values included, since a key file belongs to no partition). The
-  * meta columns ride the constant-column machinery, so neither reader
-  * changes. No manifest-level pruning: CDC consumes no filters (a
-  * dropped retraction is corruption; Spark filters the emitted rows). */
+  * columns too unless they are keys, since a key file belongs to no
+  * partition). The meta columns ride the input partitions as
+  * constants, so the reader has no CDC mode. No manifest-level
+  * pruning: CDC consumes no filters (a dropped retraction is
+  * corruption; Spark filters the emitted rows). */
 private[connector] object ManifestStreamHelpers {
   def cdcInputPartitions(res: ManifestConnector.Resolved,
       prevFiles: Set[String], cur: Manifest.SnapshotMeta,
@@ -229,16 +230,9 @@ final class ManifestStreamingWrite(res: ManifestConnector.Resolved,
   // comes from createWriter(epochId), so restarts can never collide
   private val salt = java.util.UUID.randomUUID().toString.take(8)
 
-  private def confEntries: Array[(String, String)] = {
-    import scala.collection.JavaConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-  }
-
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    ManifestWriterFactory(confEntries, res.root, s"s$salt", schema,
-      res.partCols)
+    ManifestWriterFactory(spark, res.root, s"s$salt", schema, res.partCols)
 
   private def entriesOf(messages: Array[WriterCommitMessage]) =
     messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }

@@ -8,41 +8,47 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 import org.apache.spark.sql.sources.{Filter => SFilter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Vectorized (columnar-batch) reader for one manifest data file —
-  * the same `VectorizedParquetRecordReader` Spark's native parquet
-  * source decodes with, so the connector's scans enter the engine as
-  * `ColumnarBatch`es behind a codegen `ColumnarToRow` boundary instead
-  * of row-by-row parquet `Group` assembly (the previously documented
-  * row-oriented limitation of this connector).
+import graft.sources.Manifest
+
+/** The connector's one parquet decoder: Spark's own
+  * `VectorizedParquetRecordReader` over one manifest data file, so
+  * every scan enters the engine as `ColumnarBatch`es behind a codegen
+  * `ColumnarToRow` boundary — or, under merge-on-read deletes, through
+  * the [[ManifestRowView]] over the same batches.
   *
-  * What carries over from the row path, unchanged in semantics:
-  *  - '''column pruning''': the requested data schema rides the
-  *    standard `org.apache.spark.sql.parquet.row.requested_schema`
-  *    conf key, and schema-evolution columns a file predates come
-  *    back as constant-NULL vectors;
-  *  - '''row-group skipping''': pushed data filters translate to the
-  *    same parquet `FilterPredicate` and are applied at
-  *    row-group-statistics granularity via the reader's own filter
-  *    hookup (`ParquetInputFormat.setFilterPredicate`); record-level
-  *    residual evaluation is Spark's job, exactly as in its native
-  *    vectorized path;
-  *  - '''partition columns''': typed constant vectors via
-  *    `initBatch`, reordered to the scan's declared column order.
+  *  - '''constants''': a column is a constant exactly when the input
+  *    partition carries a value for it (hive partition values, CDC
+  *    meta, `_file` / `_commit_version`), typed by
+  *    [[Manifest.partValue]]; otherwise it is read from the file, and
+  *    is NULL where the file predates it (schema evolution, or a CDC
+  *    delete-key file that stores only its key columns);
+  *  - '''column pruning''': the file-read columns ride the standard
+  *    `org.apache.spark.sql.parquet.row.requested_schema` conf key; with
+  *    none requested (partition-only projections, `count(*)`) batches
+  *    carry row counts and constants only;
+  *  - '''row-group skipping''': pushed data filters translate through
+  *    Spark's `ParquetFilters` against THIS file's schema and apply at
+  *    row-group granularity; record-level evaluation stays Spark's
+  *    residual job, exactly as in its native vectorized path;
+  *  - '''pushed LIMIT''': each batch's `numRows` is capped so the task
+  *    emits at most `limit` rows.
   *
-  * Date/time rebase modes are pinned to CORRECTED — the connector's
-  * declared type scope (flat primitives) has no ancient-calendar
-  * types, so no legacy files can need rebasing.
+  * Date/time rebase modes are pinned to CORRECTED: every writer of
+  * this library writes proleptic-Gregorian values.
   */
 final class ManifestColumnarReader(part: ManifestInputPartition,
     confEntries: Array[(String, String)], required: StructType,
-    partCols: Set[String], dataFilters: Array[SFilter])
+    dataFilters: Array[SFilter], limit: Int = -1)
     extends PartitionReader[ColumnarBatch] {
 
   private val conf = {
@@ -51,17 +57,18 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
     c
   }
 
-  private val dataFields = required.fields.filterNot(f =>
-    partCols.contains(f.name))
-  private val partFields = required.fields.filter(f =>
-    partCols.contains(f.name))
+  private val carried = part.partValues.toMap
+  private val (constFields, dataFields) =
+    required.fields.partition(f => carried.contains(f.name))
   private val path = new Path(part.path)
 
   private val reader: VectorizedParquetRecordReader = {
     conf.set("parquet.read.support.class",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+    // nullable request: a column a file predates reads NULL, never
+    // "required column missing"
     conf.set("org.apache.spark.sql.parquet.row.requested_schema",
-      StructType(dataFields).json)
+      StructType(dataFields.map(_.copy(nullable = true))).json)
     // ParquetToSparkSchemaConverter reads these with NO defaults —
     // Spark's native path injects them from SQLConf; do the same here
     conf.setBoolean("spark.sql.parquet.binaryAsString", false)
@@ -70,16 +77,18 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
     conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
     conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
     conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-    // row-group skip: same FilterPredicate translation as the row
-    // path, applied against THIS file's physical schema
-    val fileSchema = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-      try r.getFileMetaData.getSchema finally r.close()
+    if (dataFilters.nonEmpty) {
+      val fileSchema = {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+        try r.getFileMetaData.getSchema finally r.close()
+      }
+      // IN lists up to parquetTranslatable's cap push as OR-ed equalities
+      val filters = new ParquetFilters(fileSchema, true, true, true, true,
+        32, false, RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+      dataFilters.toSeq.flatMap(filters.createFilter)
+        .reduceOption(FilterApi.and)
+        .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
     }
-    dataFilters.toSeq
-      .flatMap(ManifestConnector.toParquetPredicate(_, fileSchema))
-      .reduceOption(FilterApi.and)
-      .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, /* capacity = */ 4096)
@@ -91,34 +100,158 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
       new org.apache.hadoop.mapred.FileSplit(path, 0, len,
         Array.empty[String]),
       new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-    val pvRow = new GenericInternalRow(partFields.map { f =>
-      ManifestConnector.castPartitionValue(
-        part.partValues.toMap.getOrElse(f.name, null), f.dataType)
-    }.toArray[Any])
-    r.initBatch(StructType(partFields), pvRow)
+    r.initBatch(StructType(constFields), new GenericInternalRow(
+      constFields.map(f => Manifest.partValue(carried(f.name), f.dataType))
+        .toArray[Any]))
     r.enableReturningBatches()
     r
   }
 
-  // the reader's batch is [dataFields..., partFields...]; re-expose the
+  // the reader's batch is [dataFields..., constFields...]; re-expose the
   // SAME vectors in the scan's declared column order
   private val inner: ColumnarBatch = reader.resultBatch()
-  private val batch: ColumnarBatch = {
-    val order: Array[Int] = required.fields.map { f =>
-      if (partCols.contains(f.name))
-        dataFields.length + partFields.indexWhere(_.name == f.name)
-      else dataFields.indexWhere(_.name == f.name)
-    }
-    new ColumnarBatch(order.map(inner.column(_): ColumnVector))
-  }
+  private val batch: ColumnarBatch = new ColumnarBatch(required.fields.map {
+    f =>
+      val d = dataFields.indexWhere(_.name == f.name)
+      inner.column(if (d >= 0) d
+        else dataFields.length + constFields.indexWhere(_.name == f.name))
+  })
 
-  override def next(): Boolean = {
-    val has = reader.nextBatch()
-    if (has) batch.setNumRows(inner.numRows())
-    has
-  }
+  private var emitted = 0L
+
+  override def next(): Boolean =
+    if (limit >= 0 && emitted >= limit) false
+    else if (!reader.nextBatch()) false
+    else {
+      val n = if (limit >= 0) math.min(inner.numRows().toLong,
+        limit - emitted).toInt else inner.numRows()
+      batch.setNumRows(n)
+      emitted += n
+      true
+    }
 
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = reader.close()
+}
+
+/** The row view over [[ManifestColumnarReader]] batches for scans with
+  * pending merge-on-read deletes — the executor half of
+  * [[graft.sources.Manifest.deleteByKeys]]. The delete key columns are
+  * read even when pruned from the projection (extraction needs them,
+  * emission does not); a row is skipped when ANY applicable delete
+  * file holds its key tuple, null-safe (a NULL key value matches NULL),
+  * matching the V1 read path's `<=>` anti-join. Spark needs one mode
+  * per scan, so every file of such a scan reads through this view. */
+final class ManifestRowView(part: ManifestInputPartition,
+    confEntries: Array[(String, String)], required: StructType,
+    dataFilters: Array[SFilter], limit: Int, tableSchema: StructType)
+    extends PartitionReader[InternalRow] {
+
+  private val keyFields = part.deletes.flatMap(_.keyCols).distinct
+    .filterNot(required.fieldNames.contains).map(tableSchema(_))
+  private val readSchema = StructType(required.fields ++ keyFields)
+
+  /** Per distinct key-column tuple: its ordinals in [[readSchema]],
+    * types, and the loaded key sets of every delete file keyed on it.
+    * Loading happens once per task (cached JVM-wide per path). */
+  private val deleteSets: Array[(Array[Int], Array[DataType],
+      Array[java.util.HashSet[List[Any]]])] =
+    part.deletes.groupBy(_.keyCols.toSeq).map { case (kc, specs) =>
+      val types = kc.map(readSchema(_).dataType).toArray
+      val sets = specs.map(_.absPath).distinct.map(dp =>
+        DeleteSetCache.getOrLoad(dp, () => {
+          val set = new java.util.HashSet[List[Any]]()
+          val ords = kc.indices.toArray
+          val r = new ManifestColumnarReader(
+            ManifestInputPartition(dp, 0L, Array.empty), confEntries,
+            StructType(kc.map(readSchema(_))), Array.empty)
+          try while (r.next()) {
+            val it = r.get().rowIterator()
+            // copy: batch rows point into buffers the next batch reuses
+            while (it.hasNext)
+              set.add(ManifestRowView.keyOf(it.next().copy(), ords, types))
+          } finally r.close()
+          set
+        }))
+      (kc.map(readSchema.fieldIndex).toArray, types, sets.toArray)
+    }.toArray
+
+  private val cols = new ManifestColumnarReader(part, confEntries,
+    readSchema, dataFilters)
+  private var full: ColumnarBatch = _
+  // emission exposes the projected columns only, over the same vectors
+  private var out: ColumnarBatch = _
+  private var i = 0
+  private var emitted = 0L
+  private var current: InternalRow = _
+
+  private def deleted(row: InternalRow): Boolean =
+    deleteSets.exists { case (ords, types, sets) =>
+      val key = ManifestRowView.keyOf(row, ords, types)
+      sets.exists(_.contains(key))
+    }
+
+  override def next(): Boolean = {
+    if (limit >= 0 && emitted >= limit) return false
+    while (true) {
+      while (full != null && i < full.numRows()) {
+        val row = full.getRow(i)
+        i += 1
+        if (!deleted(row)) {
+          current = out.getRow(i - 1)
+          emitted += 1
+          return true
+        }
+      }
+      if (!cols.next()) return false
+      full = cols.get()
+      if (out == null) out = new ColumnarBatch(
+        Array.tabulate[ColumnVector](required.length)(full.column))
+      out.setNumRows(full.numRows())
+      i = 0
+    }
+    false
+  }
+
+  override def get(): InternalRow = current
+
+  override def close(): Unit = cols.close()
+}
+
+object ManifestRowView {
+  /** A key tuple: catalyst values, byte arrays as value-compared
+    * sequences (arrays compare by identity). */
+  private def keyOf(row: InternalRow, ords: Array[Int],
+                    types: Array[DataType]): List[Any] =
+    ords.indices.map { k =>
+      if (row.isNullAt(ords(k))) null
+      else row.get(ords(k), types(k)) match {
+        case b: Array[Byte] => b.toSeq
+        case x              => x
+      }
+    }.toList
+}
+
+/** JVM-wide (per-executor) cache of loaded delete-key sets. A scan
+  * over N data files would otherwise read every applicable delete
+  * file N times — once per task. Delete files are IMMUTABLE (new
+  * commits write new paths), so a path is a complete cache key.
+  * Crudely bounded: maintenance cycles (rewriteDeletes → vacuum)
+  * retire paths, so on overflow the cache just resets. */
+private[connector] object DeleteSetCache {
+  private val MaxEntries = 64
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.HashSet[List[Any]]]()
+  def getOrLoad(path: String,
+                load: () => java.util.HashSet[List[Any]])
+      : java.util.HashSet[List[Any]] = {
+    val hit = cache.get(path)
+    if (hit != null) return hit
+    val v = load()
+    if (cache.size >= MaxEntries) cache.clear()
+    cache.putIfAbsent(path, v)
+    v
+  }
 }

@@ -1,26 +1,27 @@
 package graft.sources.connector
 
+import scala.collection.JavaConverters._
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types, Type => PType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 /** EXECUTOR-side parquet writing for the manifest connector — the data
-  * plane of the native streaming sink and of SQL row-level operations
-  * (UPDATE / MERGE / rewrite-shaped DELETE), where the V1 driver
-  * bridge used by INSERT cannot apply (Spark hands each task's rows to
-  * a [[DataWriter]], never a whole DataFrame to the driver).
+  * plane of the native batch INSERT, the native streaming sink and SQL
+  * row-level operations (UPDATE / MERGE / rewrite-shaped DELETE):
+  * Spark hands each task's rows to a [[DataWriter]], never a whole
+  * DataFrame to the driver.
   *
   * Each task writes its rows into the commit's shared staging dir
   * under `data/`, one file per hive partition directory it encounters
@@ -32,8 +33,9 @@ import org.apache.spark.sql.types._
   * sweep in [[graft.sources.Manifest.vacuum]]'s empty-dir pass once
   * vacuumed snapshots stop referencing the dir — or simply inert).
   *
-  * Scope matches the connector: flat primitive columns
-  * (boolean/int/long/float/double/string/binary). File names carry a
+  * Files are encoded by Spark's own parquet writer (the
+  * `OutputWriterFactory` of `ParquetFileFormat.prepareWrite`), so any
+  * column type Spark writes is in scope. File names carry a
   * per-writer UUID, so epoch replays and task retries can never
   * clobber a committed file.
   *
@@ -60,88 +62,78 @@ object ManifestWriter {
 
   /** One row's hive partition sub-path (`k1=v1/k2=v2`), null →
     * `__HIVE_DEFAULT_PARTITION__`. Values are formatted exactly as the
-    * read side parses them back ([[ManifestConnector.castPartitionValue]]). */
+    * read side parses them back ([[graft.sources.Manifest.partValue]]). */
   def partitionPath(partCols: Seq[String], values: Seq[Any]): String =
     partCols.zip(values).map { case (c, v) =>
       val s = if (v == null) "__HIVE_DEFAULT_PARTITION__"
         else escapePathName(v.toString)
       s"${escapePathName(c)}=$s"
     }.mkString("/")
-
-  /** Spark schema → parquet message type, connector scope only. All
-    * fields optional (Spark nullability is advisory at file level). */
-  def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t: PType = f.dataType match {
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-          .named(f.name)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-          .named(f.name)
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-          .named(f.name)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT)
-          .named(f.name)
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-          .named(f.name)
-        // catalyst-internal encodings map 1:1 to the annotated
-        // primitives: micros-since-epoch (UTC) and days-since-epoch
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(f.name)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case BinaryType => Types.optional(PrimitiveTypeName.BINARY)
-          .named(f.name)
-        case other => throw new IllegalArgumentException(
-          s"graft-manifest writes flat primitive columns only; " +
-            s"column ${f.name} is ${other.catalogString}")
-      }
-      b.addField(t)
-    }
-    b.named("graft")
-  }
 }
 
 /** The `(relPath, size)` entries one committed task contributed. */
 final case class ManifestWriteMessage(entries: Seq[(String, Long)])
     extends WriterCommitMessage
 
-/** One factory serves both write planes: batch (row-level operations)
-  * and streaming (per-epoch micro-batch commits). `commitDir` is the
-  * staging dir name under `data/` for batch; streaming derives a
-  * per-epoch dir from it. */
+/** One factory serves every write plane: batch INSERT, row-level
+  * operations and streaming (per-epoch micro-batch commits).
+  * `commitDir` is the staging dir name under `data/` for batch;
+  * streaming derives a per-epoch dir from it. `parquetWriters` and the
+  * `confEntries` it was prepared into ship together. */
 final case class ManifestWriterFactory(confEntries: Array[(String, String)],
-    root: String, commitDir: String, schema: StructType,
-    partCols: Seq[String])
+    parquetWriters: OutputWriterFactory, root: String, commitDir: String,
+    schema: StructType, partCols: Seq[String])
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new ManifestDataWriter(confEntries, root, commitDir, schema,
-      partCols, partitionId)
+    new ManifestDataWriter(this, commitDir, partitionId)
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new ManifestDataWriter(confEntries, root, f"$commitDir-e$epochId%08d",
-      schema, partCols, partitionId)
+    new ManifestDataWriter(this, f"$commitDir-e$epochId%08d", partitionId)
 }
 
-/** Streams one task's rows into per-partition parquet files via the
-  * parquet example (Group) writer — the write-side sibling of the
-  * connector's row reader, kept to the same flat-primitive scope. */
-final class ManifestDataWriter(confEntries: Array[(String, String)],
-    root: String, commitDir: String, schema: StructType,
-    partCols: Seq[String], partitionId: Int)
+object ManifestWriterFactory {
+  /** Driver side: `ParquetFileFormat.prepareWrite` builds the writer
+    * factory and fills the job conf it reads on the executors (write
+    * support, schema, codec, session parquet settings). Timestamps are
+    * pinned to INT64 TIMESTAMP_MICROS, as on every manifest write
+    * (INT96 records no usable min/max for the zone maps). All columns
+    * are written optional, as Spark's own file writes do. */
+  def apply(spark: SparkSession, root: String, commitDir: String,
+            schema: StructType,
+            partCols: Seq[String]): ManifestWriterFactory = {
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val parquetWriters = new ParquetFileFormat().prepareWrite(spark, job,
+      Map.empty, dataSchemaOf(schema, partCols))
+    job.getConfiguration.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
+    ManifestWriterFactory(job.getConfiguration.iterator().asScala
+      .map(e => (e.getKey, e.getValue)).toArray, parquetWriters, root,
+      commitDir, schema, partCols)
+  }
+
+  private[connector] def dataSchemaOf(schema: StructType,
+                                      partCols: Seq[String]): StructType =
+    StructType(schema.filterNot(f => partCols.contains(f.name))
+      .map(_.copy(nullable = true)))
+}
+
+/** Streams one task's rows into per-partition parquet files through
+  * the factory's Spark parquet `OutputWriter`s. */
+final class ManifestDataWriter(factory: ManifestWriterFactory,
+    commitDir: String, partitionId: Int)
     extends DataWriter[InternalRow] {
+
+  import factory.{partCols, root, schema}
 
   private val conf = {
     val c = new Configuration(false)
-    confEntries.foreach { case (k, v) => c.set(k, v) }
+    factory.confEntries.foreach { case (k, v) => c.set(k, v) }
     c
   }
+  private val context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
   private val uuid = java.util.UUID.randomUUID().toString.take(8)
   private val partIdx = partCols.map(schema.fieldIndex)
 
@@ -162,16 +154,12 @@ final class ManifestDataWriter(confEntries: Array[(String, String)],
     }
     base
   }
-  private val dataFields = schema.fields.zipWithIndex
-    .filterNot { case (f, _) => partCols.contains(f.name) }
-  private val dataSchema = StructType(dataFields.map(_._1))
-  private val msgType = ManifestWriter.messageTypeOf(dataSchema)
-  private val groupFactory =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
+  private val dataSchema =
+    ManifestWriterFactory.dataSchemaOf(schema, partCols)
+  // the data columns of an incoming row, bound once its base is known
+  private var project: UnsafeProjection = _
 
-  private val writers =
-    mutable.LinkedHashMap.empty[String, ParquetWriter[
-      org.apache.parquet.example.data.Group]]
+  private val writers = mutable.LinkedHashMap.empty[String, OutputWriter]
   private var seq = 0
 
   private def relDirOf(row: InternalRow): String = {
@@ -198,36 +186,18 @@ final class ManifestDataWriter(confEntries: Array[(String, String)],
     writers.getOrElseUpdate(relDir, {
       seq += 1
       val file = f"part-$partitionId%05d-$uuid-$seq%03d.parquet"
-      GroupWriteSupport.setSchema(msgType, conf)
-      ExampleParquetWriter.builder(new Path(s"$root/$relDir/$file"))
-        .withConf(conf)
-        .withType(msgType)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
+      factory.parquetWriters.newInstance(s"$root/$relDir/$file",
+        dataSchema, context)
     })
 
   override def write(row: InternalRow): Unit = {
-    val b = baseOf(row)
-    val g = groupFactory.newGroup()
-    dataFields.foreach { case (f, i0) =>
-      val i = i0 + b
-      if (!row.isNullAt(i)) f.dataType match {
-        case BooleanType => g.add(f.name, row.getBoolean(i))
-        case IntegerType => g.add(f.name, row.getInt(i))
-        case LongType    => g.add(f.name, row.getLong(i))
-        case FloatType   => g.add(f.name, row.getFloat(i))
-        case DoubleType  => g.add(f.name, row.getDouble(i))
-        case TimestampType => g.add(f.name, row.getLong(i))
-        case DateType      => g.add(f.name, row.getInt(i))
-        case StringType  => g.add(f.name,
-          Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-        case BinaryType  => g.add(f.name,
-          Binary.fromConstantByteArray(row.getBinary(i)))
-        case other => throw new IllegalStateException(
-          s"unreachable: $other passed messageTypeOf")
-      }
+    if (project == null) {
+      val b = baseOf(row)
+      project = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex
+        .filterNot { case (f, _) => partCols.contains(f.name) }
+        .map { case (f, i) => BoundReference(i + b, f.dataType, true) })
     }
-    writerFor(relDirOf(row)).write(g)
+    writerFor(relDirOf(row)).write(project(row))
   }
 
   private var finished = false

@@ -288,12 +288,32 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(e.getMessage.contains("mixed partition layouts"), e.getMessage)
   }
 
-  test("unsupported nested types fail loudly at schema inference") {
-    val root = newRoot()
-    Manifest.init(spark, root,
-      Seq((1L, Seq(1, 2, 3))).toDF("id", "xs"), Nil)
-    val e = intercept[Exception](connRead(root).schema)
-    assert(e.getMessage.contains("graft-manifest"), e.getMessage)
+  test("nested array/map columns round-trip through the connector: " +
+    "merge-on-read deletes and SQL INSERT match Manifest.read") {
+    val warehouse = newRoot()
+    val root = s"$warehouse/db/nested"
+    Manifest.init(spark, root, (1L to 30L).map(i =>
+      (i, "p" + (i % 3), Seq(i * 0.5, i * 1.5), Map(s"k$i" -> i)))
+      .toDF("id", "part", "xs", "m"), Seq("part"))
+    def rows(df: DataFrame) = df.select("id", "part", "xs", "m")
+      .as[(Long, String, Seq[Double], Map[String, Long])].collect().toSet
+    def same() = {
+      val got = rows(connRead(root))
+      assert(got == rows(Manifest.read(spark, root)))
+      got
+    }
+    assert(same().size == 30)
+    Manifest.deleteByKeys(spark, root, Seq(2L, 7L).toDF("id"))
+    assert(same().map(_._1) == (1L to 30L).toSet -- Set(2L, 7L))
+    assert(connRead(root).count() == 28L)
+
+    spark.conf.set("spark.sql.catalog.nestcat",
+      classOf[graft.sources.connector.ManifestCatalog].getName)
+    spark.conf.set("spark.sql.catalog.nestcat.root", warehouse)
+    spark.sql("INSERT INTO nestcat.db.nested SELECT 100L, 'p1', " +
+      "array(1.0D, 2.0D), map('z', 9L)")
+    assert(same().contains((100L, "p1", Seq(1.0, 2.0), Map("z" -> 9L))))
+    assert(connRead(root).count() == 29L)
   }
 
   test("merge-on-read deletes apply through the connector: full scans, " +
