@@ -288,8 +288,9 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(e.getMessage.contains("mixed partition layouts"), e.getMessage)
   }
 
-  test("nested array/map columns round-trip through the connector: " +
-    "merge-on-read deletes and SQL INSERT match Manifest.read") {
+  // merge-on-read deletes and SQL INSERT over array/map columns match
+  // Manifest.read
+  test("nested array/map columns round-trip through the connector") {
     val warehouse = newRoot()
     val root = s"$warehouse/db/nested"
     Manifest.init(spark, root, (1L to 30L).map(i =>
