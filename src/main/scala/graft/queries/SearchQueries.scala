@@ -194,32 +194,18 @@ object SearchQueries {
         val idx = "file://" + graft.TempRoots.create("graft_idx") + "/i"
         val docs = Tables.load(s, dir, "documents")
           .select("doc_id", "lang", "text")
-        // Clustered writes for the whole build pipeline: a W-task
-        // shuffle writing P hive partitions otherwise leaves W×P
-        // small files per commit; one file per touched partition is
-        // what an index-build job would configure.
-        val key = "spark.graft.manifest.write.clustered"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "true")
-        try {
-          Manifest.init(s, src, docs.filter(col("doc_id") % 5 =!= 0),
-            Seq("lang"))
-          SearchIndex.create(s, src, idx, "doc_id", "text", buckets = 16)
-          Manifest.commitAppend(s, src,
-            docs.filter(col("doc_id") % 5 === 0), Seq("lang"))
-          SearchIndex.refresh(s, src, idx) // append-only: one atomic commit
-          Manifest.mergeInto(s, src,
-            docs.filter(col("lang") === "de" && col("doc_id") % 7 === 0)
-              .withColumn("text",
-                concat(col("text"), lit(" merge merge"))),
-            "doc_id", "lang")
-          SearchIndex.refresh(s, src, idx) // rewrite: MoR erase + append
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-        }
+        Manifest.init(s, src, docs.filter(col("doc_id") % 5 =!= 0),
+          Seq("lang"))
+        SearchIndex.create(s, src, idx, "doc_id", "text", buckets = 16)
+        Manifest.commitAppend(s, src,
+          docs.filter(col("doc_id") % 5 === 0), Seq("lang"))
+        SearchIndex.refresh(s, src, idx) // append-only: one atomic commit
+        Manifest.mergeInto(s, src,
+          docs.filter(col("lang") === "de" && col("doc_id") % 7 === 0)
+            .withColumn("text",
+              concat(col("text"), lit(" merge merge"))),
+          "doc_id", "lang")
+        SearchIndex.refresh(s, src, idx) // rewrite: MoR erase + append
         SearchIndex.searchBm25(s, idx, "window merge scan", 15)
       },
       Some("""WITH src AS (SELECT doc_id,
@@ -1629,30 +1615,20 @@ object SearchQueries {
         val src = s"$base/t"; val idx = s"$base/i"
         val docs = Tables.load(s, dir, "documents")
           .select("doc_id", "lang", "text")
-        val key = "spark.graft.manifest.write.clustered"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "true")
-        try {
-          Manifest.init(s, src, docs, Seq("lang"))
-          SearchIndex.create(s, src, idx, "doc_id", "text",
-            buckets = 16)
-          Manifest.deleteByKeys(s, src,
-            docs.filter(col("doc_id") % 23 === 0).select("doc_id"))
-          // pure merge-on-read propagation: the refresh erases the
-          // forgotten docs from the index (same-id MoR delete, stats
-          // decremented in the same commit) with ZERO rewrite on
-          // either side — the O(erased docs) erasure path
-          SearchIndex.refresh(s, src, idx)
-          // then materialize (narrowed to the keys' home files) and
-          // refresh again — the rewrite path must be a semantic no-op
-          Manifest.rewriteDeletes(s, src)
-          SearchIndex.refresh(s, src, idx)
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-        }
+        Manifest.init(s, src, docs, Seq("lang"))
+        SearchIndex.create(s, src, idx, "doc_id", "text",
+          buckets = 16)
+        Manifest.deleteByKeys(s, src,
+          docs.filter(col("doc_id") % 23 === 0).select("doc_id"))
+        // pure merge-on-read propagation: the refresh erases the
+        // forgotten docs from the index (same-id MoR delete, stats
+        // decremented in the same commit) with ZERO rewrite on
+        // either side — the O(erased docs) erasure path
+        SearchIndex.refresh(s, src, idx)
+        // then materialize (narrowed to the keys' home files) and
+        // refresh again — the rewrite path must be a semantic no-op
+        Manifest.rewriteDeletes(s, src)
+        SearchIndex.refresh(s, src, idx)
         SearchIndex.searchBm25(s, idx, "window merge scan", 15)
       },
       Some("""WITH src AS (SELECT doc_id, text FROM documents

@@ -6,7 +6,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
+
+import graft.sources.connector.ManifestWriter
 
 /** Versioned manifest commit layer: the missing cross-partition
   * atomicity for the lake's upsert/compaction story (SURVEY §7 — the
@@ -95,22 +98,6 @@ object Manifest {
   private def manifestDir(root: String) = s"$root/_manifests"
   private def vName(v: Long) = f"v$v%08d.txt"
 
-  /** Hive path-escaping inverse (%3A etc.) — partition values land in
-    * paths escaped; surface the original string. */
-  def unescapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val hex = s.substring(i + 1, i + 3)
-        try { sb.append(Integer.parseInt(hex, 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Is this manifest entry an ABSOLUTE scheme-qualified URI into
     * another table's root (a shallow clone's borrowed file) rather
     * than a path relative to this table? [[cloneTable]] writes
@@ -144,7 +131,7 @@ object Manifest {
       seg =>
         seg.split("=", 2) match {
           case Array(k, v) =>
-            val uv = unescapePathName(v)
+            val uv = ExternalCatalogUtils.unescapePathName(v)
             Some(k ->
               (if (uv == "__HIVE_DEFAULT_PARTITION__") null else uv))
           case _ => None
@@ -184,50 +171,6 @@ object Manifest {
     else {
       val pv = partValuesOf(relPath).toMap
       touched.contains(partitionCols.map(c => Option(pv.getOrElse(c, null))))
-    }
-
-  /** List a commit dir's parquet files as root-relative entries with
-    * their sizes (the one listing a file ever gets — after this, every
-    * read plans from manifest metadata alone). */
-  private def commitFiles(fs: FileSystem, root: Path,
-                          commitDir: Path): Seq[FileEntry] = {
-    val out = ArrayBuffer.empty[FileEntry]
-    val it = fs.listFiles(commitDir, true)
-    val rootUri = root.toUri.getPath
-    while (it.hasNext) {
-      val st = it.next()
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet"))
-        out += FileEntry(
-          f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"),
-          st.getLen)
-    }
-    out.toSeq.sortBy(_.path)
-  }
-
-  /** Zone-map stats for a commit's new files: one footer read per NEW
-    * file — O(this commit), never O(table). Small commits read on the
-    * driver; large ones fan the footer reads out as a Spark job (the
-    * footers are on shared storage, any executor can read them). */
-  private def withStats(spark: SparkSession, root: String,
-                        listed: Seq[FileEntry]): Seq[FileEntry] =
-    if (listed.size <= 64) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      listed.map(e => e.copy(stats = ManifestStats
-        .fromFooter(conf, new Path(s"$root/${e.path}"))
-        .map(ManifestStats.encode)))
-    } else {
-      val confEntries = spark.sparkContext.hadoopConfiguration
-        .iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-      val statsFor = spark.sparkContext
-        .parallelize(listed.map(_.path), (listed.size / 64).min(256).max(2))
-        .map { rel =>
-          val c = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => c.set(k, v) }
-          rel -> ManifestStats.fromFooter(c, new Path(s"$root/$rel"))
-            .map(ManifestStats.encode)
-        }.collect().toMap
-      listed.map(e => e.copy(stats = statsFor.getOrElse(e.path, None)))
     }
 
   /** All committed versions, ascending (one manifest-dir listing). */
@@ -1171,84 +1114,21 @@ object Manifest {
     (hdr ++ delLines ++ fileLines).mkString("\n") + "\n"
   }
 
-  /** Reference-counted session pin of
-    * `spark.sql.parquet.outputTimestampType` = TIMESTAMP_MICROS around
-    * every data write: INT96 (Spark's default) records no usable
-    * min/max, so its columns would carry no zone maps
-    * ([[ManifestStats]]). A plain save/set/restore races concurrent
-    * committers on the same session — one thread's `finally` would
-    * restore INT96 while another's write job is still running, and its
-    * files would land INT96. Instead the FIRST writer in saves and
-    * pins, the LAST writer out restores; everyone in between shares
-    * the pin. Per-session state so independent sessions don't cross. */
-  private val tsPins =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      (Int, Option[String])]()
-  private def withMicrosTimestamps[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    tsPins.synchronized {
-      tsPins.get(spark) match {
-        case null =>
-          tsPins.put(spark, (1, spark.conf.getOption(key)))
-          spark.conf.set(key, "TIMESTAMP_MICROS")
-        case (depth, saved) => tsPins.put(spark, (depth + 1, saved))
-      }
-    }
-    try body
-    finally tsPins.synchronized {
-      tsPins.get(spark) match {
-        case (1, saved) =>
-          tsPins.remove(spark)
-          saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-        case (depth, saved) => tsPins.put(spark, (depth - 1, saved))
-      }
-    }
-  }
-
   /** Write `df`'s rows as the next commit's data files (hive-partition
-    * layout when `partitionCols` given) and return the file list. The
-    * commit dir carries a random suffix so two racing committers of
-    * the same version can never clobber each other's staged files —
-    * the loser's dir simply orphans (never referenced by a manifest).
-    *
-    * `spark.graft.manifest.write.clustered=true` repartitions the
-    * commit by its partition columns first: without it a commit with
-    * T input tasks and P partition values writes up to T×P files (the
-    * classic small-files explosion — every task holds every value);
-    * with it each value's rows co-locate and the commit writes O(P)
-    * files. Costs one shuffle and serializes each value into one task
-    * — skip it for skewed layouts, run [[compact]] instead. */
+    * layout when `partitionCols` given) and return their entries,
+    * stamped with sequence `next`. The commit dir carries a random
+    * suffix so two racing committers of the same version can never
+    * clobber each other's files — the loser's dir simply orphans
+    * (never referenced by a manifest). The rows are written as they
+    * come ([[ManifestWriter.write]]): a commit with T input tasks and P
+    * partition values writes up to T×P files unless the caller
+    * repartitions by the partition columns first. */
   private def writeCommit(spark: SparkSession, root: String, next: Long,
                           df: DataFrame,
                           partitionCols: Seq[String]): Seq[FileEntry] = {
     val salt = java.util.UUID.randomUUID().toString.take(8)
-    val dir = f"$root/data/c$next%08d-$salt"
-    val clustered = partitionCols.nonEmpty && spark.conf
-      .getOption("spark.graft.manifest.write.clustered")
-      .contains("true")
-    val shaped =
-      if (clustered) df.repartition(partitionCols.map(col): _*) else df
-    // `spark.graft.parquet.bloom.columns=c1,c2` writes parquet bloom
-    // filters for those columns: point lookups (`=`/`IN`) then skip
-    // whole row groups through the SAME pushed FilterPredicate both
-    // read paths already install — zone maps can't skip uniformly
-    // distributed keys (every file's min/max envelope matches), blooms
-    // can. Costs ~1 MB/row-group/column at write; no read-side change.
-    val bloomCols = spark.conf
-      .getOption("spark.graft.parquet.bloom.columns")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil).filter(df.columns.contains)
-    val w = bloomCols.foldLeft(shaped.write.mode("overwrite"))((w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    // INT64-micros timestamps: INT96 records no usable min/max, so
-    // its columns would carry no zone maps
-    withMicrosTimestamps(spark) {
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-       else w).parquet(dir)
-    }
-    val (fs, rootP) = fsOf(spark, root)
-    withStats(spark, root, commitFiles(fs, rootP, new Path(dir)))
-      .map(_.copy(seq = Some(next)))
+    ManifestWriter.write(spark, root, f"c$next%08d-$salt", df,
+      partitionCols).map(_.copy(seq = Some(next)))
   }
 
   /** The snapshot-describing headers every commit (re)publishes: the
@@ -1669,11 +1549,10 @@ object Manifest {
     * driver half of the native `writeStream.format("graft-manifest")`
     * sink, whose executors have staged the epoch's parquet files
     * themselves ([[graft.sources.connector.ManifestDataWriter]]) and
-    * report only `(path, size)`. Identical dedup contract to
+    * report their entries, stats included. Identical dedup contract to
     * [[commitStreamBatch]]: the `(queryId, batchId)` high-water mark in
     * the header makes an epoch replay a no-op — returns None so the
-    * caller can reclaim the replayed epoch's staged files. Zone-map
-    * stats are collected here (footer reads, O(this epoch)). */
+    * caller can reclaim the replayed epoch's staged files. */
   private[graft] def commitStreamEntries(spark: SparkSession, root: String,
       entries: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
@@ -1682,8 +1561,7 @@ object Manifest {
     val metaKey = s"batch.$queryId"
     latestVersion(spark, root) match {
       case None =>
-        val stated = withStats(spark, root, entries.sortBy(_.path))
-          .map(_.copy(seq = Some(1L)))
+        val stated = entries.sortBy(_.path).map(_.copy(seq = Some(1L)))
         Some(publish(spark, root, 0L, stated,
           schemaHeaders(schema, partitionCols) +
             (metaKey -> batchId.toString)))
@@ -1696,8 +1574,8 @@ object Manifest {
           enforceConstraintsOnEntries(spark, root, prev.meta,
             mergeSchemas(prev.schema, schema), partitionCols,
             entries)
-          val stated = withStats(spark, root, entries.sortBy(_.path))
-            .map(_.copy(seq = Some(cur + 1)))
+          val stated =
+            entries.sortBy(_.path).map(_.copy(seq = Some(cur + 1)))
           Some(publish(spark, root, cur, prev.entries ++ stated,
             prev.meta ++ schemaHeaders(
               mergeSchemas(prev.schema, schema), partitionCols) +
@@ -1709,11 +1587,11 @@ object Manifest {
 
   /** Batch commit of ALREADY-WRITTEN files — the driver half of the
     * native V2 `INSERT INTO` / `INSERT OVERWRITE` path, whose
-    * executors staged the parquet files themselves and report only
-    * `(path, size)`. Append carries the previous snapshot forward
-    * (schema header widens, pending MoR deletes still guard older
-    * files); replace swaps the entire file set, commitReplace-style.
-    * Zone-map stats are collected here (footer reads, O(this commit)). */
+    * executors staged the parquet files themselves and report their
+    * entries, stats included. Append carries the previous snapshot
+    * forward (schema header widens, pending MoR deletes still guard
+    * older files); replace swaps the entire file set,
+    * commitReplace-style. */
   private[graft] def commitStagedEntries(spark: SparkSession,
       root: String, entries: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
@@ -1724,8 +1602,7 @@ object Manifest {
     enforceConstraintsOnEntries(spark, root, prev.meta,
       if (replace) schema else mergeSchemas(prev.schema, schema),
       partitionCols, entries)
-    val stated = withStats(spark, root, entries.sortBy(_.path))
-      .map(_.copy(seq = Some(cur + 1)))
+    val stated = entries.sortBy(_.path).map(_.copy(seq = Some(cur + 1)))
     if (replace)
       publish(spark, root, cur, stated,
         prev.meta - "dropped" ++ schemaHeaders(schema, partitionCols))
@@ -1758,8 +1635,7 @@ object Manifest {
     checkPartCols(prev, partitionCols)
     enforceConstraintsOnEntries(spark, root, prev.meta, prev.schema,
       partitionCols, added)
-    val stated = withStats(spark, root, added.sortBy(_.path))
-      .map(_.copy(seq = Some(cur + 1)))
+    val stated = added.sortBy(_.path).map(_.copy(seq = Some(cur + 1)))
     publish(spark, root, cur,
       prev.entries.filterNot(e => removed(e.path)) ++ stated, prev.meta,
       prev.deletes)
@@ -2069,13 +1945,8 @@ object Manifest {
       val packed = casted.coalesce(
         math.max(1, math.min(200, (cnt / 4000000L).toInt + 1)))
       val salt = java.util.UUID.randomUUID().toString.take(8)
-      val dir = f"$root/data/d$next%08d-$salt"
-      // INT64-micros timestamps, as on every data write
-      withMicrosTimestamps(spark) {
-        packed.write.mode("overwrite").parquet(dir)
-      }
-      val (fs, rootP) = fsOf(spark, root)
-      val delEntries = commitFiles(fs, rootP, new Path(dir))
+      val delEntries = ManifestWriter.write(spark, root,
+        f"d$next%08d-$salt", packed, Nil)
         .map(e => DeleteEntry(e.path, e.size, next, kc))
       // post-write metadata (see init's lateMeta): the channel for
       // stats observed DURING the key job — e.g. the erased docs'

@@ -35,11 +35,11 @@ import org.json4s.jackson.JsonMethods
   * residual-re-evaluated by Spark anyway; this layer only has to be
   * sound, and is doubly so.)
   *
-  * Collection is one footer read per NEW file — O(files in THIS
-  * commit), never the table. Small commits read on the committing
-  * driver; large commits fan the footer reads out as a Spark job
-  * (`Manifest.withStats`), so even a million-file bulk load collects
-  * its zone maps at cluster parallelism.
+  * Collection is one footer read per NEW file, in the task that has
+  * just written it ([[graft.sources.connector.ManifestDataWriter]]):
+  * O(files in THIS commit), never the table, at the write's own
+  * parallelism, and the stats ride the task's commit message to the
+  * driver.
   */
 object ManifestStats {
 
@@ -92,7 +92,7 @@ object ManifestStats {
       Some(FileStats(rows, cols))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  // ---- collection (commit-time footer read) ----------------------------
+  // ---- collection (footer read in the writing task) --------------------
 
   private def tagOf(p: PrimitiveType): Option[String] =
     p.getPrimitiveTypeName match {

@@ -73,16 +73,8 @@ object PrefixLedger {
   def init(spark: SparkSession, root: String, rows: DataFrame): Long = {
     require(rows.columns.contains(BucketCol),
       s"ledger rows must carry a '$BucketCol' column")
-    val prev = spark.conf.getOption("spark.graft.manifest.write.clustered")
-    spark.conf.set("spark.graft.manifest.write.clustered", "true")
-    try Manifest.init(spark, root, rows,
+    Manifest.init(spark, root, rows.repartition(col(BucketCol)),
       partitionCols = Seq(BucketCol))
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.graft.manifest.write.clustered", v)
-      case None =>
-        spark.conf.unset("spark.graft.manifest.write.clustered")
-    }
   }
 
   /** Exactly-once append of a wave's keys. `rows` must already carry
@@ -107,18 +99,10 @@ object PrefixLedger {
     val waves = before.map(v =>
       Manifest.snapshotMeta(spark, root, v).meta
         .get(WavesKey).map(_.toLong).getOrElse(0L)).getOrElse(0L) + 1
-    val prev = spark.conf.getOption("spark.graft.manifest.write.clustered")
-    spark.conf.set("spark.graft.manifest.write.clustered", "true")
-    val v =
-      try Manifest.commitStreamBatch(spark, root, rows, queryId, batchId,
-        partitionCols = Seq(BucketCol),
-        extraMeta = Map(WavesKey -> waves.toString))
-      finally prev match {
-        case Some(pv) =>
-          spark.conf.set("spark.graft.manifest.write.clustered", pv)
-        case None =>
-          spark.conf.unset("spark.graft.manifest.write.clustered")
-      }
+    val v = Manifest.commitStreamBatch(spark, root,
+      rows.repartition(col(BucketCol)), queryId, batchId,
+      partitionCols = Seq(BucketCol),
+      extraMeta = Map(WavesKey -> waves.toString))
     val advanced = !before.contains(v)
     if (compactEvery > 0 && advanced && waves % compactEvery == 0)
       compact(spark, root)

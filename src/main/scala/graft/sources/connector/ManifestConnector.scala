@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -61,12 +61,11 @@ import graft.sources.Manifest
   *    concurrent commits are invisible to a running query.
   *
   * Scope: data columns are whatever Spark's parquet reader and writer
-  * carry, nested arrays and maps included. Partition columns are
-  * string/int/long/double/float/boolean, typed from the path values by
-  * [[Manifest.partValue]] (the V1 reader's decoder); other partition
-  * types are refused at resolve time. Schema = the manifest's schema
-  * header (the layer's evolution contract, q112): columns absent from
-  * older commits' files read back as NULL.
+  * carry, nested arrays and maps included. Partition columns are typed
+  * from the path values by [[Manifest.partValue]] (the V1 reader's
+  * decoder), the inverse of the writer's formatting. Schema = the
+  * manifest's schema header (the layer's evolution contract, q112):
+  * columns absent from older commits' files read back as NULL.
   *
   * 100 TB posture: planning reads one manifest (O(files) driver text,
   * schema from its header); each task reads exactly one data file. No
@@ -216,15 +215,6 @@ object ManifestConnector {
     // schema header = zero parquet footer reads at planning time
     val full = snap.schema
     val partCols = snap.partCols
-    partCols.foreach { c =>
-      val dt = full(c).dataType
-      require(dt match {
-        case StringType | IntegerType | LongType | DoubleType |
-             FloatType | BooleanType => true
-        case _ => false
-      }, s"graft-manifest does not support partition column type " +
-        s"${dt.catalogString} (column $c)")
-    }
     // partition layout must match the declared one on EVERY file: a
     // single odd file would otherwise silently miss every partition
     // filter (dropped rows, no error). Fails loudly at resolve time;
@@ -272,12 +262,12 @@ object ManifestConnector {
                           pv: Map[String, String]): Option[Boolean] =
     f match {
       case EqualTo(c, v) => pv.get(c).flatMap(x =>
-        if (x == null) None else Some(x == v.toString))
+        if (x == null) None else Some(x == pathString(v)))
       case EqualNullSafe(c, v) => pv.get(c).map(x =>
-        if (v == null) x == null else x != null && x == v.toString)
+        if (v == null) x == null else x != null && x == pathString(v))
       case In(c, vs) => pv.get(c).flatMap { x =>
         if (x == null) None
-        else if (vs.exists(v => v != null && x == v.toString)) Some(true)
+        else if (vs.exists(v => v != null && x == pathString(v))) Some(true)
         else if (vs.contains(null)) None // x IN (..., NULL) miss = unknown
         else Some(false)
       }
@@ -298,6 +288,13 @@ object ManifestConnector {
       case Not(c) => evalPartitionFilter(c, pv).map(!_)
       case _ => None // unreachable: gated by partitionEvaluable
     }
+
+  /** A pushed filter value as the writer formats partition path
+    * values ([[ManifestDataWriter]]: cast to string in UTC), so a
+    * `java.sql.Timestamp` or `Date` compares exactly with its path. */
+  private def pathString(v: Any): String =
+    try Cast(Literal(v), StringType, Some("UTC")).eval().toString
+    catch { case scala.util.control.NonFatal(_) => v.toString }
 
   /** Conservative "can any row of a file with these stats satisfy this
     * pushed data filter?" — the manifest zone-map skip
@@ -529,8 +526,8 @@ object ManifestConnector {
 
 /** Reads plan against the frozen `res` snapshot; writes commit through
   * the manifest protocol via the NATIVE V2 batch write — executors
-  * stage the parquet files themselves (the driver sees only
-  * (path, size) reports) and the commit is the same atomic
+  * stage the parquet files themselves (the driver sees only their
+  * per-file entries) and the commit is the same atomic
   * create-if-absent publish every other writer uses (exactly-once,
   * snapshot-isolated, time-travelable). INSERT INTO = append commit;
   * INSERT OVERWRITE/truncate = replace commit; partitioned tables
@@ -652,14 +649,15 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
   /** NATIVE V2 batch write (INSERT INTO / INSERT OVERWRITE): executors
     * stream rows straight into staged parquet files (same data plane
     * as the streaming sink and row-level rewrites — the driver never
-    * holds a DataFrame) and the driver publishes their (path, size)
-    * reports as one atomic commit. Declares
+    * holds a DataFrame) and the driver publishes their per-file
+    * entries as one atomic commit. Declares
     * `RequiresDistributionAndOrdering`: a PARTITIONED table asks Spark
     * to cluster incoming rows by the partition columns, so an INSERT
     * with T tasks over P partition values writes O(P) files instead of
-    * the O(T×P) small-files explosion — the SQL-path twin of the Scala
-    * API's `write.clustered` opt-in, on by default where Spark can
-    * plan the exchange (the same default Delta/Iceberg chose). */
+    * the O(T×P) small-files explosion, by default wherever Spark can
+    * plan the exchange (the same default Delta/Iceberg chose). The
+    * Scala API's commits add no exchange; their callers repartition
+    * explicitly. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
       private var replace = false
@@ -710,7 +708,7 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
 }
 
 /** Driver half of the native batch INSERT: collect the executors'
-  * staged (path, size) entries and publish ONE atomic append/replace
+  * staged file entries and publish ONE atomic append/replace
   * commit. Commit conflicts with concurrent writers retry (the staged
   * files are already on disk — a retry is one manifest re-read, no
   * data rewrite); aborts delete whatever the failed tasks staged. */
@@ -728,12 +726,8 @@ final class ManifestBatchWrite(res: ManifestConnector.Resolved,
     ManifestWriterFactory(spark, res.root, s"b$salt", schema, res.partCols)
   }
 
-  private def entriesOf(messages: Array[WriterCommitMessage]) =
-    messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-      .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
-
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val entries = entriesOf(messages)
+    val entries = ManifestWriteMessage.entriesOf(messages)
     var attempt = 0
     var done = false
     while (!done) {
@@ -755,14 +749,9 @@ final class ManifestBatchWrite(res: ManifestConnector.Resolved,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(res.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    entriesOf(messages).foreach { e =>
-      try fs.delete(new Path(s"${res.root}/${e.path}"), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    ManifestWriter.deleteStaged(spark, res.root,
+      ManifestWriteMessage.entriesOf(messages))
 }
 
 final class ManifestScanBuilder(res: ManifestConnector.Resolved,

@@ -231,28 +231,18 @@ final class ManifestReplaceDataWrite(op: ManifestRowLevelOperation,
         writeSchema, res.partCols)
     }
 
-    private def entriesOf(messages: Array[WriterCommitMessage]) =
-      messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-        .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
-
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val scan = op.builtScan
       require(scan != null,
         "row-level write committed without a planned scan")
       Manifest.commitRewrite(SparkSession.active, res.root, res.version,
-        scan.plannedRelPaths, entriesOf(messages), res.partCols)
+        scan.plannedRelPaths, ManifestWriteMessage.entriesOf(messages),
+        res.partCols)
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val spark = SparkSession.active
-      val fs = new org.apache.hadoop.fs.Path(res.root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      entriesOf(messages).foreach { e =>
-        try fs.delete(
-          new org.apache.hadoop.fs.Path(s"${res.root}/${e.path}"), false)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      ManifestWriter.deleteStaged(SparkSession.active, res.root,
+        ManifestWriteMessage.entriesOf(messages))
   }
 
   override def description(): String =

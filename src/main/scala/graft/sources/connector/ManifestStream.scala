@@ -201,7 +201,7 @@ private[connector] object ManifestStreamHelpers {
   * reference: python-data-ingestions/lambda-function.py:247-275).
   *
   * Exactly-once without `foreachBatch`: executors stage each epoch's
-  * parquet files ([[ManifestDataWriter]]) and report `(path, size)`;
+  * parquet files ([[ManifestDataWriter]]) and report their entries;
   * the driver's `commit(epochId, ...)` publishes them as ONE atomic
   * manifest version carrying the `(queryId, epochId)` high-water mark
   * — a replayed epoch (restart inside the at-least-once window)
@@ -234,23 +234,9 @@ final class ManifestStreamingWrite(res: ManifestConnector.Resolved,
       : StreamingDataWriterFactory =
     ManifestWriterFactory(spark, res.root, s"s$salt", schema, res.partCols)
 
-  private def entriesOf(messages: Array[WriterCommitMessage]) =
-    messages.toSeq.collect { case m: ManifestWriteMessage => m.entries }
-      .flatten.map { case (p, sz) => Manifest.FileEntry(p, sz) }
-
-  private def deleteStaged(entries: Seq[Manifest.FileEntry]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(res.root)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    entries.foreach { e =>
-      try fs.delete(new org.apache.hadoop.fs.Path(s"${res.root}/${e.path}"),
-        false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
-    val entries = entriesOf(messages)
+    val entries = ManifestWriteMessage.entriesOf(messages)
     // a concurrent BATCH committer racing the sink loses us only the
     // version claim, not data — commitStreamEntries re-reads latest on
     // every attempt (and the high-water mark still dedups), so a few
@@ -273,7 +259,8 @@ final class ManifestStreamingWrite(res: ManifestConnector.Resolved,
           attempt += 1; Manifest.raceBackoff(attempt)
       }
     }
-    if (committed.get.isEmpty) deleteStaged(entries) // replayed epoch
+    if (committed.get.isEmpty) // replayed epoch
+      ManifestWriter.deleteStaged(spark, res.root, entries)
     // the maintenance loop riding the very sink that creates the
     // small-files steady state: every N committed versions, bin-pack
     // (`.option("autoCompactEvery", n)`). BEST-EFFORT — a compaction
@@ -295,7 +282,8 @@ final class ManifestStreamingWrite(res: ManifestConnector.Resolved,
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
-    deleteStaged(entriesOf(messages))
+    ManifestWriter.deleteStaged(spark, res.root,
+      ManifestWriteMessage.entriesOf(messages))
 
   override def toString: String = s"ManifestStreamingWrite(${res.root})"
 }

@@ -1225,9 +1225,7 @@ class ManifestSpec extends SparkSpec {
     // 8 input tasks × 3 partition values → up to 24 files unclustered
     val df = spark.range(0, 240, 1, 8)
       .selectExpr("id", "concat('p', id % 3) AS part", "id * 2 AS v")
-    spark.conf.set("spark.graft.manifest.write.clustered", "true")
-    try Manifest.init(spark, root, df, Seq("part"))
-    finally spark.conf.unset("spark.graft.manifest.write.clustered")
+    Manifest.init(spark, root, df.repartition(col("part")), Seq("part"))
     val files = Manifest.snapshot(spark, root, 1L).files
     assert(files.size <= 3, s"expected ≤ 3 clustered files: $files")
     assert(Manifest.read(spark, root, None).count() == 240L)
@@ -1239,29 +1237,42 @@ class ManifestSpec extends SparkSpec {
 
   test("bloom columns: commits write parquet bloom filters that " +
     "point-lookup row-group skipping can use") {
+    val warehouse = "file://" + java.nio.file.Files
+      .createTempDirectory("graft-bloom").toString
     val root = newRoot()
+    val sqlRoot = s"$warehouse/db/b"
     // high-cardinality key → dictionary overflows, bloom gets written
     val df = spark.range(0, 20000)
       .selectExpr("id", "concat('k', id, '-', id * 31) AS name")
+    spark.conf.set("spark.sql.catalog.bloomcat",
+      classOf[graft.sources.connector.ManifestCatalog].getName)
+    spark.conf.set("spark.sql.catalog.bloomcat.root", warehouse)
+    spark.sql("CREATE TABLE bloomcat.db.b (id BIGINT, name STRING)")
+    df.createOrReplaceTempView("bloom_src")
     spark.conf.set("spark.graft.parquet.bloom.columns", "name")
-    try Manifest.init(spark, root, df, Nil)
-    finally spark.conf.unset("spark.graft.parquet.bloom.columns")
-    val file = Manifest.snapshot(spark, root, 1L).files.head
-    val p = new org.apache.hadoop.fs.Path(s"$root/$file")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
     try {
-      val block = r.getRowGroups.get(0)
-      val nameChunk = block.getColumns.asScala
-        .find(_.getPath.toDotString == "name").get
-      assert(r.getBloomFilterDataReader(block)
-        .readBloomFilter(nameChunk) != null,
-        "bloom filter missing from the footer")
-    } finally r.close()
-    // correctness is untouched
-    assert(Manifest.read(spark, root, None)
-      .filter(col("name") === "k7-217").count() == 1L)
+      Manifest.init(spark, root, df, Nil)
+      spark.sql("INSERT INTO bloomcat.db.b SELECT * FROM bloom_src")
+    } finally spark.conf.unset("spark.graft.parquet.bloom.columns")
+    for (r <- Seq(root, sqlRoot)) {
+      val file = Manifest.snapshot(spark, r,
+        Manifest.latestVersion(spark, r).get).files.head
+      val p = new org.apache.hadoop.fs.Path(s"$r/$file")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try {
+        val block = reader.getRowGroups.get(0)
+        val nameChunk = block.getColumns.asScala
+          .find(_.getPath.toDotString == "name").get
+        assert(reader.getBloomFilterDataReader(block)
+          .readBloomFilter(nameChunk) != null,
+          s"bloom filter missing from the footer of $r")
+      } finally reader.close()
+      // correctness is untouched
+      assert(Manifest.read(spark, r, None)
+        .filter(col("name") === "k7-217").count() == 1L)
+    }
   }
 
   test("expireSnapshots: age-based retention off the same commit " +

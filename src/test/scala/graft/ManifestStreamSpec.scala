@@ -384,7 +384,7 @@ class ManifestStreamSpec extends SparkSpec {
     // new staged files — must NOT commit, and must delete the orphans
     val replayed = writeEpoch(0L, 99L)
     val staged = replayed.collect {
-      case m: ManifestWriteMessage => m.entries.map(_._1) }.flatten
+      case m: ManifestWriteMessage => m.entries.map(_.path) }.flatten
     w.commit(0L, replayed)
     assert(Manifest.latestVersion(spark, dst) == v1,
       "replayed epoch must not advance the table version")
