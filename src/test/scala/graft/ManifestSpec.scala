@@ -1244,15 +1244,15 @@ class ManifestSpec extends SparkSpec {
     // high-cardinality key → dictionary overflows, bloom gets written
     val df = spark.range(0, 20000)
       .selectExpr("id", "concat('k', id, '-', id * 31) AS name")
-    spark.conf.set("spark.sql.catalog.bloomcat",
+    spark.conf.set("spark.sql.catalog.bloomsql",
       classOf[graft.sources.connector.ManifestCatalog].getName)
-    spark.conf.set("spark.sql.catalog.bloomcat.root", warehouse)
-    spark.sql("CREATE TABLE bloomcat.db.b (id BIGINT, name STRING)")
+    spark.conf.set("spark.sql.catalog.bloomsql.root", warehouse)
+    spark.sql("CREATE TABLE bloomsql.db.b (id BIGINT, name STRING)")
     df.createOrReplaceTempView("bloom_src")
     spark.conf.set("spark.graft.parquet.bloom.columns", "name")
     try {
       Manifest.init(spark, root, df, Nil)
-      spark.sql("INSERT INTO bloomcat.db.b SELECT * FROM bloom_src")
+      spark.sql("INSERT INTO bloomsql.db.b SELECT * FROM bloom_src")
     } finally spark.conf.unset("spark.graft.parquet.bloom.columns")
     for (r <- Seq(root, sqlRoot)) {
       val file = Manifest.snapshot(spark, r,
