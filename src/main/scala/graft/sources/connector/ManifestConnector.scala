@@ -293,8 +293,7 @@ object ManifestConnector {
     * values ([[ManifestDataWriter]]: cast to string in UTC), so a
     * `java.sql.Timestamp` or `Date` compares exactly with its path. */
   private def pathString(v: Any): String =
-    try Cast(Literal(v), StringType, Some("UTC")).eval().toString
-    catch { case scala.util.control.NonFatal(_) => v.toString }
+    Cast(Literal(v), StringType, Some("UTC")).eval().toString
 
   /** Conservative "can any row of a file with these stats satisfy this
     * pushed data filter?" — the manifest zone-map skip
