@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
 
 import graft.sources.connector.ManifestWriter
@@ -149,10 +150,26 @@ object Manifest {
       case org.apache.spark.sql.types.StringType =>
         org.apache.spark.unsafe.types.UTF8String.fromString(v)
       case _ =>
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
         Cast(Literal(v), dt, Some("UTC")).eval(
           org.apache.spark.sql.catalyst.InternalRow.empty)
     }
+
+  /** The inverse of [[partValue]], and the one rule that turns a
+    * partition value into its path string (before hive escaping): cast
+    * to string in UTC, as Spark's own `partitionBy` formats it. The
+    * writer ([[graft.sources.connector.ManifestDataWriter]]) projects
+    * it over each row and hands the string to `getPartitionPathString`,
+    * which writes null and "" as `__HIVE_DEFAULT_PARTITION__`. */
+  def partStringExpr(e: Expression): Expression =
+    Cast(e, org.apache.spark.sql.types.StringType, Some("UTC"))
+
+  /** [[partStringExpr]] of one external value (a collected `Row` field,
+    * a pushed filter literal); null stays null. An empty string stays
+    * "" — it matches only a legacy `part=` dir, just as the typed
+    * null-safe semi-join of the DML rewrites never equates it with a
+    * NULL-partition row. */
+  def partString(v: Any): String =
+    if (v == null) null else partStringExpr(Literal(v)).eval().toString
 
   /** Does `relPath` belong to one of the `touched` partitions? Matches
     * on PARSED partition value TUPLES (hive-unescaped, null-aware, one
@@ -1815,16 +1832,15 @@ object Manifest {
     if (partitionCols.isEmpty) Array.empty
     else df.select(partitionCols.map(col): _*).distinct().collect()
 
-  /** Stringify collected tuples for the manifest path match (same
-    * formatting as Spark's hive path layout, pre-escaping). Empty
-    * layout → one empty tuple (the whole-table partition). */
+  /** Collected tuples as path strings ([[partString]]) for the
+    * manifest path match. Empty layout → one empty tuple (the
+    * whole-table partition). */
   private def stringTuples(rows: Array[org.apache.spark.sql.Row],
                            partitionCols: Seq[String])
       : Set[Seq[Option[String]]] =
     if (partitionCols.isEmpty) Set(Seq.empty)
     else rows.map(r => partitionCols.indices
-      .map(i => if (r.isNullAt(i)) None else Some(r.get(i).toString))
-      .toSeq).toSet
+      .map(i => Option(partString(r.get(i)))).toSeq).toSet
 
   /** Local (already-collected) touched tuples as a one-partition
     * relation with `__touched_i` column names, typed like the source

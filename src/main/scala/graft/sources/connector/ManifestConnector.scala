@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -257,17 +257,21 @@ object ManifestConnector {
     * `Some(true)` — unknown drops it, exactly as a WHERE clause drops
     * NULL rows. Two-valued evaluation here would keep a
     * `__HIVE_DEFAULT_PARTITION__` file under `Not(EqualTo)` (NOT of
-    * "false") where SQL's NULL != v is unknown → row dropped. */
+    * "false") where SQL's NULL != v is unknown → row dropped. Filter
+    * values compare as [[Manifest.partString]] text, the writer's own
+    * path rule, so a whole-second timestamp matches its path. */
   def evalPartitionFilter(f: SFilter,
                           pv: Map[String, String]): Option[Boolean] =
     f match {
       case EqualTo(c, v) => pv.get(c).flatMap(x =>
-        if (x == null) None else Some(x == pathString(v)))
+        if (x == null) None else Some(x == Manifest.partString(v)))
       case EqualNullSafe(c, v) => pv.get(c).map(x =>
-        if (v == null) x == null else x != null && x == pathString(v))
+        if (v == null) x == null
+        else x != null && x == Manifest.partString(v))
       case In(c, vs) => pv.get(c).flatMap { x =>
         if (x == null) None
-        else if (vs.exists(v => v != null && x == pathString(v))) Some(true)
+        else if (vs.exists(v => v != null && x == Manifest.partString(v)))
+          Some(true)
         else if (vs.contains(null)) None // x IN (..., NULL) miss = unknown
         else Some(false)
       }
@@ -288,12 +292,6 @@ object ManifestConnector {
       case Not(c) => evalPartitionFilter(c, pv).map(!_)
       case _ => None // unreachable: gated by partitionEvaluable
     }
-
-  /** A pushed filter value as the writer formats partition path
-    * values ([[ManifestDataWriter]]: cast to string in UTC), so a
-    * `java.sql.Timestamp` or `Date` compares exactly with its path. */
-  private def pathString(v: Any): String =
-    Cast(Literal(v), StringType, Some("UTC")).eval().toString
 
   /** Conservative "can any row of a file with these stats satisfy this
     * pushed data filter?" — the manifest zone-map skip

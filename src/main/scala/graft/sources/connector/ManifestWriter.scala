@@ -11,7 +11,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.AppendData
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
@@ -234,7 +234,7 @@ final class ManifestDataWriter(factory: ManifestWriterFactory,
     project = UnsafeProjection.create(schema.indices
       .filterNot(i => partCols.contains(schema(i).name)).map(at))
     partStrings = UnsafeProjection.create(partCols.map(c =>
-      Cast(at(schema.fieldIndex(c)), StringType, Some("UTC"))))
+      Manifest.partStringExpr(at(schema.fieldIndex(c)))))
   }
 
   // relDir → (relPath of its file, open writer)
@@ -244,9 +244,8 @@ final class ManifestDataWriter(factory: ManifestWriterFactory,
   private var lastDir = s"data/$commitDir"
 
   /** The row's partition dir, formatted as Spark's own `partitionBy`
-    * formats it: each value cast to string in UTC, hive-escaped, null
-    * or empty as `__HIVE_DEFAULT_PARTITION__`. The inverse of
-    * [[graft.sources.Manifest.partValue]]. */
+    * formats it: each value as [[graft.sources.Manifest.partStringExpr]]
+    * text, hive-escaped, null or empty as `__HIVE_DEFAULT_PARTITION__`. */
   private def relDirOf(row: InternalRow): String = {
     if (partCols.nonEmpty) {
       val key = partStrings(row)

@@ -115,4 +115,79 @@ class ManifestWriteSpec extends SparkSpec {
           4L, s"$part IN (the value of id $id)")
     }
   }
+
+  /** A fresh table `db.t` under a fresh warehouse, named `<cat>.db.t`
+    * through a [[ManifestCatalog]]; returns its root. */
+  private def catalogTable(cat: String): String = {
+    val warehouse = newDir()
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", warehouse)
+    s"$warehouse/db/t"
+  }
+
+  // DELETE and MERGE rewrite the partitions they touch and drop those
+  // partitions' old files by matching the touched values against the
+  // file paths: a whole-second timestamp must match the path the
+  // writer formatted, or the old files survive beside their rewrite
+  test("DML on DATE and TIMESTAMP partitions replaces the touched partition") {
+    val base = spark.range(0, 12, 1, 2).selectExpr("id",
+      "date_add(DATE'2024-02-28', CAST(id % 3 AS INT)) AS d",
+      "timestamp_seconds(1700000000L + (id % 3) * 3600L) AS ts", "id AS v")
+    for (part <- Seq("d", "ts")) {
+      // one catalog per table: a session caches a catalog by name
+      val root = catalogTable(s"dtdml_$part")
+      Manifest.init(spark, root, base, Seq(part))
+      def check(what: String, want: Set[(Long, Long)]): Unit =
+        for (read <- Seq(Manifest.read(spark, root, None),
+                         spark.read.format("graft-manifest").load(root))) {
+          val got = read.select("id", "v").as[(Long, Long)].collect()
+          assert(got.length == want.size && got.toSet == want,
+            s"$what, partitioned by $part")
+        }
+      val all = (0L until 12L).map(i => i -> i)
+      spark.sql(s"DELETE FROM dtdml_$part.db.t WHERE id = 0")
+      check("SQL DELETE", all.filter(_._1 != 0L).toSet)
+      val updates = base.filter("id IN (1, 2)").selectExpr("id", "d", "ts",
+        "v + 100 AS v")
+      Manifest.mergeInto(spark, root, updates, "id", Seq(part))
+      check("mergeInto", all.filter(_._1 != 0L).map {
+        case (i, v) => i -> (if (i <= 2L) v + 100 else v) }.toSet)
+    }
+  }
+
+  // Spark's partitionBy rule, which every write plane follows: an empty
+  // string partition value is written to __HIVE_DEFAULT_PARTITION__ and
+  // reads back as NULL through both readers and their partition filters
+  test("an empty-string partition value is written as, and reads back as, NULL") {
+    val root = catalogTable("emptypart")
+    Manifest.init(spark, root,
+      Seq((1L, "a"), (2L, null)).toDF("id", "part"), Seq("part"))
+    spark.sql("INSERT INTO emptypart.db.t VALUES (3, '')")
+    Manifest.commitAppend(spark, root, Seq((4L, "")).toDF("id", "part"),
+      Seq("part"))
+    assert(Manifest.snapshotMeta(spark, root,
+      Manifest.latestVersion(spark, root).get).files
+      .forall(p => !p.contains("part=/")))
+    def readers() = Seq(Manifest.read(spark, root, None),
+      spark.read.format("graft-manifest").load(root))
+    for (read <- readers()) {
+      assert(read.filter("part IS NULL").select("id").as[Long].collect()
+        .toSet == Set(2L, 3L, 4L))
+      assert(read.filter("part = ''").count() == 0L)
+    }
+    assert(spark.sql("SELECT id FROM emptypart.db.t WHERE part IS NULL")
+      .as[Long].collect().toSet == Set(2L, 3L, 4L))
+    assert(spark.sql("SELECT count(*) FROM emptypart.db.t WHERE part = ''")
+      .head.getLong(0) == 0L)
+    // the touched-partition match agrees with the typed semi-join, in
+    // which '' never equals NULL: an update of '' (written as NULL)
+    // leaves the NULL partition's rows in place, and a DELETE there
+    // rewrites that partition once
+    Manifest.mergeInto(spark, root, Seq((5L, "")).toDF("id", "part"), "id",
+      Seq("part"))
+    spark.sql("DELETE FROM emptypart.db.t WHERE id = 2")
+    for (read <- readers())
+      assert(read.select("id").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 3L, 4L, 5L))
+  }
 }
