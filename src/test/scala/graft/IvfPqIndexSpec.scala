@@ -98,20 +98,15 @@ class IvfPqIndexSpec extends SparkSpec {
       dim = 4, nCells = 3, m = 2, pqK = 4, iters = 2, trainSample = 0)
     // one query, one probed cell → the scan must plan strictly fewer
     // files than the table holds (codes commit clustered by cell)
-    val all = Manifest.read(spark, s"$root/codes").inputFiles.length
+    val all = ScanFiles.live(spark, s"$root/codes")
     val queries = emb.filter(col("vec_id") === 10L)
     val served = IvfPqIndex.searchBatch(spark, root, Some(emb), queries,
       "vec_id", "embedding", "vec_id", topK = 3, nProbe = 1,
       refineFactor = 4)
-    // pre-AQE physical plan: the codes scan is the only one whose
-    // output carries the partition column; count the files its
-    // partition filters leave after ManifestFileIndex pruning
-    val planned = served.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.output.exists(_.name == "centroid_id") =>
-        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
-          .map(_.files.size).sum
-    }.sum
+    // the codes scan is the only one whose output carries the partition
+    // column; count the files it planned after partition pruning
+    val planned = ScanFiles.planned(served,
+      _.output.exists(_.name == "centroid_id"))
     assert(all >= 3, s"expected >=3 cell files, got $all")
     assert(planned > 0 && planned < all,
       s"probed scan planned $planned of $all files — pruning inactive")

@@ -168,7 +168,7 @@ class ManifestBloomsSpec extends SparkSpec {
     assert(connRead(root).filter($"key" === 17L).count() == 1)
     // a fresh build re-covers the rewritten files
     ManifestBlooms.build(spark, root, Seq("key"))
-    val nowFiles = Manifest.read(spark, root).inputFiles.length
+    val nowFiles = ScanFiles.live(spark, root)
     assert(sidecars() == nowFiles && nowFiles >= 1)
     assert(scanOf(connRead(root).filter($"key" === 17L))
       .plannedFiles.length <= 1)

@@ -164,9 +164,14 @@ class ManifestCodecSpec extends SparkSpec {
     def rows(df: DataFrame): Seq[(Long, String, Long, Option[String])] =
       df.select("id", "part", "v", "note")
         .as[(Long, String, Long, Option[String])].collect().toSeq
-    val want = rows(Manifest.read(spark, root))
+    // ids ≡ 1 (mod 3) and the rows noted n44 / n50 are deleted
+    val want = (1L to 80L)
+      .filterNot(i => i % 3 == 1 || i == 44L || i == 50L)
+      .map(i => (i, "p" + (i % 2), i * 10,
+        if (i > 40) Some(s"n$i") else None))
     assert(want.size == 80 - 27 - 2)
     assert(want.count(_._4.isEmpty) == 40 - 14)
+    assert(rows(Manifest.read(spark, root)).sorted == want.sorted)
     val conn = spark.read.format("graft-manifest").load(root)
 
     assert(rows(conn).sorted == want.sorted)

@@ -36,6 +36,12 @@ class ManifestConnectorSpec extends SparkSpec {
     root
   }
 
+  /** [[fixture]]'s rows at version `v` as (id, part, text, score). */
+  private def fixtureRows(v: Long): Seq[(Long, String, String, Long)] =
+    (1L to 200L).filter(i => v > 1 || i % 2 == 0).map(i =>
+      (i, "p" + (i % 4), s"doc $i text",
+        i * 10 + (if (v >= 3 && i % 5 == 0) 1000L else 0L)))
+
   private def connRead(root: String, version: Option[Long] = None)
       : DataFrame = {
     val r = spark.read.format("graft-manifest")
@@ -63,11 +69,12 @@ class ManifestConnectorSpec extends SparkSpec {
       val conn = connRead(root, Some(v))
         .select($"id", $"part", $"text", $"score")
         .as[(Long, String, String, Long)].collect().toSet
+      assert(direct == fixtureRows(v).toSet, s"version $v: Manifest.read")
       assert(conn == direct, s"version $v mismatch")
     }
     // default = latest
-    assert(connRead(root).count() ==
-      Manifest.read(spark, root).count())
+    assert(connRead(root).count() == 200L)
+    assert(Manifest.read(spark, root).count() == 200L)
   }
 
   test("partition filter prunes files at the manifest (never planned)") {
@@ -81,9 +88,8 @@ class ManifestConnectorSpec extends SparkSpec {
     // and the result is still exactly right
     val got = connRead(root).filter($"part" === "p1")
       .agg(count(lit(1)), sum($"id")).as[(Long, Long)].collect().head
-    val want = Manifest.read(spark, root).filter($"part" === "p1")
-      .agg(count(lit(1)), sum($"id")).as[(Long, Long)].collect().head
-    assert(got == want)
+    val p1 = fixtureRows(3).filter(_._2 == "p1")
+    assert(got == ((p1.size.toLong, p1.map(_._1).sum)))
     // IN-list + conjunction prune too
     val in2 = scanOf(connRead(root)
       .filter($"part".isin("p1", "p2") && $"score" > 50L).select($"id"))
@@ -102,8 +108,7 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(scan.description().contains("GreaterThan(score,500)"),
       scan.description())
     // pushdown is IO-skip only: results match the un-pushed plan
-    val want = Manifest.read(spark, root).filter($"score" > 500L)
-      .select($"id").as[Long].collect().sorted.toSeq
+    val want = fixtureRows(3).filter(_._4 > 500L).map(_._1).sorted
     assert(df.as[Long].collect().sorted.toSeq == want)
   }
 
@@ -132,8 +137,8 @@ class ManifestConnectorSpec extends SparkSpec {
     val root = fixture()
     val cnt = connRead(root).groupBy($"part").count()
       .as[(String, Long)].collect().toMap
-    val want = Manifest.read(spark, root).groupBy($"part").count()
-      .as[(String, Long)].collect().toMap
+    val want = fixtureRows(3).groupBy(_._2)
+      .map { case (p, rs) => p -> rs.size.toLong }
     assert(cnt == want)
     // statistics shrink under partition pruning
     val all = scanOf(connRead(root).select($"id"))
@@ -143,8 +148,8 @@ class ManifestConnectorSpec extends SparkSpec {
       all.estimateStatistics().sizeInBytes.getAsLong)
     // ...and row counts are EXACT (manifest zone-map rows), not
     // byte-derived guesses
-    val total = Manifest.read(spark, root).count()
-    val p1 = Manifest.read(spark, root).filter($"part" === "p1").count()
+    val total = 200L
+    val p1 = fixtureRows(3).count(_._2 == "p1").toLong
     assert(all.estimateStatistics().numRows.getAsLong == total)
     assert(pruned.estimateStatistics().numRows.getAsLong == p1)
   }
@@ -189,8 +194,7 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(plan.contains("ColumnarToRow"), plan.take(1500))
     // vectorized result ≡ row-path ground truth
     assert(df.as[(Long, String)].collect().toSet ==
-      Manifest.read(spark, root).filter($"score" > 100L)
-        .select($"id", $"text").as[(Long, String)].collect().toSet)
+      fixtureRows(3).filter(_._4 > 100L).map(r => (r._1, r._3)).toSet)
   }
 
   test("limit pushdown caps reader output, global result exact") {
@@ -241,11 +245,10 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(ids(connRead(root).filter($"part".isNull)) == Set(3L))
     assert(ids(connRead(root).filter(!$"part".isNull)) == Set(1L, 2L))
     assert(ids(connRead(root).filter($"part" <=> null)) == Set(3L))
-    // and the whole thing matches the non-connector read
-    for (cond <- Seq($"part" =!= "a", $"part".isNull, !$"part".isNull)) {
-      assert(ids(connRead(root).filter(cond)) ==
-        ids(Manifest.read(spark, root).filter(cond)))
-    }
+    // and Manifest.read gives the same SQL answers
+    for ((cond, want) <- Seq(($"part" =!= "a") -> Set(2L),
+        $"part".isNull -> Set(3L), !$"part".isNull -> Set(1L, 2L)))
+      assert(ids(Manifest.read(spark, root).filter(cond)) == want)
   }
 
   test("layout mismatch fails loudly: at commit time for well-behaved " +
@@ -288,8 +291,8 @@ class ManifestConnectorSpec extends SparkSpec {
     assert(e.getMessage.contains("mixed partition layouts"), e.getMessage)
   }
 
-  // merge-on-read deletes and SQL INSERT over array/map columns match
-  // Manifest.read
+  // merge-on-read deletes and SQL INSERT over array/map columns read
+  // back the same rows through the connector and Manifest.read
   test("nested array/map columns round-trip through the connector") {
     val warehouse = newRoot()
     val root = s"$warehouse/db/nested"
@@ -298,14 +301,16 @@ class ManifestConnectorSpec extends SparkSpec {
       .toDF("id", "part", "xs", "m"), Seq("part"))
     def rows(df: DataFrame) = df.select("id", "part", "xs", "m")
       .as[(Long, String, Seq[Double], Map[String, Long])].collect().toSet
-    def same() = {
-      val got = rows(connRead(root))
-      assert(got == rows(Manifest.read(spark, root)))
-      got
+    var want = (1L to 30L).map(i =>
+      (i, "p" + (i % 3), Seq(i * 0.5, i * 1.5), Map(s"k$i" -> i))).toSet
+    def same(): Unit = {
+      assert(rows(connRead(root)) == want)
+      assert(rows(Manifest.read(spark, root)) == want)
     }
-    assert(same().size == 30)
+    same()
     Manifest.deleteByKeys(spark, root, Seq(2L, 7L).toDF("id"))
-    assert(same().map(_._1) == (1L to 30L).toSet -- Set(2L, 7L))
+    want = want.filterNot(r => r._1 == 2L || r._1 == 7L)
+    same()
     assert(connRead(root).count() == 28L)
 
     spark.conf.set("spark.sql.catalog.nestcat",
@@ -313,7 +318,8 @@ class ManifestConnectorSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.nestcat.root", warehouse)
     spark.sql("INSERT INTO nestcat.db.nested SELECT 100L, 'p1', " +
       "array(1.0D, 2.0D), map('z', 9L)")
-    assert(same().contains((100L, "p1", Seq(1.0, 2.0), Map("z" -> 9L))))
+    want += ((100L, "p1", Seq(1.0, 2.0), Map("z" -> 9L)))
+    same()
     assert(connRead(root).count() == 29L)
   }
 
@@ -329,9 +335,11 @@ class ManifestConnectorSpec extends SparkSpec {
     Manifest.commitAppend(spark, root,
       Seq((8L, "p0", "resurrected", 0L), (15L, "p3", "resurrected", 0L))
         .toDF("id", "part", "text", "score"), Seq("part"))
-    val want = Manifest.read(spark, root)
-      .select("id", "part", "text", "score")
-      .as[(Long, String, String, Long)].collect().toSet
+    val deleted = (1L to 200L by 7L).toSet
+    val want = fixtureRows(3).filterNot(r => deleted(r._1)).toSet ++
+      Set((8L, "p0", "resurrected", 0L), (15L, "p3", "resurrected", 0L))
+    assert(Manifest.read(spark, root).select("id", "part", "text", "score")
+      .as[(Long, String, String, Long)].collect().toSet == want)
     val got = connRead(root).select("id", "part", "text", "score")
       .as[(Long, String, String, Long)].collect().toSet
     assert(got == want)
@@ -441,15 +449,14 @@ class ManifestConnectorSpec extends SparkSpec {
     val filtered = connRead(root).filter($"score" > 500L)
       .agg(count(lit(1)).as("n"))
     assert(filtered.as[Long].head ==
-      Manifest.read(spark, root).filter($"score" > 500L).count())
+      fixtureRows(3).count(_._4 > 500L))
     // the scan is NOT in aggregate mode: it reads the data column
     assert(scanOf(filtered).readSchema().fieldNames.contains("score"))
     // distinct counts and string min/max fall back
     val distinctN = connRead(root).agg(countDistinct($"part").as("n"))
     assert(distinctN.as[Long].head == 4L)
     val strMin = connRead(root).agg(min($"text").as("lo"))
-    assert(strMin.as[String].head ==
-      Manifest.read(spark, root).agg(min($"text")).as[String].head)
+    assert(strMin.as[String].head == fixtureRows(3).map(_._3).min)
     // NULLs: count(col) subtracts them; an all-NULL file contributes
     // nothing to min/max but its rows to count(*)
     val root2 = newRoot()
@@ -544,7 +551,7 @@ class ManifestConnectorSpec extends SparkSpec {
     val byData = connRead(root).groupBy($"score")
       .agg(count(lit(1)).as("n"))
     assert(byData.as[(Long, Long)].collect().length ==
-      Manifest.read(spark, root).select("score").distinct().count())
+      fixtureRows(3).map(_._4).distinct.size)
   }
 
   test("min/max over float/double refuses stats pushdown: parquet " +

@@ -14,7 +14,9 @@ import graft.sources.Manifest
   * [[CrashPointFileSystem]]: a clean run counts a commit's file system
   * mutations, then the commit is crashed at every one of them in turn
   * (and once past the last). After each crash:
-  *   - a fresh reader sees exactly the old rows or exactly the new rows;
+  *   - a fresh reader (the `graft-manifest` connector, which applies
+  *     merge-on-read deletes) sees exactly the old rows or exactly the
+  *     new rows;
   *   - re-running the commit where it did not land gives the new rows;
   *   - `removeOrphans` with zero grace leaves no parquet file under
   *     `data/` that no manifest references. */
@@ -37,8 +39,8 @@ class ManifestCrashSpec extends SparkSpec {
     Manifest.init(spark, root, rows(old: _*), Seq("part"))
 
   private def seen(root: String): Set[Row] =
-    Manifest.read(spark, root, None).select("id", "part", "v")
-      .collect().toSet
+    spark.read.format("graft-manifest").load(root)
+      .select("id", "part", "v").collect().toSet
 
   private def asRows(xs: Seq[(Long, String, Long)]): Set[Row] =
     xs.map { case (i, p, v) => Row(i, p, v) }.toSet
@@ -73,11 +75,13 @@ class ManifestCrashSpec extends SparkSpec {
     out.result()
   }
 
-  /** The three-part property at crash point `n` of `commit`. */
-  private def atCrash(n: Long, newRows: Set[Row],
+  /** The three-part property at crash point `n` of `commit`, run on a
+    * fresh table holding `old` and whatever `setup` committed on top. */
+  private def atCrash(n: Long, newRows: Set[Row], setup: String => Unit,
                       commit: String => Unit): Prop = {
     val root = newRoot()
     init(root)
+    setup(root)
     val oldRows = seen(root)
     CrashPointFileSystem.crashAfter(n)
     try commit(root)
@@ -98,9 +102,12 @@ class ManifestCrashSpec extends SparkSpec {
 
   /** Count `commit`'s mutations on a clean run, then check every crash
     * point from before the first mutation to past the last. */
-  private def crashPoints(newRows: Set[Row])(commit: String => Unit): Unit = {
+  private def crashPoints(newRows: Set[Row],
+                          setup: String => Unit = _ => ())(
+                          commit: String => Unit): Unit = {
     val probe = newRoot()
     init(probe)
+    setup(probe)
     val m0 = CrashPointFileSystem.mutations
     commit(probe)
     val total = CrashPointFileSystem.mutations - m0
@@ -108,7 +115,7 @@ class ManifestCrashSpec extends SparkSpec {
     assert(seen(probe) == newRows)
     info(s"$total mutations, ${total + 1} crash points")
     val prop = Prop.all((0L to total).map(n =>
-      Prop.delay(atCrash(n, newRows, commit))): _*)
+      Prop.delay(atCrash(n, newRows, setup, commit))): _*)
     val res = Test.check(Test.Parameters.default
       .withMinSuccessfulTests(1).withWorkers(1), prop)
     res.status match {
@@ -137,6 +144,37 @@ class ManifestCrashSpec extends SparkSpec {
     crashPoints(asRows(old ++ add)) { root =>
       rows(add: _*).write.format("graft-manifest").mode("append")
         .save(root)
+    }
+  }
+
+  test("mergeInto: every crash point is atomic, retryable, vacuumable") {
+    val upd = Seq((2L, "b", 200L), (8L, "a", 80L))
+    crashPoints(asRows(old.filterNot(_._1 == 2L) ++ upd)) { root =>
+      Manifest.mergeInto(spark, root, rows(upd: _*), "id", "part")
+    }
+  }
+
+  test("deleteWhere: every crash point is atomic, retryable, vacuumable") {
+    crashPoints(asRows(old.filter(_._3 < 40L))) { root =>
+      Manifest.deleteWhere(spark, root,
+        org.apache.spark.sql.functions.col("v") >= 40L, "part")
+    }
+  }
+
+  // a pending merge-on-read delete under compaction: a crash that left
+  // the delete file or the rewrite half visible shows a deleted row
+  test("compact: every crash point is atomic, retryable, vacuumable") {
+    crashPoints(asRows(old.filterNot(_._1 == 2L)),
+      root => Manifest.deleteByKeys(spark, root, Seq(2L).toDF("id"))) {
+      root => Manifest.compact(spark, root)
+    }
+  }
+
+  test("rewriteDeletes: every crash point is atomic, retryable, " +
+    "vacuumable") {
+    crashPoints(asRows(old.filterNot(r => r._1 == 2L || r._1 == 3L)),
+      root => Manifest.deleteByKeys(spark, root, Seq(2L, 3L).toDF("id"))) {
+      root => Manifest.rewriteDeletes(spark, root)
     }
   }
 }

@@ -352,23 +352,23 @@ class ManifestSpec extends SparkSpec {
   test("manifest zone map skips files a data filter cannot match " +
     "(skipped files are never planned)") {
     val root = newRoot()
+    // v is nullable (a `when` without `otherwise`), so the optimizer
+    // cannot fold the IsNull probe below away before the scan
     val df = spark.range(1, 101)
-      .select(col("id"), (col("id") * 2).as("v"))
+      .select(col("id"), when(col("id") > 0L, col("id") * 2).as("v"))
       .repartitionByRange(4, col("id"))
     Manifest.init(spark, root, df)
     // v = 50 lives in exactly one of the four range files
     val probe = Manifest.read(spark, root, None).filter(col("v") === 50L)
     assert(probe.collect().map(_.getLong(0)).toSeq == Seq(25L))
-    val planned = probe.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numFiles")).map(_.value)
-    assert(planned.headOption.contains(1L),
+    val planned = ScanFiles.perScan(probe)
+    assert(planned == Seq(1L),
       s"zone map did not skip, planned files: $planned")
     // IsNull over a column with zero nulls: every file skipped
     val none = Manifest.read(spark, root, None).filter(col("v").isNull)
     assert(none.collect().isEmpty)
-    val noneFiles = none.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.metrics.get("numFiles")).map(_.value)
-    assert(noneFiles.forall(_ == 0L), s"planned files: $noneFiles")
+    val noneFiles = ScanFiles.perScan(none)
+    assert(noneFiles == Seq(0L), s"planned files: $noneFiles")
     // skipping is IO-only: an overlapping filter still returns all rows
     assert(Manifest.read(spark, root, None)
       .filter(col("v") >= 2L).count() == 100L)
@@ -383,13 +383,11 @@ class ManifestSpec extends SparkSpec {
       Seq("part"))
     val df = Manifest.read(spark, root, None)
       .filter(col("part") === "b")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(2000))
-    // executed proof: only partition b's file is touched
-    df.collect()
-    assert(df.queryExecution.executedPlan.collectLeaves().exists { l =>
-      l.metrics.get("numFiles").exists(_.value == 1L)
-    }, "scan read more than the one pruned partition file")
+    // executed proof: only partition b's file of the three is touched
+    assert(ScanFiles.live(spark, root) == 3)
+    assert(ScanFiles.perScan(df) == Seq(1L),
+      "scan read more than the one pruned partition file")
+    assert(df.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("schema evolution: columns added by later commits read back " +
@@ -1078,11 +1076,8 @@ class ManifestSpec extends SparkSpec {
             ((col("id") * 8 + k) * 37 % 4096).as("y"),
             lit(k.toLong).as("v"))
           .coalesce(1))
-    def planned(probe: org.apache.spark.sql.DataFrame): Long = {
-      probe.collect()
-      probe.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles")).map(_.value).sum
-    }
+    def planned(probe: org.apache.spark.sql.DataFrame): Long =
+      ScanFiles.planned(probe)
     val content = Manifest.read(spark, root, None)
       .as[(Long, Long, Long)].collect().toSeq.sorted
     val v = Manifest.compact(spark, root,
@@ -1112,11 +1107,8 @@ class ManifestSpec extends SparkSpec {
         (col("id") % 97).as("v"))
       .repartitionByRange(8, col("x"))
     Manifest.init(spark, root, df)
-    def planned(probe: org.apache.spark.sql.DataFrame): Long = {
-      probe.collect()
-      probe.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles")).map(_.value).sum
-    }
+    def planned(probe: org.apache.spark.sql.DataFrame): Long =
+      ScanFiles.planned(probe)
     // pre-zorder: a y point-filter cannot skip (every file spans all y)
     assert(planned(Manifest.read(spark, root, None)
       .filter(col("y") === 2000L)) == 8L)
@@ -1208,11 +1200,8 @@ class ManifestSpec extends SparkSpec {
       // an extreme value: files rank-straddling a high-bit flip keep
       // wide envelopes, so probe the low end, which only the lowest
       // z-region files can contain
-      val probe = Manifest.read(spark, root, None)
-        .filter(col(c) === 100L)
-      probe.collect()
-      probe.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles")).map(_.value).sum
+      ScanFiles.planned(Manifest.read(spark, root, None)
+        .filter(col(c) === 100L))
     }
     for (c <- Seq("x", "y", "z"))
       assert(planned(c) < files,

@@ -88,11 +88,18 @@ class PlanSpec extends SparkSpec {
     // ONE scan leaf over both commits — union-of-relations would show 2
     assert(p.collectLeaves().length == 1, p.toString.take(2000))
     val s = p.toString
-    assert(s.contains("PartitionFilters"), s.take(2000))
-    assert(s.contains("PushedFilters"), s.take(2000))
-    // vectorized scan ("Batched: true") under a whole-stage-codegen
-    // span (the "*(1)" marker in the rendered plan)
-    assert(s.contains("Batched: true"), s.take(2000))
+    // partition pruning: part = '1' plans exactly that value's files
+    val files = graft.sources.Manifest.snapshot(spark, root, 2L).files
+    val want = files.count(f => graft.sources.Manifest.partValuesOf(f)
+      .toMap.get("part").contains("1"))
+    assert(want > 0 && want < files.size)
+    assert(graft.ScanFiles.perScan(q) == Seq(want.toLong), s.take(2000))
+    // the data filter reaches the scan
+    assert("(?i)pushed(filters)?[:=] ?\\[[^\\]]*GreaterThan\\(v,10\\)".r
+      .findFirstIn(s).isDefined, s.take(2000))
+    // vectorized scan (a ColumnarToRow boundary) under a
+    // whole-stage-codegen span (the "*(1)" marker in the rendered plan)
+    assert(s.contains("ColumnarToRow"), s.take(2000))
     assert(s.contains("*(1)"), s.take(2000))
   }
 
@@ -229,8 +236,8 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("served search plans ONLY term-bucket partitions: real " +
-    "PartitionFilters, and no bucket-range (doc-length) leg anywhere") {
+  test("served search plans ONLY term-bucket partitions: no " +
+    "bucket-range (doc-length) leg anywhere") {
     import graft.sources.{Manifest, SearchIndex}
     val root = "file://" + java.nio.file.Files
       .createTempDirectory("graft-plan-idx").toString
@@ -239,12 +246,19 @@ class PlanSpec extends SparkSpec {
         .toDF("id", "text"))
     SearchIndex.create(spark, s"$root/src", s"$root/idx", "id", "text",
       buckets = 8)
-    val p = SearchIndex.searchBm25(spark, s"$root/idx", "alpha gamma", 5)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters"), p.take(1500))
-    assert(!"bucket#\\d+ >=".r.findFirstIn(p).isDefined,
-      s"served BM25 still scans a bucket range (the corpus-sized " +
-        s"doc-length leg):\n${p.take(2000)}")
+    val df = SearchIndex.searchBm25(spark, s"$root/idx", "alpha gamma", 5)
+    // every scan plans at most the query terms' buckets' files, fewer
+    // than the index holds (a bucket range would plan more)
+    val bs = Seq("alpha", "gamma").map(t =>
+      SearchIndex.termBucket(t, 8).toString).toSet
+    val files = Manifest.snapshot(spark, s"$root/idx",
+      Manifest.latestVersion(spark, s"$root/idx").get).files
+    val bound = files.count(f =>
+      Manifest.partValuesOf(f).toMap.get("bucket").exists(bs))
+    val planned = graft.ScanFiles.perScan(df)
+    assert(planned.forall(n => n <= bound && n < files.size),
+      s"served BM25 planned $planned files; the terms' buckets hold " +
+        s"$bound of ${files.size}")
   }
 
   test("q236: the percentile cutoff joins back via broadcast — the " +

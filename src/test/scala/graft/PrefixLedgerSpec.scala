@@ -66,14 +66,7 @@ class PrefixLedgerSpec extends SparkSpec {
       Seq(3).toDF(PrefixLedger.BucketCol)).get
     val all = PrefixLedger.probe(spark, root,
       (0 to 7).toDF(PrefixLedger.BucketCol)).get
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      val ex = df.queryExecution.executedPlan
-      ex.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.totalNumberOfFiles
-      }.sum
-    }
-    val (f1, fAll) = (scannedFiles(one), scannedFiles(all))
+    val (f1, fAll) = (ScanFiles.planned(one), ScanFiles.planned(all))
     assert(f1 < fAll,
       s"single-bucket probe scans $f1 files vs $fAll for all buckets")
     assert(one.count() ==
@@ -108,11 +101,11 @@ class PrefixLedgerSpec extends SparkSpec {
     val wave = keyed(0, 699).select(PrefixLedger.BucketCol).distinct()
     val beforeRows = PrefixLedger.probe(spark, root, wave).get
       .select("digest").as[String].collect().sorted.toSeq
-    val filesBefore = Manifest.read(spark, root).inputFiles.length
+    val filesBefore = ScanFiles.live(spark, root)
     val v = PrefixLedger.compact(spark, root,
       smallBytes = 4L * 1024 * 1024)
     assert(v > 7, "compaction must commit a new version")
-    val filesAfter = Manifest.read(spark, root).inputFiles.length
+    val filesAfter = ScanFiles.live(spark, root)
     assert(filesAfter < filesBefore,
       s"$filesAfter files after vs $filesBefore before")
     val afterRows = PrefixLedger.probe(spark, root, wave).get

@@ -41,6 +41,23 @@ class SearchIndexSpec extends SparkSpec {
     (src, idx)
   }
 
+  /** Files of the index at `idx` whose bucket holds one of `terms`. */
+  private def termFiles(idx: String, terms: String*): Int = {
+    val bs = terms.map(t => SearchIndex.termBucket(t, 8).toString).toSet
+    Manifest.snapshot(spark, idx, Manifest.latestVersion(spark, idx).get)
+      .files.count(f =>
+        Manifest.partValuesOf(f).toMap.get("bucket").exists(bs))
+  }
+
+  /** Every table scan of `df` planned fewer files than `root` holds. */
+  private def assertPruned(df: org.apache.spark.sql.DataFrame,
+                           root: String): Unit = {
+    val total = ScanFiles.live(spark, root)
+    val planned = ScanFiles.perScan(df)
+    assert(planned.forall(_ < total),
+      s"scans planned $planned of $total files of $root")
+  }
+
   test("create: index-served BM25 equals corpus BM25, incl. requireAll") {
     val (src, idx) = freshPair("eq")
     val q = "window merge scan"
@@ -154,14 +171,14 @@ class SearchIndexSpec extends SparkSpec {
 
   test("a term lookup prunes the postings scan to the term's buckets") {
     val (_, idx) = freshPair("prune")
-    val plan = SearchIndex.searchBm25(spark, idx, "window", 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"),
-      "postings scan lost manifest partition pruning")
-    val b = SearchIndex.termBucket("window", 8)
-    assert(plan.contains(s"bucket#") && plan.contains(s"($b)") ||
-      plan.contains(s"= $b"),
-      s"expected a literal bucket=$b partition predicate in:\n$plan")
+    val df = SearchIndex.searchBm25(spark, idx, "window", 5)
+    assertPruned(df, idx)
+    // the planned files are exactly the term's bucket's files
+    val want = termFiles(idx, "window")
+    assert(want > 0)
+    val planned = ScanFiles.perScan(df)
+    assert(planned.forall(_ == want),
+      s"scans planned $planned files; the term's bucket holds $want")
   }
 
   test("guard rails: wrong source refuses, empty query refuses") {
@@ -235,8 +252,7 @@ class SearchIndexSpec extends SparkSpec {
     assert(got.as[(String, Long, Long)].collect().toSeq ==
       Search.suggest(Manifest.read(spark, src), "id", "text", "s", 10)
         .as[(String, Long, Long)].collect().toSeq)
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(1500))
+    assertPruned(got, twin)
     // advance source + index, refresh the twin: new tokens appear
     Manifest.commitAppend(spark, src,
       Seq((6L, "en", "sunny sunny table")).toDF("id", "lang", "text"),
@@ -293,9 +309,8 @@ class SearchIndexSpec extends SparkSpec {
     assert(fromIdx("window table", 1).nonEmpty)
     assert(fromIdx("window table", 1) == fromCorpus("window table", 1))
     // the span query's scan still prunes to the phrase terms' buckets
-    val plan = SearchIndex.searchNear(spark, idx, "window table", 1, 10)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(1500))
+    assertPruned(SearchIndex.searchNear(spark, idx, "window table", 1, 10),
+      idx)
     // slop 0 = exact phrase, equal to rankPhrase's scores
     assert(fromIdx("merge window", 0) ==
       Search.rankPhrase(Manifest.read(spark, src), "id", "text",
@@ -377,18 +392,23 @@ class SearchIndexSpec extends SparkSpec {
       Seq("lang"))
     SearchIndex.create(spark, src, idx, "id", "text", buckets = 8,
       positions = true)
-    val plans = Seq(
-      SearchIndex.searchBm25(spark, idx, "window merge", 5),
+    val served = Seq(
+      SearchIndex.searchBm25(spark, idx, "window merge", 5) ->
+        Seq("window", "merge"),
       SearchIndex.searchBool(spark, idx, must = Seq("window"),
-        should = Seq("merge"), mustNot = Seq("slow"), k = 5),
-      SearchIndex.searchNear(spark, idx, "window table", 1, 5))
-      .map(_.queryExecution.executedPlan.toString)
-    plans.foreach { plan =>
-      assert(plan.contains("PartitionFilters"), plan.take(1500))
-      // dl now rides each postings row: no serving plan may scan a
-      // bucket RANGE (the shape of the old one-row-per-corpus-doc leg)
-      assert(!"bucket#\\d+ >=".r.findFirstIn(plan).isDefined,
-        s"found a corpus-sized bucket-range leg in:\n${plan.take(2000)}")
+        should = Seq("merge"), mustNot = Seq("slow"), k = 5) ->
+        Seq("window", "merge", "slow"),
+      SearchIndex.searchNear(spark, idx, "window table", 1, 5) ->
+        Seq("window", "table"))
+    served.foreach { case (df, terms) =>
+      assertPruned(df, idx)
+      // dl now rides each postings row: no serving scan may plan more
+      // than the query terms' buckets (the old one-row-per-corpus-doc
+      // leg scanned a bucket RANGE)
+      val bound = termFiles(idx, terms: _*)
+      val planned = ScanFiles.perScan(df)
+      assert(planned.forall(_ <= bound),
+        s"scans planned $planned files; the terms' buckets hold $bound")
     }
   }
 
@@ -414,10 +434,8 @@ class SearchIndexSpec extends SparkSpec {
     // no candidates at all → empty frame with the right shape
     assert(viaTwin("zzzzzzzzzz", 1).isEmpty)
     // the postings scan for the matched variants is bucket-pruned
-    val plan = SearchIndex.matchFuzzyFromTwin(spark, idx, twin,
-        "windoe", 10, maxEdits = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(1500))
+    assertPruned(SearchIndex.matchFuzzyFromTwin(spark, idx, twin,
+      "windoe", 10, maxEdits = 1), idx)
     // twin must reflect the index head: stale → loud refusal, refresh heals
     Manifest.commitAppend(spark, src,
       Seq((6L, "en", "windows vista")).toDF("id", "lang", "text"),
