@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Measurement main for the EXACT cosine range ops (q253/q254/q255):
@@ -55,13 +57,14 @@ object RangeStatsCheck {
       .head().getSeq[Double](0).toArray
     t0 = System.nanoTime()
     val r = VectorIndex.rangeSearch(spark, root, qv, tau)
-    val rows = r.count()
+    val rows = r.collect().length // executes r's own plan: its metrics
     val tRange = (System.nanoTime() - t0) / 1e9
-    val scanned = r.queryExecution.executedPlan.collectLeaves().collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.totalNumberOfFiles
-    }.sum
-    val total = Manifest.read(spark, root).inputFiles.length
+    val scanned = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(r.queryExecution.executedPlan) {
+        case s: BatchScanExec => s.metrics("numFiles").value
+      }.sum
+    val total = Manifest.snapshot(spark, root,
+      Manifest.latestVersion(spark, root).get).files.size
     println(f"== RangeStatsCheck $sfDir n=$n nCells=$nCells tau=$tau " +
       f"train=$trainIters build=$tBuild%.1fs ==")
     println(f"rangeSearch(q7): rows=$rows files=$scanned/$total " +

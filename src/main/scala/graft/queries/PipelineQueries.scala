@@ -3594,7 +3594,7 @@ object PipelineQueries {
     // pivots committed alongside. SERVING per query: score nCentroids
     // pivots (one broadcast row), collect the nProbe probe cells
     // (bounded, ≤ nCentroids ids), read ONLY those cells' files
-    // (ManifestFileIndex partition pruning — the probe literally skips
+    // (the manifest scan's partition pruning — the probe literally skips
     // the unprobed cells' parquet), ADC over the pruned codes, exact
     // re-rank of the refineFactor·topK shortlist. Oracle = q229's:
     // the output must hash-equal EXACT L2 top-k. Settings validated

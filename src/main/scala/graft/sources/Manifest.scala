@@ -8,9 +8,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.sources.connector.ManifestWriter
+import graft.sources.connector.{ManifestConnector, ManifestTable, ManifestWriter}
 
 /** Versioned manifest commit layer: the missing cross-partition
   * atomicity for the lake's upsert/compaction story (SURVEY §7 — the
@@ -84,8 +86,9 @@ object Manifest {
 
   /** One merge-on-read equality-delete file: `path` holds the DISTINCT
     * key tuples (columns `keyCols`, table-typed) whose rows are deleted
-    * from every data file with `dataSeq < seq`. Reads apply it as a
-    * null-safe anti-join; [[rewriteDeletes]]/[[compact]] materialize
+    * from every data file with `dataSeq < seq`. Each scan task drops
+    * the matching rows of its file, null-safe;
+    * [[rewriteDeletes]]/[[compact]] materialize
     * it away. O(deleted keys) to delete from a 100 TB table — no data
     * rewrite on the DELETE path at all. */
   final case class DeleteEntry(path: String, size: Long,
@@ -141,9 +144,9 @@ object Manifest {
 
   /** A partition path value ([[partValuesOf]]: hive-unescaped, null
     * for `__HIVE_DEFAULT_PARTITION__`) as the catalyst value of the
-    * column's declared type — the one decoder behind V1 reads
-    * ([[ManifestFileIndex]]) and the connector. UTC pins date/timestamp
-    * casts. */
+    * column's declared type — the one decoder behind every read's
+    * partition columns ([[graft.sources.connector.ManifestConnector]]).
+    * UTC pins date/timestamp casts. */
   def partValue(v: String, dt: org.apache.spark.sql.types.DataType): Any =
     if (v == null) null
     else dt match {
@@ -349,7 +352,7 @@ object Manifest {
   def readStage(spark: SparkSession, root: String,
                 stageId: String): DataFrame = {
     val m = readStageManifest(spark, root, stageId)
-    readEntries(spark, root, m, m.entries)
+    scan(spark, root, m, m.entries, m.deletes)
   }
 
   /** Live stage ids (one manifest-dir listing). */
@@ -550,7 +553,7 @@ object Manifest {
   def readBranch(spark: SparkSession, root: String, name: String,
                  version: Option[Long] = None): DataFrame = {
     val m = branchMeta(spark, root, name, version)
-    readEntries(spark, root, m, m.entries)
+    scan(spark, root, m, m.entries, m.deletes)
   }
 
   /** MERGE a branch: squash-publish the branch HEAD onto main as one
@@ -957,52 +960,42 @@ object Manifest {
     Snapshot(m.version, m.files)
   }
 
-  /** ONE vectorized parquet relation over `entries`, planned entirely
-    * from manifest metadata (schema + partcols headers, file sizes,
-    * partition tuples parsed from paths) via [[ManifestFileIndex]] —
-    * no per-commit relations, no filesystem listing, real
-    * `PartitionFilters` pruning. Columns a file predates read back
-    * NULL (parquet schema evolution). */
-  private def relationOver(spark: SparkSession, root: String,
-                           m: SnapshotMeta,
-                           entries: Seq[FileEntry]): DataFrame = {
-    val full = m.schema
-    val partCols = m.partCols
-    val partSchema = org.apache.spark.sql.types.StructType(
-      partCols.map(c => full(c)))
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      full.filterNot(f => partCols.contains(f.name)))
-    val index = new ManifestFileIndex(root, entries, partSchema)
-    val relation = org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(index, partSchema, dataSchema, None,
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetFileFormat(), Map.empty[String, String])(spark)
-    // surface columns in the table's declared order (the relation
-    // appends partition columns after data columns)
-    spark.baseRelationToDataFrame(relation)
-      .select(full.fieldNames.map(col): _*)
-  }
+  /** ONE `graft-manifest` connector scan over `entries` of snapshot
+    * `m`, planned from manifest metadata alone (schema + partcols
+    * headers, file sizes and zone maps, partition tuples parsed from
+    * paths): no per-commit relations, no filesystem listing, partition
+    * and zone-map pruning at planning. Columns a file predates read
+    * back NULL (parquet schema evolution). Each task drops the rows of
+    * its file that a merge-on-read delete in `deletes` names (a delete
+    * applies to files with a strictly smaller sequence), null-safe: a
+    * NULL key value deletes NULL rows. */
+  private def scan(spark: SparkSession, root: String, m: SnapshotMeta,
+                   entries: Seq[FileEntry],
+                   deletes: Seq[DeleteEntry]): DataFrame =
+    PlanBridge.ofRows(spark, DataSourceV2Relation.create(
+      ManifestTable(ManifestConnector.resolved(root, m, entries, deletes)),
+      None, None))
 
   /** Read the table at `version` (default: latest). The scan is over
     * exactly the snapshot's files — concurrent commits are invisible.
     * A snapshot with a schema header but no files (freshly created
     * empty table) reads as an empty frame with the declared schema.
-    * Pending merge-on-read deletes are applied (anti-join). */
+    * Pending merge-on-read deletes are applied. */
   def read(spark: SparkSession, root: String,
            version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, root))
       .getOrElse(throw new IllegalStateException(
         s"$root has no committed version"))
     val m = readManifest(spark, root, v)
-    readEntries(spark, root, m, m.entries)
+    scan(spark, root, m, m.entries, m.deletes)
   }
 
   /** Rows of a SUBSET of a snapshot's files (by table-relative path) —
     * the building block incremental consumers (materialized-view
     * refresh) use to read just a commit range's added or removed
-    * files through the same single-relation plan as [[read]]. The
-    * snapshot's schema resolves evolution (older files surface NULL
-    * for later columns); pending MoR deletes of that snapshot apply. */
+    * files through the same scan as [[read]]. The snapshot's schema
+    * resolves evolution (older files surface NULL for later columns);
+    * pending MoR deletes of that snapshot apply. */
   private[graft] def readSubset(spark: SparkSession, root: String,
                                 version: Long,
                                 paths: Set[String]): DataFrame = {
@@ -1011,41 +1004,8 @@ object Manifest {
     require(sel.size == paths.size,
       s"readSubset: ${paths.size - sel.size} path(s) are not files of " +
         s"$root v$version")
-    readEntries(spark, root, m, sel)
+    scan(spark, root, m, sel, m.deletes)
   }
-
-  /** Scan `entries` with the snapshot's pending merge-on-read deletes
-    * applied. A delete file applies to data files with a strictly
-    * smaller sequence, so entries are grouped by their APPLICABLE
-    * delete set (usually two groups: pre-delete files and post-delete
-    * appends), each group anti-joined against its delete keys. The
-    * anti-join is null-safe (`<=>`): a NULL key value deletes NULL
-    * rows, matching the null-safe semantics everywhere else in this
-    * layer. Delete sets are typically tiny next to the table — the
-    * join side carries an explicit broadcast hint so a 100 TB scan
-    * never shuffles on account of a few thousand deleted keys. */
-  private def readEntries(spark: SparkSession, root: String,
-                          m: SnapshotMeta,
-                          entries: Seq[FileEntry]): DataFrame =
-    if (m.deletes.isEmpty || entries.isEmpty)
-      relationOver(spark, root, m, entries)
-    else {
-      entries.groupBy(e =>
-          m.deletes.filter(_.seq > e.dataSeq).map(_.path).toSet)
-        .toSeq.sortBy(_._1.size)
-        .map { case (delPaths, ents) =>
-          val base = relationOver(spark, root, m, ents)
-          m.deletes.filter(d => delPaths(d.path))
-            .groupBy(_.keyCols).foldLeft(base) { case (df, (kc, ds)) =>
-              val keys = spark.read.parquet(
-                ds.map(d => absEntryPath(root, d.path)): _*)
-                .select(kc.map(col): _*)
-              df.join(broadcast(keys),
-                kc.map(c => df(c) <=> keys(c)).reduce(_ && _),
-                "left_anti")
-            }
-        }.reduce(_.unionByName(_))
-    }
 
   /** Create-if-absent: the commit claim primitive. On file:// Hadoop's
     * own `create(path, overwrite = false)` is exists-then-open (TOCTOU
@@ -1337,8 +1297,7 @@ object Manifest {
       val em = SnapshotMeta(0L, entries,
         Map("schema" -> schema.json,
           "partcols" -> partitionCols.mkString(",")))
-      enforceConstraints(root, relationOver(spark, root, em, entries),
-        meta)
+      enforceConstraints(root, scan(spark, root, em, entries, Nil), meta)
     }
 
   /** Initialize the table: version 1 = `df`. An EMPTY `df` creates a
@@ -1917,10 +1876,10 @@ object Manifest {
     * key set as a delete file — NO data file is rewritten. At 100 TB
     * this is the difference between a DELETE costing O(deleted keys)
     * and one rewriting every partition that contains a match
-    * (copy-on-write [[deleteWhere]]). Reads apply the delete as a
-    * broadcast anti-join; rows appended AFTER this commit are never
-    * retro-deleted (file sequence numbers), so delete-then-reinsert
-    * works. Run [[rewriteDeletes]] (or [[compact]]) periodically to
+    * (copy-on-write [[deleteWhere]]). Each read task drops the deleted
+    * rows of its file as it streams; rows appended AFTER this commit
+    * are never retro-deleted (file sequence numbers), so
+    * delete-then-reinsert works. Run [[rewriteDeletes]] (or [[compact]]) periodically to
     * fold accumulated delete files back into plain data files.
     * The versioned analog of the reference's keyed item delete
     * (reference: python-data-ingestions/index-data-lambda.py:164-172),
@@ -2057,7 +2016,7 @@ object Manifest {
     if (hit.isEmpty) // no file can hold a deleted key: metadata-only drop
       return publish(spark, root, cur, m.entries, m.meta)
     val partCols = m.partCols
-    val rows = readEntries(spark, root, m, hit)
+    val rows = scan(spark, root, m, hit, m.deletes)
     val fresh = writeCommit(spark, root, cur + 1, rows, partCols)
     publish(spark, root, cur, clean ++ spared ++ fresh, m.meta)
   }
@@ -2128,8 +2087,8 @@ object Manifest {
     * at a healthy size carry forward BY REFERENCE (zero IO). Victim
     * selection is pure manifest metadata — the sizes are on the file
     * lines, so deciding what to compact costs no filesystem calls at
-    * all. The rewrite reads ONLY the small files (the single-relation
-    * subset plan readChanges uses) and the commit is the ordinary
+    * all. The rewrite reads ONLY the small files (the subset scan
+    * readChanges uses) and the commit is the ordinary
     * atomic publish: pinned readers keep the pre-compaction snapshot,
     * and a concurrent appender loses no data (its commit either lands
     * before this publish — conflict, retry compaction — or after, on
@@ -2152,7 +2111,7 @@ object Manifest {
     if (small.size < 2) return cur
     val partCols = m.partCols
     // deletes-applied: compaction must not resurrect rows
-    val smallRows = readEntries(spark, root, m, small)
+    val smallRows = scan(spark, root, m, small, m.deletes)
     // size the rewrite from manifest metadata: ceil(bytes / target)
     // output files, range-clustered on the partition columns so each
     // lands in one hive dir
@@ -2280,7 +2239,7 @@ object Manifest {
       }
     require(scoped.nonEmpty,
       s"no files of $root match partition spec $partitionSpec")
-    val rows = readEntries(spark, root, m, scoped) // deletes applied
+    val rows = scan(spark, root, m, scoped, m.deletes)
     def scaled(c: String): Column = zScaledCol(rows, scoped, c, bits)
     val totalBytes = scoped.map(_.size).sum
     val nOut = math.max(1,
@@ -2516,8 +2475,8 @@ object Manifest {
         s"commit(s) at seq ${crossing.map(_.seq).distinct.sorted.mkString(",")} — " +
         "file-level changes cannot express row retractions; run " +
         "rewriteDeletes and consume the rewrite, or read full snapshots")
-    // same single-relation plan as read(), over just the added files
-    relationOver(spark, root, m, m.entries.filter(e => added(e.path)))
+    // same scan as read(), over just the added files
+    scan(spark, root, m, m.entries.filter(e => added(e.path)), Nil)
   }
 
   /** ROW-LEVEL change feed (CDC): the changes between `from`
@@ -2555,7 +2514,7 @@ object Manifest {
     val ins = m.entries.filter(e => added(e.path))
       .groupBy(_.dataSeq).toSeq.sortBy(_._1)
       .map { case (v, ents) =>
-        stamp(relationOver(spark, root, m, ents), "insert", v) }
+        stamp(scan(spark, root, m, ents, Nil), "insert", v) }
     // deletes: key files committed inside the window, keys populated,
     // every non-key column NULL at its declared type
     val dels = m.deletes.filter(d => d.seq > from && d.seq <= hi)

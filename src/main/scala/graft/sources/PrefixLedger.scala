@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * md5 keys, modulo buckets for integer keys). A wave's keys determine
   * — before any ledger IO — exactly which buckets can possibly hold a
   * collision (equal keys share every prefix), so the probe reads ONLY
-  * those buckets' files via ManifestFileIndex partition pruning. Probe
+  * those buckets' files via the scan's partition pruning. Probe
   * cost is Σ(touched buckets' sizes): with bucket count sized so that
   * corpus/buckets stays roughly constant (the packBestFit numSegs
   * rule applied to storage), per-wave admission cost tracks WAVE size,

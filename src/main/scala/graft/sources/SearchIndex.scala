@@ -19,7 +19,7 @@ import graft.operators.Search
   * LAYOUT — one manifest table, hash-partitioned by `bucket` =
   * crc32(token) mod B ∈ [0, B): rows (token, id, tf, dl[, ps]). A term
   * lookup prunes to its term buckets via manifest partition pruning
-  * (real `PartitionFilters`), so query cost is O(postings of the
+  * (pruned at planning), so query cost is O(postings of the
   * query's terms), independent of corpus size. The document's analyzed
   * length `dl` is DENORMALIZED onto every one of its postings rows —
   * the Lucene norms-with-postings move — so BM25 needs NO doc-length
@@ -435,7 +435,7 @@ object SearchIndex {
   }
 
   /** The pruned postings frame for a literal term set: ONLY the terms'
-    * buckets are planned (`PartitionFilters`), every row already
+    * buckets' files are planned, every row already
     * carries its document's dl — the one scan every serving query is
     * built from. */
   private def prunedPostings(spark: SparkSession, indexRoot: String,
@@ -713,8 +713,8 @@ object SearchIndex {
     * cannot prune a PREFIX predicate, so if completion suggest is hot,
     * materialize the per-token aggregates (token, freq, docs) AS THEIR
     * OWN manifest table partitioned by the token's first character —
-    * a prefix lookup then prunes to one partition via real
-    * `PartitionFilters` and scans only that character's share of the
+    * a prefix lookup then prunes to one partition at planning and
+    * scans only that character's share of the
     * vocabulary. The twin is |vocabulary|-sized (already aggregated),
     * so building or rebuilding it costs one scan of the postings
     * buckets — nothing corpus-sized — and `sug.base` records the index
@@ -870,7 +870,7 @@ object SearchIndex {
     * [[matchFuzzy]] by construction (same score arithmetic over the
     * same matched variants), but the plan is fully pruned:
     *  1. candidate lookup scans ONLY the query's gram partitions
-    *     (literal `gp` values → real `PartitionFilters`) with the
+    *     (literal `gp` values → partition pruning) with the
     *     shared-gram lower bound (distinct grams − 3·maxEdits) and the length
     *     window as cheap pre-filters, levenshtein as the verifier —
     *     when the bound is vacuous (short terms) it falls back to the

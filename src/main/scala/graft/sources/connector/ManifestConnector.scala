@@ -62,14 +62,21 @@ import graft.sources.Manifest
   *
   * Scope: data columns are whatever Spark's parquet reader and writer
   * carry, nested arrays and maps included. Partition columns are typed
-  * from the path values by [[Manifest.partValue]] (the V1 reader's
-  * decoder), the inverse of the writer's formatting. Schema = the
+  * from the path values by [[Manifest.partValue]], the inverse of the
+  * writer's formatting. Schema = the
   * manifest's schema header (the layer's evolution contract, q112):
   * columns absent from older commits' files read back as NULL.
   *
+  * This is the one read path of the format: [[Manifest.read]] and its
+  * siblings plan the same scan over a snapshot's files
+  * ([[ManifestConnector.resolved]]).
+  *
   * 100 TB posture: planning reads one manifest (O(files) driver text,
-  * schema from its header); each task reads exactly one data file. No
-  * shuffle, no driver data IO. Every file decodes through Spark's own
+  * schema from its header) and plans one input partition per data
+  * file. An unpartitioned scan runs each file as its own task; a
+  * partitioned scan reports [[KeyGroupedPartitioning]], so Spark runs
+  * each partition value's files as one task. No shuffle, no driver data
+  * IO. Every file decodes through Spark's own
   * vectorized parquet reader ([[ManifestColumnarReader]]) as
   * `ColumnarBatch`es; scans with pending merge-on-read deletes consume
   * the same batches through a row view ([[ManifestRowView]]).
@@ -168,9 +175,9 @@ object ManifestConnector {
           d.keyCols.toArray)).toArray
   }
 
-  /** Resolve root+version → frozen file list, partition layout and
-    * schema, from the manifest alone: one manifest read, zero
-    * filesystem listings or footer reads. */
+  /** Resolve the load options (root plus at most one of version,
+    * timestampAsOf, stage, branch) to a snapshot, then to its
+    * [[resolved]] scan input with the snapshot's pending deletes. */
   def resolve(spark: SparkSession, opts: Map[String, String]): Resolved = {
     val root = opts.getOrElse("path", throw new IllegalArgumentException(
       "graft-manifest needs a load(path) pointing at a manifest table root"))
@@ -204,12 +211,23 @@ object ManifestConnector {
             s"$root has no committed manifest version"))
         Manifest.snapshotMeta(spark, root, version)
     }
-    val version = snap.version
+    resolved(root, snap, snap.entries, snap.deletes, branchOpt)
+  }
 
+  /** The frozen scan input over `entries` of snapshot `snap`, with the
+    * merge-on-read `deletes` its tasks apply: file list, partition
+    * layout and schema from the manifest alone, zero filesystem
+    * listings or footer reads. Every manifest read plans through here:
+    * [[resolve]] for `load(root)`, [[Manifest.read]] and its siblings
+    * for a snapshot's file subset. */
+  def resolved(root: String, snap: Manifest.SnapshotMeta,
+               entries: Seq[Manifest.FileEntry],
+               deletes: Seq[Manifest.DeleteEntry],
+               branch: Option[String] = None): Resolved = {
     // sizes come straight from the manifest (files are immutable, so
     // the commit-time length is exact) — zero filesystem calls
-    val files = snap.entries.map { e =>
-      FileInfo(graft.sources.Manifest.absEntryPath(root, e.path), e.size,
+    val files = entries.map { e =>
+      FileInfo(Manifest.absEntryPath(root, e.path), e.size,
         Manifest.partValuesOf(e.path), e.fileStats, e.dataSeq)
     }
     // schema header = zero parquet footer reads at planning time
@@ -222,13 +240,13 @@ object ManifestConnector {
     val layouts = files.map(_.partValues.map(_._1)).distinct
     require(layouts.isEmpty || layouts == Seq(partCols),
       s"graft-manifest: mixed partition layouts — files of $root " +
-        s"v$version are laid out as " +
+        s"v${snap.version} are laid out as " +
         layouts.map(_.mkString("[", ",", "]")).mkString(" vs ") +
         s" but the manifest declares ${partCols.mkString("[", ",", "]")}")
     val dataSchema = StructType(
       full.filterNot(f => partCols.contains(f.name)))
-    Resolved(root, version, files, partCols, dataSchema, full,
-      snap.deletes, branchOpt, snap.meta)
+    Resolved(root, snap.version, files, partCols, dataSchema, full,
+      deletes, branch, snap.meta)
   }
 
   /** Can this filter be decided from partition values alone (and is it
@@ -1141,6 +1159,19 @@ final class ManifestScan(res: ManifestConnector.Resolved,
   /** Post-runtime-filter file count (= planned when no filter fired). */
   def runtimeFileCount: Int = runtimeFiles.length
 
+  /** Files the last [[planInputPartitions]] handed to tasks: data files
+    * after runtime filtering, CDC data and delete-key files, none for a
+    * pushed aggregate. Spark shows it as the scan's `numFiles` metric. */
+  @volatile private var filesPlanned = 0L
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new ManifestNumFilesMetric)
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(ManifestNumFilesMetric.value(filesPlanned))
+
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (aggPlan.isDefined || cdc) Array.empty
@@ -1243,8 +1274,8 @@ final class ManifestScan(res: ManifestConnector.Resolved,
         s" pushedAggregates=[${a._1.fieldNames.mkString(", ")}]")
         .getOrElse("")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    aggPlan match {
+  override def planInputPartitions(): Array[InputPartition] = {
+    val parts: Array[InputPartition] = aggPlan match {
       // fully-pushed aggregate: the row is already computed from the
       // manifest zone maps — one partition, zero file IO
       case Some((_, rows)) => Array(AggRowInputPartition(rows))
@@ -1292,6 +1323,9 @@ final class ManifestScan(res: ManifestConnector.Resolved,
             res.deleteSpecsFor(f), keys): InputPartition
         }.toArray
     }
+    filesPlanned = parts.count(_.isInstanceOf[ManifestInputPartition])
+    parts
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     mkReaderFactory()
@@ -1464,6 +1498,23 @@ object ManifestScan {
           perFile.map(_._2.toBoolean).max))
       case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
+}
+
+/** The scan's `numFiles` driver metric: files planned into tasks. */
+final class ManifestNumFilesMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ManifestNumFilesMetric.Name
+  override def description(): String = "number of files planned"
+}
+
+object ManifestNumFilesMetric {
+  val Name = "numFiles"
+  def value(n: Long)
+      : org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = Name
+      override def value(): Long = n
+    }
 }
 
 /** One merge-on-read delete file applying to a task's data file: the

@@ -5,14 +5,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetInputFormat
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, VectorizedParquetRecordReader}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 import org.apache.spark.sql.sources.{Filter => SFilter}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -36,6 +37,9 @@ import graft.sources.Manifest
   *    `org.apache.spark.sql.parquet.row.requested_schema` conf key; with
   *    none requested (partition-only projections, `count(*)`) batches
   *    carry row counts and constants only;
+  *  - '''one open per file''': the file is opened and its footer read
+  *    once, and the reader is handed that stream and footer, as Spark's
+  *    own vectorized parquet reader does;
   *  - '''row-group skipping''': pushed data filters translate through
   *    Spark's `ParquetFilters` against THIS file's schema and apply at
   *    row-group granularity; record-level evaluation stays Spark's
@@ -77,29 +81,39 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
     conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
     conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
     conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
-    if (dataFilters.nonEmpty) {
-      val fileSchema = {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-        try r.getFileMetaData.getSchema finally r.close()
-      }
-      // IN lists up to parquetTranslatable's cap push as OR-ed equalities
-      val filters = new ParquetFilters(fileSchema, true, true, true, true,
-        32, false, RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
-      dataFilters.toSeq.flatMap(filters.createFilter)
-        .reduceOption(FilterApi.and)
-        .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
-    }
+    val len = if (part.size > 0) part.size
+      else path.getFileSystem(conf).getFileStatus(path).getLen
+    // one open, one footer read: the stream stays open for the reader
+    val opened = ParquetFooterReader.openFileAndReadFooter(conf,
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0, len,
+        Array.empty[String], 0L, len), true)
+    val in = opened.inputStream()
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, /* capacity = */ 4096)
-    val len = if (part.size > 0) part.size
-      else path.getFileSystem(conf).getFileStatus(path).getLen
-    // the reader downcasts to the OLD mapred FileSplit (which extends
-    // the mapreduce one), so construct that flavor
-    r.initialize(
-      new org.apache.hadoop.mapred.FileSplit(path, 0, len,
-        Array.empty[String]),
-      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    try {
+      if (dataFilters.nonEmpty) {
+        // IN lists up to parquetTranslatable's cap push as OR-ed
+        // equalities
+        val filters = new ParquetFilters(
+          opened.footer.getFileMetaData.getSchema, true, true, true, true,
+          32, false, RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+        dataFilters.toSeq.flatMap(filters.createFilter)
+          .reduceOption(FilterApi.and)
+          .foreach(p => ParquetInputFormat.setFilterPredicate(conf, p))
+      }
+      // the reader downcasts to the OLD mapred FileSplit (which extends
+      // the mapreduce one), so construct that flavor
+      r.initialize(
+        new org.apache.hadoop.mapred.FileSplit(path, 0, len,
+          Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Option(opened.inputFile), Option(in), Option(opened.footer))
+    } catch {
+      case e: Throwable =>
+        try r.close() finally in.close()
+        throw e
+    }
     r.initBatch(StructType(constFields), new GenericInternalRow(
       constFields.map(f => Manifest.partValue(carried(f.name), f.dataType))
         .toArray[Any]))
@@ -140,8 +154,8 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
   * [[graft.sources.Manifest.deleteByKeys]]. The delete key columns are
   * read even when pruned from the projection (extraction needs them,
   * emission does not); a row is skipped when ANY applicable delete
-  * file holds its key tuple, null-safe (a NULL key value matches NULL),
-  * matching the V1 read path's `<=>` anti-join. Spark needs one mode
+  * file holds its key tuple, null-safe (a NULL key value matches NULL,
+  * as `<=>` does). Spark needs one mode
   * per scan, so every file of such a scan reads through this view. */
 final class ManifestRowView(part: ManifestInputPartition,
     confEntries: Array[(String, String)], required: StructType,
