@@ -1170,7 +1170,10 @@ final class ManifestScan(res: ManifestConnector.Resolved,
 
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ManifestNumFilesMetric.value(filesPlanned))
+    Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = "numFiles"
+      override def value(): Long = filesPlanned
+    })
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -1503,18 +1506,8 @@ object ManifestScan {
 /** The scan's `numFiles` driver metric: files planned into tasks. */
 final class ManifestNumFilesMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = ManifestNumFilesMetric.Name
+  override def name(): String = "numFiles"
   override def description(): String = "number of files planned"
-}
-
-object ManifestNumFilesMetric {
-  val Name = "numFiles"
-  def value(n: Long)
-      : org.apache.spark.sql.connector.metric.CustomTaskMetric =
-    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-      override def name(): String = Name
-      override def value(): Long = n
-    }
 }
 
 /** One merge-on-read delete file applying to a task's data file: the

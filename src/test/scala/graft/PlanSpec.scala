@@ -236,8 +236,8 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("served search plans ONLY term-bucket partitions: no " +
-    "bucket-range (doc-length) leg anywhere") {
+  test("served search plans ONLY term-bucket partitions: real " +
+    "PartitionFilters, and no bucket-range (doc-length) leg anywhere") {
     import graft.sources.{Manifest, SearchIndex}
     val root = "file://" + java.nio.file.Files
       .createTempDirectory("graft-plan-idx").toString
