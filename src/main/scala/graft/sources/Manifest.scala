@@ -87,10 +87,9 @@ object Manifest {
   /** One merge-on-read equality-delete file: `path` holds the DISTINCT
     * key tuples (columns `keyCols`, table-typed) whose rows are deleted
     * from every data file with `dataSeq < seq`. Each scan task drops
-    * the matching rows of its file, null-safe;
-    * [[rewriteDeletes]]/[[compact]] materialize
-    * it away. O(deleted keys) to delete from a 100 TB table — no data
-    * rewrite on the DELETE path at all. */
+    * the matching rows of its file, null-safe; [[rewriteDeletes]] /
+    * [[compact]] materialize it away. O(deleted keys) to delete from a
+    * 100 TB table — no data rewrite on the DELETE path at all. */
   final case class DeleteEntry(path: String, size: Long,
                                seq: Long, keyCols: Seq[String])
 
@@ -1879,8 +1878,9 @@ object Manifest {
     * (copy-on-write [[deleteWhere]]). Each read task drops the deleted
     * rows of its file as it streams; rows appended AFTER this commit
     * are never retro-deleted (file sequence numbers), so
-    * delete-then-reinsert works. Run [[rewriteDeletes]] (or [[compact]]) periodically to
-    * fold accumulated delete files back into plain data files.
+    * delete-then-reinsert works. Run [[rewriteDeletes]] (or
+    * [[compact]]) periodically to fold accumulated delete files back
+    * into plain data files.
     * The versioned analog of the reference's keyed item delete
     * (reference: python-data-ingestions/index-data-lambda.py:164-172),
     * at a cost model that survives its 100 TB restatement. */

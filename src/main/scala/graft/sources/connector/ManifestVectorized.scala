@@ -7,11 +7,11 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetInputFormat
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.LegacyBehaviorPolicy
@@ -155,8 +155,8 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
   * read even when pruned from the projection (extraction needs them,
   * emission does not); a row is skipped when ANY applicable delete
   * file holds its key tuple, null-safe (a NULL key value matches NULL,
-  * as `<=>` does). Spark needs one mode
-  * per scan, so every file of such a scan reads through this view. */
+  * as `<=>` does). Spark needs one mode per scan, so every file of such
+  * a scan reads through this view. */
 final class ManifestRowView(part: ManifestInputPartition,
     confEntries: Array[(String, String)], required: StructType,
     dataFilters: Array[SFilter], limit: Int, tableSchema: StructType)
