@@ -533,8 +533,13 @@ object ManifestConnector {
 
   private def simpleValue(v: Any): Boolean = v match {
     case null => false
+    // a float/double zero stays residual only: parquet's dictionary
+    // filter orders -0.0 below 0.0 (`d = -0.0` dropped a row group
+    // holding 0.0), Spark compares them equal
+    case x: Float  => x != 0f
+    case x: Double => x != 0d
     case _: Boolean | _: Int | _: Long | _: Short | _: Byte |
-         _: Float | _: Double | _: String => true
+         _: String => true
     case _ => false
   }
 }
