@@ -3,10 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{MinHashSignature, SimHash64}
 
-/** SQL-surface registration of graft's native expressions, via the
+/** graft's session extensions: the planner and optimizer rules of
+  * `graft.plans`, a physical rule that keeps generated code free of
+  * primitive literal values ([[graft.plans.BindPrimitiveLiterals]]),
+  * and SQL-surface registration of graft's native expressions, via the
   * standard extension point:
   *
   * {{{
@@ -48,6 +53,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Optimizer rule: auto-prepend the cheap size-ratio prune to
     // jaccard-threshold filters (strictly implied, evaluation-order win).
     ext.injectOptimizerRule(_ => graft.plans.JaccardPruneRule)
+    // Physical rule before CollapseCodegenStages (every plan, every
+    // adaptive stage): primitive literals in filters and projections
+    // bind through `references`, so a read with a new key reuses the
+    // compiled stage of its plan shape.
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.BindPrimitiveLiterals
+    })
     ext.injectFunction((
       new FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinHashSignature].getName,

@@ -3,22 +3,37 @@ package graft
 import java.sql.{Date, Timestamp}
 import java.time.Instant
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.BoundLiteral
 import graft.sources.Manifest
+import graft.sources.connector.ManifestCatalog
 
-/** Filters and projections over primitive literals (long, int, double,
-  * date, timestamp, boolean) read through a manifest table return the
-  * rows a plain Scala model of Spark's comparison semantics selects:
-  * extreme longs, NaN (equal to itself, above every other double),
-  * -0.0 (equal to 0.0), null-safe equality, short IN lists and NULL
-  * literals. */
+/** Primitive literals in filters and projections
+  * ([[graft.plans.BindPrimitiveLiterals]]):
+  *
+  *  - filters and projections over long, int, double, date, timestamp
+  *    and boolean literals read through a manifest table return the
+  *    rows a plain Scala model of Spark's comparison semantics selects:
+  *    extreme longs, NaN (equal to itself, above every other double),
+  *    -0.0 (equal to 0.0), null-safe equality, short IN lists and NULL
+  *    literals;
+  *  - after one warm call per plan shape, a call with a never-seen
+  *    literal compiles no class, through `Manifest.read`, catalog SQL
+  *    and an aggregate with an exchange;
+  *  - the executed plan still prints the literal's value. */
 class CodegenReuseSpec extends SparkSpec {
 
-  private def newRoot() = "file://" + java.nio.file.Files
-    .createTempDirectory("graft-codegen").toString + "/t"
+  private val warehouse = "file://" + java.nio.file.Files
+    .createTempDirectory("graft-codegen").toString
+
+  spark.conf.set("spark.sql.catalog.reusecat",
+    classOf[ManifestCatalog].getName)
+  spark.conf.set("spark.sql.catalog.reusecat.root", warehouse)
 
   private def day(s: String) = Date.valueOf(s)
   private def at(s: String) = Timestamp.from(Instant.parse(s))
@@ -46,8 +61,9 @@ class CodegenReuseSpec extends SparkSpec {
     StructField("d", DoubleType), StructField("dt", DateType),
     StructField("ts", TimestampType), StructField("b", BooleanType)))
 
+  /** The [[rows]] table, also reachable as `reusecat.db.lits`. */
   private lazy val root: String = {
-    val r = newRoot()
+    val r = s"$warehouse/db/lits"
     Manifest.init(spark, r, spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema).repartition(2))
     r
@@ -142,5 +158,40 @@ class CodegenReuseSpec extends SparkSpec {
         else 0))
       assert(g.getLong(4) == 9L)
     }
+  }
+
+  /** Janino compiles (driver and tasks) while `f` runs. */
+  private def compiles(f: => Any): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("a read with a never-seen long key compiles nothing once its " +
+    "plan shape is warm") {
+    def read(k: Long) =
+      Manifest.read(spark, root).filter(col("l") === k).collect()
+    def sql(k: Long) =
+      spark.sql(s"SELECT * FROM reusecat.db.lits WHERE l = $k").collect()
+    def range(lo: Long) =
+      Manifest.read(spark, root).filter(col("l").between(lo, lo + 40L))
+        .count()
+    // warm calls return rows too: a read that prunes every file plans
+    // another shape, and the first collected row compiles its converter
+    assert(read(0L).length == 1)
+    assert(compiles(assert(read(7L).length == 2)) == 0)
+    assert(sql(-1L).length == 1)
+    assert(compiles(assert(sql(42L).length == 1)) == 0)
+    assert(range(-5L) == 4)
+    assert(compiles(assert(range(0L) == 3)) == 0)
+  }
+
+  test("the executed plan prints the bound literal's value") {
+    val q = Manifest.read(spark, root).filter(col("l") === 123456789L)
+    val plan = q.queryExecution.executedPlan
+    val bound = plan.collect { case f: FilterExec =>
+      f.condition.collect { case b: BoundLiteral => b } }.flatten
+    assert(bound.map(_.lit.value) == Seq(123456789L), plan.toString)
+    assert(plan.toString.contains("= 123456789)"), plan.toString)
   }
 }
