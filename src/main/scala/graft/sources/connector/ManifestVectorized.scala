@@ -39,7 +39,10 @@ import graft.sources.Manifest
   *    carry row counts and constants only;
   *  - '''one open per file''': the file is opened and its footer read
   *    once, and the reader is handed that stream and footer, as Spark's
-  *    own vectorized parquet reader does;
+  *    own vectorized parquet reader does. The open waits for the first
+  *    `next()`: Spark takes the task's bytes-read baseline after the
+  *    reader is created, so a footer read in the constructor went
+  *    uncounted;
   *  - '''row-group skipping''': pushed data filters translate through
   *    Spark's `ParquetFilters` against THIS file's schema and apply at
   *    row-group granularity; record-level evaluation stays Spark's
@@ -66,7 +69,9 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
     required.fields.partition(f => carried.contains(f.name))
   private val path = new Path(part.path)
 
-  private val reader: VectorizedParquetRecordReader = {
+  private var isOpen = false
+
+  private lazy val reader: VectorizedParquetRecordReader = {
     conf.set("parquet.read.support.class",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
     // nullable request: a column a file predates reads NULL, never
@@ -118,13 +123,14 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
       constFields.map(f => Manifest.partValue(carried(f.name), f.dataType))
         .toArray[Any]))
     r.enableReturningBatches()
+    isOpen = true
     r
   }
 
   // the reader's batch is [dataFields..., constFields...]; re-expose the
   // SAME vectors in the scan's declared column order
-  private val inner: ColumnarBatch = reader.resultBatch()
-  private val batch: ColumnarBatch = new ColumnarBatch(required.fields.map {
+  private lazy val inner: ColumnarBatch = reader.resultBatch()
+  private lazy val batch: ColumnarBatch = new ColumnarBatch(required.fields.map {
     f =>
       val d = dataFields.indexWhere(_.name == f.name)
       inner.column(if (d >= 0) d
@@ -146,7 +152,7 @@ final class ManifestColumnarReader(part: ManifestInputPartition,
 
   override def get(): ColumnarBatch = batch
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (isOpen) reader.close()
 }
 
 /** The row view over [[ManifestColumnarReader]] batches for scans with
@@ -168,8 +174,9 @@ final class ManifestRowView(part: ManifestInputPartition,
 
   /** Per distinct key-column tuple: its ordinals in [[readSchema]],
     * types, and the loaded key sets of every delete file keyed on it.
-    * Loading happens once per task (cached JVM-wide per path). */
-  private val deleteSets: Array[(Array[Int], Array[DataType],
+    * Loading happens once per task (cached JVM-wide per path), on the
+    * first `next()` like the data file's open. */
+  private lazy val deleteSets: Array[(Array[Int], Array[DataType],
       Array[java.util.HashSet[List[Any]]])] =
     part.deletes.groupBy(_.keyCols.toSeq).map { case (kc, specs) =>
       val types = kc.map(readSchema(_).dataType).toArray

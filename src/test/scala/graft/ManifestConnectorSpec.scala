@@ -705,4 +705,25 @@ class ManifestConnectorSpec extends SparkSpec {
       assert(attr.exists(_.max.contains(100L)), s"got $attr")
     } finally spark.conf.set("spark.sql.cbo.enabled", "false")
   }
+
+  test("every task of a full connector scan reports input bytes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+    val root = fixture()
+    val bytes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        bytes.add(e.taskMetrics.inputMetrics.bytesRead)
+      // task ends reach a listener before their job's end
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = done.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Manifest.read(spark, root).collect().length == 200)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val perTask = bytes.asScala.toSeq
+    assert(perTask.nonEmpty && perTask.forall(_ > 0L), perTask)
+  }
 }
