@@ -15,11 +15,14 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.sql.codegen.cache.maxEntries` (default 100): a session
   *    that executes hundreds of distinct physical plans — this bench's
-  *    256 queries, the multi-wave streaming pipelines whose per-wave
-  *    literals (batch ids, gate scalars) produce fresh generated
-  *    source every wave — blows through a 100-entry LRU and re-runs
-  *    Janino constantly. Stack-sampling q246 showed ~37% of active
-  *    executor samples inside `CodeGenerator.compile`. 8192 entries
+  *    256 queries, the multi-wave streaming pipelines' per-wave plans —
+  *    blows through a 100-entry LRU and re-runs Janino constantly.
+  *    Primitive literals in filters and projections no longer make
+  *    fresh source (graft.plans.BindPrimitiveLiterals binds them
+  *    through the generated class's references), but values inlined
+  *    by other operators and the distinct plan shapes still do.
+  *    Stack-sampling q246 showed ~37% of active executor samples
+  *    inside `CodeGenerator.compile`. 8192 entries
   *    (~a few KB of bytecode each, bounded tens of MB) keeps every
   *    warm plan cached; measured q246 median 21.8 → 16.6 s combined
   *    with the scratch move below. Production serving sessions have

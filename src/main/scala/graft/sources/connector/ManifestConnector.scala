@@ -1217,10 +1217,13 @@ final class ManifestScan(res: ManifestConnector.Resolved,
     * so that with `spark.sql.sources.v2.bucketing.enabled` a join or
     * aggregation keyed on the partition columns skips its shuffle
     * entirely (storage-partitioned join). Spark groups the per-file
-    * input partitions by [[HasPartitionKey]] itself; with the conf off
-    * nothing changes. At 100 TB a co-partitioned fact-fact join
-    * shuffling neither side is the single largest cost this table
-    * format can delete. */
+    * input partitions by [[HasPartitionKey]] itself. Spark 4.1 enables
+    * that conf by default, so EVERY partitioned scan, a plain read
+    * included, runs all of a partition value's files as one task: fewer
+    * tasks than file packing on a value with many small files, more on
+    * an index scan that probes many single-file cells. At 100 TB a
+    * co-partitioned fact-fact join shuffling neither side is the single
+    * largest cost this table format can delete. */
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     val partCols = res.partCols
