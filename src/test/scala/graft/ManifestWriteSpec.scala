@@ -128,30 +128,50 @@ class ManifestWriteSpec extends SparkSpec {
   // DELETE and MERGE rewrite the partitions they touch and drop those
   // partitions' old files by matching the touched values against the
   // file paths: a whole-second timestamp must match the path the
-  // writer formatted, or the old files survive beside their rewrite
+  // writer formatted, or the old files survive beside their rewrite.
+  // SQL UPDATE and MERGE find their groups through Spark's runtime
+  // group filter, whose values must match the paths the same way
   test("DML on DATE and TIMESTAMP partitions replaces the touched partition") {
-    val base = spark.range(0, 12, 1, 2).selectExpr("id",
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi, 1, 2).selectExpr("id",
       "date_add(DATE'2024-02-28', CAST(id % 3 AS INT)) AS d",
-      "timestamp_seconds(1700000000L + (id % 3) * 3600L) AS ts", "id AS v")
-    for (part <- Seq("d", "ts")) {
+      "timestamp_seconds(1700000000L + (id % 3) * 3600L) AS ts",
+      "CAST(id % 3 AS INT) AS i", "id % 2 = 0 AS b",
+      "CAST(id % 3 AS DECIMAL(10, 2)) AS dec", "id AS v")
+    val base = rows(0, 12)
+    for (part <- Seq("d", "ts", "i", "b", "dec")) {
       // one catalog per table: a session caches a catalog by name
-      val root = catalogTable(s"dtdml_$part")
+      val cat = s"dtdml_$part"
+      val root = catalogTable(cat)
       Manifest.init(spark, root, base, Seq(part))
       def check(what: String, want: Set[(Long, Long)]): Unit =
         for (read <- Seq(Manifest.read(spark, root, None),
                          spark.read.format("graft-manifest").load(root))) {
           val got = read.select("id", "v").as[(Long, Long)].collect()
           assert(got.length == want.size && got.toSet == want,
-            s"$what, partitioned by $part")
+            s"$what, partitioned by $part: ${got.sorted.mkString(" ")}")
         }
       val all = (0L until 12L).map(i => i -> i)
-      spark.sql(s"DELETE FROM dtdml_$part.db.t WHERE id = 0")
+      spark.sql(s"DELETE FROM $cat.db.t WHERE id = 0")
       check("SQL DELETE", all.filter(_._1 != 0L).toSet)
       val updates = base.filter("id IN (1, 2)").selectExpr("id", "d", "ts",
-        "v + 100 AS v")
+        "i", "b", "dec", "v + 100 AS v")
       Manifest.mergeInto(spark, root, updates, "id", Seq(part))
-      check("mergeInto", all.filter(_._1 != 0L).map {
-        case (i, v) => i -> (if (i <= 2L) v + 100 else v) }.toSet)
+      val merged = all.filter(_._1 != 0L).map {
+        case (i, v) => i -> (if (i <= 2L) v + 100 else v) }
+      check("mergeInto", merged.toSet)
+      spark.sql(s"UPDATE $cat.db.t SET v = v + 100 WHERE id = 3")
+      val updated = merged.map {
+        case (i, v) => i -> (if (i == 3L) v + 100 else v) }
+      check("SQL UPDATE", updated.toSet)
+      base.filter("id IN (4, 5)").union(rows(12, 13))
+        .createOrReplaceTempView("dml_src")
+      spark.sql(s"""MERGE INTO $cat.db.t t USING dml_src s ON t.id = s.id
+        |WHEN MATCHED AND s.id = 5 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET v = t.v + 1000
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      check("SQL MERGE", (updated.filter(_._1 != 5L).map {
+        case (i, v) => i -> (if (i == 4L) v + 1000 else v) } :+
+        (12L -> 12L)).toSet)
     }
   }
 
