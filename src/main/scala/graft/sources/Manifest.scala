@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
+import org.apache.spark.sql.sources.{In, IsNull, Or, Filter => SFilter}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.sources.connector.{ManifestConnector, ManifestTable, ManifestWriter}
@@ -2026,19 +2027,17 @@ object Manifest {
     * key can actually be PRESENT in it — otherwise its delete-applied
     * post-image is byte-for-byte itself, and rewriting it is pure
     * wasted IO (at 100 TB, an erasure of a handful of keys would
-    * otherwise rewrite the whole corpus). The probe is the SAME
-    * conservative machinery point lookups use at planning: zone maps
-    * ([[ManifestStats.mayEqual]], [[ManifestStats.mayBeNull]]) and,
-    * where built, the per-file Bloom sidecars ([[ManifestBlooms]] —
-    * min/max envelopes prune nothing on unclustered keys, blooms do),
-    * evaluated against the delete files' collected distinct keys.
-    * Bounded: a delete set past `cap` distinct keys, or candidates ×
-    * keys past the compare budget, skips narrowing and rewrites every
-    * seq-hit file — never unsound, and the collect itself is one tiny
-    * job over the delete files (already O(deleted keys) by contract).
-    * Multi-column keys probe per column: a file is spared only when
-    * some key column can match NO deleted value, which row-wise
-    * conjunction makes a sound superset of the true hit set. */
+    * otherwise rewrite the whole corpus). The probe is the rule every
+    * read prunes files by ([[ManifestConnector.keepFiles]], under its
+    * group polarity), over one filter per key column built from the
+    * delete files' collected distinct keys. Bounded: a delete set past
+    * `cap` distinct keys, or candidates × keys past the compare budget,
+    * skips narrowing and rewrites every seq-hit file — never unsound,
+    * and the collect itself is one tiny job over the delete files
+    * (already O(deleted keys) by contract). Multi-column keys probe per
+    * column: a file is spared only when some key column can match NO
+    * deleted value, which row-wise conjunction makes a sound superset
+    * of the true hit set. */
   private def pruneDeleteHits(spark: SparkSession, root: String,
                               m: SnapshotMeta, cand: Seq[FileEntry],
                               cap: Int = 10000)
@@ -2053,33 +2052,21 @@ object Manifest {
     if (collected.exists(_._3.length > cap)) return (cand, Nil)
     val totalKeys = collected.map(_._3.length.toLong).sum
     if (cand.size.toLong * totalKeys > 50000000L) return (cand, Nil)
-    val probes = collected.map { case (kc, ds, rows) =>
-      val colVals: Seq[(String, Array[Any])] = kc.zipWithIndex.map {
-        case (c, i) => c -> rows.map(_.get(i)).distinct.toArray
+    // `Or(In, IsNull)` where a deleted key is NULL
+    val res = ManifestConnector.resolved(root, m, cand, Nil)
+    val hit = collected.flatMap { case (kc, ds, rows) =>
+      val keys = kc.zipWithIndex.map { case (c, i) =>
+        val vs = rows.map(_.get(i)).distinct
+        val in: SFilter = In(c, vs.filter(_ != null))
+        if (vs.contains(null)) Or(in, IsNull(c)) else in
       }
-      val ins = colVals.collect {
-        case (c, vs) if vs.nonEmpty && !vs.contains(null) =>
-          org.apache.spark.sql.sources.In(c, vs)
-            : org.apache.spark.sql.sources.Filter
-      }
-      val pruner =
-        if (ins.isEmpty) None
-        else ManifestBlooms.prunerFor(root, m.schema, m.meta, ins.toArray)
-      (colVals, pruner, ds.map(_.seq))
-    }
-    cand.partition { e =>
-      probes.exists { case (colVals, pruner, seqs) =>
-        seqs.exists(_ > e.dataSeq) && {
-          val zoneMay = e.fileStats.forall(fs =>
-            colVals.forall { case (c, vs) =>
-              vs.exists(v =>
-                if (v == null) ManifestStats.mayBeNull(fs, c)
-                else ManifestStats.mayEqual(fs, c, v))
-            })
-          zoneMay && pruner.forall(_.mayMatch(e.path))
-        }
-      }
-    }
+      val seq = ds.map(_.seq).max
+      ManifestConnector.keepFiles(res, res.files.filter(_.seq < seq), keys,
+        group = true)
+    }.map(_.absPath).toSet
+    val (hits, spared) =
+      cand.zip(res.files).partition(p => hit(p._2.absPath))
+    (hits.map(_._1), spared.map(_._1))
   }
 
   /** Bin-packing compaction (the lakehouse OPTIMIZE): rewrite files

@@ -267,19 +267,55 @@ object ManifestConnector {
     case _ => false
   }
 
+  /** The files of `files` that may hold a row matching every filter —
+    * the one pruning rule of batch reads, runtime filters, stream
+    * batches and row-level DML groups. Each filter is classified once:
+    *
+    *  - partition-only, of a shape [[isPartitionFilter]] accepts: Kleene
+    *    three-valued [[evalPartitionFilter]] on the file's partition
+    *    values. Under READ polarity (`group = false`) the scan consumes
+    *    the filter (Spark never re-evaluates it), so a file survives
+    *    only where it is definitely TRUE: UNKNOWN drops it, as WHERE
+    *    drops a NULL (two-valued logic would keep a
+    *    `__HIVE_DEFAULT_PARTITION__` file under `part <> 'a'`). Under
+    *    GROUP polarity (`group = true`, the files a row-level DML
+    *    rewrites whole) a file is dropped only where the filter is
+    *    definitely FALSE: a kept group is rewritten verbatim, a dropped
+    *    one must provably hold no matching row.
+    *  - data-only: the zone map ([[mayMatch]]) and the bloom sidecars
+    *    ([[graft.sources.ManifestBlooms]]) drop a file only when no row
+    *    of it can match, which is sound under both polarities.
+    *  - anything else (columns of both kinds, no column, a partition
+    *    shape we do not evaluate): keeps the file. */
+  private[graft] def keepFiles(res: Resolved, files: Seq[FileInfo],
+                               filters: Seq[SFilter],
+                               group: Boolean): Seq[FileInfo] = {
+    val partCols = res.partCols.toSet
+    val (part, rest) = filters.partition(isPartitionFilter(_, partCols))
+    val data = rest.filter(f => f.references.nonEmpty &&
+      !f.references.exists(partCols.contains))
+    // None unless the table advertises blooms and a data filter is
+    // bloom-decidable: the common case costs no file system call
+    val blooms = graft.sources.ManifestBlooms.prunerFor(res.root,
+      res.dataSchema, res.tableMeta, data.toArray)
+    val relPrefix = s"${res.root}/"
+    files.filter { f =>
+      lazy val pv = f.partValues.toMap
+      part.forall { flt =>
+        val v = evalPartitionFilter(flt, pv)
+        if (group) !v.contains(false) else v.contains(true)
+      } && f.stats.forall(st => data.forall(mayMatch(_, st))) &&
+        blooms.forall(_.mayMatch(f.absPath.stripPrefix(relPrefix)))
+    }
+  }
+
   /** Kleene three-valued evaluation of a partition filter against one
     * file's partition values: `Some(true/false)` when decided, `None`
-    * when the comparison is NULL (unknown). Partition filters are fully
-    * CONSUMED by the pushdown (never re-evaluated by Spark), so pruning
-    * must implement exact WHERE semantics: a file survives only on
-    * `Some(true)` — unknown drops it, exactly as a WHERE clause drops
-    * NULL rows. Two-valued evaluation here would keep a
-    * `__HIVE_DEFAULT_PARTITION__` file under `Not(EqualTo)` (NOT of
-    * "false") where SQL's NULL != v is unknown → row dropped. Filter
-    * values compare as [[Manifest.partString]] text, the writer's own
-    * path rule, so a whole-second timestamp matches its path. */
-  def evalPartitionFilter(f: SFilter,
-                          pv: Map[String, String]): Option[Boolean] =
+    * when the comparison is NULL (unknown). Filter values compare as
+    * [[Manifest.partString]] text, the writer's own path rule, so a
+    * whole-second timestamp matches its path. */
+  private def evalPartitionFilter(f: SFilter,
+                                  pv: Map[String, String]): Option[Boolean] =
     f match {
       case EqualTo(c, v) => pv.get(c).flatMap(x =>
         if (x == null) None else Some(x == Manifest.partString(v)))
@@ -312,12 +348,10 @@ object ManifestConnector {
     }
 
   /** Conservative "can any row of a file with these stats satisfy this
-    * pushed data filter?" — the manifest zone-map skip
-    * ([[graft.sources.ManifestStats]]). Files it rejects are never
-    * planned; unknown shapes answer true, and pushed filters are
-    * residual-re-evaluated by Spark, so this is purely an IO skip. */
-  def mayMatch(f: SFilter,
-               st: graft.sources.ManifestStats.FileStats): Boolean = {
+    * data filter?" — the manifest zone-map skip
+    * ([[graft.sources.ManifestStats]]); unknown shapes answer true. */
+  private def mayMatch(f: SFilter,
+                       st: graft.sources.ManifestStats.FileStats): Boolean = {
     import graft.sources.ManifestStats._
     f match {
       case EqualTo(c, v) if v != null       => mayEqual(st, c, v)
@@ -822,31 +856,8 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
 
   // computed after pushFilters (Spark pushes filters before aggregates
   // and before build), consumed up to three times — memoize
-  private lazy val survivingFilesCached = survivingFiles()
-
-  private def survivingFiles(): Seq[ManifestConnector.FileInfo] = {
-    // bloom-sidecar skip (point lookups on unclustered high-cardinality
-    // columns, where zone-map envelopes prune nothing): None unless the
-    // table advertises blooms AND a pushed filter is bloom-decidable,
-    // so the common case costs zero FS round trips
-    val bloomPruner = graft.sources.ManifestBlooms.prunerFor(
-      res.root, res.dataSchema, res.tableMeta, dataFilters)
-    val relPrefix = s"${res.root}/"
-    res.files.filter { f =>
-      val pv = f.partValues.toMap
-      // survive only on definite TRUE — unknown (NULL) drops the file,
-      // matching WHERE semantics (these filters are consumed, not
-      // residual)
-      partitionFilters.forall(
-        ManifestConnector.evalPartitionFilter(_, pv).contains(true)) &&
-        // zone-map skip: a file whose min/max envelope cannot satisfy a
-        // pushed data filter is never planned (pure IO skip — data
-        // filters stay residual)
-        f.stats.forall(st =>
-          dataFilters.forall(ManifestConnector.mayMatch(_, st))) &&
-        bloomPruner.forall(_.mayMatch(f.absPath.stripPrefix(relPrefix)))
-    }
-  }
+  private lazy val survivingFiles = ManifestConnector.keepFiles(res,
+    res.files, partitionFilters ++ dataFilters, group = false)
 
   /** COMPLETE aggregate pushdown answered from the manifest zone maps
     * alone: `count(*)` / `count(col)` / `min(col)` / `max(col)`,
@@ -903,7 +914,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     if (cdc) return None // CDC scans are streaming-only row feeds
     if (dataFilters.nonEmpty || limit >= 0) return None
-    val files = survivingFilesCached
+    val files = survivingFiles
     if (files.exists(f => res.deleteSpecsFor(f).nonEmpty)) return None
     if (files.exists(_.stats.isEmpty)) return None
     val partSet = res.partCols.toSet
@@ -1071,7 +1082,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
       case DateType    => s.toIntOption.map(_.toLong)
       case _           => None // float/double NaN-unsound; strings truncate
     }
-    val files = survivingFilesCached
+    val files = survivingFiles
     if (files.exists(f => res.deleteSpecsFor(f).nonEmpty)) return false
     val asc = o.direction() == SortDirection.ASCENDING
     val nullsFirst = o.nullOrdering() == NullOrdering.NULLS_FIRST
@@ -1119,7 +1130,7 @@ final class ManifestScanBuilder(res: ManifestConnector.Resolved,
   }
 
   override def build(): Scan =
-    new ManifestScan(res, topNFiles.getOrElse(survivingFilesCached),
+    new ManifestScan(res, topNFiles.getOrElse(survivingFiles),
       required, dataFilters,
       limit, partitionFilters, maxVersionsPerTrigger, aggPlan, cdc,
       startingVersion, startingTimestamp, changesFrom,
@@ -1147,17 +1158,12 @@ final class ManifestScan(res: ManifestConnector.Resolved,
     aggPlan.map(_._1).getOrElse(required)
 
   /** Runtime (dynamic) file pruning — the DSv2 face of dynamic
-    * partition pruning, extended to zone maps. A join whose build side
-    * is selective hands this scan an `IN (join-key values…)` filter at
-    * EXECUTION time; files whose partition value or min/max envelope
-    * cannot match are dropped before any task launches. At 100 TB a
-    * fact⋈dim join with a filtered dim typically names a handful of
-    * partition values — this turns the probe-side scan from "all
-    * files" into "those partitions' files" with zero user hints.
-    * Narrowing only: `mayMatch` is conservative (a file that MIGHT
-    * hold a matching row survives), and the join itself still
-    * evaluates the real condition — dropped files are provably
-    * rowless for the filter, so results are unchanged. */
+    * partition pruning, extended to zone maps and bloom sidecars. A join
+    * whose build side is selective hands this scan an `IN (join-key
+    * values…)` filter at EXECUTION time, and
+    * [[ManifestConnector.keepFiles]] drops the files that cannot match
+    * before any task launches; the join still evaluates the real
+    * condition. */
   @volatile private var runtimeFiles: Seq[ManifestConnector.FileInfo] =
     plannedFiles
 
@@ -1188,29 +1194,19 @@ final class ManifestScan(res: ManifestConnector.Resolved,
     else required.fieldNames.filter(res.declared.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
-  override def filter(filters: Array[SFilter]): Unit = {
-    val partCols = res.partCols.toSet
-    // a runtime IN over a bloom-covered join key consults the sidecars
-    // too — dynamic FILE pruning on unclustered keys, where min/max
-    // envelopes (the zone-map leg below) cannot narrow anything
-    val bloomPruner = graft.sources.ManifestBlooms.prunerFor(
-      res.root, res.dataSchema, res.tableMeta, filters.filter(flt =>
-        flt.references.nonEmpty &&
-          !flt.references.exists(partCols.contains)))
-    val relPrefix = s"${res.root}/"
-    runtimeFiles = runtimeFiles.filter { f =>
-      val pv = f.partValues.toMap
-      filters.forall { flt =>
-        if (ManifestConnector.isPartitionFilter(flt, partCols))
-          ManifestConnector.evalPartitionFilter(flt, pv).contains(true)
-        else if (flt.references.nonEmpty &&
-            !flt.references.exists(partCols.contains))
-          f.stats.forall(st => ManifestConnector.mayMatch(flt, st))
-        else true // mixed/unknown shape: keep the file
-      } && bloomPruner.forall(
-        _.mayMatch(f.absPath.stripPrefix(relPrefix)))
-    }
-  }
+  override def filter(filters: Array[SFilter]): Unit =
+    runtimeFiles = ManifestConnector.keepFiles(res, runtimeFiles, filters,
+      group = false)
+
+  /** Columnar whenever every planned file reads columnar (no pushed
+    * aggregate row, no CDC feed, no merge-on-read deletes), decided
+    * here rather than per input partition so that a scan whose files
+    * are all pruned plans the same shape as one that reads some. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (aggPlan.isEmpty && !cdc &&
+        plannedFiles.forall(f => res.deleteSpecsFor(f).isEmpty))
+      Scan.ColumnarSupportMode.SUPPORTED
+    else Scan.ColumnarSupportMode.PARTITION_DEFINED
 
   /** The scan's rows arrive pre-clustered by the hive partition tuple
     * — report it ([[KeyGroupedPartitioning]] over identity transforms)

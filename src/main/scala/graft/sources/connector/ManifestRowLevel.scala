@@ -3,8 +3,8 @@ package graft.sources.connector
 import scala.collection.JavaConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.expressions.{Expressions, GeneralScalarExpression, Literal => V2Literal, NamedReference, Expression => V2Expression}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.sources.{Filter => SFilter}
@@ -23,18 +23,15 @@ import graft.sources.Manifest
   * forward by reference, history stays time-travelable.
   *
   * The group currency here is the FILE (the finest unit a manifest
-  * tracks). Three pruning layers keep "affected" small:
+  * tracks). Three pruning layers keep "affected" small, the first two
+  * through [[ManifestConnector.keepFiles]] under its GROUP polarity:
   *
   *  1. STATIC: the command's condition conjuncts are pushed into the
-  *     scan builder; a file is skipped when a partition conjunct
-  *     evaluates definite-FALSE for its partition tuple, or a zone-map
-  *     conjunct cannot match its min/max envelope. (Note the polarity:
-  *     group pruning keeps a file on UNKNOWN — the opposite of normal
-  *     WHERE pruning — because a kept group is rewritten verbatim,
-  *     while a dropped one must provably contain no matching row.)
-  *  2. RUNTIME: `SupportsRuntimeV2Filtering` on partition columns —
-  *     for MERGE, where the static condition says nothing, Spark runs
-  *     the source-side subquery and hands back IN-filters over the
+  *     scan builder and prune files by partition value, zone map and
+  *     bloom sidecar.
+  *  2. RUNTIME: `SupportsRuntimeFiltering` on partition columns — for
+  *     MERGE, where the static condition says nothing, Spark runs the
+  *     source-side subquery and hands back IN-filters over the
   *     partition columns, so only partitions with matching source rows
   *     are rewritten (the SQL twin of [[Manifest.mergeInto]]'s
   *     touched-tuple discovery).
@@ -97,19 +94,9 @@ final class ManifestCowScanBuilder(op: ManifestRowLevelOperation,
     required = requiredSchema
 
   override def build(): Scan = {
-    val partCols = res.partCols.toSet
-    val surviving = res.files.filter { f =>
-      groupFilters.forall { flt =>
-        if (ManifestConnector.isPartitionFilter(flt, partCols))
-          // keep on TRUE and UNKNOWN; drop only on definite FALSE
-          !ManifestConnector.evalPartitionFilter(flt, f.partValues.toMap)
-            .contains(false)
-        else
-          // zone-map: drop only when no row can match (conservative)
-          f.stats.forall(st => ManifestConnector.mayMatch(flt, st))
-      }
-    }
-    val scan = new ManifestCowScan(res, surviving, required)
+    val scan = new ManifestCowScan(res,
+      ManifestConnector.keepFiles(res, res.files, groupFilters, group = true),
+      required)
     op.builtScan = scan
     scan
   }
@@ -123,7 +110,7 @@ final class ManifestCowScanBuilder(op: ManifestRowLevelOperation,
 final class ManifestCowScan(res: ManifestConnector.Resolved,
                             initial: Seq[ManifestConnector.FileInfo],
                             required: StructType)
-    extends Scan with Batch with SupportsRuntimeV2Filtering {
+    extends Scan with Batch with SupportsRuntimeFiltering {
 
   @volatile private var files: Seq[ManifestConnector.FileInfo] = initial
 
@@ -137,62 +124,8 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
   override def filterAttributes(): Array[NamedReference] =
     res.partCols.map(Expressions.column).toArray
 
-  override def filter(predicates: Array[org.apache.spark.sql.connector
-      .expressions.filter.Predicate]): Unit =
-    files = files.filter { f =>
-      val pv = f.partValues.toMap
-      predicates.forall(p => !evalV2(p, pv).contains(false))
-    }
-
-  /** Kleene evaluation of the runtime predicates against one file's
-    * (string) partition values; None = unknown = keep the file. */
-  private def evalV2(e: V2Expression,
-                     pv: Map[String, String]): Option[Boolean] = {
-    def nameOf(x: V2Expression): Option[String] = x match {
-      case r: NamedReference if r.fieldNames.length == 1 =>
-        Some(r.fieldNames.head)
-      case _ => None
-    }
-    def litStr(x: V2Expression): Option[String] = x match {
-      case l: V2Literal[_] if l.value != null => Some(l.value.toString)
-      case _ => None
-    }
-    e match {
-      case g: GeneralScalarExpression => (g.name, g.children.toSeq) match {
-        case ("AND", Seq(l, r)) =>
-          (evalV2(l, pv), evalV2(r, pv)) match {
-            case (Some(false), _) | (_, Some(false)) => Some(false)
-            case (Some(true), Some(true))            => Some(true)
-            case _                                   => None
-          }
-        case ("OR", Seq(l, r)) =>
-          (evalV2(l, pv), evalV2(r, pv)) match {
-            case (Some(true), _) | (_, Some(true)) => Some(true)
-            case (Some(false), Some(false))        => Some(false)
-            case _                                 => None
-          }
-        case ("NOT", Seq(c)) => evalV2(c, pv).map(!_)
-        case ("=", Seq(l, r)) =>
-          for {
-            c <- nameOf(l); v <- litStr(r); x <- pv.get(c)
-            if x != null
-          } yield x == v
-        case ("IN", ref +: lits) if lits.nonEmpty =>
-          for {
-            c <- nameOf(ref); x <- pv.get(c)
-            if x != null
-            vs <- Some(lits.map(litStr))
-            if vs.forall(_.isDefined)
-          } yield vs.flatten.contains(x)
-        case ("IS_NULL", Seq(c)) =>
-          nameOf(c).flatMap(pv.get).map(_ == null)
-        case ("IS_NOT_NULL", Seq(c)) =>
-          nameOf(c).flatMap(pv.get).map(_ != null)
-        case _ => None
-      }
-      case _ => None
-    }
-  }
+  override def filter(filters: Array[SFilter]): Unit =
+    files = ManifestConnector.keepFiles(res, files, filters, group = true)
 
   override def planInputPartitions(): Array[InputPartition] =
     // applicable merge-on-read deletes ride along: a rewrite that

@@ -140,17 +140,12 @@ final class ManifestMicroBatchStream(
           s"delete commit(s) ${crossing.map(_.seq).distinct.sorted.mkString(",")}" +
           " — run Manifest.rewriteDeletes and restart the stream, or " +
           "read with option(\"cdc\", \"true\")")
-      return cur.entries.filterNot(e => prev.contains(e.path))
-        .filter { e =>
-          val pv = Manifest.partValuesOf(e.path).toMap
-          partitionFilters.forall(
-            ManifestConnector.evalPartitionFilter(_, pv).contains(true)) &&
-            e.fileStats.forall(st =>
-              dataFilters.forall(ManifestConnector.mayMatch(_, st)))
-        }
-        .map(e => ManifestInputPartition(s"${res.root}/${e.path}",
-          e.size,
-          Manifest.partValuesOf(e.path).toArray): InputPartition)
+      val added = ManifestConnector.resolved(res.root, cur,
+        cur.entries.filterNot(e => prev.contains(e.path)), Nil)
+      return ManifestConnector.keepFiles(added, added.files,
+          partitionFilters ++ dataFilters, group = false)
+        .map(f => ManifestInputPartition(f.absPath, f.size,
+          f.partValues.toArray): InputPartition)
         .toArray
     }
     // CDC batch = [[Manifest.readChangesCdc]] semantics, streamed —

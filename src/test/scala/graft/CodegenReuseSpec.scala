@@ -25,6 +25,8 @@ import graft.sources.connector.ManifestCatalog
   *  - after one warm call per plan shape, a call with a never-seen
   *    literal compiles no class, through `Manifest.read`, catalog SQL
   *    and an aggregate with an exchange;
+  *  - a key that prunes every file plans the hit's shape and compiles
+  *    no class either;
   *  - the executed plan still prints the literal's value. */
 class CodegenReuseSpec extends SparkSpec {
 
@@ -178,14 +180,24 @@ class CodegenReuseSpec extends SparkSpec {
         .count()
     // warm calls return rows: the first collected row compiles its
     // converter. Measured keys appear nowhere else in this suite and
-    // fall inside both files' zone maps (a read that prunes every file
-    // plans another shape).
+    // fall inside both files' zone maps.
     assert(read(0L).length == 1)
     assert(compiles(assert(read(8L).isEmpty)) == 0)
     assert(sql(-1L).length == 1)
     assert(compiles(assert(sql(41L).isEmpty)) == 0)
     assert(range(-5L) == 4)
     assert(compiles(assert(range(1L) == 2)) == 0)
+  }
+
+  test("a key that prunes every file compiles nothing once a hit is warm") {
+    val r = s"$warehouse/db/pruned"
+    Manifest.init(spark, r, spark.range(0, 10, 1, 2).selectExpr("id AS l"))
+    def read(k: Long) =
+      Manifest.read(spark, r).filter(col("l") === k).collect()
+    assert(read(9L).length == 1)
+    // outside both files' zone maps: the scan plans no file, and the
+    // same columnar shape as the hit
+    assert(compiles(assert(read(1003L).isEmpty)) == 0)
   }
 
   test("the executed plan prints the bound literal's value") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
-import graft.sources.Manifest
-import graft.sources.connector.ManifestScan
+import graft.sources.{Manifest, ManifestBlooms}
+import graft.sources.connector.{ManifestCatalog, ManifestConnector, ManifestScan}
 
 /** The DataSourceV2 read contract of `format("graft-manifest")`:
   * result equality with Manifest.read, manifest-level partition
@@ -249,6 +249,73 @@ class ManifestConnectorSpec extends SparkSpec {
     for ((cond, want) <- Seq(($"part" =!= "a") -> Set(2L),
         $"part".isNull -> Set(3L), !$"part".isNull -> Set(1L, 2L)))
       assert(ids(Manifest.read(spark, root).filter(cond)) == want)
+  }
+
+  /** Three single-file commits partitioned by `part` ('a', 'b', NULL)
+    * whose `key`s are striped (key % 3 picks the file), so every file's
+    * zone map spans nearly [0, 59] and only a bloom sidecar on `key`
+    * can prune an equality probe. */
+  private def stripedBloomTable(root: String): Unit = {
+    val parts = Seq(Option("a"), Option("b"), Option.empty[String])
+    def stripe(k: Int) = (0L until 60L).filter(_ % 3 == k)
+      .map(i => (i, parts(k), i * 10)).toDF("key", "part", "v").coalesce(1)
+    Manifest.init(spark, root, stripe(0), Seq("part"))
+    for (k <- 1 to 2) Manifest.commitAppend(spark, root, stripe(k), Seq("part"))
+    ManifestBlooms.build(spark, root, Seq("key"))
+  }
+
+  test("keepFiles: read polarity needs TRUE, group polarity drops only " +
+    "on FALSE; zone maps and blooms prune under both") {
+    import org.apache.spark.sql.sources._
+    val root = newRoot()
+    stripedBloomTable(root)
+    val res = ManifestConnector.resolve(spark, Map("path" -> root))
+    // the partition value of each kept file; runs no Spark job
+    def kept(f: Filter, group: Boolean): Set[Option[String]] =
+      ManifestConnector.keepFiles(res, res.files, Seq(f), group)
+        .map(fi => Option(fi.partValues.toMap.apply("part"))).toSet
+    val (a, b, nul) = (Option("a"), Option("b"), Option.empty[String])
+    def both(f: Filter, read: Set[Option[String]],
+             group: Set[Option[String]]): Unit = {
+      assert(kept(f, group = false) == read, s"read $f")
+      assert(kept(f, group = true) == group, s"group $f")
+    }
+    // NULL <> 'a' is UNKNOWN: a read drops the default partition, a
+    // group keeps it
+    both(Not(EqualTo("part", "a")), Set(b), Set(b, nul))
+    // a miss against an IN list holding NULL is UNKNOWN too
+    both(In("part", Array("a", null)), Set(a), Set(a, b, nul))
+    // partition and data columns in one filter: kept, whatever it says
+    both(Or(EqualTo("part", "zzz"), EqualTo("key", 1000L)),
+      Set(a, b, nul), Set(a, b, nul))
+    // outside every zone map
+    both(EqualTo("key", 1000L), Set.empty, Set.empty)
+    // inside every zone map; only the 'b' file's bloom holds key 4
+    both(EqualTo("key", 4L), Set(b), Set(b))
+  }
+
+  test("SQL UPDATE on a bloom-covered key rewrites only the file that " +
+    "holds it") {
+    import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+    val warehouse = newRoot()
+    spark.conf.set("spark.sql.catalog.bloomdml",
+      classOf[ManifestCatalog].getName)
+    spark.conf.set("spark.sql.catalog.bloomdml.root", warehouse)
+    val root = s"$warehouse/db/t"
+    stripedBloomTable(root)
+    val cmd = spark.sql("UPDATE bloomdml.db.t SET v = v + 1 WHERE key = 4")
+      .queryExecution.commandExecuted match {
+        case c: CommandResult => c.commandPhysicalPlan
+        case other => fail(s"not a command: $other")
+      }
+    val groups = ScanFiles.collectWithSubqueries(cmd) {
+      case b: BatchScanExec => b.scan.description()
+    }.filter(_.contains(" CoW "))
+    assert(groups.nonEmpty && groups.forall(_.endsWith("groups=1/3")),
+      groups.mkString("\n"))
+    assert(connRead(root).select("key", "v").as[(Long, Long)].collect()
+      .sorted.toSeq == (0L until 60L).map(i =>
+        i -> (i * 10 + (if (i == 4L) 1L else 0L))))
   }
 
   test("layout mismatch fails loudly: at commit time for well-behaved " +

@@ -9,6 +9,7 @@ import org.scalacheck.Prop.propBoolean
 import org.scalacheck.util.Pretty
 
 import graft.sources.Manifest
+import graft.sources.connector.ManifestCatalog
 
 /** Crash-point enumeration of the manifest commit protocols over
   * [[CrashPointFileSystem]]: a clean run counts a commit's file system
@@ -26,8 +27,16 @@ class ManifestCrashSpec extends SparkSpec {
   spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl",
     classOf[CrashPointFileSystem].getName)
 
-  private def newRoot() = "crashfs://" + java.nio.file.Files
-    .createTempDirectory("graft-crash").toString + "/t"
+  // every table lives under one warehouse, so catalog SQL reaches each
+  // fresh root as `crashcat.db.<name>`
+  private val warehouse = "crashfs://" + java.nio.file.Files
+    .createTempDirectory("graft-crash").toString
+  spark.conf.set("spark.sql.catalog.crashcat",
+    classOf[ManifestCatalog].getName)
+  spark.conf.set("spark.sql.catalog.crashcat.root", warehouse)
+
+  private val tables = new java.util.concurrent.atomic.AtomicInteger
+  private def newRoot() = s"$warehouse/db/t${tables.incrementAndGet()}"
 
   private def rows(xs: (Long, String, Long)*): DataFrame =
     xs.toDF("id", "part", "v").coalesce(1)
@@ -158,6 +167,21 @@ class ManifestCrashSpec extends SparkSpec {
     crashPoints(asRows(old.filter(_._3 < 40L))) { root =>
       Manifest.deleteWhere(spark, root,
         org.apache.spark.sql.functions.col("v") >= 40L, "part")
+    }
+  }
+
+  // SQL MERGE plans a copy-on-write rewrite of the touched files and
+  // commits it through Manifest.commitRewrite
+  test("SQL MERGE: every crash point is atomic, retryable, vacuumable") {
+    Seq((2L, "b", 21L), (3L, "a", -1L), (6L, "d", 60L)).toDF("id", "part", "v")
+      .createOrReplaceTempView("crash_src")
+    crashPoints(asRows(old.filterNot(r => r._1 == 2L || r._1 == 3L) ++
+        Seq((2L, "b", 21L), (6L, "d", 60L)))) { root =>
+      spark.sql(s"""MERGE INTO crashcat.db.${root.split('/').last} t
+        |USING crash_src s ON t.id = s.id
+        |WHEN MATCHED AND s.v < 0 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     }
   }
 
