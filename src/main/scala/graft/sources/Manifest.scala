@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
-import org.apache.spark.sql.sources.{In, IsNull, Or, Filter => SFilter}
 import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.sources.{In, IsNull, Or, Filter => SFilter}
 
 import graft.sources.connector.{ManifestConnector, ManifestTable, ManifestWriter}
 
@@ -2052,7 +2052,6 @@ object Manifest {
     if (collected.exists(_._3.length > cap)) return (cand, Nil)
     val totalKeys = collected.map(_._3.length.toLong).sum
     if (cand.size.toLong * totalKeys > 50000000L) return (cand, Nil)
-    // `Or(In, IsNull)` where a deleted key is NULL
     val res = ManifestConnector.resolved(root, m, cand, Nil)
     val hit = collected.flatMap { case (kc, ds, rows) =>
       val keys = kc.zipWithIndex.map { case (c, i) =>
