@@ -882,10 +882,11 @@ object LakeQueries {
     // Three commits: init evens → append odds → CoW merge confined to
     // lang='de'. The incremental consumer reads changes(1→2) (exactly
     // the appended odd rows) and changes(2→3) (the post-image of the
-    // one rewritten partition — untouched langs carry files by
+    // rewritten files — every de file holds a doc_id % 5 = 0 row, so
+    // that is the whole de partition; untouched langs carry files by
     // reference and must NOT appear). The oracle replays both diffs
     // relationally; any leak of carried-over files into the feed, or
-    // rows missing from a rewritten partition, flips counts and sums.
+    // rows missing from a rewritten file, flips counts and sums.
     QueryDef("q116_manifest_changes",
       (s, dir) => {
         val root = "file://" + graft.TempRoots.create("graft_cdf") + "/t"
@@ -1056,15 +1057,13 @@ object LakeQueries {
       kind = QueryDef.Pipeline),
 
     // ---- SQL DELETE FROM on a manifest table ----------------------------
-    // The last DML asymmetry between the Scala API and the SQL catalog:
-    // `DELETE FROM` routes through SupportsDelete into the SAME
-    // copy-on-write deleteWhere commit (untouched partitions carry
-    // files by reference). Two deletes — a data-column predicate (CoW
-    // rewrite of every partition holding matches) and a
-    // partition-column predicate (whole-partition drop) — then a
-    // grouped read of latest plus a `VERSION AS OF` scalar proving the
-    // pre-delete snapshot still holds every row (erase-with-audit-
-    // window, as in q112, but through pure SQL).
+    // `DELETE FROM` plans the SAME row-level rewrite as the Scala
+    // deleteWhere (untouched files carry by reference). Two deletes —
+    // a data-column predicate (CoW rewrite of every file holding
+    // matches) and a partition-column predicate (whole-partition
+    // drop) — then a grouped read of latest plus a `VERSION AS OF`
+    // scalar proving the pre-delete snapshot still holds every row
+    // (erase-with-audit-window, as in q112, but through pure SQL).
     QueryDef("q122_sql_delete",
       (s, dir) => {
         s.conf.set("spark.sql.catalog.graftsql",

@@ -7,9 +7,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, InsertStarAction, LogicalPlan, MergeIntoTable, UpdateStarAction}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, max, min, struct, to_json}
+import org.apache.spark.sql.functions.{coalesce, col, expr, lit, max, min, struct, to_json}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.sources.{In, IsNull, Or, Filter => SFilter}
 
@@ -166,32 +167,11 @@ object Manifest {
   def partStringExpr(e: Expression): Expression =
     Cast(e, org.apache.spark.sql.types.StringType, Some("UTC"))
 
-  /** [[partStringExpr]] of one external value (a collected `Row` field,
-    * a pushed filter literal); null stays null. An empty string stays
-    * "" — it matches only a legacy `part=` dir, just as the typed
-    * null-safe semi-join of the DML rewrites never equates it with a
-    * NULL-partition row. */
+  /** [[partStringExpr]] of one external value (a pushed filter
+    * literal); null stays null. An empty string stays "" — it matches
+    * only a legacy `part=` dir, never a NULL-partition file. */
   def partString(v: Any): String =
     if (v == null) null else partStringExpr(Literal(v)).eval().toString
-
-  /** Does `relPath` belong to one of the `touched` partitions? Matches
-    * on PARSED partition value TUPLES (hive-unescaped, null-aware, one
-    * slot per partition column in layout order), never on raw path
-    * substrings: a value like `a:b` lands in the path as `a%3Ab` and a
-    * null as `__HIVE_DEFAULT_PARTITION__`, so substring matching
-    * against the raw value would silently carry the old files forward
-    * (duplicates after MERGE, survivors after DELETE). With NO
-    * partition columns the whole table is one partition — every file
-    * is touched. */
-  private def inTouchedPartition(relPath: String,
-                                 partitionCols: Seq[String],
-                                 touched: Set[Seq[Option[String]]])
-      : Boolean =
-    if (partitionCols.isEmpty) true
-    else {
-      val pv = partValuesOf(relPath).toMap
-      touched.contains(partitionCols.map(c => Option(pv.getOrElse(c, null))))
-    }
 
   /** All committed versions, ascending (one manifest-dir listing). */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
@@ -1591,29 +1571,31 @@ object Manifest {
     }
   }
 
-  /** Atomic swap-commit for a row-level rewrite (SQL UPDATE / MERGE /
-    * DELETE through the connector): next snapshot = previous files
-    * minus `removed` (the files the rewrite scan planned) plus `added`
-    * (the executor-written replacements). `expected` pins the version
-    * the rewrite READ — if the table advanced meanwhile, committing
-    * would silently drop that concurrent commit's files, so it fails
-    * loudly instead (optimistic concurrency, same as every other
-    * commit here). */
-  private[graft] def commitRewrite(spark: SparkSession, root: String,
-      expected: Long, removed: Set[String], added: Seq[FileEntry],
-      partitionCols: Seq[String]): Long = {
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root not initialized"))
-    require(cur == expected,
-      s"concurrent commit: $root advanced from v$expected to v$cur " +
-        "during the row-level rewrite — retry the operation")
-    val prev = readManifest(spark, root, cur)
-    checkPartCols(prev, partitionCols)
-    enforceConstraintsOnEntries(spark, root, prev.meta, prev.schema,
-      partitionCols, added)
-    val stated = added.sortBy(_.path).map(_.copy(seq = Some(cur + 1)))
-    publish(spark, root, cur,
-      prev.entries.filterNot(e => removed(e.path)) ++ stated, prev.meta,
+  /** Atomic swap-commit for a row-level rewrite (every UPDATE / MERGE /
+    * DELETE — SQL or [[mergeInto]] / [[deleteWhere]] — through the
+    * connector): next snapshot = the read snapshot's files minus
+    * `removed` (the files the rewrite scan planned) plus `added` (the
+    * executor-written replacements), under `res.tableMeta` — the read
+    * snapshot's headers plus whatever the caller resolved on top (a
+    * widened schema, `extraMeta`). It is published as `res.version + 1`
+    * with the create-if-absent claim: if the table advanced since the
+    * rewrite read it, committing would silently drop that concurrent
+    * commit's files, so it throws the `commit conflict` every committer
+    * throws (optimistic concurrency). A rewrite that changes nothing —
+    * no file removed or added, the same headers — publishes nothing
+    * and returns `res.version`. */
+  private[graft] def commitRewrite(spark: SparkSession,
+      res: ManifestConnector.Resolved, removed: Set[String],
+      added: Seq[FileEntry]): Long = {
+    val prev = readManifest(spark, res.root, res.version)
+    if (removed.isEmpty && added.isEmpty && res.tableMeta == prev.meta)
+      return res.version
+    enforceConstraintsOnEntries(spark, res.root, res.tableMeta,
+      res.declared, res.partCols, added)
+    val next = res.version + 1
+    val stated = added.sortBy(_.path).map(_.copy(seq = Some(next)))
+    publish(spark, res.root, res.version,
+      prev.entries.filterNot(e => removed(e.path)) ++ stated, res.tableMeta,
       prev.deletes)
   }
 
@@ -1724,158 +1706,107 @@ object Manifest {
         ++ extraMeta ++ lm)
   }
 
-  /** Copy-on-write MERGE with cross-partition atomicity — the
-    * [[Catalog.mergeInto]] semantics under a single-rename commit.
-    * Touched partitions' rows are merged (LWW by `key`) into the new
-    * commit's files; untouched partitions' FILES carry over into the
-    * new manifest untouched. One rename publishes all partitions at
-    * once; pinned readers keep the pre-merge snapshot. */
+  /** Upsert `updates` by `key`, planned as Spark's
+    * `MERGE INTO t USING updates s ON t.key = s.key WHEN MATCHED THEN
+    * UPDATE SET * WHEN NOT MATCHED THEN INSERT *` over the table head
+    * ([[graft.sources.connector.ManifestRowLevelOperation]]): the files
+    * holding matched rows are rewritten, every other file carries over
+    * by reference, and one atomic commit publishes every partition at
+    * once; pinned readers keep the pre-merge snapshot. Returns the
+    * version the merge published.
+    *
+    * `updates` is projected onto the table's columns by name; a table
+    * column it lacks is NULL in inserted and updated rows, and a column
+    * only it has widens the schema (appended nullable, older rows read
+    * it back NULL). `extraMeta` headers and the widened schema land in
+    * the merge's own commit. `partitionCols` must be the table's layout
+    * — e.g. the reference raw zone's `(dataType, date)` (reference:
+    * python-data-ingestions/ingest-data-lambda.py:68); `Nil` =
+    * unpartitioned.
+    *
+    * Row-level semantics: a matched row takes its update's partition
+    * values, so a key whose update moves it to another partition leaves
+    * one row, in the new partition. Two `updates` rows matching one
+    * table row fail with Spark's MERGE cardinality error and commit
+    * nothing. Rewrites are file-granular: a partition's files without a
+    * matched row carry over. */
   def mergeInto(spark: SparkSession, root: String, updates: DataFrame,
                 key: String, partitionCol: String): Long =
     mergeInto(spark, root, updates, key, Seq(partitionCol))
 
-  /** Multi-column (or unpartitioned) MERGE: `partitionCols` is the
-    * table's full layout — e.g. the reference raw zone's
-    * `(dataType, date)` (reference: python-data-ingestions/
-    * ingest-data-lambda.py:68). Touched PARTITION TUPLES are discovered
-    * from the updates; files of untouched tuples carry forward by
-    * reference, byte-identical. `Nil` = unpartitioned: the whole table
-    * is the one partition and the commit rewrites it. */
   def mergeInto(spark: SparkSession, root: String, updates: DataFrame,
                 key: String, partitionCols: Seq[String],
                 extraMeta: Map[String, String] = Map.empty): Long = {
     checkExtraMeta(extraMeta)
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root not initialized"))
-    val prev = readManifest(spark, root, cur)
-    enforceConstraints(root, updates, prev.meta)
-    val table = read(spark, root, Some(cur))
-    checkPartCols(prev, partitionCols)
-    // the distinct partition tuples the updates touch: ONE job, reused
-    // both as the (broadcast) semi-join side of the rewrite and —
-    // stringified, null-aware — for the driver-side manifest match
-    val touchedRows = touchedTuples(updates, partitionCols)
-    val merged =
-      if (partitionCols.isEmpty) Catalog.upsert(table, updates, key)
-      else
-        // null-safe semi join (<=>) per layout column: a null partition
-        // value is a real, touchable partition
-        // (__HIVE_DEFAULT_PARTITION__ on disk); a plain equi-join would
-        // drop its existing rows from the rewrite and the commit would
-        // lose them.
-        Catalog.upsert(
-          table.join(broadcast(localTuples(spark, updates, partitionCols,
-            touchedRows)), touchCond(table, partitionCols), "left_semi"),
-          updates, key)
-    val fresh = writeCommit(spark, root, cur + 1, merged, partitionCols)
-    // Carry over files of partitions the updates did not touch — the
-    // touched tuple set is matched against each file's PARSED partition
-    // values (hive-unescaped, null-aware) on the driver:
-    // metadata-scale, no data IO.
-    val touchedVals = stringTuples(touchedRows, partitionCols)
-    val keep = prev.entries.filterNot(e =>
-      inTouchedPartition(e.path, partitionCols, touchedVals))
-    val schema = mergeSchemas(prev.schema, updates.schema)
-    // `table` is deletes-applied, so the rewritten partitions
-    // materialize any pending MoR deletes; carried files still need them
-    publish(spark, root, cur, keep ++ fresh,
-      prev.meta ++ schemaHeaders(schema, partitionCols) ++ extraMeta,
-      prev.deletes)
+    rowLevel(spark, root, partitionCols, prev =>
+        schemaHeaders(mergeSchemas(prev.schema, updates.schema),
+          partitionCols) ++ extraMeta) { target =>
+      val have = updates.columns.toSet
+      val source = PlanBridge.logicalPlan(updates.select(target.output.map(a =>
+        if (have(a.name)) col(a.name)
+        else lit(null).cast(a.dataType).as(a.name)): _*))
+      def keyOf(p: LogicalPlan) = p.output.find(_.name == key).getOrElse(
+        throw new IllegalArgumentException(s"merge key '$key' is not a column"))
+      MergeIntoTable(target, source, EqualTo(keyOf(target), keyOf(source)),
+        Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Nil,
+        withSchemaEvolution = false)
+    }
   }
 
-  /** The distinct partition-value tuples `df` contains, collected to
-    * the driver (bounded: O(touched partitions), the same cardinality
-    * every partition-overwrite planner materializes). */
-  private def touchedTuples(df: DataFrame, partitionCols: Seq[String])
-      : Array[org.apache.spark.sql.Row] =
-    if (partitionCols.isEmpty) Array.empty
-    else df.select(partitionCols.map(col): _*).distinct().collect()
-
-  /** Collected tuples as path strings ([[partString]]) for the
-    * manifest path match. Empty layout → one empty tuple (the
-    * whole-table partition). */
-  private def stringTuples(rows: Array[org.apache.spark.sql.Row],
-                           partitionCols: Seq[String])
-      : Set[Seq[Option[String]]] =
-    if (partitionCols.isEmpty) Set(Seq.empty)
-    else rows.map(r => partitionCols.indices
-      .map(i => Option(partString(r.get(i)))).toSeq).toSet
-
-  /** Local (already-collected) touched tuples as a one-partition
-    * relation with `__touched_i` column names, typed like the source
-    * frame's layout columns. */
-  private def localTuples(spark: SparkSession, src: DataFrame,
-                          partitionCols: Seq[String],
-                          rows: Array[org.apache.spark.sql.Row])
-      : DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        src.schema(c).copy(name = s"__touched_$i") })
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** Null-safe conjunction matching a table row's layout columns
-    * against the `__touched_i` tuple columns. */
-  private def touchCond(table: DataFrame,
-                        partitionCols: Seq[String])
-      : org.apache.spark.sql.Column =
-    partitionCols.zipWithIndex
-      .map { case (c, i) => table(c) <=> col(s"__touched_$i") }
-      .reduce(_ && _)
-
-  /** DML DELETE as a copy-on-write commit: rows of `partitionCol`
-    * partitions containing matches are rewritten without the matching
-    * rows; partitions with no match carry their files forward BY
-    * REFERENCE (zero IO — the touched set is discovered with one
-    * aggregate over the predicate). Same atomicity/time-travel story
-    * as [[mergeInto]]: one rename publishes, old snapshots still
-    * contain the deleted rows until vacuumed. */
+  /** `DELETE FROM t WHERE predicate` over the table head, planned as
+    * Spark's own row-level DELETE
+    * ([[graft.sources.connector.ManifestRowLevelOperation]]): rows where
+    * the predicate is TRUE go (three-valued — NULL keeps the row). Only
+    * the files holding a matching row are rewritten, without those rows
+    * (partition values, zone maps and bloom sidecars skip the rest
+    * before the match is looked for); every other file carries over by
+    * reference, so a match in one of a partition's files leaves its
+    * other files in place. One atomic commit; old snapshots still hold
+    * the deleted rows until vacuumed. A predicate that matches nothing
+    * publishes nothing. Returns the published version. */
   def deleteWhere(spark: SparkSession, root: String,
                   predicate: org.apache.spark.sql.Column,
                   partitionCol: String): Long =
     deleteWhere(spark, root, predicate, Seq(partitionCol))
 
-  /** Multi-column (or unpartitioned) DELETE: touched partition TUPLES
-    * are the ones containing at least one matching row; `Nil` layout
-    * rewrites the whole table. */
   def deleteWhere(spark: SparkSession, root: String,
                   predicate: org.apache.spark.sql.Column,
-                  partitionCols: Seq[String]): Long = {
+                  partitionCols: Seq[String]): Long =
+    rowLevel(spark, root, partitionCols, _ => Map.empty) { target =>
+      // the predicate resolved against the target, as a filter resolves it
+      val cond = PlanBridge.logicalPlan(
+        PlanBridge.ofRows(spark, target).filter(predicate)) match {
+        case f: Filter => f.condition
+        case p => throw new IllegalStateException(s"not a filter: $p")
+      }
+      DeleteFromTable(target, cond)
+    }
+
+  /** Run one DML command planned by `command` over a relation on the
+    * head snapshot, whose headers are overlaid with `headers(head)`;
+    * returns the version its commit published (the head when it
+    * changed nothing). */
+  private def rowLevel(spark: SparkSession, root: String,
+                       partitionCols: Seq[String],
+                       headers: SnapshotMeta => Map[String, String])(
+                       command: DataSourceV2Relation => LogicalPlan): Long = {
     val cur = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root not initialized"))
     val prev = readManifest(spark, root, cur)
-    val table = read(spark, root, Some(cur))
     checkPartCols(prev, partitionCols)
-    val matches = table.filter(predicate)
-    val touchedRows = touchedTuples(matches, partitionCols)
-    if (partitionCols.isEmpty) {
-      if (matches.isEmpty) return cur // nothing matches: no-op
-    } else if (touchedRows.isEmpty) return cur
-    val touchedVals = stringTuples(touchedRows, partitionCols)
-    // rewrite filter: rows of touched partitions only (null-safe
-    // semi-join against the already-collected touched tuples — typed,
-    // not stringly, and broadcast: O(touched partitions))
-    val inTouched =
-      if (partitionCols.isEmpty) table
-      else table.join(
-        broadcast(localTuples(spark, table, partitionCols, touchedRows)),
-        touchCond(table, partitionCols), "left_semi")
-    // SQL DELETE semantics: drop rows where the predicate is TRUE;
-    // rows where it evaluates NULL survive (`!predicate` alone would
-    // filter them out — three-valued logic).
-    val remain = inTouched.filter(!coalesce(predicate, lit(false)))
-    val fresh = writeCommit(spark, root, cur + 1, remain, partitionCols)
-    val keep = prev.entries.filterNot(e =>
-      inTouchedPartition(e.path, partitionCols, touchedVals))
-    publish(spark, root, cur, keep ++ fresh, prev.meta, prev.deletes)
+    val table = ManifestTable(ManifestConnector.resolved(root,
+      prev.copy(meta = prev.meta ++ headers(prev)), prev.entries,
+      prev.deletes))
+    PlanBridge.ofRows(spark,
+      command(DataSourceV2Relation.create(table, None, None)))
+    table.published
   }
 
   /** MERGE-ON-READ DELETE: erase every row whose key tuple appears in
     * `keys` (columns = the equality key) by committing the DISTINCT
     * key set as a delete file — NO data file is rewritten. At 100 TB
     * this is the difference between a DELETE costing O(deleted keys)
-    * and one rewriting every partition that contains a match
+    * and one rewriting every file that may hold a match
     * (copy-on-write [[deleteWhere]]). Each read task drops the deleted
     * rows of its file as it streams; rows appended AFTER this commit
     * are never retro-deleted (file sequence numbers), so
@@ -2436,8 +2367,8 @@ object Manifest {
     * touched instead of rescanning the table. Semantics are
     * FILE-level, matching the copy-on-write layout: an append commit
     * yields exactly the appended rows; a merge/delete commit yields
-    * the full post-image of every REWRITTEN partition (untouched
-    * partitions carry their files by reference, so they never appear).
+    * the full post-image of every REWRITTEN file (untouched files
+    * carry by reference, so they never appear).
     * At 100 TB this is the difference between an incremental
     * consumer scanning one commit's files and scanning the table.
     * Row-level deletes are visible as the removed side of

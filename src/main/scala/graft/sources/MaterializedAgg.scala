@@ -342,10 +342,10 @@ object MaterializedAgg {
       .select(col(KeyCol) +: col(CountCol).as("__old_count") +:
         (sumCols.map(c => col(sumCol(c)).as(s"__old_s_$c")) ++
           sumCols.map(c => col(nnCol(c)).as(s"__old_n_$c"))): _*)
-    // persist(): mergeInto evaluates its updates twice (touched-tuple
-    // discovery, then the rewrite) — without the cache this whole
-    // subtree (changes agg + stored-view read + join) re-runs per
-    // consumer. The frame is touched-GROUP-sized, bounded at any
+    // persist(): mergeInto evaluates its updates twice (the runtime
+    // group filter's semi-join, then the MERGE join) — without the
+    // cache this whole subtree (changes agg + stored-view read + join)
+    // re-runs per consumer. The frame is touched-GROUP-sized, bounded at any
     // corpus size, so caching it is free; unpersist once committed.
     val updates = delta.join(stored, Seq(KeyCol), "left")
       .select(

@@ -159,7 +159,9 @@ object ManifestConnector {
                             seq: Long = 0L)
 
   /** `declared` = the manifest's schema header: column order and
-    * partition column TYPES come from it. */
+    * partition column TYPES come from it. `tableMeta` = the snapshot's
+    * headers, which a row-level rewrite through this resolution
+    * publishes ([[Manifest.commitRewrite]]). */
   final case class Resolved(root: String, version: Long,
                             files: Seq[FileInfo], partCols: Seq[String],
                             dataSchema: StructType,
@@ -173,6 +175,10 @@ object ManifestConnector {
       deletes.filter(_.seq > f.seq).map(d =>
         DeleteFileSpec(graft.sources.Manifest.absEntryPath(root, d.path),
           d.keyCols.toArray)).toArray
+    /** `f`'s manifest entry path: root-relative, or the absolute path
+      * of a foreign (clone-borrowed) entry. */
+    def relPath(f: FileInfo): String =
+      f.absPath.stripPrefix(root).stripPrefix("/")
   }
 
   /** Resolve the load options (root plus at most one of version,
@@ -282,6 +288,9 @@ object ManifestConnector {
     *    rewrites whole) a file is dropped only where the filter is
     *    definitely FALSE: a kept group is rewritten verbatim, a dropped
     *    one must provably hold no matching row.
+    *  - `_file` `=` / `IN` (the row-level runtime group filter): kept
+    *    only when the file's path is one of the values — exact under
+    *    both polarities, a file's rows all carry its path.
     *  - data-only: the zone map ([[mayMatch]]) and the bloom sidecars
     *    ([[graft.sources.ManifestBlooms]]) drop a file only when no row
     *    of it can match, which is sound under both polarities.
@@ -292,8 +301,12 @@ object ManifestConnector {
                                group: Boolean): Seq[FileInfo] = {
     val partCols = res.partCols.toSet
     val (part, rest) = filters.partition(isPartitionFilter(_, partCols))
+    val paths = rest.collect {
+      case EqualTo("_file", v) => Set(v)
+      case In("_file", vs)     => vs.toSet
+    }
     val data = rest.filter(f => f.references.nonEmpty &&
-      !f.references.exists(partCols.contains))
+      !f.references.exists(c => partCols(c) || c == "_file"))
     // None unless the table advertises blooms and a data filter is
     // bloom-decidable: the common case costs no file system call
     val blooms = graft.sources.ManifestBlooms.prunerFor(res.root,
@@ -301,7 +314,7 @@ object ManifestConnector {
     val relPrefix = s"${res.root}/"
     files.filter { f =>
       lazy val pv = f.partValues.toMap
-      part.forall { flt =>
+      paths.forall(_.contains(f.absPath)) && part.forall { flt =>
         val v = evalPartitionFilter(flt, pv)
         if (group) !v.contains(false) else v.contains(true)
       } && f.stats.forall(st => data.forall(mayMatch(_, st))) &&
@@ -373,74 +386,6 @@ object ManifestConnector {
     }
   }
 
-  /** V2 connector `Expression` → `Column`, for routing SQL DML
-    * (`DELETE FROM ... WHERE`) into the manifest layer's copy-on-write
-    * [[graft.sources.Manifest.deleteWhere]]. V2 predicates carry
-    * general scalar shapes (arithmetic, casts) that the V1 `Filter`
-    * algebra cannot — `doc_id % 7 = 0` arrives as a nested
-    * `GeneralScalarExpression` and rebuilds here as the equivalent
-    * Column tree. `None` for anything unknown — `canDeleteWhere` then
-    * refuses and Spark reports the DELETE untranslatable. Semantics
-    * are exact (the Column IS the predicate, three-valued logic and
-    * all), not conservative like the skipping paths above. */
-  def v2ExprToColumn(e: org.apache.spark.sql.connector.expressions
-      .Expression): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.Column
-    // the Scala case classes (FieldReference, LiteralValue) are
-    // private[sql]; their Java interfaces are the public surface
-    import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, GeneralScalarExpression, Literal => V2Literal, NamedReference}
-    import org.apache.spark.sql.functions.{col, lit, not}
-
-    def all(es: Array[org.apache.spark.sql.connector.expressions
-        .Expression]): Option[Seq[Column]] = {
-      val cs = es.toSeq.map(v2ExprToColumn)
-      if (cs.exists(_.isEmpty)) None else Some(cs.flatten)
-    }
-
-    e match {
-      case f: NamedReference =>
-        // top-level columns only
-        if (f.fieldNames.length == 1) Some(col(f.fieldNames.head)) else None
-      case l: V2Literal[_] => literalColumn(l)
-      case c: V2Cast =>
-        v2ExprToColumn(c.expression()).map(_.cast(c.dataType()))
-      case g: GeneralScalarExpression =>
-        val kids = g.children()
-        (g.name(), kids.length) match {
-          case ("ALWAYS_TRUE", 0)  => Some(lit(true))
-          case ("ALWAYS_FALSE", 0) => Some(lit(false))
-          case ("AND", 2) => all(kids).map(c => c(0) && c(1))
-          case ("OR", 2)  => all(kids).map(c => c(0) || c(1))
-          case ("NOT", 1) => all(kids).map(c => not(c(0)))
-          case ("IS_NULL", 1)     => all(kids).map(_.head.isNull)
-          case ("IS_NOT_NULL", 1) => all(kids).map(_.head.isNotNull)
-          case ("=", 2)   => all(kids).map(c => c(0) === c(1))
-          case ("<>", 2)  => all(kids).map(c => c(0) =!= c(1))
-          case ("<=>", 2) => all(kids).map(c => c(0) <=> c(1))
-          case ("<", 2)   => all(kids).map(c => c(0) < c(1))
-          case ("<=", 2)  => all(kids).map(c => c(0) <= c(1))
-          case (">", 2)   => all(kids).map(c => c(0) > c(1))
-          case (">=", 2)  => all(kids).map(c => c(0) >= c(1))
-          case ("+", 2)   => all(kids).map(c => c(0) + c(1))
-          case ("-", 2)   => all(kids).map(c => c(0) - c(1))
-          case ("-", 1)   => all(kids).map(c => -c(0))
-          case ("*", 2)   => all(kids).map(c => c(0) * c(1))
-          case ("/", 2)   => all(kids).map(c => c(0) / c(1))
-          case ("%", 2)   => all(kids).map(c => c(0) % c(1))
-          case ("IN", n) if n >= 2 =>
-            all(kids).map(c => c.head.isin(c.tail: _*))
-          case ("STARTS_WITH", 2) =>
-            all(kids).map(c => c(0).startsWith(c(1)))
-          case ("ENDS_WITH", 2) => all(kids).map(c => c(0).endsWith(c(1)))
-          case ("CONTAINS", 2)  => all(kids).map(c => c(0).contains(c(1)))
-          case _ => None
-        }
-      case _ => None
-    }
-  }
-
-  /** A V2 literal (catalyst-internal value) as a Column, for the
-    * connector's supported scalar types. */
   /** DELETE predicates of pure key shape — a conjunction of
     * `col = lit` / `col IN (lits)` over DISTINCT columns — as the
     * cross-product key-tuple set they denote. This is what lets
@@ -448,7 +393,7 @@ object ManifestConnector {
     * metadata commit: the keys come straight off the predicate, no
     * scan. `None` for any other shape (ranges, arithmetic, NULLs,
     * repeated columns), or when the cross product exceeds 10k tuples
-    * — those keep the copy-on-write path. Only eligible when each
+    * — those take the row-level rewrite. Only eligible when each
     * literal's type equals the table column's type exactly (Spark
     * would otherwise have wrapped the column in a cast, which already
     * disqualifies the shape). */
@@ -520,35 +465,6 @@ object ManifestConnector {
     Some((cols, tuples))
   }
 
-  private def literalColumn(l: org.apache.spark.sql.connector
-      .expressions.Literal[_])
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.lit
-    val v = l.value
-    if (v == null)
-      return Some(lit(null).cast(l.dataType))
-    l.dataType match {
-      case StringType => Some(lit(v.toString))
-      case BooleanType | IntegerType | LongType | DoubleType |
-           FloatType | ShortType | ByteType | BinaryType => Some(lit(v))
-      case _: org.apache.spark.sql.types.DecimalType =>
-        Some(lit(v.asInstanceOf[org.apache.spark.sql.types.Decimal]
-          .toJavaBigDecimal))
-      case DateType => v match {
-        case d: Integer => Some(lit(java.time.LocalDate.ofEpochDay(
-          d.longValue())))
-        case _ => None
-      }
-      case TimestampType => v match {
-        case t: java.lang.Long => Some(lit(
-          java.time.Instant.EPOCH.plus(t, java.time.temporal.ChronoUnit
-            .MICROS)))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
   /** Is this a data filter we can hand to parquet? (column set checked
     * by the caller; here just the shape + value types) */
   def parquetTranslatable(f: SFilter): Boolean = f match {
@@ -588,11 +504,14 @@ object ManifestConnector {
   * declare a clustered write distribution so inserts write O(values)
   * files.
   *
-  * SQL DML rides the standard V2 mix-ins: `SupportsDelete` routes
-  * `DELETE FROM t WHERE ...` with translatable predicates straight
-  * into the copy-on-write [[Manifest.deleteWhere]] commit (untouched
-  * partitions carry files by reference; history stays time-travelable)
-  * — the SQL-level parity for the reference's item update/delete
+  * SQL DML rides the standard V2 mix-ins. `UPDATE`, `MERGE INTO` and
+  * `DELETE FROM t WHERE ...` are row-level rewrites of the files they
+  * touch ([[ManifestRowLevelOperation]]; untouched files carry by
+  * reference, history stays time-travelable), and so are the Scala
+  * [[Manifest.mergeInto]] and [[Manifest.deleteWhere]].
+  * `SupportsDelete` takes only the metadata-only shapes: a keyed
+  * merge-on-read DELETE and the unconditional one ([[deleteWhere]]) —
+  * the SQL-level parity for the reference's item update/delete
   * surface (reference: python-data-ingestions/index-data-lambda.py:
   * 164-172; Athena SQL, query-data-lambda.py:195-218). */
 final case class ManifestTable(res: ManifestConnector.Resolved,
@@ -637,30 +556,39 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
+  /** The version the last DML through this table object committed
+    * (its read version while none has): what [[Manifest.mergeInto]]
+    * and [[Manifest.deleteWhere]] return after planning through it. */
+  @volatile private[graft] var published: Long = res.version
+
+  /** Keyed merge-on-read shape (see [[deleteWhere]]) or the
+    * unconditional `AlwaysTrue`; every other DELETE is planned as a
+    * row-level rewrite ([[ManifestRowLevelOperation]]). */
   override def canDeleteWhere(predicates: Array[org.apache.spark.sql
       .connector.expressions.filter.Predicate]): Boolean =
-    predicates.forall(ManifestConnector.v2ExprToColumn(_).isDefined)
+    predicates.forall(_.name == "ALWAYS_TRUE") || morKeys(predicates).isDefined
 
-  /** All conjuncts AND-ed (an empty array = unconditional DELETE =
-    * rewrite to empty). Applies to the CURRENT snapshot — DML never
-    * targets a pinned version.
+  private def morKeys(predicates: Array[org.apache.spark.sql.connector
+      .expressions.filter.Predicate]): Option[(Seq[String], Seq[Seq[Any]])] =
+    if (SparkSession.active.conf.getOption("spark.graft.manifest.delete.mode")
+        .contains("merge-on-read"))
+      ManifestConnector.predicatesToKeys(predicates, res.declared)
+    else None
+
+  /** The two metadata-only DELETEs; applies to the CURRENT snapshot —
+    * DML never targets a pinned version.
     *
     * With `spark.graft.manifest.delete.mode=merge-on-read`, a DELETE
     * whose predicate is a pure key shape (`col = lit` / `col IN
     * (...)` conjunctions) commits the keys as a delete file instead
     * of rewriting data — O(keys) regardless of table size
-    * ([[graft.sources.Manifest.deleteByKeys]]). Every other
-    * predicate, and the default mode, takes the copy-on-write path. */
+    * ([[graft.sources.Manifest.deleteByKeys]]). `DELETE FROM t` and
+    * `TRUNCATE TABLE` arrive as `AlwaysTrue` and commit a rewrite
+    * that removes every file and writes none, with no data IO. */
   override def deleteWhere(predicates: Array[org.apache.spark.sql
       .connector.expressions.filter.Predicate]): Unit = {
     val spark = SparkSession.active
-    val mor = spark.conf
-      .getOption("spark.graft.manifest.delete.mode")
-      .contains("merge-on-read")
-    val keyed = if (mor)
-      ManifestConnector.predicatesToKeys(predicates, res.declared)
-    else None
-    keyed match {
+    published = morKeys(predicates) match {
       case Some((cols, tuples)) =>
         val schema = StructType(
           cols.map(c => res.declared(c).copy(nullable = false)))
@@ -670,24 +598,18 @@ final case class ManifestTable(res: ManifestConnector.Resolved,
         Manifest.deleteByKeys(spark, res.root,
           spark.createDataFrame(rows, schema))
       case None =>
-        val cond = predicates.toSeq.map(p =>
-          ManifestConnector.v2ExprToColumn(p).getOrElse(
-            throw new IllegalArgumentException(
-              s"untranslatable DELETE predicate $p — canDeleteWhere " +
-                "should have refused this")))
-          .reduceOption(_ && _)
-          .getOrElse(org.apache.spark.sql.functions.lit(true))
-        Manifest.deleteWhere(spark, res.root, cond, res.partCols)
+        Manifest.commitRewrite(spark, res, res.files.map(res.relPath).toSet,
+          Nil)
     }
   }
 
-  /** SQL UPDATE / MERGE INTO (and DELETEs whose predicates the
-    * metadata path cannot translate) — group-based copy-on-write via
-    * Spark's ReplaceData rewrite; see [[ManifestRowLevelOperation]]. */
+  /** SQL UPDATE / MERGE INTO / DELETE, and [[Manifest.mergeInto]] /
+    * [[Manifest.deleteWhere]] — group-based copy-on-write via Spark's
+    * ReplaceData rewrite; see [[ManifestRowLevelOperation]]. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new ManifestRowLevelOperation(res, info.command())
+    () => new ManifestRowLevelOperation(this, info.command())
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
     require(!(options.containsKey("startingVersion") &&

@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.Manifest
 
-/** SQL `UPDATE` / `MERGE INTO` / rewrite-shaped `DELETE` on manifest
-  * tables, riding Spark's own GROUP-BASED row-level operation
-  * machinery (`SupportsRowLevelOperations` → `RewriteUpdateTable` /
+/** The one data-rewrite plane of manifest tables: SQL `UPDATE`,
+  * `MERGE INTO` and `DELETE`, and the Scala [[Manifest.mergeInto]] /
+  * [[Manifest.deleteWhere]] that plan the same commands, riding Spark's
+  * own GROUP-BASED row-level operation machinery
+  * (`SupportsRowLevelOperations` → `RewriteUpdateTable` /
   * `RewriteMergeIntoTable` / `RewriteDeleteFromTable` → `ReplaceData`):
   * Spark plans the full post-image of every AFFECTED group as an
   * ordinary query over this operation's scan, writes it through the
@@ -29,26 +31,31 @@ import graft.sources.Manifest
   *  1. STATIC: the command's condition conjuncts are pushed into the
   *     scan builder and prune files by partition value, zone map and
   *     bloom sidecar.
-  *  2. RUNTIME: `SupportsRuntimeFiltering` on partition columns — for
-  *     MERGE, where the static condition says nothing, Spark runs the
-  *     source-side subquery and hands back IN-filters over the
-  *     partition columns, so only partitions with matching source rows
-  *     are rewritten (the SQL twin of [[Manifest.mergeInto]]'s
-  *     touched-tuple discovery).
+  *  2. RUNTIME: `SupportsRuntimeFiltering` on the `_file` metadata
+  *     column, which the operation requires on every row it reads:
+  *     Spark runs the command's condition (for MERGE, a semi-join with
+  *     the source) as a subquery over the table and hands back an
+  *     IN-filter of the files that hold a matching row, so only those
+  *     files are rewritten — whatever the partition layout, NULL and
+  *     multi-column partitions included — and a command that matches
+  *     nothing rewrites nothing.
   *  3. The scan NEVER forwards data filters to the readers: replaced
   *     groups must re-emit every surviving row, so row-group skipping
   *     on the rewrite read would be data loss, not an optimization.
   *
-  * Commit-time conflict detection pins the version the rewrite read
-  * (`Manifest.commitRewrite`): a concurrent commit fails the operation
-  * loudly instead of silently dropping its files.
+  * The commit ([[Manifest.commitRewrite]]) is pinned to the version
+  * the rewrite read: a concurrent commit fails the operation with the
+  * same `commit conflict` every manifest committer throws, instead of
+  * silently dropping that commit's files. The version it published is
+  * left on the table object ([[ManifestTable.published]]).
   *
-  * Metadata-only DELETEs never reach this path —
-  * `OptimizeMetadataOnlyDeleteFromTable` routes translatable
-  * predicates to [[ManifestTable.deleteWhere]] first. */
-final class ManifestRowLevelOperation(res: ManifestConnector.Resolved,
-                                      cmd: Command)
+  * The metadata-only DELETEs — keyed merge-on-read, unconditional —
+  * never reach this path: `OptimizeMetadataOnlyDeleteFromTable` routes
+  * them to [[ManifestTable.deleteWhere]] first. */
+final class ManifestRowLevelOperation(table: ManifestTable, cmd: Command)
     extends RowLevelOperation {
+
+  private val res = table.res
 
   /** The one scan Spark builds for this operation (group discovery and
     * rewrite read share it); its post-runtime-filter file list is what
@@ -56,6 +63,11 @@ final class ManifestRowLevelOperation(res: ManifestConnector.Resolved,
   @volatile private[connector] var builtScan: ManifestCowScan = _
 
   override def command(): Command = cmd
+
+  /** `_file` on every read row: the key of the runtime group filter
+    * ([[ManifestCowScan.filterAttributes]]). */
+  override def requiredMetadataAttributes(): Array[NamedReference] =
+    Array(Expressions.column("_file"))
 
   override def newScanBuilder(options: org.apache.spark.sql.util
       .CaseInsensitiveStringMap): ScanBuilder =
@@ -65,7 +77,7 @@ final class ManifestRowLevelOperation(res: ManifestConnector.Resolved,
     new WriteBuilder {
       override def build(): Write =
         new ManifestReplaceDataWrite(ManifestRowLevelOperation.this,
-          res, info.schema())
+          table, info.schema())
     }
 
   override def description(): String =
@@ -105,8 +117,8 @@ final class ManifestCowScanBuilder(op: ManifestRowLevelOperation,
 /** The copy-on-write rewrite scan: like the ordinary batch scan but
   * (a) it remembers which files it planned, (b) readers get NO pushed
   * filters and no limit (full fidelity — see class doc above), and
-  * (c) runtime IN-filters over partition columns shrink the group set
-  * before planning. */
+  * (c) a runtime IN-filter over `_file` shrinks the group set before
+  * planning. */
 final class ManifestCowScan(res: ManifestConnector.Resolved,
                             initial: Seq[ManifestConnector.FileInfo],
                             required: StructType)
@@ -114,15 +126,15 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
 
   @volatile private var files: Seq[ManifestConnector.FileInfo] = initial
 
-  /** Root-relative paths of the planned (= to-be-replaced) files. */
+  /** Manifest paths of the planned (= to-be-replaced) files. */
   private[connector] def plannedRelPaths: Set[String] =
-    files.map(_.absPath.stripPrefix(res.root).stripPrefix("/")).toSet
+    files.map(res.relPath).toSet
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
   override def filterAttributes(): Array[NamedReference] =
-    res.partCols.map(Expressions.column).toArray
+    Array(Expressions.column("_file"))
 
   override def filter(filters: Array[SFilter]): Unit =
     files = ManifestConnector.keepFiles(res, files, filters, group = true)
@@ -131,8 +143,8 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
     // applicable merge-on-read deletes ride along: a rewrite that
     // re-emitted deleted rows would resurrect them in the replacement
     files.map(f => ManifestInputPartition(f.absPath, f.size,
-      f.partValues.toArray, res.deleteSpecsFor(f)): InputPartition)
-      .toArray
+      f.partValues.toArray :+ ("_file" -> f.absPath),
+      res.deleteSpecsFor(f)): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -151,9 +163,11 @@ final class ManifestCowScan(res: ManifestConnector.Resolved,
 /** The replacement write: executor-staged parquet files, one atomic
   * commit swapping the scanned files for the written ones. */
 final class ManifestReplaceDataWrite(op: ManifestRowLevelOperation,
-                                     res: ManifestConnector.Resolved,
+                                     table: ManifestTable,
                                      writeSchema: StructType)
     extends Write {
+
+  private val res = table.res
 
   override def toBatch: BatchWrite = new BatchWrite {
     private val salt = java.util.UUID.randomUUID().toString.take(8)
@@ -168,9 +182,8 @@ final class ManifestReplaceDataWrite(op: ManifestRowLevelOperation,
       val scan = op.builtScan
       require(scan != null,
         "row-level write committed without a planned scan")
-      Manifest.commitRewrite(SparkSession.active, res.root, res.version,
-        scan.plannedRelPaths, ManifestWriteMessage.entriesOf(messages),
-        res.partCols)
+      table.published = Manifest.commitRewrite(SparkSession.active, res,
+        scan.plannedRelPaths, ManifestWriteMessage.entriesOf(messages))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -5,13 +5,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 
 import graft.sources.Manifest
+import graft.sources.connector.ManifestConnector
 
 /** The optimistic-concurrency retry path of commitAppend /
   * commitAppendBranch, exercised through the `appendRaceFence` test
   * seam: the fence runs in exactly the window the race occupies
   * (between the head-read and the publish claim), so a concurrent
   * commit injected there forces the loser onto the retry path
-  * deterministically.
+  * deterministically. A row-level rewrite (`commitRewrite`) does not
+  * retry: off a stale version it throws the same `commit conflict`.
   *
   * Every test resets the fence in a finally — a leaked fence would
   * contaminate every subsequent append in the JVM (the seam is a
@@ -98,6 +100,26 @@ class ManifestRaceSpec extends SparkSpec {
       .select("id", "s").as[(Long, String)].collect().toSet
     assert(got == Set((7L, "appended-survivor"), (1L, "base"), (9L, "new")),
       s"MoR delete retro-deleted a post-delete append: $got")
+  }
+
+  test("a row-level rewrite committing off a stale version throws " +
+    "commit conflict; the winner's snapshot is intact") {
+    val root = newRoot()
+    Manifest.init(spark, root, Seq((1L, "base")).toDF("id", "s"))
+    // the rewrite read v1 ...
+    val stale = ManifestConnector.resolve(spark, Map("path" -> root))
+    // ... and a concurrent append won v2 before it committed
+    Manifest.commitAppend(spark, root, Seq((2L, "winner")).toDF("id", "s"))
+    val winner = Manifest.snapshot(spark, root, 2L).files
+    val e = intercept[IllegalStateException] {
+      Manifest.commitRewrite(spark, stale, stale.files.map(stale.relPath).toSet,
+        Nil)
+    }
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    assert(Manifest.latestVersion(spark, root).contains(2L))
+    assert(Manifest.snapshot(spark, root, 2L).files == winner)
+    assert(Manifest.read(spark, root, None)
+      .select("id").as[Long].collect().toSet == Set(1L, 2L))
   }
 
   test("exhausting the retry budget rethrows (no unbounded spin) and " +

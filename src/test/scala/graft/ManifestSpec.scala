@@ -36,6 +36,13 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.latestVersion(spark, root).contains(3L))
   }
 
+  /** Manifest paths of the version-`v` files holding a row whose id is
+    * one of `ids` (the `_file` metadata column). */
+  private def filesHolding(root: String, v: Long, ids: Long*): Set[String] =
+    spark.read.format("graft-manifest").option("version", v).load(root)
+      .filter(col("id").isin(ids: _*)).select("_file").as[String].collect()
+      .map(_.stripPrefix(s"$root/")).toSet
+
   test("mergeInto: cross-partition atomic commit; untouched partition " +
     "files carry over by reference; pinned reader keeps old snapshot") {
     val root = newRoot()
@@ -56,9 +63,11 @@ class ManifestSpec extends SparkSpec {
     assert(untouched("b").nonEmpty && untouched("c").nonEmpty)
     assert(untouched("b").subsetOf(after.files.toSet))
     assert(untouched("c").subsetOf(after.files.toSet))
-    // touched partition a: all-new files in v2
-    assert(after.files.filter(_.contains("part=a/"))
-      .forall(!before.files.contains(_)))
+    // touched partition a: the file that held the updated key is
+    // replaced (rewrites are file-granular)
+    val held = filesHolding(root, 1L, 2L)
+    assert(held.nonEmpty && held.forall(_.contains("part=a/")))
+    assert(!after.files.exists(held))
     // pinned reader (v1) is isolated from the merge
     assert(Manifest.read(spark, root, Some(1L))
       .select("id", "v").as[(Long, Int)].collect().toSet ==
@@ -67,6 +76,71 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.read(spark, root, None)
       .select("id", "v").as[(Long, Int)].collect().toSet ==
       Set((1L, 10), (2L, 99), (5L, 50), (3L, 30), (4L, 40)))
+  }
+
+  test("deleteWhere rewrites only the file that holds the key; the " +
+    "partition's other file carries over by reference") {
+    val root = newRoot()
+    Manifest.init(spark, root,
+      Seq((1L, "a", 10), (2L, "a", 20)).toDF("id", "part", "v").coalesce(1),
+      Seq("part"))
+    Manifest.commitAppend(spark, root,
+      Seq((3L, "a", 30), (4L, "a", 40)).toDF("id", "part", "v").coalesce(1),
+      Seq("part"))
+    val before = Manifest.snapshot(spark, root, 2L).files
+    assert(before.size == 2)
+    val (kept, holder) = before.partition(_.contains("/c00000001-"))
+    assert(Manifest.deleteWhere(spark, root, col("id") === 3L, "part") == 3L)
+    val after = Manifest.snapshot(spark, root, 3L).files
+    assert(kept.toSet.subsetOf(after.toSet),
+      s"the file without the key was rewritten: $before -> $after")
+    assert(!after.contains(holder.head))
+    assert(rowsOf(root) == Set((1L, "a", 10), (2L, "a", 20), (4L, "a", 40)))
+  }
+
+  test("mergeInto: an update that moves a key to another partition " +
+    "leaves exactly one row for it") {
+    val root = newRoot()
+    Manifest.init(spark, root,
+      Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "part", "v"),
+      Seq("part"))
+    Manifest.mergeInto(spark, root,
+      Seq((1L, "b", 11)).toDF("id", "part", "v"), "id", "part")
+    assert(rowsOf(root) == Set((1L, "b", 11), (2L, "b", 20)))
+  }
+
+  test("mergeInto: two updates of one key fail the merge and publish " +
+    "nothing") {
+    val root = newRoot()
+    Manifest.init(spark, root,
+      Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "part", "v"),
+      Seq("part"))
+    val e = intercept[Exception] {
+      Manifest.mergeInto(spark, root,
+        Seq((1L, "a", 11), (1L, "a", 12)).toDF("id", "part", "v"),
+        "id", "part")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("MERGE_CARDINALITY_VIOLATION")), e.toString)
+    assert(Manifest.latestVersion(spark, root).contains(1L))
+    assert(rowsOf(root) == Set((1L, "a", 10), (2L, "b", 20)))
+  }
+
+  test("mergeInto: an update with an extra column widens the schema; " +
+    "carried rows read it back NULL") {
+    val root = newRoot()
+    Manifest.init(spark, root,
+      Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "part", "v"),
+      Seq("part"))
+    Manifest.mergeInto(spark, root,
+      Seq((2L, "b", 21, "x"), (3L, "c", 30, "y"))
+        .toDF("id", "part", "v", "extra"), "id", "part")
+    val head = Manifest.read(spark, root)
+    assert(head.schema("extra").nullable)
+    assert(head.select("id", "v", "extra")
+      .as[(Long, Int, Option[String])].collect().toSet ==
+      Set((1L, 10, None), (2L, 21, Some("x")), (3L, 30, Some("y"))))
   }
 
   test("compact: bin-packs small files from manifest-recorded sizes, " +
@@ -404,7 +478,13 @@ class ManifestSpec extends SparkSpec {
 
   test("deleteWhere: copy-on-write delete rewrites only matching " +
     "partitions; old snapshot keeps the rows") {
-    val root = newRoot()
+    // under a catalog, so the SQL DML below reaches it as nopcat.db.t
+    val warehouse = "file://" + java.nio.file.Files
+      .createTempDirectory("graft-manifest").toString
+    spark.conf.set("spark.sql.catalog.nopcat",
+      classOf[graft.sources.connector.ManifestCatalog].getName)
+    spark.conf.set("spark.sql.catalog.nopcat.root", warehouse)
+    val root = s"$warehouse/db/t"
     Manifest.init(spark, root,
       Seq((1L, "a", 10), (2L, "a", 20), (3L, "b", 30), (4L, "c", 40))
         .toDF("id", "part", "v"),
@@ -425,6 +505,16 @@ class ManifestSpec extends SparkSpec {
     // no-match delete is a no-op commit
     assert(Manifest.deleteWhere(spark, root, col("v") === 999,
       "part") == 2L)
+    // and so are SQL UPDATE, DELETE and MERGE that match nothing
+    spark.sql("UPDATE nopcat.db.t SET v = 0 WHERE v = 999")
+    spark.sql("DELETE FROM nopcat.db.t WHERE v = 999")
+    Seq((999L, "a", 1)).toDF("id", "part", "v")
+      .createOrReplaceTempView("nop_src")
+    spark.sql("""MERGE INTO nopcat.db.t t USING nop_src s ON t.id = s.id
+      |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
+    assert(Manifest.latestVersion(spark, root).contains(2L))
+    assert(Manifest.read(spark, root, None)
+      .select("id").as[Long].collect().toSet == Set(1L, 3L, 4L))
   }
 
   test("commit conflict: stale committer throws, winner's state intact") {
@@ -523,9 +613,12 @@ class ManifestSpec extends SparkSpec {
     // untouched partition c carried by reference
     val after = Manifest.snapshot(spark, root, 2L).files.toSet
     assert(v1files.filter(_.contains("part=c/")).toSet.subsetOf(after))
-    // touched partitions' v1 files dropped from the new manifest
-    assert(!after.exists(f => f.contains("part=a%3Ab/") &&
-      v1files.contains(f)), "escaped partition's old files carried over")
+    // the v1 files that held the matched keys — in the escaped and the
+    // NULL partition — dropped from the new manifest
+    val held = filesHolding(root, 1L, 2L, 3L)
+    assert(held.exists(_.contains("part=a%3Ab/")) &&
+      held.exists(_.contains("__HIVE_DEFAULT_PARTITION__")), held)
+    assert(!after.exists(held), "escaped partition's old files carried over")
   }
 
   test("deleteWhere: hive-escaped and NULL partitions rewrite " +
@@ -573,8 +666,9 @@ class ManifestSpec extends SparkSpec {
       Seq((1L, "a", 99)).toDF("id", "part", "v"), "id", "part")
     val feed = Manifest.readChanges(spark, root, 2L, Some(3L))
       .select("id", "part", "v").as[(Long, String, Int)].collect().toSet
-    // post-image of the rewritten partition a; b and c never appear
-    assert(feed == Set((1L, "a", 99), (3L, "a", 30)))
+    // post-image of the rewritten file (v1's part=a file, the one that
+    // held id 1); v2's part=a file and b and c never appear
+    assert(feed == Set((1L, "a", 99)))
     // spanning reads compose: v1→v3 = appended ∪ rewritten-a
     assert(Manifest.readChanges(spark, root, 1L, Some(3L))
       .select("id").as[Long].collect().toSet == Set(1L, 3L, 4L))
