@@ -61,16 +61,14 @@ object AnnProbeCheck {
       } else (Tables.load(spark, sfDir, "embeddings"), 16)
     val pivots = Similarity.pivotRows(
       Similarity.ivfPivots(emb, "vec_id", "embedding", nCells))
-    val assign = Similarity.ivfAssign(
-        Similarity.vecRows(emb, "vec_id", "embedding"), pivots)
-      .persist()
     val books = Similarity.trainBooks(
       Similarity.trainSample(emb, "vec_id", "pqtrain", 2048),
       "vec_id", "embedding", dim, m, pqK, iters)
-    val codes = Similarity.encode(assign, books, m, dim / m).persist()
+    val assign = Similarity.encode(Similarity.ivfAssign(
+        Similarity.vecRows(emb, "vec_id", "embedding"), pivots),
+      books, m, dim / m).persist()
     val qs = Similarity.queryRows(emb.filter(col("vec_id").isin(qids: _*)),
       "vec_id", "embedding")
-    val qset = Similarity.qsetOf(spark, qs)
 
     // probe rank of every cell per query (1-based, cosine desc / pid asc)
     val ranks = Similarity.probe(qs, pivots, nCells).groupBy(_._1).values
@@ -79,15 +77,14 @@ object AnnProbeCheck {
     val probeRank = ranks.toDF("qid", "centroid_id", "probe_rank")
 
     // exact L2 top-k per query
-    val exact = Similarity.exactTopK(assign.crossJoin(qset), topK,
-      cosine = false, Some(6))
+    val exact = Similarity.exactTopK(Similarity.allQueries(assign, qs), qs,
+      topK, cosine = false, Some(6))
 
     // ADC rank among the REGISTERED nProbe cells' candidates
     val adcRank = Similarity.adc(
-        Similarity.inProbed(codes,
+        Similarity.inProbed(assign, qs,
           ranks.collect { case (q, pid, r) if r <= nProbe => (q, pid) }),
-        Similarity.lut(Similarity.booksFrame(spark, books), qset, m,
-          dim / m))
+        Similarity.lut(books, qs, m, dim / m), m, pqK)
       .withColumn("adc_rank", row_number().over(
         Window.partitionBy("qid").orderBy(col("ad").asc, col("id").asc)))
       .select("qid", "id", "adc_rank")

@@ -275,28 +275,41 @@ object Similarity {
         .take(nProbe).map { case (pid, _) => (qid, pid) }
     }
 
+  /** Rows paired with query ordinals: one output row per element of
+    * the array column `qis`, carrying `qi` (the index into the
+    * driver-side query set, and so into every per-query literal) and
+    * `qid`. */
+  private def paired(rows: DataFrame, qis: Column,
+                     qs: Seq[(Long, Array[Double])]): DataFrame =
+    rows.select(col("*"), explode(qis).as("qi"))
+      .withColumn("qid", element_at(typedLit(qs.map(_._1)), col("qi") + 1))
+
+  /** Every row paired with every query — one literal, no cross join. */
+  private[graft] def allQueries(rows: DataFrame,
+                                qs: Seq[(Long, Array[Double])]): DataFrame =
+    paired(rows, typedLit(qs.indices.toArray), qs)
+
   /** Rows of the probed cells (`rows` carries `centroid_id`), each
-    * paired with every query that probed its cell via a broadcast
-    * (qid, centroid_id) join. The `isin` over the union of probed cells
-    * is a partition filter on a cell-partitioned table: unprobed cells'
-    * files never enter the plan. */
+    * paired with every query that probed its cell: the (cell → query
+    * ordinals) map rides as one literal. The `isin` over the union of
+    * probed cells is a partition filter on a cell-partitioned table:
+    * unprobed cells' files never enter the plan. */
   private[graft] def inProbed(rows: DataFrame,
-                              pairs: Seq[(Long, Long)]): DataFrame =
-    rows.filter(col("centroid_id").isin(pairs.map(_._2).distinct: _*))
-      .join(broadcast(rows.sparkSession.createDataFrame(pairs)
-        .toDF("qid", "centroid_id")), Seq("centroid_id"))
+                              qs: Seq[(Long, Array[Double])],
+                              pairs: Seq[(Long, Long)]): DataFrame = {
+    val qi = qs.map(_._1).zipWithIndex.toMap
+    val byCell = pairs.groupBy(_._2).map { case (cell, ps) =>
+      cell -> ps.map(p => qi(p._1)).distinct.sorted }
+    paired(rows.filter(col("centroid_id").isin(byCell.keys.toSeq: _*)),
+      element_at(typedLit(byCell), col("centroid_id")), qs)
+  }
 
   /** Query vectors on the driver as (qid, vector) — query sets are
-    * broadcast-sized by contract. */
+    * broadcast-sized by contract. Their order fixes the ordinal `qi`. */
   private[graft] def queryRows(queries: DataFrame, qidCol: String,
                                vecCol: String): Seq[(Long, Array[Double])] =
     queries.select(col(qidCol).cast("long"), Vectors.toDouble(col(vecCol)))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-
-  /** The query set as a broadcast (qid, qvec) frame. */
-  private[graft] def qsetOf(spark: SparkSession,
-                            qs: Seq[(Long, Array[Double])]): DataFrame =
-    broadcast(spark.createDataFrame(qs).toDF("qid", "qvec"))
 
   /** Train PQ codebooks: per subspace, Euclidean [[lloyd]] seeded with
     * the subvectors of the `k` lowest-portable-hash vectors; empty
@@ -316,43 +329,47 @@ object Similarity {
       cosine = false, iters, keepEmpty = true)
   }
 
-  private[graft] def booksFrame(spark: SparkSession,
-                                books: Seq[Cent]): DataFrame =
-    spark.createDataFrame(books).toDF("m", "cid", "cv")
-
-  /** PQ-encode rows carrying `v`: one (m, code) row per subspace, the
-    * code its nearest codeword by squared L2 (the [[nearest]] fold
-    * against that subspace's codebook). Every other column rides
-    * along. */
+  /** PQ-encode rows carrying `v`: adds `codes`, one int per subspace in
+    * subspace order, each its nearest codeword by squared L2 (the
+    * [[nearest]] fold against that subspace's codebook). Every column
+    * rides along. */
   private[graft] def encode(rows: DataFrame, books: Seq[Cent], m: Int,
-                            subDim: Int): DataFrame = {
-    val keep = rows.columns.toSeq.filter(_ != "v").map(col)
-    rows.select(keep :+ posexplode(subspaces(col("v"), m, subDim))
-        .as(Seq("m", "sv")): _*)
-      .select(keep :+ col("m") :+ nearest(centsOf(books, col("m")),
-        col("sv"), cosine = false).getField("cid").as("code"): _*)
+                            subDim: Int): DataFrame =
+    rows.withColumn("codes", transform(subspaces(col("v"), m, subDim),
+      (sv, g) => nearest(centsOf(books, g), sv, cosine = false)
+        .getField("cid").cast("int")))
+
+  /** THE ADC lookup table on the driver: entry (qi·m + g)·pqK + c is the
+    * squared L2 between query qi's subvector g and codeword c — the
+    * same left-to-right fold as [[l2sq]], so entries are bit-identical
+    * to it. `books` is dense, in (m, cid) order. */
+  private[graft] def lut(books: Seq[Cent], qs: Seq[(Long, Array[Double])],
+                         m: Int, subDim: Int): Array[Double] = {
+    val pqK = books.size / m
+    require(books.map(c => (c._1, c._2)) ==
+        (for (g <- 0 until m; c <- 0 until pqK) yield (g, c.toLong)),
+      "codebooks must be dense and in (m, cid) order")
+    for ((_, q) <- qs.toArray; (g, _, cv) <- books) yield {
+      var d = 0.0; var i = 0
+      while (i < subDim) {
+        val x = cv(i) - q(g * subDim + i); d += x * x; i += 1
+      }
+      d
+    }
   }
 
-  /** THE ADC lookup table: per (query, subspace, codeword) the squared
-    * L2 between the query's subvector and the codeword — |Q|·m·pqK
-    * rows, one broadcast. `books` is (m, cid, cv). */
-  private[graft] def lut(books: DataFrame, qset: DataFrame, m: Int,
-                         subDim: Int): DataFrame =
-    broadcast(books
-      .join(qset.select(col("qid"), posexplode(subspaces(col("qvec"), m,
-        subDim)).as(Seq("m", "qsv"))), Seq("m"))
-      .select(col("qid"), col("m"), col("cid").as("code"),
-        l2sq(col("cv"), col("qsv")).as("pd")))
-
-  /** ADC scoring: per (query, candidate) the summed lookup distances of
-    * the candidate's codes — scoring never touches a float vector. The
-    * query row itself is excluded. `codes` is (id, m, code) scored for
-    * every query, or carries `qid` when each query scores only its own
-    * candidates. Returns (qid, id, ad). */
-  private[graft] def adc(codes: DataFrame, lut: DataFrame): DataFrame =
-    codes.join(lut, Seq("qid", "m", "code").filter(codes.columns.contains))
-      .filter(col("id") =!= col("qid"))
-      .groupBy("qid", "id").agg(sum("pd").as("ad"))
+  /** ADC scoring of rows carrying `codes` and a query ordinal `qi`:
+    * `ad` = the lookup distances of the row's codes summed in subspace
+    * order — row-wise, no join, never a float vector. The query row
+    * itself is excluded; every column rides along. */
+  private[graft] def adc(rows: DataFrame, lut: Array[Double], m: Int,
+                         pqK: Int): DataFrame = {
+    val table = typedLit(lut)
+    rows.filter(col("id") =!= col("qid"))
+      .withColumn("ad", aggregate(transform(col("codes"), (c, g) =>
+          element_at(table, (col("qi") * m + g) * pqK + c + 1)),
+        lit(0.0), _ + _))
+  }
 
   /** The `n` best ADC candidates per query, (ad, id) ascending — the
     * bounded-heap [[TopK.perGroup]] plan, no corpus sort. */
@@ -364,12 +381,15 @@ object Similarity {
     * ascending, ties by ascending id, the query row itself excluded.
     * `dp` rounds the rank key before ranking (the registry's
     * round-before-rank discipline, for results a SQL oracle replays).
-    * `pairs` carries (qid, id, v, qvec); returns (qid, id, d). */
-  private[graft] def exactTopK(pairs: DataFrame, k: Int, cosine: Boolean,
-                               dp: Option[Int]): DataFrame = {
+    * `pairs` carries (qi, qid, id, v); the query vectors ride as one
+    * literal. Returns (qid, id, d). */
+  private[graft] def exactTopK(pairs: DataFrame,
+                               qs: Seq[(Long, Array[Double])], k: Int,
+                               cosine: Boolean, dp: Option[Int]): DataFrame = {
+    val qvec = element_at(typedLit(qs.map(_._2)), col("qi") + 1)
     val raw =
-      if (cosine) Vectors.cosine(col("v"), col("qvec"))
-      else l2sq(col("v"), col("qvec"))
+      if (cosine) Vectors.cosine(col("v"), qvec)
+      else l2sq(col("v"), qvec)
     TopK.perGroup(
       pairs.filter(col("id") =!= col("qid"))
         .select(col("qid"), col("id"), dp.fold(raw)(round(raw, _)).as("d")),
@@ -377,15 +397,17 @@ object Similarity {
         TopK.asc("id")), k)
   }
 
-  /** The exact re-rank (the FAISS `refine` step): each shortlisted
-    * (qid, id) joins back to its full vector in `vmap` (id, v) —
-    * shortlist-sized, never a corpus pass — and ranks by 6-dp squared
-    * L2, so a shortlist that contains the true top-k re-ranks to
-    * EXACTLY it. */
-  private[graft] def rerank(short: DataFrame, vmap: DataFrame,
-                            qset: DataFrame, k: Int): DataFrame =
-    exactTopK(short.select("qid", "id").join(vmap, Seq("id"))
-      .join(qset, Seq("qid")), k, cosine = false, Some(6))
+  /** The exact re-rank (the FAISS `refine` step): each shortlisted row
+    * ranks by 6-dp squared L2 to its query, so a shortlist that
+    * contains the true top-k re-ranks to EXACTLY it. Shortlist rows
+    * carry their vector `v`, or `vmap` (id, v) supplies it through a
+    * shortlist-sized join — never a corpus pass. */
+  private[graft] def rerank(short: DataFrame, vmap: Option[DataFrame],
+                            qs: Seq[(Long, Array[Double])],
+                            k: Int): DataFrame =
+    exactTopK(vmap.fold(short)(vm =>
+        short.select("qi", "qid", "id").join(vm, Seq("id"))),
+      qs, k, cosine = false, Some(6))
 
   /** IVF (inverted-file) coarse quantizer: `nCentroids` pivot vectors
     * chosen by [[ivfPivots]] (no RNG — reproducible across
@@ -410,9 +432,8 @@ object Similarity {
     val qs = queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol)
     val cells = ivfAssign(graft.scaleOut(vecRows(emb, idCol, vecCol)),
       pivots)
-    exactTopK(inProbed(cells, probe(qs, pivots, nProbe))
-        .join(qsetOf(emb.sparkSession, qs), Seq("qid")),
-        k, cosine = true, None)
+    exactTopK(inProbed(cells, qs, probe(qs, pivots, nProbe)), qs, k,
+        cosine = true, None)
       .select(col("id").as(idCol), col("d").as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
   }
@@ -544,9 +565,10 @@ object Similarity {
   // compressed to `m` one-byte-ish codes (nearest sub-codebook centroid
   // per subspace), so a 100 TB float corpus becomes ~m bytes/vector of
   // residency, and query scoring is ADC — a per-(subspace, centroid)
-  // lookup table of m·k partial distances built ONCE per query, then a
-  // codes⋈lut join + per-id sum. The single-query operators below are
-  // the batched kernel path with a one-row query set.
+  // lookup table of m·k partial distances built ONCE per query on the
+  // driver, then a row-wise sum over each row's codes array. The
+  // single-query operators below are the batched kernel path with a
+  // one-row query set.
 
   /** Train per-subspace codebooks with Lloyd iterations (Euclidean,
     * k-means per subspace). Init = the k lowest-portable-hash docs'
@@ -555,10 +577,12 @@ object Similarity {
     * Returns (m, cid, cv) as m·k local rows. */
   def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
                   dim: Int, m: Int, k: Int, iters: Int): DataFrame =
-    booksFrame(emb.sparkSession,
-      trainBooks(emb, idCol, vecCol, dim, m, k, iters))
+    emb.sparkSession.createDataFrame(
+        trainBooks(emb, idCol, vecCol, dim, m, k, iters))
+      .toDF("m", "cid", "cv")
 
-  /** Encode every vector as m (subspace → centroid id) codes. */
+  /** Encode every vector as (id, codes): its m centroid ids, one per
+    * subspace in subspace order. */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame, dim: Int, m: Int): DataFrame =
     encode(graft.scaleOut(vecRows(emb, idCol, vecCol)),
@@ -566,24 +590,21 @@ object Similarity {
         .collect().toSeq
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
         .sortBy(c => (c._1, c._2)),
-      m, dim / m)
+      m, dim / m).select("id", "codes")
 
   /** ADC top-k: approximate nearest neighbors of `queryId`'s vector by
-    * summed per-subspace lookup distances. The lut is m·k rows
-    * (broadcast); scoring never touches a float vector — just the
-    * codes join — which is the point at 100 TB. Returns
+    * summed per-subspace lookup distances. The lut is m·k driver
+    * doubles (one literal); scoring never touches a float vector —
+    * just the codes array — which is the point at 100 TB. Returns
     * (id, approx_dist) ascending. */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryId: Long, topK: Int, dim: Int,
              m: Int = 4, k: Int = 16, iters: Int = 1): DataFrame = {
     val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
-    val spark = emb.sparkSession
-    val qset = qsetOf(spark,
-      queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol))
-    shortlist(adc(
-        encode(graft.scaleOut(vecRows(emb, idCol, vecCol)), books, m,
-          dim / m),
-        lut(booksFrame(spark, books), qset, m, dim / m)), topK)
+    val qs = queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol)
+    shortlist(adc(allQueries(encode(graft.scaleOut(vecRows(emb, idCol,
+          vecCol)), books, m, dim / m), qs),
+        lut(books, qs, m, dim / m), m, k), topK)
       .select(col("id").as(idCol), col("ad").as("approx_dist"))
       .orderBy(col("approx_dist").asc, col(idCol).asc)
   }
@@ -631,14 +652,13 @@ object Similarity {
                 queryId: Long, topK: Int, dim: Int,
                 nCentroids: Int = 16, nProbe: Int = 4,
                 m: Int = 4, k: Int = 16, iters: Int = 1): DataFrame = {
-    val spark = emb.sparkSession
     val pivots = pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids))
     val qs = queryRows(emb.filter(col(idCol) === queryId), idCol, vecCol)
     val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
-    val cand = inProbed(ivfAssign(graft.scaleOut(vecRows(emb, idCol,
-      vecCol)), pivots), probe(qs, pivots, nProbe))
-    shortlist(adc(encode(cand, books, m, dim / m),
-        lut(booksFrame(spark, books), qsetOf(spark, qs), m, dim / m)), topK)
+    val cand = inProbed(encode(ivfAssign(graft.scaleOut(vecRows(emb,
+      idCol, vecCol)), pivots), books, m, dim / m), qs,
+      probe(qs, pivots, nProbe))
+    shortlist(adc(cand, lut(books, qs, m, dim / m), m, k), topK)
       .select(col("id").as(idCol), col("ad").as("approx_dist"))
       .orderBy(col("approx_dist").asc, col(idCol).asc)
   }
@@ -646,10 +666,10 @@ object Similarity {
   /** BATCHED served refine — production ANN serves query SETS, not
     * single ids: the PQ codebooks and corpus codes are built ONCE and
     * shared across the whole batch, the |Q|·m·k ADC lookup table rides
-    * one broadcast, per-query shortlists run through the bounded-heap
+    * one literal, per-query shortlists run through the bounded-heap
     * [[graft.plans.TopK.perGroup]] plan (no corpus sort, no window
-    * spill), and the exact re-rank joins only shortlist rows back to
-    * the vector store. [[pqTopKRefined]] is this with one query, so
+    * spill), and the shortlisted rows carry their own vectors to the
+    * exact re-rank — no join back to the corpus. [[pqTopKRefined]] is this with one query, so
     * per query the output is identical (PqSpec pins the equivalence;
     * q245's oracle pins the exact L2 top-k per query). Returns
     * (query_id, idCol, l2_dist), each query's rows the exact L2 top-k
@@ -660,15 +680,13 @@ object Similarity {
                          m: Int = 4, k: Int = 16, iters: Int = 1,
                          refineFactor: Int = 10): DataFrame = {
     require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    val spark = emb.sparkSession
     val books = trainBooks(emb, idCol, vecCol, dim, m, k, iters)
-    val qset = qsetOf(spark, queryRows(queries, queryIdCol, vecCol))
-    val short = shortlist(adc(
-        encode(graft.scaleOut(vecRows(emb, idCol, vecCol)), books, m,
-          dim / m),
-        lut(booksFrame(spark, books), qset, m, dim / m)),
+    val qs = queryRows(queries, queryIdCol, vecCol)
+    val short = shortlist(adc(allQueries(encode(graft.scaleOut(
+          vecRows(emb, idCol, vecCol)), books, m, dim / m), qs),
+        lut(books, qs, m, dim / m), m, k),
       refineFactor * topK)
-    rerank(short, vecRows(emb, idCol, vecCol), qset, topK)
+    rerank(short, None, qs, topK)
       .select(col("qid").as("query_id"), col("id").as(idCol),
         col("d").as("l2_dist"))
   }
@@ -681,11 +699,11 @@ object Similarity {
     * cosine ground truth would measure the metric mismatch, not the
     * quantization loss).
     *
-    * BATCH shape end to end, no driver loops: the query set rides one
-    * broadcast, every ranking (exact, cell probe, ADC) is a single
+    * BATCH shape end to end, no driver loops: the query set rides as
+    * literals, every ranking (exact, cell probe, ADC) is a single
     * [[graft.plans.TopK.perGroup]] bounded-heap pass over ALL queries
     * at once, and recalls are computed with (qid, id) semi-joins — the
-    * X12 bulk-inference shape, |Q|-bounded broadcasts, nothing
+    * X12 bulk-inference shape, |Q|-bounded literals, nothing
     * corpus-sized on the driver. Serving state (IVF assignment, corpus
     * codes) persists ONCE via CacheScope and every path re-probes it —
     * how a deployed index amortizes at 100 TB.
@@ -714,34 +732,33 @@ object Similarity {
                 refineFactor: Int = 10): DataFrame = {
     require(queryIds.nonEmpty, "queryIds must be non-empty")
     require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    val spark = emb.sparkSession
     val pivots = pivotRows(ivfPivots(emb, idCol, vecCol, nCentroids))
-    val rows = graft.scaleOut(vecRows(emb, idCol, vecCol))
-    // shared serving state: cell assignment and corpus codes
-    val index = graft.CacheScope.persist(ivfAssign(rows, pivots))
     val books = trainBooks(emb, idCol, vecCol, dim, m, pqK, iters)
-    val codes = graft.CacheScope.persist(encode(index, books, m, dim / m))
+    // shared serving state: cell assignment and corpus codes
+    val index = graft.CacheScope.persist(ivfAssign(
+      graft.scaleOut(vecRows(emb, idCol, vecCol)), pivots))
+    val codes = graft.CacheScope.persist(
+      encode(index, books, m, dim / m).drop("v"))
     val qs = queryRows(emb.filter(col(idCol).isin(queryIds: _*)), idCol,
       vecCol)
-    val qset = qsetOf(spark, qs)
     val probes = probe(qs, pivots, nProbe)
 
     // exact ground truths: one corpus × |Q| map pass per metric
-    val all = rows.crossJoin(qset)
-    val exactCos = exactTopK(all, k, cosine = true, Some(6))
-    val exactL2 = exactTopK(all, k, cosine = false, Some(6))
+    val all = allQueries(index, qs)
+    val exactCos = exactTopK(all, qs, k, cosine = true, Some(6))
+    val exactL2 = exactTopK(all, qs, k, cosine = false, Some(6))
     // IVF: score only each query's probed cells
-    val ivf = exactTopK(inProbed(index, probes).join(qset, Seq("qid")),
-      k, cosine = true, Some(6))
+    val ivf = exactTopK(inProbed(index, qs, probes), qs, k,
+      cosine = true, Some(6))
     // ADC for ALL queries at once; the refine step re-ranks a
     // refineFactor·k shortlist exactly; IVF-PQ restricts ADC to the
     // probed cells' candidates
-    val lt = lut(booksFrame(spark, books), qset, m, dim / m)
-    val pqScored = adc(codes.drop("centroid_id"), lt)
+    val lt = lut(books, qs, m, dim / m)
+    val pqScored = adc(allQueries(codes, qs), lt, m, pqK)
     val pq = shortlist(pqScored, k)
     val pqr = rerank(shortlist(pqScored, refineFactor * k),
-      index.select("id", "v"), qset, k)
-    val ivfpq = shortlist(adc(inProbed(codes, probes), lt), k)
+      Some(index.select("id", "v")), qs, k)
+    val ivfpq = shortlist(adc(inProbed(codes, qs, probes), lt, m, pqK), k)
 
     // digests of the exact top-k in rank order; recalls via semi-joins
     def digest(exact: DataFrame, rankKey: Column, as: String) =

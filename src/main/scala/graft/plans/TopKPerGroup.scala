@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Per-group top-k as a WHOLE-OPERATOR extension — the preference-order
@@ -25,6 +25,14 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * work drops from O(n log n) sort to O(n log k), memory from
   * O(partition) to O(k·groups), and nothing ever sorts or spills a
   * whole partition.
+  *
+  * The physical form runs in two steps, as `TakeOrderedAndProject`
+  * does: a PARTIAL step keeps each task's best k per group before the
+  * exchange, then the final step merges the survivors. Only k rows
+  * per (task, group) cross the shuffle, so wide rows (full vectors
+  * riding to a re-rank) stay bounded. The split is exact whenever the
+  * order is total within a group — every caller's order ends in the
+  * row's id.
   */
 case class TopKPerGroup(groupExprs: Seq[Expression], order: Seq[SortOrder],
                         k: Int, child: LogicalPlan) extends UnaryNode {
@@ -34,15 +42,19 @@ case class TopKPerGroup(groupExprs: Seq[Expression], order: Seq[SortOrder],
       newChild: LogicalPlan): TopKPerGroup = copy(child = newChild)
 }
 
+/** `partial` = the map-side step: per-task heaps, no distribution
+  * required. The final step needs one hash exchange on the group key —
+  * EnsureRequirements inserts it (or reuses an existing compatible
+  * partitioning). */
 case class TopKPerGroupExec(groupExprs: Seq[Expression],
                             order: Seq[SortOrder], k: Int,
+                            partial: Boolean,
                             child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
 
-  /** One hash exchange on the group key — EnsureRequirements inserts it
-    * (or reuses an existing compatible partitioning). */
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(groupExprs) :: Nil
+    if (partial) UnspecifiedDistribution :: Nil
+    else ClusteredDistribution(groupExprs) :: Nil
 
   override def outputPartitioning: Partitioning = child.outputPartitioning
 
@@ -88,7 +100,8 @@ case class TopKPerGroupExec(groupExprs: Seq[Expression],
 object TopKPerGroupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, child) =>
-      TopKPerGroupExec(g, o, k, planLater(child)) :: Nil
+      TopKPerGroupExec(g, o, k, partial = false,
+        TopKPerGroupExec(g, o, k, partial = true, planLater(child))) :: Nil
     case _ => Nil
   }
 }

@@ -3629,7 +3629,7 @@ object PipelineQueries {
 
     // ---- X12 BATCHED SERVED REFINE — production ANN serves query
     // SETS: one codebook train, one corpus encode, a |Q|·m·pqK lookup
-    // table on one broadcast, bounded-heap per-query shortlists
+    // table as one literal, bounded-heap per-query shortlists
     // (TopKPerGroup), one shortlist-sized exact re-rank — the whole
     // batch at roughly single-query build cost. Per query the output
     // is IDENTICAL to q229's operator at the same settings (PqSpec
@@ -3669,8 +3669,8 @@ object PipelineQueries {
     // serves from the SAME memoized artifact q244 uses: probe
     // selection is |Q|·nCells pivot arithmetic, the codes read
     // partition-prunes to the UNION of probed cells and is read ONCE
-    // for the batch, each query ADCs only ITS probed cells (broadcast
-    // (qid, cell) pair join), per-query shortlists run the
+    // for the batch, each query ADCs only ITS probed cells (a literal
+    // cell → queries map), per-query shortlists run the
     // bounded-heap TopKPerGroup plan, and the exact re-rank joins
     // shortlist rows only. Oracle = q245's EXACT per-query L2 top-10
     // — per query the output must hash-equal the batch operator AND

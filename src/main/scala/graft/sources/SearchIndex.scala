@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Search
@@ -437,7 +438,8 @@ object SearchIndex {
   /** The pruned postings frame for a literal term set: ONLY the terms'
     * buckets' files are planned, every row already
     * carries its document's dl — the one scan every serving query is
-    * built from. */
+    * built from. It keeps `bucket`, the scan's key-grouped partitioning
+    * column, so a per-term window above it needs no exchange. */
   private def prunedPostings(spark: SparkSession, indexRoot: String,
                              sv: Serving, terms: Seq[String],
                              extraCols: Seq[String] = Nil): DataFrame = {
@@ -445,17 +447,31 @@ object SearchIndex {
     Manifest.read(spark, indexRoot, Some(sv.head))
       .filter(col(BucketCol).isin(tBuckets: _*) &&
         col("token").isin(terms: _*))
-      .select(col(sv.idCol) +: col("token") +: col("tf") +: col("dl") +:
-        extraCols.map(col): _*)
+      .select(col(sv.idCol) +: col(BucketCol) +: col("token") +: col("tf") +:
+        col("dl") +: extraCols.map(col): _*)
   }
+
+  /** A single index's df partitioning: a term lives in one bucket, so
+    * (bucket, token) groups exactly the term's postings, and the pruned
+    * scan already delivers them clustered by bucket. */
+  private val TermKeys = Seq(BucketCol, "token")
+
+  /** THE df rule: each postings row gains `df`, the distinct documents
+    * of its term in the (already pruned) frame — a window partitioned
+    * by `keys`, so no aggregate and no join back. */
+  private def withDf(tf: DataFrame, idCol: String,
+                     keys: Seq[String]): DataFrame =
+    tf.withColumn("df", size(collect_set(col(idCol))
+      .over(Window.partitionBy(keys.map(col): _*))).cast("long"))
 
   /** BM25 top-k served FROM THE INDEX — identical arithmetic (and
     * rounding) to [[Search.rankBm25]], so the two are hash-equal on the
     * same corpus, but the plan touches only the query terms' buckets:
     * partition-pruned postings scan (dl rides each row — no doc-length
-    * join, nothing corpus-sized anywhere) → broadcast per-term df →
-    * TakeOrderedAndProject. N and avgdl come from the header — zero
-    * corpus aggregation at query time.
+    * join, nothing corpus-sized anywhere) → per-term df window over the
+    * scan's own bucket grouping (no exchange) → per-document sum (one
+    * shuffle) → TakeOrderedAndProject: two Spark jobs. N and avgdl come
+    * from the header — zero corpus aggregation at query time.
     *
     * `after` = the OpenSearch `search_after` cursor: the (score, id)
     * sort key of the LAST hit of the previous page. Deep pagination as
@@ -485,13 +501,14 @@ object SearchIndex {
       .distinct.toSeq
     require(terms.nonEmpty, "BM25 query needs at least one term")
     scorePostings(prunedPostings(spark, indexRoot, sv, terms), sv.idCol,
-      sv.n, sv.avgdl(indexRoot), terms, k, k1, b, requireAll, after)
+      sv.n, sv.avgdl(indexRoot), terms, k, k1, b, requireAll, after,
+      TermKeys)
   }
 
   /** The BM25 scoring tail over a (idCol, token, tf, dl) postings
     * frame with DRIVER-literal N/avgdl — shared by the single-index
-    * and sharded paths so their arithmetic cannot diverge. df is
-    * computed from the (already pruned) postings frame itself.
+    * and sharded paths so their arithmetic cannot diverge. df comes
+    * from [[withDf]] over `dfKeys`.
     * `shardGuard` (sharded path only) names a shard-ordinal column:
     * a doc id seen in >1 shard violates the disjointness precondition
     * and fails the QUERY loudly (raise_error inside the score
@@ -502,10 +519,9 @@ object SearchIndex {
                             k: Int, k1: Double, b: Double,
                             requireAll: Boolean,
                             after: Option[(Double, Any)],
+                            dfKeys: Seq[String],
                             shardGuard: Option[String] = None)
       : DataFrame = {
-    val df = tf.groupBy(col("token"))
-      .agg(countDistinct(col(idCol)).as("df"))
     val guard: Column = shardGuard match {
       case Some(sc) => when(countDistinct(col(sc)) > 1,
         raise_error(concat(
@@ -516,7 +532,7 @@ object SearchIndex {
         .otherwise(lit(0.0))
       case None => lit(0.0)
     }
-    tf.join(broadcast(df), "token")
+    withDf(tf, idCol, dfKeys)
       .withColumn("_s", Search.bm25Weight(col("tf"), col("dl"),
         col("df"), lit(n.toDouble), lit(avgdl), k1, b))
       .groupBy(col(idCol))
@@ -541,7 +557,8 @@ object SearchIndex {
     * incomparable; here the collection stats are GLOBALIZED first —
     * N = Σ nᵢ and avgdl = Σ sumdlᵢ / Σ ndlᵢ from the headers (driver
     * arithmetic, zero IO), df from the UNION of the shards' pruned
-    * postings — so the result is exactly what one index over the
+    * postings, partitioned by token alone (shards route a term to
+    * different buckets) — so the result is exactly what one index over the
     * union corpus would return (the oracle), while each shard's scan
     * still prunes to its own term buckets. Shards may disagree on
     * bucket count (each routes by its own header); they MUST
@@ -570,7 +587,8 @@ object SearchIndex {
         .withColumn("_shard", lit(i))
     }
     scorePostings(legs.reduce(_ unionByName _), idCol, n, avgdl, terms,
-      k, k1, b, requireAll, after = None, shardGuard = Some("_shard"))
+      k, k1, b, requireAll, after = None, dfKeys = Seq("token"),
+      shardGuard = Some("_shard"))
   }
 
   /** PHRASE / SPAN-NEAR SERVED FROM THE INDEX — requires a
@@ -617,8 +635,9 @@ object SearchIndex {
   /** BOOL QUERY SERVED FROM THE INDEX — `Search.searchBool` semantics
     * (must gates, must_not anti-join, should boosts; identical BM25
     * arithmetic) answered from the pruned buckets of must ∪ should ∪
-    * mustNot, with N/avgdl from the header and dl on the postings rows
-    * themselves. Query cost O(those terms' postings). */
+    * mustNot, with N/avgdl from the header, dl on the postings rows
+    * themselves and df from the same per-term window as [[searchBm25]].
+    * Query cost O(those terms' postings). */
   def searchBool(spark: SparkSession, indexRoot: String,
                  must: Seq[String], should: Seq[String],
                  mustNot: Seq[String], k: Int, k1: Double = 1.2,
@@ -637,10 +656,7 @@ object SearchIndex {
     val tf = prunedPostings(spark, indexRoot, sv, scoreT ++ notT)
     val banned = tf.filter(col("token").isin(notT: _*))
       .select(col(idCol)).distinct()
-    val scoreTf = tf.filter(col("token").isin(scoreT: _*))
-    val df = scoreTf.groupBy(col("token"))
-      .agg(countDistinct(col(idCol)).as("df"))
-    scoreTf.join(broadcast(df), "token")
+    withDf(tf.filter(col("token").isin(scoreT: _*)), idCol, TermKeys)
       .withColumn("_s", Search.bm25Weight(col("tf"), col("dl"),
         col("df"), lit(sv.n.toDouble), lit(avgdl), k1, b))
       .withColumn("_m",

@@ -47,10 +47,13 @@ object VectorIndex {
 
   private val CellCol = "cell"
 
-  private def serialize(pivots: Seq[Array[Double]]): String =
+  /** THE header encoding of driver vectors (pivots here, pivots and
+    * codebooks in [[IvfPqIndex]]): exact, since `Double.toString`
+    * round-trips. */
+  private[sources] def serialize(pivots: Seq[Array[Double]]): String =
     pivots.map(_.mkString(",")).mkString(";")
 
-  private def parse(s: String): Seq[Array[Double]] =
+  private[sources] def parse(s: String): Seq[Array[Double]] =
     s.split(";").toSeq.map(_.split(",").map(_.toDouble))
 
   // ---- per-cell ANGULAR BOUND (the exact-range-search stat) ------

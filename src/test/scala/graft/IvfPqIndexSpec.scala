@@ -7,8 +7,9 @@ import graft.sources.{IvfPqIndex, Manifest}
 
 /** The persisted IVF-PQ serving artifact: batch ≡ the in-memory batch
   * operator at probe-all (the q250↔q245 equivalence), partial-probe
-  * exactness on clusterable data, per-query cell restriction, and real
-  * partition pruning of the codes read. */
+  * exactness on clusterable data, per-query cell restriction, real
+  * partition pruning of the codes read, two Spark jobs per warm
+  * stored-vector serve, and crash-point atomicity of `create`. */
 class IvfPqIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -98,7 +99,7 @@ class IvfPqIndexSpec extends SparkSpec {
       dim = 4, nCells = 3, m = 2, pqK = 4, iters = 2, trainSample = 0)
     // one query, one probed cell → the scan must plan strictly fewer
     // files than the table holds (codes commit clustered by cell)
-    val all = ScanFiles.live(spark, s"$root/codes")
+    val all = ScanFiles.live(spark, root)
     val queries = emb.filter(col("vec_id") === 10L)
     val served = IvfPqIndex.searchBatch(spark, root, Some(emb), queries,
       "vec_id", "embedding", "vec_id", topK = 3, nProbe = 1,
@@ -140,35 +141,60 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("storeVectors"), e.getMessage)
   }
 
-  test("an incomplete artifact refuses to serve — crash-safe create " +
-    "order plus component verification in meta()") {
-    val emb = clustered()
-    val queries = emb.filter(col("vec_id") === 0L)
-    // (a) create crashed BEFORE the codes commit (the commit-order
-    // contract: the discovery header lands LAST): discovery fails
-    val early = newRoot("crash-early")
-    Manifest.init(spark, s"$early/books",
-      Seq((0, 0, Array(0.0, 0.0))).toDF("m", "cid", "cv"))
-    Manifest.init(spark, s"$early/pivots",
-      Seq((0, Array(0.0, 0.0, 0.0, 0.0))).toDF("pid", "pv"))
-    val e1 = intercept[IllegalStateException](
-      IvfPqIndex.searchBatch(spark, early, Some(emb), queries,
-        "vec_id", "embedding", "vec_id", topK = 1, nProbe = 1,
-        refineFactor = 2))
-    assert(e1.getMessage.contains("not initialized"), e1.getMessage)
-    // (b) a codes table CARRYING the header but missing its books/
-    // pivots (a partial copy, or the pre-fix commit order): meta()
-    // must refuse up front, not fail (or half-serve) mid-search
-    val torn = newRoot("crash-torn")
-    Manifest.init(spark, s"$torn/codes",
-      Seq((0L, 0, Array(1, 2), 0)).toDF("id", "m", "codes",
-        "centroid_id"),
-      extraMeta = Map("pq.dim" -> "4", "pq.m" -> "2", "pq.k" -> "4",
-        "pq.cells" -> "3"))
-    val e2 = intercept[IllegalArgumentException](
-      IvfPqIndex.searchBatch(spark, torn, Some(emb), queries,
-        "vec_id", "embedding", "vec_id", topK = 1, nProbe = 1,
-        refineFactor = 2))
-    assert(e2.getMessage.contains("incomplete"), e2.getMessage)
+  test("a warm stored-vector searchBatch runs at most two Spark jobs") {
+    val emb = directional()
+    val root = newRoot("jobs")
+    IvfPqIndex.create(spark, root, emb, "vec_id", "embedding",
+      dim = 4, nCells = 3, m = 2, pqK = 4, iters = 1, trainSample = 0,
+      storeVectors = true)
+    def serve() = IvfPqIndex.searchBatch(spark, root, None,
+      emb.filter(col("vec_id").isin(10L, 21L)), "vec_id", "embedding",
+      "vec_id", topK = 3, nProbe = 2, refineFactor = 2).collect()
+    serve()
+    val (rows, jobs) = SparkJobs.during(spark)(serve())
+    assert(rows.length == 6)
+    assert(jobs <= 2, s"searchBatch ran $jobs Spark jobs")
+  }
+
+  spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl",
+    classOf[CrashPointFileSystem].getName)
+
+  // a crash at any file-system mutation leaves no version (serving
+  // refuses; a retry builds the artifact) or the whole artifact, and
+  // removing orphans afterwards changes no answer
+  test("create: every crash point leaves no artifact or the whole one") {
+    val emb = clustered().coalesce(1)
+    val queries = emb.filter(col("vec_id").isin(0L, 10L))
+    val warehouse = "crashfs://" + java.nio.file.Files
+      .createTempDirectory("graft-pqidx-crash").toString
+    def create(root: String) = IvfPqIndex.create(spark, root, emb,
+      "vec_id", "embedding", dim = 4, nCells = 3, m = 2, pqK = 4,
+      iters = 1, trainSample = 0, storeVectors = true)
+    def served(root: String) = IvfPqIndex.searchBatch(spark, root, None,
+        queries, "vec_id", "embedding", "vec_id", topK = 3, nProbe = 2,
+        refineFactor = 2)
+      .orderBy("query_id", "l2_dist", "vec_id").collect().toSeq
+    val clean = s"$warehouse/clean"
+    val m0 = CrashPointFileSystem.mutations
+    create(clean)
+    val total = CrashPointFileSystem.mutations - m0
+    val want = served(clean)
+    assert(total > 0 && want.size == 6)
+    (0L to total).foreach { n =>
+      val root = s"$warehouse/at$n"
+      CrashPointFileSystem.crashAfter(n)
+      try create(root)
+      catch { case scala.util.control.NonFatal(_) => () }
+      finally CrashPointFileSystem.reset()
+      if (Manifest.latestVersion(spark, root).isEmpty) {
+        val e = intercept[IllegalStateException](served(root))
+        assert(e.getMessage.contains("not initialized"), e.getMessage)
+        create(root)
+      }
+      assert(served(root) == want, s"crash after $n of $total mutations")
+      Thread.sleep(5) // orphans must be strictly older than the cutoff
+      Manifest.removeOrphans(spark, root, graceMillis = 0L)
+      assert(served(root) == want, s"vacuum after crash point $n")
+    }
   }
 }

@@ -261,6 +261,30 @@ class PlanSpec extends SparkSpec {
         s"$bound of ${files.size}")
   }
 
+  test("served BM25 takes df from a window with no exchange under it") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.sources.{Manifest, SearchIndex}
+    object Plans extends AdaptiveSparkPlanHelper
+    val root = "file://" + java.nio.file.Files
+      .createTempDirectory("graft-plan-df").toString
+    Manifest.init(spark, s"$root/src",
+      Seq((1L, "alpha beta"), (2L, "beta gamma"), (3L, "alpha alpha"),
+        (4L, "gamma delta alpha")).toDF("id", "text"))
+    SearchIndex.create(spark, s"$root/src", s"$root/idx", "id", "text",
+      buckets = 8)
+    val df = SearchIndex.searchBm25(spark, s"$root/idx", "alpha gamma", 5)
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val windows = Plans.collect(executed) { case w: WindowExec => w }
+    assert(windows.nonEmpty, executed.toString)
+    windows.foreach { w =>
+      val under = Plans.collect(w) { case e: Exchange => e }
+      assert(under.isEmpty, s"exchange under the df window:\n$w")
+    }
+  }
+
   test("q236: the percentile cutoff joins back via broadcast — the " +
     "corpus meets only a map filter, never a rank window") {
     val p = plan("q236_quality_percentile_gate")

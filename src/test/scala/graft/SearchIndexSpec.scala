@@ -169,6 +169,16 @@ class SearchIndexSpec extends SparkSpec {
     assert(indexBm25(idx, "window merge") == corpusBm25(src, "window merge"))
   }
 
+  test("a warm searchBm25 call runs at most two Spark jobs") {
+    val (_, idx) = freshPair("jobs")
+    def serve() = SearchIndex.searchBm25(spark, idx, "window merge scan", 3)
+      .collect()
+    val want = serve()
+    val (rows, jobs) = SparkJobs.during(spark)(serve())
+    assert(rows.toSeq == want.toSeq && rows.nonEmpty)
+    assert(jobs <= 2, s"searchBm25 ran $jobs Spark jobs")
+  }
+
   test("a term lookup prunes the postings scan to the term's buckets") {
     val (_, idx) = freshPair("prune")
     val df = SearchIndex.searchBm25(spark, idx, "window", 5)
